@@ -14,6 +14,7 @@ from ..operators.asof import asof_join
 from ..operators.frequency import DEFAULT_DENOM, heavy_hitters
 from ..operators.rangejoin import interval_join_binned
 from ..sources.loaders import load_table
+from ..streaming.epochs import drain
 from .extras import SESSION_GAP_S, sessionize
 
 US_PER_DAY = 86_400_000_000
@@ -905,10 +906,7 @@ def cdc_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"q_cdcview_{sf_namespace(sf_dir)}"
     stage = stage_event_chunks(sf_dir, n_chunks=3)
     q = run_cdc_compaction_stream(spark, stage, name=name)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_state")
+    drain(spark, q, f"{name}_state")
     return cdc_current_view(spark, name)
 
 
@@ -923,10 +921,7 @@ def scd2_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"q_scd2view_{sf_namespace(sf_dir)}"
     stage = stage_event_chunks(sf_dir, n_chunks=3)
     q = run_scd2_stream(spark, stage, name=name)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_state")
+    drain(spark, q, f"{name}_state")
     return scd2_current_view(spark, name)
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.loaders import load_table
+from ..streaming.epochs import drain
 
 SESSION_GAP_S = 1800  # 30 min inactivity closes a session
 
@@ -314,11 +315,7 @@ def uv_sketch_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_uvsk_{sf_namespace(sf_dir)}"
     q = run_uv_sketch_stream(spark, sf_dir, name=name, fold_every=1, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_sketches", f"{name}_users"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_sketches", f"{name}_users")
     return uv_sketch_view(spark, name)
 
 
@@ -724,10 +721,7 @@ def sessionize_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2,
         gap_s=SESSION_GAP_S,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_sess")
+    drain(spark, q, f"{name}_sess")
     return sessions_view(spark, name)
 
 
@@ -1116,10 +1110,7 @@ def sessionize_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2,
         gap_s=SESSION_GAP_S,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_sess")
+    drain(spark, q, f"{name}_sess")
     purge_superseded_sessions(spark, name)
     return sessions_view(spark, name)
 

@@ -15,6 +15,7 @@ from ..operators import graph as G
 from ..operators import similarity as V
 from ..operators import textops as T
 from ..sources.loaders import load_table
+from ..streaming.epochs import drain
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,10 +199,7 @@ def corpus_stats_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_corpus_stats_stream(
         spark, sf_dir, name=name, n_chunks=6, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_partials")
+    drain(spark, q, f"{name}_partials")
     return corpus_stats_view(spark, name)
 
 
@@ -1117,15 +1115,12 @@ def pagerank_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"q_prview_{sf_namespace(sf_dir)}"
     stage = stage_knn_edge_chunks(spark, sf_dir, n_chunks=3)
     # fold_every=2 also coalesces edge partitions 0-1 into a watermark
-    # base mid-replay, so the identity-fold + live_epochs edge read is
+    # base mid-replay, so the identity-fold + `live` edge read is
     # under this gate too
     q = run_pagerank_stream(
         spark, stage, name=name, refresh_every=2, final_epoch=2, fold_every=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_ranks")
+    drain(spark, q, f"{name}_ranks")
     return spark.table(f"{name}_ranks").select(
         "vertex_id", "out_deg", "rank_units", "rank"
     )
@@ -1146,13 +1141,10 @@ def dedup_clusters_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_dcview_{sf_namespace(sf_dir)}"
     # fold_every=2 coalesces the four state tables' epoch partitions
-    # mid-replay, so the tiered identity fold + live_epochs probes sit
+    # mid-replay, so the tiered identity fold + `live` probes sit
     # under this gate too
     q = run_dedup_clusters_stream(spark, sf_dir, n_chunks=3, name=name, fold_every=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_clusters")
+    drain(spark, q, f"{name}_clusters")
     return spark.table(f"{name}_clusters").select("doc_id", "canonical_id")
 
 
@@ -1165,7 +1157,7 @@ def knn_pq_index_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes the replay through the codes-partition fold every epoch, and
     refold_width=2 pushes the two resulting tier-1 bases (w=0, w=1)
     through the SECOND-tier identity refold mid-replay, so the
-    LSM-compacted codes log + live_epochs read path sits under the same
+    LSM-compacted codes log + `live` read path sits under the same
     gate (the aggregate-merge refold twin is gated by
     corpus_stats_stream_view). n_chunks stays at the default 3: the
     codebook trains on the FIRST chunk, so the chunking is part of the
@@ -1180,10 +1172,7 @@ def knn_pq_index_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_pq_index_stream(
         spark, sf_dir, name=name, fold_every=1, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_codes")
+    drain(spark, q, f"{name}_codes")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qs = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).filter(
         F.col("vec_id") % 100 == 0
@@ -1260,11 +1249,7 @@ def knn_pq_index_refine_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_pq_index_stream(
         spark, sf_dir, name=name, fold_every=1, refold_width=2, store_vectors=True
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_codes", f"{name}_vecs"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_codes", f"{name}_vecs")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qs = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).filter(
         F.col("vec_id") % 100 == 0
@@ -1292,11 +1277,7 @@ def knn_pq_index_delete_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_pqcdcd_{sf_namespace(sf_dir)}"
     q = run_pq_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qs = (
         e.withColumn("n2", _idot(F.col("q"), F.col("q")))
@@ -1326,11 +1307,7 @@ def knn_pq_index_purged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_pqcdcp_{sf_namespace(sf_dir)}"
     q = run_pq_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_codes", f"{name}_del")
     n1 = purge_pq_index_dead(spark, name)
     n2 = purge_pq_index_dead(spark, name)
     assert n1 > 0 and n2 == 0, f"PQ-index purge not idempotent: {n1} then {n2}"
@@ -1367,11 +1344,7 @@ def knn_pq_index_filtered_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_pqcdcf_{sf_namespace(sf_dir)}"
     q = run_pq_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantize(F.col("embedding")).alias("q")
     )
@@ -1404,11 +1377,7 @@ def pq_index_filtered_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_pqcdcfe_{sf_namespace(sf_dir)}"
     q = run_pq_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantize(F.col("embedding")).alias("q")
     )
@@ -1458,11 +1427,7 @@ def knn_graph_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_knn_graph_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "band", "edge", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "band", "edge", "del")))
     return knn_graph_cdc_view(spark, name)
 
 
@@ -1487,11 +1452,7 @@ def knn_graph_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_knn_graph_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "band", "edge", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "band", "edge", "del")))
     n1 = purge_knn_graph_dead(spark, name)
     n2 = purge_knn_graph_dead(spark, name)
     assert n1 > 0 and n2 == 0, f"knn-graph purge not idempotent: {n1} then {n2}"
@@ -1589,11 +1550,7 @@ def knn_graph_ann_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_knn_graph_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "band", "edge", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "band", "edge", "del")))
     edges = knn_graph_cdc_view(spark, name, k=V.GRAPH_ANN_DEG).select(
         "src_id", "nbr_id"
     )
@@ -1626,11 +1583,7 @@ def components_knn_cdc_stream_view(spark: SparkSession, sf_dir: str) -> DataFram
     q = run_knn_graph_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "band", "edge", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "band", "edge", "del")))
     edges = knn_graph_cdc_view(spark, name).select("src_id", "nbr_id")
     emb = _emb(spark, sf_dir).filter(F.col("vec_id") % 9 != 5)
     verts = emb.select(F.col("vec_id").alias("doc_id"), F.lit("").alias("text"))
@@ -1656,11 +1609,7 @@ def _cdc_graph_edges(spark: SparkSession, sf_dir: str, tag: str):
     q = run_knn_graph_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "band", "edge", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "band", "edge", "del")))
     edges = knn_graph_cdc_view(spark, name).select("src_id", "nbr_id")
     surv = _emb(spark, sf_dir).filter(F.col("vec_id") % 9 != 5)
     return edges, surv
@@ -1731,10 +1680,7 @@ def order_wide_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2,
         maintain_agg=False,  # this gate reads only the join view
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_v")
+    drain(spark, q, f"{name}_v")
     return order_wide_view(spark, name)
 
 
@@ -1764,11 +1710,7 @@ def order_wide_delete_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
         maintain_agg=False,  # the aggregate twin gate (revenue_by_cust_
         # stream_view) runs its own replay WITH the agg maintained
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d")
     return order_wide_view(spark, name)
 
 
@@ -1796,10 +1738,7 @@ def revenue_by_cust_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_join_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_cust_view(spark, name)
 
 
@@ -1826,11 +1765,7 @@ def order_wide_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d")
     purge_tombstoned_rows(spark, name)
     return order_wide_view(spark, name)
 
@@ -1863,11 +1798,7 @@ def order_wide_line_delete_stream_view(spark: SparkSession, sf_dir: str) -> Data
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d", f"{name}_ld"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d", f"{name}_ld")
     return order_wide_view(spark, name)
 
 
@@ -1898,10 +1829,7 @@ def revenue_max_by_cust_stream_view(spark: SparkSession, sf_dir: str) -> DataFra
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False, maintain_max=True,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_mx")
+    drain(spark, q, f"{name}_mx")
     return revenue_max_by_cust_view(spark, name)
 
 
@@ -1935,10 +1863,7 @@ def distinct_qty_by_cust_stream_view(spark: SparkSession, sf_dir: str) -> DataFr
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False, maintain_distinct=True,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_dc")
+    drain(spark, q, f"{name}_dc")
     return distinct_qty_by_cust_view(spark, name)
 
 
@@ -1967,11 +1892,7 @@ def order_cust_wide_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d")
     return order_cust_wide_view(spark, name)
 
 
@@ -1997,10 +1918,7 @@ def revenue_by_nation_ivm_stream_view(spark: SparkSession, sf_dir: str) -> DataF
     q = run_join3_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_nation_ivm_view(spark, name)
 
 
@@ -2026,10 +1944,7 @@ def revenue_by_region_ivm_stream_view(spark: SparkSession, sf_dir: str) -> DataF
     q = run_join3_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_region_ivm_view(spark, load_table(spark, sf_dir, "nation"), name)
 
 
@@ -2060,11 +1975,7 @@ def order_cust_wide_upsert_stream_view(spark: SparkSession, sf_dir: str) -> Data
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d", f"{name}_u"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d", f"{name}_u")
     return order_cust_wide_view(spark, name)
 
 
@@ -2091,10 +2002,7 @@ def revenue_by_nation_ivm_upsert_stream_view(spark: SparkSession, sf_dir: str) -
     q = run_join3_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_nation_ivm_view(spark, name)
 
 
@@ -2123,10 +2031,7 @@ def order_cust_wide_asof_stream_view(spark: SparkSession, sf_dir: str) -> DataFr
     q = run_join3_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, maintain_agg=False
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_v")
+    drain(spark, q, f"{name}_v")
     return order_cust_wide_view_asof(spark, 1, name)
 
 
@@ -2160,11 +2065,7 @@ def order_cust_wide_dimupd_stream_view(spark: SparkSession, sf_dir: str) -> Data
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d", f"{name}_u", f"{name}_cu"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d", f"{name}_u", f"{name}_cu")
     return order_cust_wide_view(spark, name)
 
 
@@ -2191,10 +2092,7 @@ def revenue_by_nation_dimupd_stream_view(spark: SparkSession, sf_dir: str) -> Da
     q = run_join3_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_nation_ivm_view(spark, name)
 
 
@@ -2219,11 +2117,7 @@ def bm25_index_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_bm25_index_stream(
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_post", f"{name}_dl", f"{name}_st"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_post", f"{name}_dl", f"{name}_st")
     return bm25_index_search(spark, name)
 
 
@@ -2247,11 +2141,7 @@ def bm25_index_delete_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
     q = run_bm25_index_stream(
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2, cdc=True
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_post", f"{name}_dl", f"{name}_st", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_post", f"{name}_dl", f"{name}_st", f"{name}_del")
     return bm25_index_search(spark, name)
 
 
@@ -2277,11 +2167,7 @@ def dedup_lsh_index_delete_stream_view(spark: SparkSession, sf_dir: str) -> Data
         spark, sf_dir, n_chunks=3, name=name, delete_mod=7,
         fold_every=2, refold_width=2,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_bands", f"{name}_shsets", f"{name}_pairs", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_bands", f"{name}_shsets", f"{name}_pairs", f"{name}_del")
     return neardup_pairs_view(spark, name)
 
 
@@ -2307,11 +2193,7 @@ def dedup_lsh_index_purged_stream_view(spark: SparkSession, sf_dir: str) -> Data
         spark, sf_dir, n_chunks=3, name=name, delete_mod=7,
         fold_every=2, refold_width=2,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_bands", f"{name}_shsets", f"{name}_pairs", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_bands", f"{name}_shsets", f"{name}_pairs", f"{name}_del")
     n1 = purge_neardup_dead(spark, name)
     n2 = purge_neardup_dead(spark, name)
     assert n1 > 0 and n2 == 0, f"near-dup purge not idempotent: {n1} then {n2}"
@@ -2341,17 +2223,11 @@ def hybrid_index_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q1 = run_bm25_index_stream(
         spark, sf_dir, name=bm, n_chunks=3, fold_every=2, refold_width=2
     )
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    drain(spark, q1)
     q2 = run_flat_index_stream(
         spark, sf_dir, name=fl, n_chunks=4, fold_every=2, refold_width=2
     )
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
-    for t in (f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{fl}_vec"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q2, f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{fl}_vec")
     return hybrid_index_search(spark, bm, fl)
 
 
@@ -2384,18 +2260,11 @@ def hybrid_index_delete_stream_view(spark: SparkSession, sf_dir: str) -> DataFra
     q1 = run_bm25_index_stream(
         spark, sf_dir, name=bm, n_chunks=3, fold_every=2, refold_width=2, cdc=True
     )
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    drain(spark, q1)
     q2 = run_flat_index_cdc_stream(
         spark, sf_dir, name=fl, n_chunks=4, fold_every=2, refold_width=2
     )
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
-    for t in (f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del",
-              f"{fl}_vec", f"{fl}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q2, f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del", f"{fl}_vec", f"{fl}_del")
     return hybrid_index_search(spark, bm, fl)
 
 
@@ -2425,18 +2294,11 @@ def hybrid_index_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFra
     q1 = run_bm25_index_stream(
         spark, sf_dir, name=bm, n_chunks=3, fold_every=2, refold_width=2, cdc=True
     )
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    drain(spark, q1)
     q2 = run_flat_index_cdc_stream(
         spark, sf_dir, name=fl, n_chunks=4, fold_every=2, refold_width=2
     )
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
-    for t in (f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del",
-              f"{fl}_vec", f"{fl}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q2, f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del", f"{fl}_vec", f"{fl}_del")
     b1, b2 = purge_bm25_index(spark, bm), purge_bm25_index(spark, bm)
     f1, f2 = purge_flat_index(spark, fl), purge_flat_index(spark, fl)
     assert b1 > 0 and b2 == 0, f"BM25 purge not idempotent: {b1} then {b2}"
@@ -2475,16 +2337,9 @@ def hybrid_pq_index_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q1 = run_bm25_index_stream(
         spark, sf_dir, name=bm, n_chunks=3, fold_every=2, refold_width=2
     )
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    drain(spark, q1)
     q2 = run_pq_index_stream(spark, sf_dir, name=pq, fold_every=2, refold_width=2)
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
-    for t in (f"{bm}_post", f"{bm}_dl", f"{bm}_st",
-              f"{pq}_codebook", f"{pq}_codes"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q2, f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{pq}_codebook", f"{pq}_codes")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qv = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).filter(
         F.col("vec_id") == RRF_QUERY_VEC
@@ -2522,16 +2377,13 @@ def hybrid_pq_index_delete_stream_view(spark: SparkSession, sf_dir: str) -> Data
     q1 = run_bm25_index_stream(
         spark, sf_dir, name=bm, n_chunks=3, fold_every=2, refold_width=2, cdc=True
     )
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    drain(spark, q1)
     q2 = run_pq_index_cdc_stream(spark, sf_dir, name=pq, fold_every=2, refold_width=2)
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
-    for t in (f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del",
-              f"{pq}_codebook", f"{pq}_codes", f"{pq}_del"):
-        spark.catalog.refreshTable(t)
+    drain(
+        spark, q2,
+        f"{bm}_post", f"{bm}_dl", f"{bm}_st", f"{bm}_del", f"{pq}_codebook", f"{pq}_codes",
+        f"{pq}_del",
+    )
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qv = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).filter(
         F.col("vec_id") == RRF_QUERY_VEC
@@ -2561,11 +2413,7 @@ def bm25_index_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
     q = run_bm25_index_stream(
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2, cdc=True
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_post", f"{name}_dl", f"{name}_st", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_post", f"{name}_dl", f"{name}_st", f"{name}_del")
     purge_bm25_index(spark, name)
     return bm25_index_search(spark, name)
 
@@ -2575,7 +2423,7 @@ TRAINING_QUERIES["bm25_index_purged_stream_view"] = bm25_index_purged_stream_vie
 
 def order_wide_cascade_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The join-IVM replay run long enough (8 chunks, fold_every=2,
-    refold_width=2) that the SECOND-tier LSM fold (`_refold_bases`)
+    refold_width=2) that the SECOND-tier LSM fold (`epochs.refold`)
     fires INSIDE the hash-gated path: folds at epochs 2 and 4 leave two
     live tier-1 bases, which cascade into a tier-2 base before epoch
     6's fold — so the gate certifies reads across a three-level
@@ -2590,10 +2438,7 @@ def order_wide_cascade_stream_view(spark: SparkSession, sf_dir: str) -> DataFram
         spark, sf_dir, name=name, n_chunks=8, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_v")
+    drain(spark, q, f"{name}_v")
     return order_wide_view(spark, name)
 
 
@@ -2625,11 +2470,7 @@ def order_wide_upsert_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_v", f"{name}_d", f"{name}_ld", f"{name}_u"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_v", f"{name}_d", f"{name}_ld", f"{name}_u")
     return order_wide_view(spark, name)
 
 
@@ -2656,10 +2497,7 @@ def revenue_by_cust_upsert_stream_view(spark: SparkSession, sf_dir: str) -> Data
     q = run_join_ivm_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_agg")
+    drain(spark, q, f"{name}_agg")
     return revenue_by_cust_view(spark, name)
 
 
@@ -2680,10 +2518,7 @@ def order_wide_asof_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_join_ivm_stream(
         spark, sf_dir, name=name, n_chunks=3, maintain_agg=False
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_v")
+    drain(spark, q, f"{name}_v")
     return order_wide_view_asof(spark, 1, name)
 
 
@@ -2707,11 +2542,7 @@ def knn_sq8_index_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_sq8idx_{sf_namespace(sf_dir)}"
     q = run_sq8_index_stream(spark, sf_dir, name=name, fold_every=1, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_stats", f"{name}_codes"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_stats", f"{name}_codes")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qs = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).filter(
         F.col("vec_id") % 100 == 0
@@ -2740,11 +2571,7 @@ def knn_sq8_index_delete_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_sq8cdcd_{sf_namespace(sf_dir)}"
     q = run_sq8_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_stats", f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_stats", f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select("vec_id", quantize(F.col("embedding")).alias("q"))
     qs = (
         e.withColumn("n2", _idot(F.col("q"), F.col("q")))
@@ -2774,11 +2601,7 @@ def knn_sq8_index_purged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_sq8cdcp_{sf_namespace(sf_dir)}"
     q = run_sq8_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_stats", f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_stats", f"{name}_codes", f"{name}_del")
     n1 = purge_sq8_index_dead(spark, name)
     n2 = purge_sq8_index_dead(spark, name)
     assert n1 > 0 and n2 == 0, f"SQ8-index purge not idempotent: {n1} then {n2}"
@@ -2815,11 +2638,7 @@ def knn_sq8_index_filtered_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_sq8cdcfv_{sf_namespace(sf_dir)}"
     q = run_sq8_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_stats", f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_stats", f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantize(F.col("embedding")).alias("q")
     )
@@ -2848,11 +2667,7 @@ def sq8_index_filtered_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_sq8cdcfe_{sf_namespace(sf_dir)}"
     q = run_sq8_index_cdc_stream(spark, sf_dir, name=name, fold_every=2, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in (f"{name}_stats", f"{name}_codes", f"{name}_del"):
-        spark.catalog.refreshTable(t)
+    drain(spark, q, f"{name}_stats", f"{name}_codes", f"{name}_del")
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantize(F.col("embedding")).alias("q")
     )
@@ -2903,10 +2718,7 @@ def hot_items_mv_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"q_hotw_{sf_namespace(sf_dir)}"
     q = run_window_agg_stream(spark, sf_dir, name=name, fold_every=1, refold_width=2)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_buckets")
+    drain(spark, q, f"{name}_buckets")
     expire_window_buckets(spark, name, retention_s=7 * 86400)
     return hot_window_view(spark, name, retention_s=7 * 86400)
 
@@ -2938,10 +2750,7 @@ def top_customers_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_topk=10,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_tk")
+    drain(spark, q, f"{name}_tk")
     return top_customers_by_rev_view(spark, name, k=10)
 
 
@@ -2966,10 +2775,7 @@ def value_quantile_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_quantile_ivm_stream(
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_hist")
+    drain(spark, q, f"{name}_hist")
     return value_quantile_view(spark, name)
 
 
@@ -2991,10 +2797,7 @@ def heavy_hitters_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_heavy_hitters_stream(
         spark, sf_dir, name=name, n_chunks=3, k=32, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_mg")
+    drain(spark, q, f"{name}_mg")
     return heavy_hitters_view(spark, name)
 
 
@@ -3018,11 +2821,7 @@ def value_quantile_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataF
     q = run_quantile_ivm_stream(
         spark, sf_dir, name=name, n_chunks=3, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("rows", "hist", "d"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("rows", "hist", "d")))
     purge_quantile_rows(spark, name)
     return value_quantile_view(spark, name)
 
@@ -3051,10 +2850,7 @@ def hot_items_mv_unordered_stream_view(spark: SparkSession, sf_dir: str) -> Data
     q = run_window_agg_stream(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=1, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_buckets")
+    drain(spark, q, f"{name}_buckets")
     expire_window_buckets(spark, name, retention_s=7 * 86400)
     return hot_window_view(spark, name, retention_s=7 * 86400)
 
@@ -3078,11 +2874,7 @@ def flat_index_delete_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
     q = run_flat_index_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "del")))
     return flat_index_search(spark, name, k=5)
 
 
@@ -3105,11 +2897,7 @@ def flat_index_purged_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame
     q = run_flat_index_cdc_stream(
         spark, sf_dir, name=name, n_chunks=4, fold_every=2, refold_width=2
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    for t in ("vec", "del"):
-        spark.catalog.refreshTable(f"{name}_{t}")
+    drain(spark, q, *(f"{name}_{t}" for t in ("vec", "del")))
     purge_flat_index(spark, name)
     return flat_index_search(spark, name, k=5)
 
@@ -3138,10 +2926,7 @@ def top_customers_by_status_stream_view(spark: SparkSession, sf_dir: str) -> Dat
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False, maintain_topk_grouped=5,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_tkg")
+    drain(spark, q, f"{name}_tkg")
     return top_customers_by_group_view(spark, name, k=5)
 
 
@@ -3173,10 +2958,7 @@ def top_customers_by_status_purged_stream_view(
         spark, sf_dir="", stage_dir=stage, name=name, fold_every=2, refold_width=2,
         maintain_agg=False, maintain_topk_grouped=5,
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    spark.catalog.refreshTable(f"{name}_tkg")
+    drain(spark, q, f"{name}_tkg")
     n1 = purge_superseded_topk_groups(spark, name)
     n2 = purge_superseded_topk_groups(spark, name)  # idempotent second pass
     assert n2 == 0, f"grouped top-K purge not idempotent: {n1} then {n2}"

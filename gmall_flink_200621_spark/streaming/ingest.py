@@ -13,14 +13,17 @@ loop on Structured Streaming:
       table (every fp ever seen, accepted or rejected — a re-sent
       duplicate of a rejected doc must not be re-evaluated)
     → quality + language gates (same thresholds as corpus_prep)
-    → epoch-partition-overwrite accepted rows into `<name>_kept`, new
-      fps into `<name>_fps` (crash-replay idempotent)
+    → overwrite this epoch's partition of `<name>_kept` (accepted rows)
+      and `<name>_fps` (new fps) — crash-replay idempotent
 
-Both tables are day-one warehouse tables (parquet via saveAsTable); the
-anti-join probe is a shuffle join on the 16-byte fp. At 100 TB the fp
-table is the corpus' fingerprint index — bucketed by fp it joins
-co-located, and a bloom/cuckoo filter in front absorbs the common
-no-hit case; the foreachBatch body is identical.
+Both tables are epoch-partitioned warehouse tables that declare dynamic
+partition overwrite themselves (`epochs.create_state_table`; no session
+conf is touched), and every maintainer in this module keeps its state
+the same way through `epochs`. The anti-join probe is a shuffle join
+on the 16-byte fp. At 100 TB the fp table is the corpus' fingerprint
+index — bucketed by fp it joins co-located, and a bloom/cuckoo filter
+in front absorbs the common no-hit case; the foreachBatch body is
+identical.
 
 Exactness: replaying the corpus ordered by doc_id reproduces the batch
 pipeline exactly — the min-doc_id copy of every duplicate group arrives
@@ -32,26 +35,37 @@ asserts set equality of kept doc_ids against batch corpus_prep.
 from __future__ import annotations
 
 import os
-import re
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.similarity import KNN_GRAPH_BUCKET_CAP as _KNN_GRAPH_CAP_DEFAULT
+from .epochs import (
+    TIER_OFF,
+    _base_tiers,
+    _drop_table,
+    _partition_epochs,
+    create_state_table,
+    gc_partitions,
+    identity,
+    live,
+    maybe_fold,
+    write_epoch,
+)
 
 QUALITY_MIN = 0.5  # same gates as plans/training.corpus_prep
 LANG_KEEP = "en"
 CDC_BUCKETS = 64  # hash buckets partitioning the maintained state tables
 
 
-def _drop_table(spark: SparkSession, name: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(re.sub(r"^file:/*", "/", warehouse), name.lower())
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
+def _start(feed: DataFrame, epoch_fn, query_name: str, checkpoint_dir: str | None):
+    """Start `feed` into the foreachBatch maintainer `epoch_fn`; returns
+    the StreamingQuery."""
+    w = feed.writeStream.foreachBatch(epoch_fn).queryName(query_name)
+    if checkpoint_dir:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    return w.start()
 
 
 def stage_document_chunks(sf_dir: str, n_chunks: int = 5) -> str:
@@ -97,8 +111,9 @@ def run_corpus_ingest_stream(
     reset_tables=False and a new invocation resumes from the checkpointed
     source offset — already-ingested chunks are not re-read, and the kept/
     fps tables continue accumulating. Crash semantics: both sinks are
-    epoch-partitioned and dynamic-overwritten with the fps probe
-    excluding the replayed epoch's own partition (`_ingest_epoch`), so
+    epoch-partitioned tables that declare dynamic overwrite, so each
+    write replaces only its own epoch's partition, and the fps probe
+    excludes the replayed epoch's own partition (`_ingest_epoch`), so
     the last-epoch replay a checkpointed source performs rewrites
     byte-identical rows — effectively-once, no doubling and no silent
     loss (test-pinned).
@@ -112,22 +127,15 @@ def run_corpus_ingest_stream(
 
     `fold_every=N` (opt-in) bounds both tables' partition counts via the
     tiered watermark fold; with folds on, read the tables through
-    `live_epochs` (as the fps probe does) — a raw `spark.table` read can
+    `live` (as the fps probe does) — a raw `spark.table` read can
     transiently see an absorbed epoch alongside its base in the
     crash-before-GC window."""
-    from ..operators.dedup import doc_fingerprints
-    from ..operators.textops import doc_stats, lang_id, token_counts
-
     kept_t, fps_t = f"{name}_kept", f"{name}_fps"
     if reset_tables:
-        for t in (kept_t, fps_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {kept_t} (doc_id BIGINT, n_tokens INT, n_bpe_est BIGINT, quality_score DOUBLE, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
+        create_state_table(
+            spark, kept_t, "doc_id BIGINT, n_tokens INT, n_bpe_est BIGINT, quality_score DOUBLE"
         )
-        spark.sql(
-            f"CREATE TABLE {fps_t} (fp STRING, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
+        create_state_table(spark, fps_t, "fp STRING")
 
     stage = stage_dir or stage_document_chunks(sf_dir, n_chunks)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -135,16 +143,13 @@ def run_corpus_ingest_stream(
 
     def ingest_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # fold BEFORE the probe (window ≤ epoch−1): the fps probe's
-        # `epoch != epoch_id` composes with live_epochs — the base rows
+        # `epoch != epoch_id` composes with `live` — the base rows
         # are negative epochs (kept), stale positives ≤ watermark drop
         for t in (kept_t, fps_t):
-            _maybe_fold(batch_df.sparkSession, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(batch_df.sparkSession, t, epoch_id, fold_every, refold_width=refold_width)
         _ingest_epoch(batch_df, epoch_id, kept_t, fps_t)
 
-    w = docs.writeStream.outputMode("append").foreachBatch(ingest_batch).queryName(name + "_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(docs, ingest_batch, name + "_q", checkpoint_dir)
 
 
 def _ingest_epoch(batch_df: DataFrame, epoch_id: int, kept_t: str, fps_t: str) -> None:
@@ -161,37 +166,31 @@ def _ingest_epoch(batch_df: DataFrame, epoch_id: int, kept_t: str, fps_t: str) -
 
     s = batch_df.sparkSession
     batch_df = batch_df.persist()
-    # in-batch exact dedup: canonical (min) doc_id per fingerprint
-    fps = doc_fingerprints(batch_df)
-    canon = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    # cross-batch dedup vs PRIOR epochs only (replay-safe): live_epochs
-    # keeps fold bases + the positive tail; `!= epoch_id` then excludes
-    # this epoch's own crashed-attempt rows (folds never cover it)
-    seen = (
-        live_epochs(s.table(fps_t), s, fps_t).filter(F.col("epoch") != epoch_id).select("fp")
-    )
-    fresh = canon.join(seen, "fp", "left_anti").persist()
-    survivors = batch_df.join(fresh.select("doc_id"), "doc_id")
-    gated = (
-        doc_stats(survivors)
-        .select("doc_id", "n_tokens", "quality_score")
-        .join(lang_id(survivors), "doc_id")
-        .join(token_counts(survivors).select("doc_id", "n_bpe_est"), "doc_id")
-        .filter((F.col("quality_score") >= QUALITY_MIN) & (F.col("lang_pred") == LANG_KEEP))
-        .select("doc_id", "n_tokens", "n_bpe_est", "quality_score")
-    )
-    prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    fresh = None
     try:
-        ep = F.lit(epoch_id).cast("long").alias("epoch")
-        gated.select("*", ep).write.mode("overwrite").insertInto(kept_t, overwrite=True)
-        fresh.select("fp").select("*", ep).write.mode("overwrite").insertInto(
-            fps_t, overwrite=True
+        # in-batch exact dedup: canonical (min) doc_id per fingerprint
+        fps = doc_fingerprints(batch_df)
+        canon = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+        # cross-batch dedup vs PRIOR epochs only (replay-safe): `live`
+        # keeps fold bases + the positive tail; `!= epoch_id` then excludes
+        # this epoch's own crashed-attempt rows (folds never cover it)
+        seen = live(s, fps_t).filter(F.col("epoch") != epoch_id).select("fp")
+        fresh = canon.join(seen, "fp", "left_anti").persist()
+        survivors = batch_df.join(fresh.select("doc_id"), "doc_id")
+        gated = (
+            doc_stats(survivors)
+            .select("doc_id", "n_tokens", "quality_score")
+            .join(lang_id(survivors), "doc_id")
+            .join(token_counts(survivors).select("doc_id", "n_bpe_est"), "doc_id")
+            .filter((F.col("quality_score") >= QUALITY_MIN) & (F.col("lang_pred") == LANG_KEEP))
+            .select("doc_id", "n_tokens", "n_bpe_est", "quality_score")
         )
+        write_epoch(gated, kept_t, epoch_id)
+        write_epoch(fresh.select("fp"), fps_t, epoch_id)
     finally:
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    fresh.unpersist()
-    batch_df.unpersist()
+        if fresh is not None:
+            fresh.unpersist()
+        batch_df.unpersist()
 
 
 def _neardup_epoch(
@@ -216,55 +215,54 @@ def _neardup_epoch(
     )
 
     s = batch_df.sparkSession
-    sh = _doc_shingles(batch_df, df_cap=None).persist()
-    new_bands = stacked_band_frame(minhash_signatures(batch_df, shingle_frame=sh)).persist()
-    new_shs = (
-        sh.select("doc_id", h60(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_set("h")).alias("shs"))
-        .select("doc_id", "shs", F.size("shs").cast("int").alias("n_sh"))
-        .persist()
-    )
-    # live_epochs: fold-aware read (identical to a plain read when the
-    # owning stream never folds — no base partitions exist)
-    old_bands = live_epochs(s.read.table(bands_t), s, bands_t).select("doc_id", "bi", "bv")
-    # candidates: within-batch self-join ∪ new-vs-state probe
-    x = new_bands.select(F.col("doc_id").alias("id_x"), "bi", "bv")
-    within = x.join(new_bands.select(F.col("doc_id").alias("id_y"), "bi", "bv"), ["bi", "bv"])
-    cross = x.join(old_bands.select(F.col("doc_id").alias("id_y"), "bi", "bv"), ["bi", "bv"])
-    cands = (
-        within.unionByName(cross)
-        .select(F.least("id_x", "id_y").alias("id_a"), F.greatest("id_x", "id_y").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    allsets = (
-        live_epochs(s.read.table(shs_t), s, shs_t).select("doc_id", "shs", "n_sh").unionByName(new_shs)
-    )
-    sa = allsets.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"), F.col("n_sh").alias("n_a"))
-    sb = allsets.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"), F.col("n_sh").alias("n_b"))
-    verified = (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("n_common", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("id_a", "id_b", "jaccard")
-        # a replayed epoch sees its docs TWICE (state copy + batch): the
-        # duplicate join legs produce identical rows — collapse them
-        .distinct()
-    )
-    prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    held: list[DataFrame] = []  # persisted frames, released however the epoch ends
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
     try:
-        ep = F.lit(epoch_id).cast("long").alias("epoch")
-        verified.select("*", ep).write.mode("overwrite").insertInto(pairs_t, overwrite=True)
-        new_bands.select("*", ep).write.mode("overwrite").insertInto(bands_t, overwrite=True)
-        new_shs.select("*", ep).write.mode("overwrite").insertInto(shs_t, overwrite=True)
+        sh = hold(_doc_shingles(batch_df, df_cap=None))
+        new_bands = hold(stacked_band_frame(minhash_signatures(batch_df, shingle_frame=sh)))
+        new_shs = hold(
+            sh.select("doc_id", h60(F.col("shingle")).alias("h"))
+            .groupBy("doc_id")
+            .agg(F.array_sort(F.collect_set("h")).alias("shs"))
+            .select("doc_id", "shs", F.size("shs").cast("int").alias("n_sh"))
+        )
+        # fold-aware read (identical to a plain read when the owning
+        # stream never folds — no base partitions exist)
+        old_bands = live(s, bands_t).select("doc_id", "bi", "bv")
+        # candidates: within-batch self-join ∪ new-vs-state probe
+        x = new_bands.select(F.col("doc_id").alias("id_x"), "bi", "bv")
+        within = x.join(new_bands.select(F.col("doc_id").alias("id_y"), "bi", "bv"), ["bi", "bv"])
+        cross = x.join(old_bands.select(F.col("doc_id").alias("id_y"), "bi", "bv"), ["bi", "bv"])
+        cands = (
+            within.unionByName(cross)
+            .select(F.least("id_x", "id_y").alias("id_a"), F.greatest("id_x", "id_y").alias("id_b"))
+            .filter(F.col("id_a") < F.col("id_b"))
+            .distinct()
+        )
+        allsets = live(s, shs_t).select("doc_id", "shs", "n_sh").unionByName(new_shs)
+        sa = allsets.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"), F.col("n_sh").alias("n_a"))
+        sb = allsets.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"), F.col("n_sh").alias("n_b"))
+        verified = (
+            cands.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn("n_common", F.size(F.array_intersect("sa", "sb")))
+            .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
+            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+            .select("id_a", "id_b", "jaccard")
+            # a replayed epoch sees its docs TWICE (state copy + batch): the
+            # duplicate join legs produce identical rows — collapse them
+            .distinct()
+        )
+        write_epoch(verified, pairs_t, epoch_id)
+        write_epoch(new_bands, bands_t, epoch_id)
+        write_epoch(new_shs, shs_t, epoch_id)
     finally:
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for fr in (sh, new_bands, new_shs):
-        fr.unpersist()
+        for fr in held:
+            fr.unpersist()
 
 
 def run_neardup_ingest_stream(
@@ -306,32 +304,16 @@ def run_neardup_ingest_stream(
     test); on cap-triggering corpora the incremental path keeps more
     boilerplate shingles — monitor the band-bucket histogram and refresh
     state with a batch recompute when it skews."""
-    from ..operators.dedup import (
-        JACCARD_THRESHOLD,
-        _doc_shingles,
-        minhash_signatures,
-        stacked_band_frame,
-    )
-    from ..functions.text import h60
-
     bands_t, shs_t, pairs_t = f"{name}_bands", f"{name}_shsets", f"{name}_pairs"
     if reset_tables:
-        for t in (bands_t, shs_t, pairs_t):
-            _drop_table(spark, t)
         # epoch-partitioned so a crash-replayed micro-batch dynamic-
         # OVERWRITES its own partition with byte-identical rows instead
         # of appending duplicates (same protocol as the quality gate);
         # safe to write directly — each sink's rows derive from the batch
         # and/or the OTHER tables, never its own
-        spark.sql(
-            f"CREATE TABLE {bands_t} (doc_id BIGINT, bi INT, bv STRING, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {shs_t} (doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {pairs_t} (id_a BIGINT, id_b BIGINT, jaccard DOUBLE, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
+        create_state_table(spark, bands_t, "doc_id BIGINT, bi INT, bv STRING")
+        create_state_table(spark, shs_t, "doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT")
+        create_state_table(spark, pairs_t, "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
 
     stage = stage_dir or stage_document_chunks(sf_dir, n_chunks)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -342,13 +324,10 @@ def run_neardup_ingest_stream(
         # coalesce bounds the state tables' partition counts — the
         # `fold_every` contract shared by every MV stream here
         for t in (bands_t, shs_t, pairs_t):
-            _maybe_fold(batch_df.sparkSession, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(batch_df.sparkSession, t, epoch_id, fold_every, refold_width=refold_width)
         _neardup_epoch(batch_df, epoch_id, bands_t, shs_t, pairs_t)
 
-    w = docs.writeStream.foreachBatch(neardup_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(docs, neardup_batch, f"{name}_q", checkpoint_dir)
 
 
 def run_neardup_cdc_stream(
@@ -389,21 +368,10 @@ def run_neardup_cdc_stream(
     bands_t, shs_t = f"{name}_bands", f"{name}_shsets"
     pairs_t, del_t = f"{name}_pairs", f"{name}_del"
     if reset_tables:
-        for t in (bands_t, shs_t, pairs_t, del_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {bands_t} (doc_id BIGINT, bi INT, bv STRING, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {shs_t} (doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {pairs_t} (id_a BIGINT, id_b BIGINT, jaccard DOUBLE, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {del_t} (doc_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, bands_t, "doc_id BIGINT, bi INT, bv STRING")
+        create_state_table(spark, shs_t, "doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT")
+        create_state_table(spark, pairs_t, "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
+        create_state_table(spark, del_t, "doc_id BIGINT")
 
     stage = stage_dir or stage_document_cdc_chunks(sf_dir, n_chunks, delete_mod)
     schema = (
@@ -415,10 +383,10 @@ def run_neardup_cdc_stream(
     def ndcdc_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (bands_t, shs_t, pairs_t, del_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         d_del = df.filter(F.col("side") == "D_DEL").select("doc_id")
         hist = (
-            live_epochs(s.table(del_t), s, del_t)
+            live(s, del_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -431,10 +399,7 @@ def run_neardup_cdc_stream(
         _neardup_epoch(ins, epoch_id, bands_t, shs_t, pairs_t)
         _ivm_write_epoch(s, d_del, del_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(ndcdc_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, ndcdc_batch, f"{name}_q", checkpoint_dir)
 
 
 def neardup_pairs_view(spark: SparkSession, name: str = "ndcdc") -> DataFrame:
@@ -442,12 +407,12 @@ def neardup_pairs_view(spark: SparkSession, name: str = "ndcdc") -> DataFrame:
     with both sides alive (tombstones anti-joined on id_a AND id_b) —
     equals batch `dedup_minhash_lsh` over never-deleted documents. Read
     cost O(pairs), never a corpus or shingle rescan."""
-    pairs = live_epochs(spark.table(f"{name}_pairs"), spark, f"{name}_pairs").drop(
+    pairs = live(spark, f"{name}_pairs").drop(
         "epoch"
     )
     if spark.catalog.tableExists(f"{name}_del"):
         dead = (
-            live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+            live(spark, f"{name}_del")
             .drop("epoch")
             .distinct()
         )
@@ -460,7 +425,7 @@ def neardup_pairs_view(spark: SparkSession, name: str = "ndcdc") -> DataFrame:
 def purge_neardup_dead(spark: SparkSession, name: str = "ndcdc") -> int:
     """Physically retire dead docs from the near-dup index — bands and
     shingle sets of tombstoned docs, and pairs with a dead side — via
-    the house partition mechanics (`_gc_partitions`). REPLAY GUARD (the
+    the house partition mechanics (`gc_partitions`). REPLAY GUARD (the
     purge_quantile_rows discipline): only docs whose tombstone sits
     OUTSIDE the newest live positive epoch are purgeable — the newest
     epoch's checkpoint replay re-probes band/shingle state, and purging
@@ -472,35 +437,24 @@ def purge_neardup_dead(spark: SparkSession, name: str = "ndcdc") -> int:
     if not spark.catalog.tableExists(del_t):
         return 0
     pos = [e for e in _partition_epochs(spark, del_t) if e >= 0]
-    d_live = live_epochs(spark.table(del_t), spark, del_t)
+    d_live = live(spark, del_t)
     if pos:
         d_live = d_live.filter(F.col("epoch") != max(pos))
     dead = d_live.select("doc_id").distinct().withColumn("_dd", F.lit(True))
     touched = 0
-    for t, cols, empty in (
-        (
-            f"{name}_bands",
-            ["doc_id", "bi", "bv"],
-            "SELECT BIGINT(NULL), INT(NULL), STRING(NULL) WHERE false",
-        ),
-        (
-            f"{name}_shsets",
-            ["doc_id", "shs", "n_sh"],
-            "SELECT BIGINT(NULL), CAST(NULL AS ARRAY<BIGINT>), INT(NULL) WHERE false",
-        ),
-    ):
+    for t in (f"{name}_bands", f"{name}_shsets"):
         flagged = (
-            live_epochs(spark.table(t), spark, t)
+            live(spark, t)
             .join(F.broadcast(dead), "doc_id", "left")
             .withColumn("_dead", F.coalesce(F.col("_dd"), F.lit(False)))
             .drop("_dd")
         )
-        touched += _gc_partitions(spark, t, flagged, cols, empty)
+        touched += gc_partitions(spark, t, flagged)
     pairs_t = f"{name}_pairs"
     da = dead.select(F.col("doc_id").alias("id_a"), F.col("_dd").alias("_da"))
     db = dead.select(F.col("doc_id").alias("id_b"), F.col("_dd").alias("_db"))
     flagged_p = (
-        live_epochs(spark.table(pairs_t), spark, pairs_t)
+        live(spark, pairs_t)
         .join(F.broadcast(da), "id_a", "left")
         .join(F.broadcast(db), "id_b", "left")
         .withColumn(
@@ -510,10 +464,7 @@ def purge_neardup_dead(spark: SparkSession, name: str = "ndcdc") -> int:
         )
         .drop("_da", "_db")
     )
-    touched += _gc_partitions(
-        spark, pairs_t, flagged_p, ["id_a", "id_b", "jaccard"],
-        "SELECT BIGINT(NULL), BIGINT(NULL), DOUBLE(NULL) WHERE false",
-    )
+    touched += gc_partitions(spark, pairs_t, flagged_p)
     return touched
 
 
@@ -722,21 +673,17 @@ def _overwrite_changed_buckets(new_rows: DataFrame, table: str) -> None:
     already absorbed it (changed = ∅ ⇒ no write), and a refresh that
     crashed mid-write re-finds exactly the not-yet-written buckets."""
     s = new_rows.sparkSession
-    cols = [c for c in new_rows.columns]
     new_rows = new_rows.persist()
-    changed = new_rows.join(s.table(table), on=cols, how="left_anti")
-    touched = [r.kb for r in changed.select("kb").distinct().collect()]
-    if touched:
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+    try:
+        changed = new_rows.join(s.table(table), on=new_rows.columns, how="left_anti")
+        touched = [r.kb for r in changed.select("kb").distinct().collect()]
+        if touched:
             new_rows.filter(F.col("kb").isin(touched)).write.mode(
                 "overwrite"
             ).insertInto(table, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        s.catalog.refreshTable(table)
-    new_rows.unpersist()
+            s.catalog.refreshTable(table)
+    finally:
+        new_rows.unpersist()
 
 
 def run_pagerank_stream(
@@ -789,19 +736,17 @@ def run_pagerank_stream(
     Vertices derive from the accumulated edges (src ∪ nbr) — on k-NN
     graphs every vector is a src, so this equals the embedding universe.
     """
-    from ..operators.graph import PR_ITERS, pagerank
+    from ..operators.graph import PR_ITERS
 
     iters = iters or PR_ITERS
     edges_t, ranks_t = f"{name}_edges", f"{name}_ranks"
     if fresh_tables:
-        _drop_table(spark, edges_t)
-        _drop_table(spark, ranks_t)
-        spark.sql(
-            f"CREATE TABLE {edges_t} (src_id BIGINT, nbr_id BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {ranks_t} (vertex_id BIGINT, out_deg BIGINT,"
-            f" rank_units BIGINT, rank DOUBLE, kb INT) USING parquet PARTITIONED BY (kb)"
+        create_state_table(spark, edges_t, "src_id BIGINT, nbr_id BIGINT")
+        create_state_table(
+            spark,
+            ranks_t,
+            "vertex_id BIGINT, out_deg BIGINT, rank_units BIGINT, rank DOUBLE, kb INT",
+            "kb",
         )
 
     edges = (
@@ -812,17 +757,10 @@ def run_pagerank_stream(
 
     def pr_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            batch_df.select(
-                "src_id", "nbr_id", F.lit(epoch_id).cast("long").alias("epoch")
-            ).write.mode("overwrite").insertInto(edges_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(batch_df.select("src_id", "nbr_id"), edges_t, epoch_id)
         # fold BEFORE the refresh so the refresh reads the bounded log
         # (identity merge — edges are immutable rows)
-        _maybe_fold(s, edges_t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(s, edges_t, epoch_id, fold_every, refold_width=refold_width)
         due = (epoch_id + 1) % refresh_every == 0 or (
             final_epoch is not None and epoch_id >= final_epoch
         )
@@ -830,10 +768,7 @@ def run_pagerank_stream(
             return
         refresh_pagerank_ranks(s, name, iters=iters, n_buckets=n_buckets)
 
-    w = edges.writeStream.foreachBatch(pr_epoch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(edges, pr_epoch, f"{name}_q", checkpoint_dir)
 
 
 def refresh_pagerank_ranks(
@@ -846,11 +781,11 @@ def refresh_pagerank_ranks(
     standalone form of the stream's refresh, for callers running a
     coarse `refresh_every` cadence who need ranks current NOW (e.g.
     after the stream drains, when no `final_epoch` was known up front).
-    Edges read through `live_epochs`, so a folded edge log (and a crash
+    Edges read through `live`, so a folded edge log (and a crash
     mid-fold) refreshes identically."""
     from ..operators.graph import PR_ITERS, pagerank
 
-    acc = live_epochs(spark.table(f"{name}_edges"), spark, f"{name}_edges").select("src_id", "nbr_id")
+    acc = live(spark, f"{name}_edges").select("src_id", "nbr_id")
     verts = acc.select(F.col("src_id").alias("vertex_id")).unionByName(
         acc.select(F.col("nbr_id").alias("vertex_id"))
     )
@@ -902,33 +837,20 @@ def run_dedup_clusters_stream(
 
     `fold_every=N`: every Nth epoch, each of the four epoch-partitioned
     state tables coalesces its window into a tiered watermark base
-    (identity merge — see `_fold_epoch_partitions`); every reader
+    (identity merge — see `epochs.fold`); every reader
     (the band/shingle probes in `_neardup_epoch`, the pairs/docs reads
-    here) routes through `live_epochs`, so detection and clustering are
+    here) routes through `live`, so detection and clustering are
     bit-identical with folds on."""
     from ..operators.dedup import dedup_clusters
 
     bands_t, shs_t, pairs_t = f"{name}_bands", f"{name}_shsets", f"{name}_pairs"
     docs_t, clusters_t = f"{name}_docs", f"{name}_clusters"
     if reset_tables:
-        for t in (bands_t, shs_t, pairs_t, docs_t, clusters_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {bands_t} (doc_id BIGINT, bi INT, bv STRING, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {shs_t} (doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {pairs_t} (id_a BIGINT, id_b BIGINT, jaccard DOUBLE, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {docs_t} (doc_id BIGINT, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-        )
-        spark.sql(
-            f"CREATE TABLE {clusters_t} (doc_id BIGINT, canonical_id BIGINT, kb INT)"
-            f" USING parquet PARTITIONED BY (kb)"
-        )
+        create_state_table(spark, bands_t, "doc_id BIGINT, bi INT, bv STRING")
+        create_state_table(spark, shs_t, "doc_id BIGINT, shs ARRAY<BIGINT>, n_sh INT")
+        create_state_table(spark, pairs_t, "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
+        create_state_table(spark, docs_t, "doc_id BIGINT")
+        create_state_table(spark, clusters_t, "doc_id BIGINT, canonical_id BIGINT, kb INT", "kb")
 
     stage = stage_dir or stage_document_chunks(sf_dir, n_chunks)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -942,26 +864,16 @@ def run_dedup_clusters_stream(
         # scans O(fold_every) partitions + bases, not O(epoch)) and what
         # puts the fold-read path under the registry gate
         for t in (bands_t, shs_t, pairs_t, docs_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         _neardup_epoch(batch_df, epoch_id, bands_t, shs_t, pairs_t)
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            batch_df.select(
-                "doc_id", F.lit(epoch_id).cast("long").alias("epoch")
-            ).write.mode("overwrite").insertInto(docs_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(batch_df.select("doc_id"), docs_t, epoch_id)
         clusters = dedup_clusters(
-            live_epochs(s.table(docs_t), s, docs_t).select("doc_id"),
-            pairs=live_epochs(s.table(pairs_t), s, pairs_t).select("id_a", "id_b"),
+            live(s, docs_t).select("doc_id"),
+            pairs=live(s, pairs_t).select("id_a", "id_b"),
         ).withColumn("kb", F.pmod(F.col("doc_id"), F.lit(n_buckets)).cast("int"))
         _overwrite_changed_buckets(clusters, clusters_t)
 
-    w = docs.writeStream.foreachBatch(cluster_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(docs, cluster_batch, f"{name}_q", checkpoint_dir)
 
 
 def run_cdc_compaction_stream(
@@ -1004,10 +916,12 @@ def run_cdc_compaction_stream(
     compacted) state and rewrites the same logical content."""
     state_t = f"{name}_state"
     if fresh_tables:
-        _drop_table(spark, state_t)
-        spark.sql(
-            f"CREATE TABLE {state_t} (user_id BIGINT, ts_us BIGINT, event_id BIGINT,"
-            f" op STRING, v_cents BIGINT, kb INT) USING parquet PARTITIONED BY (kb)"
+        create_state_table(
+            spark,
+            state_t,
+            "user_id BIGINT, ts_us BIGINT, event_id BIGINT, op STRING, v_cents BIGINT,"
+            " kb INT",
+            "kb",
         )
 
     from ..sources.loaders import events_parquet_stream
@@ -1042,14 +956,9 @@ def run_cdc_compaction_stream(
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.select("user_id", "ts_us", "event_id", "op", "v_cents", "kb").write.mode(
-                "overwrite"
-            ).insertInto(state_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        merged.select("user_id", "ts_us", "event_id", "op", "v_cents", "kb").write.mode(
+            "overwrite"
+        ).insertInto(state_t, overwrite=True)
         s.catalog.refreshTable(state_t)
         rows.unpersist()
         if compact_every and (epoch_id + 1) % compact_every == 0:
@@ -1057,10 +966,7 @@ def run_cdc_compaction_stream(
 
             compact_small_files(s, state_t)
 
-    w = events.writeStream.foreachBatch(merge_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(events, merge_batch, f"{name}_q", checkpoint_dir)
 
 
 def cdc_current_view(spark: SparkSession, name: str = "cdc_stream") -> DataFrame:
@@ -1138,19 +1044,16 @@ def run_scd2_stream(
         raise ValueError(f"on_late must be 'error' or 'quarantine', got {on_late!r}")
     state_t, wm_t, quar_t = f"{name}_state", f"{name}_wm", f"{name}_quarantine"
     if fresh_tables:
-        for t in (state_t, wm_t, quar_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {state_t} (user_id BIGINT, state STRING, valid_from_us BIGINT,"
-            f" src_event_id BIGINT, valid_to_us BIGINT, version BIGINT, kb INT)"
-            f" USING parquet PARTITIONED BY (kb)"
+        create_state_table(
+            spark,
+            state_t,
+            "user_id BIGINT, state STRING, valid_from_us BIGINT, src_event_id BIGINT,"
+            " valid_to_us BIGINT, version BIGINT, kb INT",
+            "kb",
         )
-        spark.sql(
-            f"CREATE TABLE {wm_t} (max_t BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {quar_t} (user_id BIGINT, state STRING, t BIGINT,"
-            f" event_id BIGINT, kb INT) USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(spark, wm_t, "max_t BIGINT")
+        create_state_table(
+            spark, quar_t, "user_id BIGINT, state STRING, t BIGINT, event_id BIGINT, kb INT"
         )
 
     from ..sources.loaders import events_parquet_stream
@@ -1188,15 +1091,11 @@ def run_scd2_stream(
                     "collapse would silently produce wrong versions — front the "
                     "stream with the late-data engine or use on_late='quarantine'"
                 )
-            prev_mode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                newe.filter(F.col("t") < wm).select(
-                    "user_id", "state", "t", "event_id", "kb",
-                    F.lit(epoch_id).cast("long").alias("epoch"),
-                ).write.mode("overwrite").insertInto(quar_t, overwrite=True)
-            finally:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            write_epoch(
+                newe.filter(F.col("t") < wm).select("user_id", "state", "t", "event_id", "kb"),
+                quar_t,
+                epoch_id,
+            )
             newe = newe.filter(F.col("t") >= wm)
         touched = [r.kb for r in newe.select("kb").distinct().collect()]
         if not touched:
@@ -1228,25 +1127,15 @@ def run_scd2_stream(
                 "kb",
             )
         )
-        prev_mode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").insertInto(state_t, overwrite=True)
-            # advance the high-watermark: max event time of the PROCESSED
-            # rows (any in-order row ≥ wm > every quarantined row, so the
-            # batch max always comes from a processed row)
-            s.createDataFrame(
-                [(int(bounds.hi), int(epoch_id))], "max_t long, epoch long"
-            ).write.mode("overwrite").insertInto(wm_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        merged.write.mode("overwrite").insertInto(state_t, overwrite=True)
+        # advance the high-watermark: max event time of the PROCESSED
+        # rows (any in-order row ≥ wm > every quarantined row, so the
+        # batch max always comes from a processed row)
+        write_epoch(s.createDataFrame([(int(bounds.hi),)], "max_t long"), wm_t, epoch_id)
         s.catalog.refreshTable(state_t)
         newe_all.unpersist()
 
-    w = events.writeStream.foreachBatch(scd2_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(events, scd2_batch, f"{name}_q", checkpoint_dir)
 
 
 def scd2_current_view(spark: SparkSession, name: str = "scd2_stream") -> DataFrame:
@@ -1256,63 +1145,13 @@ def scd2_current_view(spark: SparkSession, name: str = "scd2_stream") -> DataFra
     )
 
 
-# tier offset in the negative-epoch base encoding: a tier-t base over the
-# epoch window topped by w is stored at epoch = -(t·TIER_OFF + w + 1), so
-# tier-1 bases (t = 0) keep the original -(w + 1) encoding (existing
-# tables stay valid) and the tier is recoverable from the partition value
-# alone (epochs stay < TIER_OFF forever: at one epoch per second that is
-# ~31k years)
-TIER_OFF = 10**12
-
-
-def _base_tiers(eps: list[int]) -> list[tuple[int, int]]:
-    """Decode negative partition values to (tier, window-top) pairs."""
-    return [((-e - 1) // TIER_OFF, (-e - 1) % TIER_OFF) for e in eps if e < 0]
-
-
-def _partition_epochs(spark: SparkSession, table: str) -> list[int]:
-    """Partition values from catalog METADATA — no data scan."""
-    return [
-        int(r[0].split("=")[1]) for r in spark.sql(f"SHOW PARTITIONS {table}").collect()
-    ]
-
-
-def live_epochs(p: DataFrame, spark: SparkSession | None = None, table: str | None = None) -> DataFrame:
-    """Filter an epoch-partitioned MV state frame to its LIVE rows under
-    the TIERED fold-watermark encoding: bases at every tier (epoch =
-    -(t·TIER_OFF + w + 1), each covering the epoch interval up to its w)
-    plus only positive epochs > the newest window-top. Liveness per
-    level: a positive epoch is live iff above EVERY base's window-top; a
-    tier-t base is live iff its window-top is above every HIGHER-tier
-    base's (higher tiers absorb contiguous prefixes of lower ones, so
-    the comparison is total). Stale partitions — an absorbed epoch or
-    base left on disk by a crash between a fold's write and its GC, or
-    a replayed old batch rewriting its partition — are ignored, never
-    double-read. Windows at one level never overlap (each fold/refold
-    builds only from live entries above the then-newest watermark of
-    its target tier, and watermarks increase monotonically), so reading
-    all live rows is exact. With no base present, every epoch ≥ 0 is
-    live.
-
-    Pass (spark, table) to derive the watermarks from SHOW PARTITIONS —
-    metadata-only, no aggregate sub-scan + crossJoin per read (the
-    ingest probes run this several times per batch; r08 ADVICE #3). The
-    relational fallback (frame only) computes the same liveness from the
-    rows themselves."""
-    if spark is not None and table is not None:
-        tw = _base_tiers(_partition_epochs(spark, table))
-        wm = max((w for _, w in tw), default=-1)
-        live_neg = [
-            -(t * TIER_OFF + w + 1)
-            for t, w in tw
-            if w > max((w2 for t2, w2 in tw if t2 > t), default=-1)
-        ]
-        cond = F.col("epoch") > F.lit(wm)
-        if live_neg:
-            cond = cond | F.col("epoch").isin(live_neg)
-        return p.filter(cond)
-    # relational path: one tiny (≤ #tiers rows → 1 row) broadcast frame of
-    # per-tier max window-tops; each row's threshold folds over it
+def live_epochs(p: DataFrame) -> DataFrame:
+    """Relational form of `epochs.live`: the same LIVE-row filter over
+    the tiered fold-watermark encoding, with the per-tier watermarks
+    derived from the rows themselves instead of SHOW PARTITIONS — the
+    reference the metadata path is tested against."""
+    # one tiny (≤ #tiers rows → 1 row) broadcast frame of per-tier max
+    # window-tops; each row's threshold folds over it
     vt = F.expr(f"(-epoch - 1) DIV {TIER_OFF}")
     vw = F.expr(f"pmod(-epoch - 1, {TIER_OFF})")
     wms = (
@@ -1340,158 +1179,6 @@ def live_epochs(p: DataFrame, spark: SparkSession | None = None, table: str | No
     )
 
 
-def _fold_epoch_partitions(spark: SparkSession, table: str, w: int, merge) -> None:
-    """TIERED fold: merge the positive epochs in (wm_prev, w] into ONE
-    new base partition encoded epoch = -(w + 1), leaving older bases
-    untouched — the bound that keeps a minutes-cadence stream from
-    accreting one parquet partition per epoch forever (a year ≈ 500k
-    partition footers becomes ≈ 500k/fold_every bases).
-
-    Tiered, not absorbing, on purpose: an absorbing fold (new base =
-    old base + window) re-reads and re-writes the ENTIRE accumulated
-    state every fold — O(lifetime) IO per fold on the ingest hot path,
-    O(lifetime²/fold_every) cumulative (the r08 review's finding).
-    Tiered folds touch only the window: every row is written exactly twice
-    ever — once at ingest, once when its window folds — and per-fold IO
-    is O(fold_every batches), preserving the streams' O(batch)
-    maintenance contract. The trade is reader fan-in over O(#bases)
-    partitions instead of 1, which is the footer-count problem already
-    being solved, just divided by fold_every.
-
-    `merge(df)` maps the window's rows (epoch column excluded) to the
-    base's content — an associative re-aggregation for partial
-    aggregates (corpus stats), identity for append-only row stores
-    (PQ codes, edge logs); either way a pure function of the source
-    ROWS, so a replayed fold is content-identical or an early-return.
-
-    Crash-safety comes from the encoding, not atomicity: readers go
-    through `live_epochs`, so between the base write and the partition
-    GC below, the already-folded positive epochs still on disk are
-    simply ignored. Only epochs ABOVE the previous watermark feed the
-    new base — any on-disk epoch ≤ wm_prev is an already-absorbed copy.
-    A replayed fold (its base already landed) takes the GC-only path:
-    no rewrite, just dropping stale positives ≤ the watermark. GC is
-    metadata-only (ALTER TABLE DROP PARTITION on a bounded list);
-    bases are never dropped."""
-    eps = _partition_epochs(spark, table)
-    tw = _base_tiers(eps)
-    floor = max((w2 for _, w2 in tw), default=-1)
-    srcs = [e for e in eps if floor < e <= w]
-    if srcs:
-        p = spark.table(table)
-        # reads and dynamic-overwrites the same table in ONE plan with no
-        # checkpoint barrier — safe ONLY because the written base
-        # partition -(w+1) is disjoint from the read positive epochs
-        # (srcs > floor ≥ every base window-top) and dynamic overwrite
-        # touches written partitions only; any future merge fn that reads
-        # a BASE partition must localCheckpoint first (the
-        # compact_small_files discipline)
-        merged = merge(
-            p.filter(F.col("epoch").isin(srcs)).drop("epoch")
-        ).withColumn("epoch", F.lit(-(w + 1)).cast("long"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").insertInto(table, overwrite=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        wm_new = w
-    else:
-        # replay after a crash: the base for this window already landed
-        # (wm_prev ≥ w) — nothing to rewrite, only stale positives to GC
-        wm_new = floor
-    for e in eps:
-        if 0 <= e <= wm_new:
-            spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (epoch={e})")
-    spark.catalog.refreshTable(table)
-
-
-def _refold_bases(spark: SparkSession, table: str, merge, width: int | None) -> None:
-    """SECOND-tier (LSM-style) fold — VERDICT r08 item #4: tier-1 bases
-    still accrete one per `fold_every` epochs forever; whenever a tier
-    accumulates `width` live bases, they merge into ONE base at the tier
-    above (same negative-epoch watermark encoding, window-top = the
-    merged bases' max), cascading upward like an LSM compaction. Live
-    partitions are then bounded by width · #tiers = O(width ·
-    log_width(lifetime)), and each row is written once per tier it
-    passes through — O(log) writes per row over the table's lifetime,
-    the same amortization argument as every LSM tree.
-
-    Crash-safety is the SAME argument as `_fold_epoch_partitions`, one
-    level up: the super-base is built ONLY from live tier-t bases above
-    the tier-(t+1) watermark; readers (`live_epochs`) ignore any tier-t
-    base at-or-below a higher tier's window-top, so a crash between the
-    super-base write and the GC below leaves ignored-not-double-read
-    stale bases that the next refold GCs; a replayed refold finds its
-    absorbed inputs no longer live and takes the GC-only path. The
-    read-then-overwrite is barrier-free for the same disjointness
-    reason: the written partition lives at tier t+1, the reads at tier
-    t."""
-    if not width or width < 2:
-        # width=1 would never terminate: a single live base always
-        # satisfies len(live) >= 1, so each pass promotes it one tier
-        # higher forever — the kwarg is public on every run_*_stream
-        # entry point, so guard rather than assume call-site discipline
-        return
-    changed = True
-    while changed:  # cascade: a refold may fill the tier above
-        changed = False
-        tw = _base_tiers(_partition_epochs(spark, table))
-        for t in sorted({t2 for t2, _ in tw}):
-            hi_wm = max((w2 for t2, w2 in tw if t2 > t), default=-1)
-            # GC bases this tier already absorbed above (crash leftovers)
-            for t2, w2 in tw:
-                if t2 == t and w2 <= hi_wm:
-                    spark.sql(
-                        f"ALTER TABLE {table} DROP IF EXISTS PARTITION"
-                        f" (epoch={-(t * TIER_OFF + w2 + 1)})"
-                    )
-            live = sorted(w2 for t2, w2 in tw if t2 == t and w2 > hi_wm)
-            if len(live) >= width:
-                w_max = live[-1]
-                srcs = [-(t * TIER_OFF + w2 + 1) for w2 in live]
-                p = spark.table(table)
-                merged = merge(
-                    p.filter(F.col("epoch").isin(srcs)).drop("epoch")
-                ).withColumn(
-                    "epoch", F.lit(-((t + 1) * TIER_OFF + w_max + 1)).cast("long")
-                )
-                prev = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
-                    merged.write.mode("overwrite").insertInto(table, overwrite=True)
-                finally:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-                for e in srcs:
-                    spark.sql(
-                        f"ALTER TABLE {table} DROP IF EXISTS PARTITION (epoch={e})"
-                    )
-                changed = True
-                break  # partition set changed; re-list and cascade
-    spark.catalog.refreshTable(table)
-
-
-def _maybe_fold(
-    spark: SparkSession,
-    table: str,
-    epoch_id: int,
-    fold_every: int | None,
-    merge=None,
-    refold_width: int | None = None,
-) -> None:
-    """Shared fold cadence gate for the foreachBatch loops: every
-    `fold_every`-th epoch, fold the strictly-older window (≤ epoch−1 —
-    never the in-flight epoch, whose replay semantics stay untouched),
-    then cascade any tier that reached `refold_width` live bases into
-    the tier above. `merge=None` means the identity merge (append-only
-    row stores)."""
-    if fold_every and epoch_id > 0 and epoch_id % fold_every == 0:
-        _fold_epoch_partitions(spark, table, epoch_id - 1, merge or (lambda df: df))
-        _refold_bases(spark, table, merge or (lambda df: df), refold_width)
-
-
 def _cstats_merge(df: DataFrame) -> DataFrame:
     """Corpus-stats fold merge: the same associative integer sums the
     view performs."""
@@ -1501,11 +1188,6 @@ def _cstats_merge(df: DataFrame) -> DataFrame:
         F.sum("total_chars").alias("total_chars"),
         F.sum("sum_scaled_q").alias("sum_scaled_q"),
     )
-
-
-def _fold_cstats_partials(spark: SparkSession, parts_t: str, w: int) -> None:
-    """Corpus-stats member of `_fold_epoch_partitions`."""
-    _fold_epoch_partitions(spark, parts_t, w, _cstats_merge)
 
 
 def run_corpus_stats_stream(
@@ -1543,7 +1225,7 @@ def run_corpus_stats_stream(
     `fold_every=N` bounds the partials table: every Nth epoch, the
     window of epochs since the last fold collapses into ONE
     watermark-encoded base partition (tiered — see
-    `_fold_epoch_partitions`). The view is bit-identical before and
+    `epochs.fold`). The view is bit-identical before and
     after a fold (pinned in tests); partition count drops from one per
     epoch to one per N epochs at O(window) fold IO — each partial row
     is written at most twice ever."""
@@ -1551,11 +1233,11 @@ def run_corpus_stats_stream(
 
     parts_t = f"{name}_partials"
     if fresh_tables:
-        _drop_table(spark, parts_t)
-        spark.sql(
-            f"CREATE TABLE {parts_t} (source STRING, lang STRING, n_docs BIGINT,"
-            f" total_tokens BIGINT, total_chars BIGINT, sum_scaled_q BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            parts_t,
+            "source STRING, lang STRING, n_docs BIGINT, total_tokens BIGINT,"
+            " total_chars BIGINT, sum_scaled_q BIGINT",
         )
 
     stage = stage_dir or stage_document_chunks(sf_dir, n_chunks)
@@ -1585,21 +1267,11 @@ def run_corpus_stats_stream(
             F.sum("nc").alias("total_chars"),
             F.sum(scaled).alias("sum_scaled_q"),
         )
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            part.withColumn("epoch", F.lit(epoch_id).cast("long")).write.mode(
-                "overwrite"
-            ).insertInto(parts_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(part, parts_t, epoch_id)
         s.catalog.refreshTable(parts_t)
-        _maybe_fold(s, parts_t, epoch_id, fold_every, merge=_cstats_merge, refold_width=refold_width)
+        maybe_fold(s, parts_t, epoch_id, fold_every, merge=_cstats_merge, refold_width=refold_width)
 
-    w = docs.writeStream.foreachBatch(stats_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(docs, stats_batch, f"{name}_q", checkpoint_dir)
 
 
 def corpus_stats_view(spark: SparkSession, name: str = "cstats") -> DataFrame:
@@ -1607,11 +1279,10 @@ def corpus_stats_view(spark: SparkSession, name: str = "cstats") -> DataFrame:
     sums plus corpus_profile's single terminal double division, so the
     result is bit-identical to the batch operator over the same docs.
 
-    Fold-aware: reads through `live_epochs`, so partially-GC'd folds
+    Fold-aware: reads through `live`, so partially-GC'd folds
     (crash between base write and partition drop) never double-count."""
-    live = live_epochs(spark.table(f"{name}_partials"), spark, f"{name}_partials")
     return (
-        live.groupBy("source", "lang")
+        live(spark, f"{name}_partials").groupBy("source", "lang")
         .agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("total_tokens").alias("total_tokens"),
@@ -1645,7 +1316,7 @@ def run_uv_sketch_stream(
       epoch's own partition) — the exact-UV side of the batch twin's
       est-vs-exact contract.
 
-    The sketch fold merge is the point: `_fold_epoch_partitions` gets a
+    The sketch fold merge is the point: `epochs.fold` gets a
     REGISTER-MAX merge (groupBy day → hll_union_agg + sum pv), proving
     the tiered fold generalizes beyond integer sums (corpus stats) and
     identity (codes/edges) to any associative+commutative state. HLL
@@ -1660,53 +1331,33 @@ def run_uv_sketch_stream(
 
     sk_t, users_t = f"{name}_sketches", f"{name}_users"
     if fresh_tables:
-        for t in (sk_t, users_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {sk_t} (day DATE, sk BINARY, pv BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {users_t} (user_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, sk_t, "day DATE, sk BINARY, pv BIGINT")
+        create_state_table(spark, users_t, "user_id BIGINT")
 
     events = staged_replay_source(spark, sf_dir).filter(F.col("event_type") == "view")
 
     def uv_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
         # fold BEFORE the probe (window ≤ epoch−1), the ingest discipline
-        _maybe_fold(s, sk_t, epoch_id, fold_every, merge=_uvsk_merge, refold_width=refold_width)
-        _maybe_fold(s, users_t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(s, sk_t, epoch_id, fold_every, merge=_uvsk_merge, refold_width=refold_width)
+        maybe_fold(s, users_t, epoch_id, fold_every, refold_width=refold_width)
         v = batch_df.persist()
         daily = v.groupBy(F.to_date("ts").alias("day")).agg(
             F.hll_sketch_agg("user_id").alias("sk"), F.count(F.lit(1)).alias("pv")
         )
         seen = (
-            live_epochs(s.table(users_t), s, users_t)
+            live(s, users_t)
             .filter(F.col("epoch") != epoch_id)
             .select("user_id")
         )
         newu = v.select("user_id").distinct().join(seen, "user_id", "left_anti")
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            daily.withColumn("epoch", F.lit(epoch_id).cast("long")).write.mode(
-                "overwrite"
-            ).insertInto(sk_t, overwrite=True)
-            newu.withColumn("epoch", F.lit(epoch_id).cast("long")).write.mode(
-                "overwrite"
-            ).insertInto(users_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(daily, sk_t, epoch_id)
+        write_epoch(newu, users_t, epoch_id)
         for t in (sk_t, users_t):
             s.catalog.refreshTable(t)
         v.unpersist()
 
-    w = events.writeStream.foreachBatch(uv_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(events, uv_batch, f"{name}_q", checkpoint_dir)
 
 
 def _uvsk_merge(df: DataFrame) -> DataFrame:
@@ -1721,16 +1372,16 @@ def _uvsk_merge(df: DataFrame) -> DataFrame:
 def uv_sketch_view(spark: SparkSession, name: str = "uvsk") -> DataFrame:
     """Batch-shaped read of the maintained UV state — same four columns
     and arithmetic as `uv_sketch_rollup`: exact uv from the first-seen
-    user set (rows are unique by the probe invariant; live_epochs drops
+    user set (rows are unique by the probe invariant; `live` drops
     any crash-stale absorbed partition), merged-sketch estimate checked
     against it at the 5% bound."""
-    sk = live_epochs(spark.table(f"{name}_sketches"), spark, f"{name}_sketches")
+    sk = live(spark, f"{name}_sketches")
     merged = sk.agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__est"),
         F.sum("pv").alias("pv_total"),
         F.countDistinct("day").alias("n_days"),
     )
-    users = live_epochs(spark.table(f"{name}_users"), spark, f"{name}_users")
+    users = live(spark, f"{name}_users")
     exact = users.agg(F.count(F.lit(1)).alias("uv"))
     return merged.crossJoin(exact).select(
         "uv",
@@ -1778,11 +1429,11 @@ def run_pq_index_stream(
 
     `fold_every=N`: every Nth epoch, the code partitions written since
     the last fold coalesce into one watermark base via
-    `_fold_epoch_partitions` with the IDENTITY merge — codes are
+    `epochs.fold` with the IDENTITY merge — codes are
     immutable rows, so the fold is a pure rewrite of ONLY that window
     (each code is written at most twice ever; the O(batch) add contract
     survives) and partition count drops from one per epoch to one per N
-    epochs. Search reads through `live_epochs`.
+    epochs. Search reads through `live`.
 
     `store_vectors=True` additionally appends each batch's quantized
     full vectors to `<name>_vecs` (identity-folded like the codes) —
@@ -1804,21 +1455,14 @@ def run_pq_index_stream(
     n_chunks = n_chunks or PQ_INDEX_CHUNKS
     cb_t, codes_t, vecs_t = f"{name}_codebook", f"{name}_codes", f"{name}_vecs"
     if fresh_tables:
-        for t in (cb_t, codes_t) + ((vecs_t,) if store_vectors else ()):
-            _drop_table(spark, t)
+        _drop_table(spark, cb_t)
         if store_vectors:
-            spark.sql(
-                f"CREATE TABLE {vecs_t} (vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT)"
-                f" USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
+            create_state_table(spark, vecs_t, "vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT")
         spark.sql(
             f"CREATE TABLE {cb_t} (m INT, code BIGINT, cv ARRAY<BIGINT>, cn2 BIGINT)"
             f" USING parquet"
         )
-        spark.sql(
-            f"CREATE TABLE {codes_t} (vec_id BIGINT, codes ARRAY<BIGINT>, rn2 BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, codes_t, "vec_id BIGINT, codes ARRAY<BIGINT>, rn2 BIGINT")
 
     stage = stage_dir or stage_embedding_chunks(sf_dir, n_chunks)
     emb = (
@@ -1838,31 +1482,18 @@ def run_pq_index_stream(
                 "m", "code", "cv", "cn2"
             ).write.mode("overwrite").insertInto(cb_t, overwrite=True)
             s.catalog.refreshTable(cb_t)
-        codes = _pq_encode(sub, s.table(cb_t)).withColumn(
-            "epoch", F.lit(epoch_id).cast("long")
-        )
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            codes.write.mode("overwrite").insertInto(codes_t, overwrite=True)
-            if store_vectors:
-                e.withColumn("n2", _idot(F.col("q"), F.col("q"))).withColumn(
-                    "epoch", F.lit(epoch_id).cast("long")
-                ).write.mode("overwrite").insertInto(vecs_t, overwrite=True)
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(_pq_encode(sub, s.table(cb_t)), codes_t, epoch_id)
+        if store_vectors:
+            write_epoch(e.withColumn("n2", _idot(F.col("q"), F.col("q"))), vecs_t, epoch_id)
         s.catalog.refreshTable(codes_t)
         if store_vectors:
             s.catalog.refreshTable(vecs_t)
         sub.unpersist()
-        _maybe_fold(s, codes_t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(s, codes_t, epoch_id, fold_every, refold_width=refold_width)
         if store_vectors:
-            _maybe_fold(s, vecs_t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, vecs_t, epoch_id, fold_every, refold_width=refold_width)
 
-    w = emb.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(emb, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def pq_index_search(
@@ -1872,12 +1503,12 @@ def pq_index_search(
     tables against the stored codebook, scored as a pure scan of the
     stored codes (knn_pq's search path, reading state tables instead of
     retraining). `queries_e` must carry (vec_id, q, n2). Codes read
-    through `live_epochs`, so a folded index (and a crash mid-fold)
+    through `live`, so a folded index (and a crash mid-fold)
     searches identically."""
     from ..operators.similarity import KNN_K, _pq_query_luts, _pq_rank
 
     lut = _pq_query_luts(queries_e, spark.table(f"{name}_codebook"))
-    codes = live_epochs(spark.table(f"{name}_codes"), spark, f"{name}_codes").select("vec_id", "codes", "rn2")
+    codes = live(spark, f"{name}_codes").select("vec_id", "codes", "rn2")
     scored = codes.join(F.broadcast(lut), F.col("query_id") != F.col("vec_id"))
     return _pq_rank(scored, k or KNN_K)
 
@@ -1897,7 +1528,7 @@ def pq_index_search_refine(
     `store_vectors=True`) and re-ranks to top-k. Same scale shape as
     `knn_ivfpq_refine`: the shortlist is |queries|·refine_c id pairs —
     broadcast — so full vectors move only for shortlisted rows; the
-    vectors table reads through `live_epochs` like every MV state."""
+    vectors table reads through `live` like every MV state."""
     from pyspark.sql import Window
 
     from ..operators.similarity import KNN_K, REFINE_C, _idot
@@ -1906,7 +1537,7 @@ def pq_index_search_refine(
     shortlist = pq_index_search(spark, queries_e, name, k=cc).select(
         "query_id", "neighbor_id"
     )
-    vecs = live_epochs(spark.table(f"{name}_vecs"), spark, f"{name}_vecs").select(
+    vecs = live(spark, f"{name}_vecs").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("q").alias("nq"),
         F.col("n2").alias("nn2"),
@@ -2115,9 +1746,9 @@ def run_join_ivm_stream(
     Exactly-once is the `_ingest_epoch` discipline: all four tables are
     epoch-partitioned and dynamic-overwritten; the state reads exclude
     the in-flight epoch (`epoch != epoch_id`, composed with
-    `live_epochs`), so a checkpointed last-epoch replay recomputes ΔV
+    `live`), so a checkpointed last-epoch replay recomputes ΔV
     from identical state and rewrites byte-identical partitions. Readers
-    (`order_wide_view`) go through `live_epochs`; `fold_every` bounds all
+    (`order_wide_view`) go through `live`; `fold_every` bounds all
     four partition counts via the tiered watermark fold (identity
     merge — join rows and tombstones are immutable).
 
@@ -2173,70 +1804,54 @@ def run_join_ivm_stream(
         # the agg/mx/dc tables are dropped even when not maintained: a
         # stale aggregate from an earlier same-name run must not survive
         # a fresh rebuild of the view it claims to summarize
-        for t in (
-            o_t, l_t, v_t, d_t, ld_t, u_t,
-            f"{name}_agg", f"{name}_mx", f"{name}_dc", f"{name}_tk",
-            f"{name}_tkg", f"{name}_aggg",
+        for suffix, t in (
+            ("agg", agg_t), ("mx", mx_t), ("dc", dc_t), ("tk", tk_t), ("tkg", tkg_t),
+            ("aggg", aggg_t),
         ):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {d_t} (o_orderkey BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {ld_t} (l_orderkey BIGINT, l_linenumber INT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {u_t} (o_orderkey BIGINT, ue BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+            if not t:
+                _drop_table(spark, f"{name}_{suffix}")
+        create_state_table(spark, d_t, "o_orderkey BIGINT")
+        create_state_table(spark, ld_t, "l_orderkey BIGINT, l_linenumber INT")
+        create_state_table(spark, u_t, "o_orderkey BIGINT, ue BIGINT")
         if agg_t:
-            spark.sql(
-                f"CREATE TABLE {agg_t} (o_custkey BIGINT, n BIGINT,"
-                f" rev DECIMAL(18,6)) USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
+            create_state_table(spark, agg_t, "o_custkey BIGINT, n BIGINT, rev DECIMAL(18,6)")
         if mx_t:
-            spark.sql(
-                f"CREATE TABLE {mx_t} (o_custkey BIGINT, mx DOUBLE,"
-                f" rebase BOOLEAN) USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
+            create_state_table(spark, mx_t, "o_custkey BIGINT, mx DOUBLE, rebase BOOLEAN")
         if dc_t:
-            spark.sql(
-                f"CREATE TABLE {dc_t} (o_custkey BIGINT, qty DOUBLE,"
-                f" c BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
+            create_state_table(spark, dc_t, "o_custkey BIGINT, qty DOUBLE, c BIGINT")
         if tk_t:
-            spark.sql(
-                f"CREATE TABLE {tk_t} (o_custkey BIGINT, rev DECIMAL(18,6),"
-                f" b DECIMAL(18,6), rebased BOOLEAN, ve BIGINT)"
-                f" USING parquet PARTITIONED BY (epoch BIGINT)"
+            create_state_table(
+                spark,
+                tk_t,
+                "o_custkey BIGINT, rev DECIMAL(18,6), b DECIMAL(18,6), rebased BOOLEAN,"
+                " ve BIGINT",
             )
         if tkg_t:
-            spark.sql(
-                f"CREATE TABLE {aggg_t} (grp STRING, o_custkey BIGINT, n BIGINT,"
-                f" rev DECIMAL(18,6)) USING parquet PARTITIONED BY (epoch BIGINT)"
+            create_state_table(
+                spark, aggg_t, "grp STRING, o_custkey BIGINT, n BIGINT, rev DECIMAL(18,6)"
             )
-            spark.sql(
-                f"CREATE TABLE {tkg_t} (grp STRING, o_custkey BIGINT,"
-                f" rev DECIMAL(18,6), b DECIMAL(18,6), rebased BOOLEAN, ve BIGINT)"
-                f" USING parquet PARTITIONED BY (epoch BIGINT)"
+            create_state_table(
+                spark,
+                tkg_t,
+                "grp STRING, o_custkey BIGINT, rev DECIMAL(18,6), b DECIMAL(18,6),"
+                " rebased BOOLEAN, ve BIGINT",
             )
-        spark.sql(
-            f"CREATE TABLE {o_t} (o_orderkey BIGINT, o_custkey BIGINT,"
-            f" o_orderstatus STRING, o_version BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            o_t,
+            "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_version BIGINT",
         )
-        spark.sql(
-            f"CREATE TABLE {l_t} (l_orderkey BIGINT, l_linenumber INT,"
-            f" l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            l_t,
+            "l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE,"
+            " l_discount DOUBLE",
         )
-        spark.sql(
-            f"CREATE TABLE {v_t} (o_orderkey BIGINT, l_linenumber INT,"
-            f" o_custkey BIGINT, o_orderstatus STRING, l_quantity DOUBLE,"
-            f" revenue DOUBLE, o_version BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            v_t,
+            "o_orderkey BIGINT, l_linenumber INT, o_custkey BIGINT, o_orderstatus STRING,"
+            " l_quantity DOUBLE, revenue DOUBLE, o_version BIGINT",
         )
 
     stage = stage_dir or stage_order_lineitem_chunks(sf_dir, n_chunks)
@@ -2255,21 +1870,11 @@ def run_join_ivm_stream(
             tkg_t=tkg_t, aggg_t=aggg_t, topkg_k=maintain_topk_grouped or 0,
         )
 
-    w = feed.writeStream.foreachBatch(ivm_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, ivm_batch, f"{name}_q", checkpoint_dir)
 
 
 def _ivm_write_epoch(s: SparkSession, df: DataFrame, table: str, epoch_id: int) -> None:
-    prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.withColumn("epoch", F.lit(epoch_id).cast("long")).write.mode(
-            "overwrite"
-        ).insertInto(table, overwrite=True)
-    finally:
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_epoch(df, table, epoch_id)
     s.catalog.refreshTable(table)
 
 
@@ -2295,7 +1900,7 @@ def _ivm_epoch(
 ) -> None:
     """One delta-rule micro-batch, idempotent under last-epoch replay:
     the state reads exclude the in-flight epoch (`epoch != epoch_id`
-    composed with `live_epochs`), so a replay after a crash mid-writes
+    composed with `live`), so a replay after a crash mid-writes
     recomputes ΔV from identical state and dynamic-overwrites every
     epoch partition byte-identically. Deletes tombstone at BOTH
     granularities — side='O_DEL' (order key → `d_t`) and side='L_DEL'
@@ -2354,23 +1959,14 @@ def _ivm_epoch(
     # fold BEFORE the state reads so the fold-read path is under the
     # same replay gate as the probes (window ≤ epoch−1 only); mx_t is
     # deliberately NOT folded (see docstring)
+    merges = {
+        agg_t: _ivm_agg_merge, u_t: _ivm_u_merge, dc_t: _ivm_dc_merge,
+        tk_t: _ivm_tk_merge, tkg_t: _ivm_tkg_merge, aggg_t: _ivm_aggg_merge,
+    }
     for t in (o_t, l_t, v_t) + tuple(
         x for x in (d_t, ld_t, u_t, agg_t, dc_t, tk_t, tkg_t, aggg_t) if x
     ):
-        merge = None
-        if t == agg_t:
-            merge = _ivm_agg_merge
-        elif t == u_t:
-            merge = _ivm_u_merge
-        elif t == dc_t:
-            merge = _ivm_dc_merge
-        elif t == tk_t:
-            merge = _ivm_tk_merge
-        elif t == tkg_t:
-            merge = _ivm_tkg_merge
-        elif t == aggg_t:
-            merge = _ivm_aggg_merge
-        _maybe_fold(s, t, epoch_id, fold_every, merge=merge, refold_width=refold_width)
+        maybe_fold(s, t, epoch_id, fold_every, merges.get(t, identity), refold_width)
     if u_t is not None:
         # upsert resolve: O and O_UPD are both VERSIONS of the key; within
         # a batch the winner is deterministic (O_UPD over O, then greatest
@@ -2404,19 +2000,19 @@ def _ivm_epoch(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount"
     )
     o_state = (
-        live_epochs(s.table(o_t), s, o_t)
+        live(s, o_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
     )
     l_state = (
-        live_epochs(s.table(l_t), s, l_t)
+        live(s, l_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
     )
     u_lat = None
     if u_t is not None:
         u_lat = (
-            live_epochs(s.table(u_t), s, u_t)
+            live(s, u_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
             .groupBy("o_orderkey")
@@ -2433,7 +2029,7 @@ def _ivm_epoch(
     if d_t is not None:
         d_del = df.filter(F.col("side") == "O_DEL").select("o_orderkey")
         hist_o = (
-            live_epochs(s.table(d_t), s, d_t)
+            live(s, d_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -2448,7 +2044,7 @@ def _ivm_epoch(
     if ld_t is not None:
         d_ldel = df.filter(F.col("side") == "L_DEL").select(*lkey)
         hist_ld = (
-            live_epochs(s.table(ld_t), s, ld_t)
+            live(s, ld_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -2526,7 +2122,7 @@ def _ivm_epoch(
     retired = post_live = None
     if (agg_t or mx_t or dc_t or tkg_t) and (has_od or has_ld or has_upd):
         pre_v = (
-            live_epochs(s.table(v_t), s, v_t)
+            live(s, v_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -2587,118 +2183,121 @@ def _ivm_epoch(
         for p in parts[1:]:
             retired = retired.unionByName(p)
         # delta-sized by the retire bound; persisted because up to four
-        # MV partials consume it (unpersisted at the end of the epoch)
+        # MV partials consume it (unpersisted when the epoch ends, also
+        # when a write fails)
         retired = retired.persist()
         post_live = rest  # live pre-epoch rows after this batch's deletes/upserts
 
-    if agg_t is not None:
-        # retractable aggregate partial: +ΔV, −(view rows retired by this
-        # batch's FIRST-SEEN tombstones). Replay-deterministic: every
-        # input is pre-epoch live state or the batch itself.
-        signed = d_v.select("o_custkey", "revenue", F.lit(1).alias("sign"))
-        if retired is not None:
-            signed = signed.unionByName(
-                retired.select("o_custkey", "revenue", F.lit(-1).alias("sign"))
-            )
-        partial = signed.groupBy("o_custkey").agg(
-            F.sum("sign").cast("long").alias("n"),
-            F.sum(F.col("sign") * F.col("revenue").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("rev"),
-        )
-        # the retire scan reads v_t with epoch != epoch_id, so the
-        # already-written in-flight ΔV partition is invisible to it
-        # (replay-identical reads — see the ΔV write note above)
-        _ivm_write_epoch(s, partial, agg_t, epoch_id)
-        if tk_t is not None:
-            # the top-K epoch consumes the partial it can now READ BACK
-            # (several references → table scans, not plan copies)
-            partial = s.table(agg_t).filter(F.col("epoch") == epoch_id).drop("epoch")
-            _ivm_topk_epoch(s, partial, agg_t, tk_t, topk_k, epoch_id)
-    if tkg_t is not None:
-        signed_g = d_v.select(
-            F.col("o_orderstatus").alias("grp"), "o_custkey", "revenue",
-            F.lit(1).alias("sign"),
-        )
-        if retired is not None:
-            signed_g = signed_g.unionByName(
-                retired.select(
-                    F.col("o_orderstatus").alias("grp"), "o_custkey", "revenue",
-                    F.lit(-1).alias("sign"),
+    try:
+        if agg_t is not None:
+            # retractable aggregate partial: +ΔV, −(view rows retired by this
+            # batch's FIRST-SEEN tombstones). Replay-deterministic: every
+            # input is pre-epoch live state or the batch itself.
+            signed = d_v.select("o_custkey", "revenue", F.lit(1).alias("sign"))
+            if retired is not None:
+                signed = signed.unionByName(
+                    retired.select("o_custkey", "revenue", F.lit(-1).alias("sign"))
                 )
+            partial = signed.groupBy("o_custkey").agg(
+                F.sum("sign").cast("long").alias("n"),
+                F.sum(F.col("sign") * F.col("revenue").cast("decimal(18,6)"))
+                .cast("decimal(18,6)")
+                .alias("rev"),
             )
-        partial_g = signed_g.groupBy("grp", "o_custkey").agg(
-            F.sum("sign").cast("long").alias("n"),
-            F.sum(F.col("sign") * F.col("revenue").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("rev"),
-        )
-        _ivm_write_epoch(s, partial_g, aggg_t, epoch_id)
-        # read the just-written partial back: the grouped top-K epoch
-        # references it ~5× (touched keys/groups, pool, rebase) — as a
-        # table scan each reference is cheap; as the signed_g plan it
-        # re-executed the ΔV+retire tree per reference
-        partial_g = s.table(aggg_t).filter(F.col("epoch") == epoch_id).drop("epoch")
-        _ivm_topk_grouped_epoch(s, partial_g, aggg_t, tkg_t, topkg_k, epoch_id)
-    if mx_t is not None:
-        # insert partial: max over ΔV per customer (inserts only raise a
-        # max, so per-epoch max partials merge exactly at read)
-        parts_mx = (
-            d_v.groupBy("o_custkey")
-            .agg(F.max("revenue").alias("mx"))
-            .withColumn("rebase", F.lit(False))
-        )
-        if retired is not None:
-            # rebase: re-derive the max from live POST-delete rows for
-            # only the touched customers — O(touched customers' rows).
-            # LEFT join keeps fully-retired customers as NULL-mx rebases
-            # (they drop out at read unless later inserts arrive).
-            touched = retired.select("o_custkey").distinct()
-            rebased = (
-                touched.join(
-                    post_live.groupBy("o_custkey").agg(F.max("revenue").alias("mx")),
-                    "o_custkey",
-                    "left",
+            # the retire scan reads v_t with epoch != epoch_id, so the
+            # already-written in-flight ΔV partition is invisible to it
+            # (replay-identical reads — see the ΔV write note above)
+            _ivm_write_epoch(s, partial, agg_t, epoch_id)
+            if tk_t is not None:
+                # the top-K epoch consumes the partial it can now READ BACK
+                # (several references → table scans, not plan copies)
+                partial = s.table(agg_t).filter(F.col("epoch") == epoch_id).drop("epoch")
+                _ivm_topk_epoch(s, partial, agg_t, tk_t, topk_k, epoch_id)
+        if tkg_t is not None:
+            signed_g = d_v.select(
+                F.col("o_orderstatus").alias("grp"), "o_custkey", "revenue",
+                F.lit(1).alias("sign"),
+            )
+            if retired is not None:
+                signed_g = signed_g.unionByName(
+                    retired.select(
+                        F.col("o_orderstatus").alias("grp"), "o_custkey", "revenue",
+                        F.lit(-1).alias("sign"),
+                    )
                 )
-                .withColumn("rebase", F.lit(True))
+            partial_g = signed_g.groupBy("grp", "o_custkey").agg(
+                F.sum("sign").cast("long").alias("n"),
+                F.sum(F.col("sign") * F.col("revenue").cast("decimal(18,6)"))
+                .cast("decimal(18,6)")
+                .alias("rev"),
             )
-            parts_mx = parts_mx.unionByName(rebased)
-        _ivm_write_epoch(s, parts_mx, mx_t, epoch_id)
-    if dc_t is not None:
-        # refcount partial at the (customer, value) grain: +1 per ΔV
-        # row, −1 per retired row. A value's refcount only hits zero
-        # when its LAST carrier dies — exactly when COUNT(DISTINCT)
-        # drops — so the read-side `> 0` filter is exact with no
-        # rebase scan. One batch-sized hash agg; same replay
-        # determinism as the agg partial (inputs are pre-epoch state
-        # + the batch).
-        signed_dc = d_v.select(
-            "o_custkey", F.col("l_quantity").alias("qty"), F.lit(1).alias("sign")
-        )
-        if retired is not None:
-            signed_dc = signed_dc.unionByName(
-                retired.select(
-                    "o_custkey",
-                    F.col("l_quantity").alias("qty"),
-                    F.lit(-1).alias("sign"),
+            _ivm_write_epoch(s, partial_g, aggg_t, epoch_id)
+            # read the just-written partial back: the grouped top-K epoch
+            # references it ~5× (touched keys/groups, pool, rebase) — as a
+            # table scan each reference is cheap; as the signed_g plan it
+            # re-executed the ΔV+retire tree per reference
+            partial_g = s.table(aggg_t).filter(F.col("epoch") == epoch_id).drop("epoch")
+            _ivm_topk_grouped_epoch(s, partial_g, aggg_t, tkg_t, topkg_k, epoch_id)
+        if mx_t is not None:
+            # insert partial: max over ΔV per customer (inserts only raise a
+            # max, so per-epoch max partials merge exactly at read)
+            parts_mx = (
+                d_v.groupBy("o_custkey")
+                .agg(F.max("revenue").alias("mx"))
+                .withColumn("rebase", F.lit(False))
+            )
+            if retired is not None:
+                # rebase: re-derive the max from live POST-delete rows for
+                # only the touched customers — O(touched customers' rows).
+                # LEFT join keeps fully-retired customers as NULL-mx rebases
+                # (they drop out at read unless later inserts arrive).
+                touched = retired.select("o_custkey").distinct()
+                rebased = (
+                    touched.join(
+                        post_live.groupBy("o_custkey").agg(F.max("revenue").alias("mx")),
+                        "o_custkey",
+                        "left",
+                    )
+                    .withColumn("rebase", F.lit(True))
                 )
+                parts_mx = parts_mx.unionByName(rebased)
+            _ivm_write_epoch(s, parts_mx, mx_t, epoch_id)
+        if dc_t is not None:
+            # refcount partial at the (customer, value) grain: +1 per ΔV
+            # row, −1 per retired row. A value's refcount only hits zero
+            # when its LAST carrier dies — exactly when COUNT(DISTINCT)
+            # drops — so the read-side `> 0` filter is exact with no
+            # rebase scan. One batch-sized hash agg; same replay
+            # determinism as the agg partial (inputs are pre-epoch state
+            # + the batch).
+            signed_dc = d_v.select(
+                "o_custkey", F.col("l_quantity").alias("qty"), F.lit(1).alias("sign")
             )
-        partial_dc = signed_dc.groupBy("o_custkey", "qty").agg(
-            F.sum("sign").cast("long").alias("c")
-        )
-        _ivm_write_epoch(s, partial_dc, dc_t, epoch_id)
-    _ivm_write_epoch(s, d_o, o_t, epoch_id)
-    _ivm_write_epoch(s, d_l, l_t, epoch_id)
-    if d_t is not None:
-        _ivm_write_epoch(s, d_del, d_t, epoch_id)
-    if ld_t is not None:
-        _ivm_write_epoch(s, d_ldel, ld_t, epoch_id)
-    if u_t is not None:
-        if d_u is None:
-            d_u = s.createDataFrame([], "o_orderkey long, ue long")
-        _ivm_write_epoch(s, d_u, u_t, epoch_id)
-    if retired is not None:
-        retired.unpersist()
+            if retired is not None:
+                signed_dc = signed_dc.unionByName(
+                    retired.select(
+                        "o_custkey",
+                        F.col("l_quantity").alias("qty"),
+                        F.lit(-1).alias("sign"),
+                    )
+                )
+            partial_dc = signed_dc.groupBy("o_custkey", "qty").agg(
+                F.sum("sign").cast("long").alias("c")
+            )
+            _ivm_write_epoch(s, partial_dc, dc_t, epoch_id)
+        _ivm_write_epoch(s, d_o, o_t, epoch_id)
+        _ivm_write_epoch(s, d_l, l_t, epoch_id)
+        if d_t is not None:
+            _ivm_write_epoch(s, d_del, d_t, epoch_id)
+        if ld_t is not None:
+            _ivm_write_epoch(s, d_ldel, ld_t, epoch_id)
+        if u_t is not None:
+            if d_u is None:
+                d_u = s.createDataFrame([], "o_orderkey long, ue long")
+            _ivm_write_epoch(s, d_u, u_t, epoch_id)
+    finally:
+        if retired is not None:
+            retired.unpersist()
 
 
 def _ivm_agg_merge(df: DataFrame) -> DataFrame:
@@ -2769,12 +2368,12 @@ def _ivm_topk_epoch(
     candidates together; the pool ranking collects M+1 rows."""
     m = 4 * k
     live_agg = (
-        live_epochs(s.table(agg_t), s, agg_t)
+        live(s, agg_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
     )
     tk_rows = (
-        live_epochs(s.table(tk_t), s, tk_t)
+        live(s, tk_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
         .collect()  # bounded: ≤ (M+1) rows per live version
@@ -2894,12 +2493,12 @@ def _ivm_topk_grouped_epoch(
 
     m = 4 * k
     live_g = (
-        live_epochs(s.table(aggg_t), s, aggg_t)
+        live(s, aggg_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
     )
     tkg_live = (
-        live_epochs(s.table(tkg_t), s, tkg_t)
+        live(s, tkg_t)
         .filter(F.col("epoch") != epoch_id)
         .drop("epoch")
     )
@@ -3015,7 +2614,7 @@ def top_customers_by_group_view(
     aggregate MV and the fact tables are never touched."""
     from pyspark.sql import Window
 
-    tkg = live_epochs(spark.table(f"{name}_tkg"), spark, f"{name}_tkg")
+    tkg = live(spark, f"{name}_tkg")
     w_g = Window.partitionBy("grp")
     cur = (
         tkg.withColumn("_mv", F.max("ve").over(w_g))
@@ -3044,7 +2643,7 @@ def top_customers_by_rev_view(
     partition."""
     from pyspark.sql import Window
 
-    tk = live_epochs(spark.table(f"{name}_tk"), spark, f"{name}_tk")
+    tk = live(spark, f"{name}_tk")
     mx = tk.agg(F.max("ve")).collect()[0][0]
     # sentinel rows (NULL customer) exist so an all-retracted epoch still
     # versions forward — drop them after the version pick
@@ -3085,9 +2684,8 @@ def revenue_by_cust_view(spark: SparkSession, name: str = "orderwide") -> DataFr
     Customers whose every order was deleted net to n = 0 and drop out —
     identically to a batch aggregate that never saw them. Emits revenue
     as double AFTER the exact decimal rollup (the money discipline)."""
-    live = live_epochs(spark.table(f"{name}_agg"), spark, f"{name}_agg")
     return (
-        live.groupBy("o_custkey")
+        live(spark, f"{name}_agg").groupBy("o_custkey")
         .agg(
             F.sum("n").cast("long").alias("n_items"),
             F.sum("rev").cast("decimal(18,6)").alias("_rev"),
@@ -3128,7 +2726,7 @@ def order_wide_view_asof(
 
     def upto(table: str) -> DataFrame:
         return (
-            live_epochs(spark.table(table), spark, table)
+            live(spark, table)
             .filter(F.col("epoch") <= epoch)
             .drop("epoch")
         )
@@ -3201,17 +2799,17 @@ def order_wide_view(spark: SparkSession, name: str = "orderwide") -> DataFrame:
     side arrived; view rows written before their key's tombstone — at
     either granularity — are anti-joined out at read, and rows of
     superseded versions are o_version-filtered out). Fold-aware via
-    `live_epochs` on every table; the version filter keys on the
+    `live` on every table; the version filter keys on the
     o_version DATA column, so it survives folds too."""
-    v = live_epochs(spark.table(f"{name}_v"), spark, f"{name}_v").drop("epoch")
+    v = live(spark, f"{name}_v").drop("epoch")
     # targeted existence probes — a bare try/except here would swallow
     # real read errors and silently serve UNDELETED rows
     if spark.catalog.tableExists(f"{name}_d"):
-        dead = live_epochs(spark.table(f"{name}_d"), spark, f"{name}_d").drop("epoch")
+        dead = live(spark, f"{name}_d").drop("epoch")
         v = v.join(dead, "o_orderkey", "left_anti")
     if spark.catalog.tableExists(f"{name}_ld"):
         dead_l = (
-            live_epochs(spark.table(f"{name}_ld"), spark, f"{name}_ld")
+            live(spark, f"{name}_ld")
             .drop("epoch")
             # view rows key the line by (o_orderkey, l_linenumber)
             .withColumnRenamed("l_orderkey", "o_orderkey")
@@ -3219,7 +2817,7 @@ def order_wide_view(spark: SparkSession, name: str = "orderwide") -> DataFrame:
         v = v.join(dead_l, ["o_orderkey", "l_linenumber"], "left_anti")
     if spark.catalog.tableExists(f"{name}_u"):
         u_lat = (
-            live_epochs(spark.table(f"{name}_u"), spark, f"{name}_u")
+            live(spark, f"{name}_u")
             .drop("epoch")
             .groupBy("o_orderkey")
             .agg(F.max("ue").alias("ue"))
@@ -3243,7 +2841,7 @@ def revenue_max_by_cust_view(spark: SparkSession, name: str = "orderwide") -> Da
     rebase and drop out, identically to a batch aggregate that never saw
     them. The epoch comparison is exact because `<name>_mx` is never
     watermark-folded (see `_ivm_epoch`)."""
-    mx = live_epochs(spark.table(f"{name}_mx"), spark, f"{name}_mx")
+    mx = live(spark, f"{name}_mx")
     last_rb = (
         mx.filter(F.col("rebase"))
         .groupBy("o_custkey")
@@ -3269,9 +2867,8 @@ def distinct_qty_by_cust_view(spark: SparkSession, name: str = "orderwide") -> D
     batch COUNT(DISTINCT) that never saw them. Two hash aggregates over
     MV-sized (not view-sized) state; both keyed on o_custkey first, so
     AQE coalesces them onto one exchange."""
-    live = live_epochs(spark.table(f"{name}_dc"), spark, f"{name}_dc")
     ref = (
-        live.groupBy("o_custkey", "qty")
+        live(spark, f"{name}_dc").groupBy("o_custkey", "qty")
         .agg(F.sum("c").cast("long").alias("c"))
         .filter(F.col("c") > 0)
     )
@@ -3472,44 +3069,26 @@ def run_join3_ivm_stream(
     v_t, d_t, u_t, cu_t = f"{name}_v", f"{name}_d", f"{name}_u", f"{name}_cu"
     agg_t = f"{name}_agg" if maintain_agg else None
     if fresh_tables:
-        for t in (c_t, o_t, l_t, v_t, d_t, u_t, cu_t, f"{name}_agg"):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {c_t} (c_custkey BIGINT, c_nationkey INT,"
-            f" c_version BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
+        if not agg_t:
+            _drop_table(spark, f"{name}_agg")
+        create_state_table(spark, c_t, "c_custkey BIGINT, c_nationkey INT, c_version BIGINT")
+        create_state_table(spark, o_t, "o_orderkey BIGINT, o_custkey BIGINT, o_version BIGINT")
+        create_state_table(
+            spark,
+            l_t,
+            "l_orderkey BIGINT, l_linenumber INT, l_extendedprice DOUBLE, l_discount DOUBLE",
         )
-        spark.sql(
-            f"CREATE TABLE {o_t} (o_orderkey BIGINT, o_custkey BIGINT,"
-            f" o_version BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            v_t,
+            "o_orderkey BIGINT, l_linenumber INT, o_custkey BIGINT, c_nationkey INT,"
+            " revenue DOUBLE, o_version BIGINT, c_version BIGINT",
         )
-        spark.sql(
-            f"CREATE TABLE {l_t} (l_orderkey BIGINT, l_linenumber INT,"
-            f" l_extendedprice DOUBLE, l_discount DOUBLE)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {v_t} (o_orderkey BIGINT, l_linenumber INT,"
-            f" o_custkey BIGINT, c_nationkey INT, revenue DOUBLE,"
-            f" o_version BIGINT, c_version BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {d_t} (o_orderkey BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {u_t} (o_orderkey BIGINT, ue BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {cu_t} (c_custkey BIGINT, cue BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, d_t, "o_orderkey BIGINT")
+        create_state_table(spark, u_t, "o_orderkey BIGINT, ue BIGINT")
+        create_state_table(spark, cu_t, "c_custkey BIGINT, cue BIGINT")
         if agg_t:
-            spark.sql(
-                f"CREATE TABLE {agg_t} (c_nationkey INT, n BIGINT,"
-                f" rev DECIMAL(18,6)) USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
+            create_state_table(spark, agg_t, "c_nationkey INT, n BIGINT, rev DECIMAL(18,6)")
 
     stage = stage_dir or stage_cust_order_lineitem_chunks(sf_dir, n_chunks)
     schema = (
@@ -3525,10 +3104,7 @@ def run_join3_ivm_stream(
             u_t=u_t, cu_t=cu_t,
         )
 
-    w = feed.writeStream.foreachBatch(ivm3_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, ivm3_batch, f"{name}_q", checkpoint_dir)
 
 
 def _ivm3_epoch(
@@ -3583,15 +3159,9 @@ def _ivm3_epoch(
     retire scans keep each customer's newest version, and terms 2/3 use
     customer state EXCLUDING this batch's ΔC keys (term 1 owns them)."""
     s = df.sparkSession
+    merges = {agg_t: _ivm3_agg_merge, u_t: _ivm_u_merge, cu_t: _ivm3_cu_merge}
     for t in (c_t, o_t, l_t, v_t) + tuple(x for x in (d_t, u_t, cu_t, agg_t) if x):
-        merge = None
-        if t == agg_t:
-            merge = _ivm3_agg_merge
-        elif t == u_t:
-            merge = _ivm_u_merge
-        elif t == cu_t:
-            merge = _ivm3_cu_merge
-        _maybe_fold(s, t, epoch_id, fold_every, merge=merge, refold_width=refold_width)
+        maybe_fold(s, t, epoch_id, fold_every, merges.get(t, identity), refold_width)
     if cu_t is not None:
         # dimension-update resolve: C and C_UPD are both versions of the
         # customer; within a batch C_UPD wins, then greatest attributes
@@ -3631,18 +3201,18 @@ def _ivm3_epoch(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount"
     )
     c_state = (
-        live_epochs(s.table(c_t), s, c_t).filter(F.col("epoch") != epoch_id).drop("epoch")
+        live(s, c_t).filter(F.col("epoch") != epoch_id).drop("epoch")
     )
     o_state = (
-        live_epochs(s.table(o_t), s, o_t).filter(F.col("epoch") != epoch_id).drop("epoch")
+        live(s, o_t).filter(F.col("epoch") != epoch_id).drop("epoch")
     )
     l_state = (
-        live_epochs(s.table(l_t), s, l_t).filter(F.col("epoch") != epoch_id).drop("epoch")
+        live(s, l_t).filter(F.col("epoch") != epoch_id).drop("epoch")
     )
     u_lat = None
     if u_t is not None:
         u_lat = (
-            live_epochs(s.table(u_t), s, u_t)
+            live(s, u_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
             .groupBy("o_orderkey")
@@ -3657,7 +3227,7 @@ def _ivm3_epoch(
     cu_lat = None
     if cu_t is not None:
         cu_lat = (
-            live_epochs(s.table(cu_t), s, cu_t)
+            live(s, cu_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
             .groupBy("c_custkey")
@@ -3673,7 +3243,7 @@ def _ivm3_epoch(
     if d_t is not None:
         d_del = df.filter(F.col("side") == "O_DEL").select("o_orderkey")
         hist_o = (
-            live_epochs(s.table(d_t), s, d_t)
+            live(s, d_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -3749,7 +3319,7 @@ def _ivm3_epoch(
     retired = None
     if agg_t is not None and (has_od or has_upd or has_cupd):
         pre_v = (
-            live_epochs(s.table(v_t), s, v_t)
+            live(s, v_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -3842,16 +3412,16 @@ def order_cust_wide_view(spark: SparkSession, name: str = "custwide") -> DataFra
     """The maintained three-way join view's live rows — equals the batch
     customer ⋈ orders ⋈ lineitem projection over never-deleted orders
     with each upserted order's — and dimension-updated customer's —
-    newest version's attributes. Fold-aware via `live_epochs`; order
+    newest version's attributes. Fold-aware via `live`; order
     tombstones anti-joined and superseded versions of BOTH hops filtered
     at read, exactly like the binary view."""
-    v = live_epochs(spark.table(f"{name}_v"), spark, f"{name}_v").drop("epoch")
+    v = live(spark, f"{name}_v").drop("epoch")
     if spark.catalog.tableExists(f"{name}_d"):
-        dead = live_epochs(spark.table(f"{name}_d"), spark, f"{name}_d").drop("epoch")
+        dead = live(spark, f"{name}_d").drop("epoch")
         v = v.join(dead, "o_orderkey", "left_anti")
     if spark.catalog.tableExists(f"{name}_u"):
         u_lat = (
-            live_epochs(spark.table(f"{name}_u"), spark, f"{name}_u")
+            live(spark, f"{name}_u")
             .drop("epoch")
             .groupBy("o_orderkey")
             .agg(F.max("ue").alias("ue"))
@@ -3863,7 +3433,7 @@ def order_cust_wide_view(spark: SparkSession, name: str = "custwide") -> DataFra
         )
     if spark.catalog.tableExists(f"{name}_cu"):
         cu_lat = (
-            live_epochs(spark.table(f"{name}_cu"), spark, f"{name}_cu")
+            live(spark, f"{name}_cu")
             .drop("epoch")
             .groupBy("c_custkey")
             .agg(F.max("cue").alias("cue"))
@@ -3895,7 +3465,7 @@ def order_cust_wide_view_asof(
 
     def upto(table: str) -> DataFrame:
         return (
-            live_epochs(spark.table(table), spark, table)
+            live(spark, table)
             .filter(F.col("epoch") <= epoch)
             .drop("epoch")
         )
@@ -3930,9 +3500,8 @@ def revenue_by_nation_ivm_view(spark: SparkSession, name: str = "custwide") -> D
     count + DECIMAL-exact revenue, rolled up from the signed epoch
     partials. Same money discipline as `revenue_by_cust_view`: the
     double cast happens AFTER the exact decimal sum."""
-    live = live_epochs(spark.table(f"{name}_agg"), spark, f"{name}_agg")
     return (
-        live.groupBy("c_nationkey")
+        live(spark, f"{name}_agg").groupBy("c_nationkey")
         .agg(
             F.sum("n").cast("long").alias("n_items"),
             F.sum("rev").cast("decimal(18,6)").alias("_rev"),
@@ -3955,13 +3524,12 @@ def revenue_by_region_ivm_view(
     re-aggregates — the DECIMAL sums re-associate exactly across the
     extra grouping level, so stacking costs no precision. The double
     cast still happens last (money discipline)."""
-    live = live_epochs(spark.table(f"{name}_agg"), spark, f"{name}_agg")
     nat = nation.select(
         F.col("n_nationkey").cast("int").alias("c_nationkey"),
         F.col("n_regionkey").cast("int").alias("n_regionkey"),
     )
     return (
-        live.join(F.broadcast(nat), "c_nationkey")
+        live(spark, f"{name}_agg").join(F.broadcast(nat), "c_nationkey")
         .groupBy("n_regionkey")
         .agg(
             F.sum("n").cast("long").alias("n_items"),
@@ -3991,92 +3559,45 @@ def purge_tombstoned_rows(spark: SparkSession, name: str = "orderwide") -> int:
     cleansed at maintenance time. Two safety rails:
     - partitions with no dead rows are never rewritten (the touched set
       comes from a broadcast semi-join of dead keys against live rows);
-    - a fully-dead BASE partition (negative epoch) is skipped, never
-      dropped: base watermarks define `live_epochs` liveness, and
-      removing the newest base would resurrect any stale positives in
-      the crash-GC window. Bases shed their dead rows when rewritten
-      with ≥1 surviving row, like any touched partition."""
+    - a fully-dead BASE partition (negative epoch) is emptied, never
+      dropped: base watermarks define `live` liveness, and removing the
+      newest base would resurrect any stale positives in the crash-GC
+      window (`gc_partitions` owns these mechanics). Bases shed their
+      dead rows when rewritten with ≥1 surviving row, like any touched
+      partition."""
     v_t, d_t, ld_t, u_tt = f"{name}_v", f"{name}_d", f"{name}_ld", f"{name}_u"
     has_d = spark.catalog.tableExists(d_t)
     has_ld = spark.catalog.tableExists(ld_t)
     has_u = spark.catalog.tableExists(u_tt)
     if not has_d and not has_ld and not has_u:
         return 0
-    # distinct: a redelivered delete can tombstone one key twice, and an
-    # inner join against duplicates would double-count n_dead (and could
-    # misclassify a partition as fully dead — dropping LIVE rows). No
-    # forced broadcast: the tombstone sets are kept forever by design, so
-    # they outgrow broadcast limits eventually; let the planner choose.
-    live = live_epochs(spark.table(v_t), spark, v_t)
     # a row is dead if its order was tombstoned, its (o_orderkey,
     # l_linenumber) line key was, OR a newer upserted version superseded
-    # it — count via successive anti-joins so a row matching several
-    # conditions counts once
-    dead_rows = live.filter(F.lit(False))
-    alive = live
+    # it. Tombstone sets are distinct: a redelivered delete can tombstone
+    # one key twice, and a join against duplicates would multiply rows.
+    # No forced broadcast: the tombstone sets are kept forever by design,
+    # so they outgrow broadcast limits eventually; let the planner choose.
+    flagged = live(spark, v_t)
+    dead = F.lit(False)
     if has_d:
-        dead = live_epochs(spark.table(d_t), spark, d_t).drop("epoch").distinct()
-        dead_rows = dead_rows.unionByName(alive.join(dead, "o_orderkey", "left_semi"))
-        alive = alive.join(dead, "o_orderkey", "left_anti")
+        dead_o = live(spark, d_t).drop("epoch").distinct().withColumn("_do", F.lit(True))
+        flagged = flagged.join(dead_o, "o_orderkey", "left")
+        dead = dead | F.col("_do").isNotNull()
     if has_ld:
         dead_l = (
-            live_epochs(spark.table(ld_t), spark, ld_t)
+            live(spark, ld_t)
             .drop("epoch")
             .distinct()
             .withColumnRenamed("l_orderkey", "o_orderkey")
+            .withColumn("_dl", F.lit(True))
         )
-        dead_rows = dead_rows.unionByName(
-            alive.join(dead_l, ["o_orderkey", "l_linenumber"], "left_semi")
-        )
-        alive = alive.join(dead_l, ["o_orderkey", "l_linenumber"], "left_anti")
+        flagged = flagged.join(dead_l, ["o_orderkey", "l_linenumber"], "left")
+        dead = dead | F.col("_dl").isNotNull()
     if has_u:
-        u_lat = (
-            live_epochs(spark.table(u_tt), spark, u_tt)
-            .drop("epoch")
-            .groupBy("o_orderkey")
-            .agg(F.max("ue").alias("ue"))
-        )
-        stale = (
-            alive.join(u_lat, "o_orderkey")
-            .filter(F.col("o_version") != F.col("ue"))
-            .drop("ue")
-        )
-        dead_rows = dead_rows.unionByName(stale)
-        alive = (
-            alive.join(u_lat, "o_orderkey", "left")
-            .filter(F.col("ue").isNull() | (F.col("o_version") == F.col("ue")))
-            .drop("ue")
-        )
-    per_epoch = (
-        dead_rows.groupBy("epoch")
-        .agg(F.count(F.lit(1)).alias("n_dead"))
-        .join(
-            live.groupBy("epoch").agg(F.count(F.lit(1)).alias("n_all")), "epoch"
-        )
-        .collect()
-    )  # bounded: one row per live partition
-    full_dead = [r.epoch for r in per_epoch if r.n_dead == r.n_all and r.epoch >= 0]
-    # fully-dead bases are SKIPPED (see docstring): a zero-row dynamic
-    # overwrite wouldn't touch them anyway, so they'd inflate the count
-    rewrite = [r.epoch for r in per_epoch if r.n_dead < r.n_all]
-    for e in full_dead:
-        spark.sql(f"ALTER TABLE {v_t} DROP IF EXISTS PARTITION (epoch={e})")
-    kept_cols = [f.name for f in spark.table(v_t).schema.fields if f.name != "epoch"]
-    if rewrite:
-        keep = (
-            alive.filter(F.col("epoch").isin(rewrite))
-            .select(*kept_cols, "epoch")
-            # barrier: the overwrite reads the partitions it replaces
-            .localCheckpoint(eager=True)
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            keep.write.mode("overwrite").insertInto(v_t, overwrite=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.catalog.refreshTable(v_t)
-    return len(full_dead) + len(rewrite)
+        u_lat = live(spark, u_tt).groupBy("o_orderkey").agg(F.max("ue").alias("_ue"))
+        flagged = flagged.join(u_lat, "o_orderkey", "left")
+        dead = dead | (F.col("_ue").isNotNull() & (F.col("o_version") != F.col("_ue")))
+    return gc_partitions(spark, v_t, flagged.withColumn("_dead", dead))
 
 
 def run_sq8_index_stream(
@@ -4101,22 +3622,18 @@ def run_sq8_index_stream(
     arrivals OUTSIDE the trained ranges saturate to code 0/255
     (`sq8_xhat_el`'s clamp — FAISS's saturating cast), and the oracle
     models the same clamp, so the driver's hash gate certifies exactly
-    that behavior. Per-epoch maintenance is O(batch); fold/live_epochs
+    that behavior. Per-epoch maintenance is O(batch); fold/live
     semantics identical to the PQ index."""
     from ..operators.similarity import PQ_INDEX_CHUNKS, _idot, _sq8_stats, quantize, sq8_xhat_el
 
     n_chunks = n_chunks or PQ_INDEX_CHUNKS
     stats_t, codes_t = f"{name}_stats", f"{name}_codes"
     if fresh_tables:
-        for t in (stats_t, codes_t):
-            _drop_table(spark, t)
+        _drop_table(spark, stats_t)
         spark.sql(
             f"CREATE TABLE {stats_t} (mn ARRAY<BIGINT>, step ARRAY<BIGINT>) USING parquet"
         )
-        spark.sql(
-            f"CREATE TABLE {codes_t} (vec_id BIGINT, xh ARRAY<BIGINT>, rn2 BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, codes_t, "vec_id BIGINT, xh ARRAY<BIGINT>, rn2 BIGINT")
 
     stage = stage_dir or stage_embedding_chunks(sf_dir, n_chunks)
     emb = (
@@ -4142,12 +3659,9 @@ def run_sq8_index_stream(
         )
         _ivm_write_epoch(s, enc, codes_t, epoch_id)
         e.unpersist()
-        _maybe_fold(s, codes_t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(s, codes_t, epoch_id, fold_every, refold_width=refold_width)
 
-    w = emb.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(emb, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def sq8_index_search(
@@ -4156,7 +3670,7 @@ def sq8_index_search(
     """Asymmetric top-k over the stream-maintained SQ8 index: exact
     query vectors against the stored dequantized candidates (knn_sq8's
     search tail reading state instead of re-training). `queries_e` must
-    carry (vec_id, q, n2). Codes read through `live_epochs`."""
+    carry (vec_id, q, n2). Codes read through `live`."""
     from pyspark.sql import Window
 
     from ..operators.similarity import KNN_K, _idot
@@ -4164,14 +3678,14 @@ def sq8_index_search(
     qs = queries_e.select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qq"), F.col("n2").alias("qn2")
     )
-    codes = live_epochs(spark.table(f"{name}_codes"), spark, f"{name}_codes").select(
+    codes = live(spark, f"{name}_codes").select(
         "vec_id", "xh", "rn2"
     )
     if spark.catalog.tableExists(f"{name}_del"):
         # CDC-maintained index: live tombstones cleanse the read path
         # (callers pass survivor queries — neither neighbor nor query)
         dead = (
-            live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+            live(spark, f"{name}_del")
             .select("vec_id")
             .distinct()
         )
@@ -4287,25 +3801,13 @@ def run_bm25_index_stream(
     post_t, dl_t, st_t = f"{name}_post", f"{name}_dl", f"{name}_st"
     del_t = f"{name}_del" if cdc else None
     if fresh_tables:
-        for t in (post_t, dl_t, st_t, f"{name}_del"):
-            _drop_table(spark, t)
         if del_t:
-            spark.sql(
-                f"CREATE TABLE {del_t} (doc_id BIGINT)"
-                f" USING parquet PARTITIONED BY (epoch BIGINT)"
-            )
-        spark.sql(
-            f"CREATE TABLE {post_t} (term STRING, doc_id BIGINT, tf BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {dl_t} (doc_id BIGINT, dl BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {st_t} (n BIGINT, sum_dl BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+            create_state_table(spark, del_t, "doc_id BIGINT")
+        else:
+            _drop_table(spark, f"{name}_del")
+        create_state_table(spark, post_t, "term STRING, doc_id BIGINT, tf BIGINT")
+        create_state_table(spark, dl_t, "doc_id BIGINT, dl BIGINT")
+        create_state_table(spark, st_t, "n BIGINT, sum_dl BIGINT")
 
     if stage_dir:
         stage = stage_dir
@@ -4321,8 +3823,8 @@ def run_bm25_index_stream(
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (post_t, dl_t) + ((del_t,) if del_t else ()):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
-        _maybe_fold(
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(
             s, st_t, epoch_id, fold_every, merge=_bm25_st_merge,
             refold_width=refold_width,
         )
@@ -4330,7 +3832,7 @@ def run_bm25_index_stream(
         if cdc:
             d_del = df.filter(F.col("side") == "D_DEL").select("doc_id")
             hist_d = (
-                live_epochs(s.table(del_t), s, del_t)
+                live(s, del_t)
                 .filter(F.col("epoch") != epoch_id)
                 .drop("epoch")
             )
@@ -4359,7 +3861,7 @@ def run_bm25_index_stream(
             # (O(matched rows); pre-epoch state only — replay-safe)
             fs = d_del.distinct().join(hist_d, "doc_id", "left_anti")
             dead_dl = (
-                live_epochs(s.table(dl_t), s, dl_t)
+                live(s, dl_t)
                 .filter(F.col("epoch") != epoch_id)
                 .drop("epoch")
                 .join(F.broadcast(fs), "doc_id", "left_semi")
@@ -4375,10 +3877,7 @@ def run_bm25_index_stream(
         if cdc:
             _ivm_write_epoch(s, d_del, del_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def _bm25_st_merge(df: DataFrame) -> DataFrame:
@@ -4407,14 +3906,14 @@ def bm25_index_search(
 
     terms = query_terms or BM25_QUERY
     post = (
-        live_epochs(spark.table(f"{name}_post"), spark, f"{name}_post")
+        live(spark, f"{name}_post")
         .drop("epoch")
         .filter(F.col("term").isin(*terms))
     )
     dead = None
     if spark.catalog.tableExists(f"{name}_del"):
         dead = (
-            live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+            live(spark, f"{name}_del")
             .drop("epoch")
             .distinct()
         )
@@ -4423,10 +3922,10 @@ def bm25_index_search(
     # re-chunked doc (two fragments of one doc_id in different epochs)
     # would still score on its total tf
     tf = post.groupBy("doc_id", "term").agg(F.sum("tf").cast("long").alias("tf"))
-    dl = live_epochs(spark.table(f"{name}_dl"), spark, f"{name}_dl").drop("epoch")
+    dl = live(spark, f"{name}_dl").drop("epoch")
     if dead is not None:
         dl = dl.join(dead, "doc_id", "left_anti")
-    stats = live_epochs(spark.table(f"{name}_st"), spark, f"{name}_st").agg(
+    stats = live(spark, f"{name}_st").agg(
         F.sum("n").cast("long").alias("n_docs"),
         F.sum("sum_dl").cast("long").alias("sum_dl"),
     )
@@ -4457,11 +3956,7 @@ def run_flat_index_stream(
 
     vec_t = f"{name}_vec"
     if fresh_tables:
-        _drop_table(spark, vec_t)
-        spark.sql(
-            f"CREATE TABLE {vec_t} (vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, vec_t, "vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT")
 
     stage = stage_dir or stage_embedding_chunks(sf_dir, n_chunks)
     feed = (
@@ -4472,15 +3967,12 @@ def run_flat_index_stream(
 
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
-        _maybe_fold(s, vec_t, epoch_id, fold_every, refold_width=refold_width)
+        maybe_fold(s, vec_t, epoch_id, fold_every, refold_width=refold_width)
         e = df.select("vec_id", quantize(F.col("embedding")).alias("q"))
         e = e.withColumn("n2", _idot(F.col("q"), F.col("q")))
         _ivm_write_epoch(s, e.select("vec_id", "q", "n2"), vec_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def hybrid_index_search(
@@ -4507,7 +3999,7 @@ def hybrid_index_search(
     lex = bm25_index_search(spark, bm_name).select(
         "doc_id", F.col("rank").alias("r_lex")
     )
-    e = live_epochs(spark.table(f"{vec_name}_vec"), spark, f"{vec_name}_vec").drop(
+    e = live(spark, f"{vec_name}_vec").drop(
         "epoch"
     )
     if spark.catalog.tableExists(f"{vec_name}_del"):
@@ -4516,7 +4008,7 @@ def hybrid_index_search(
         # del table), so a takedown vanishes from the FUSED ranking and
         # every survivor's r_sem/rrf shifts to the surviving store
         dead_v = (
-            live_epochs(spark.table(f"{vec_name}_del"), spark, f"{vec_name}_del")
+            live(spark, f"{vec_name}_del")
             .select("vec_id")
             .distinct()
         )
@@ -4595,12 +4087,12 @@ def hybrid_pq_index_search(
         "doc_id", F.col("rank").alias("r_lex")
     )
     lut = _pq_query_luts(queries_e, spark.table(f"{pq_name}_codebook"))
-    codes = live_epochs(spark.table(f"{pq_name}_codes"), spark, f"{pq_name}_codes").select(
+    codes = live(spark, f"{pq_name}_codes").select(
         "vec_id", "codes", "rn2"
     )
     if spark.catalog.tableExists(f"{pq_name}_del"):
         dead = (
-            live_epochs(spark.table(f"{pq_name}_del"), spark, f"{pq_name}_del")
+            live(spark, f"{pq_name}_del")
             .select("vec_id")
             .distinct()
         )
@@ -4654,8 +4146,8 @@ def purge_bm25_index(spark: SparkSession, name: str = "bmidx") -> int:
     """Physically retire tombstoned documents from the BM25 index — the
     search-stack VACUUM: rewrite only the postings/length partitions
     that hold dead docs' rows (dynamic overwrite), drop fully-dead
-    positive epochs, never drop a base (the `purge_tombstoned_rows`
-    rails, applied per table). Tombstones are KEPT — a late re-insert
+    positive epochs, never drop a base (`gc_partitions`, applied per
+    table). Tombstones are KEPT — a late re-insert
     of a deleted doc must still be cleansed at maintenance time. Stats
     partials are untouched: they were already retracted by the signed
     row at the delete epoch, so purge changes bytes, not results (the
@@ -4664,89 +4156,16 @@ def purge_bm25_index(spark: SparkSession, name: str = "bmidx") -> int:
     del_t = f"{name}_del"
     if not spark.catalog.tableExists(del_t):
         return 0
-    dead = live_epochs(spark.table(del_t), spark, del_t).drop("epoch").distinct()
+    dead = live(spark, del_t).drop("epoch").distinct().withColumn("_dd", F.lit(True))
     touched = 0
     for t in (f"{name}_post", f"{name}_dl"):
-        live = live_epochs(spark.table(t), spark, t)
-        dead_rows = live.join(dead, "doc_id", "left_semi")
-        alive = live.join(dead, "doc_id", "left_anti")
-        per_epoch = (
-            dead_rows.groupBy("epoch")
-            .agg(F.count(F.lit(1)).alias("n_dead"))
-            .join(live.groupBy("epoch").agg(F.count(F.lit(1)).alias("n_all")), "epoch")
-            .collect()
-        )  # bounded: one row per live partition
-        full_dead = [r.epoch for r in per_epoch if r.n_dead == r.n_all and r.epoch >= 0]
-        rewrite = [r.epoch for r in per_epoch if r.n_dead < r.n_all]
-        for e in full_dead:
-            spark.sql(f"ALTER TABLE {t} DROP IF EXISTS PARTITION (epoch={e})")
-        kept_cols = [f.name for f in spark.table(t).schema.fields if f.name != "epoch"]
-        if rewrite:
-            keep = (
-                alive.filter(F.col("epoch").isin(rewrite))
-                .select(*kept_cols, "epoch")
-                .localCheckpoint(eager=True)  # barrier: overwrite reads its own input
-            )
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                keep.write.mode("overwrite").insertInto(t, overwrite=True)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        spark.catalog.refreshTable(t)
-        touched += len(full_dead) + len(rewrite)
+        flagged = (
+            live(spark, t)
+            .join(dead, "doc_id", "left")
+            .withColumn("_dead", F.coalesce(F.col("_dd"), F.lit(False)))
+        )
+        touched += gc_partitions(spark, t, flagged)
     return touched
-
-
-def _gc_partitions(
-    spark: SparkSession,
-    table: str,
-    flagged: DataFrame,
-    kept_cols: list[str],
-    empty_select: str,
-) -> int:
-    """Shared partition-GC mechanics for the MV purge/expiry passes:
-    `flagged` = the table's LIVE rows with a boolean `_dead` column.
-    Fully-dead POSITIVE epochs drop as catalog metadata; fully-dead
-    BASES are overwritten EMPTY (never dropped — a base's window-top
-    carries the fold watermark liveness reads from, and a zero-row
-    dynamic overwrite would never touch it, hence `empty_select`);
-    mixed partitions rewrite in place without their dead rows. What
-    counts as dead — and whether purging it is replay-safe — is the
-    CALLER's contract; this owns only the partition mechanics.
-    Returns partitions touched."""
-    per_epoch = (
-        flagged.groupBy("epoch")
-        .agg(
-            F.count(F.lit(1)).alias("n_all"),
-            F.count(F.when(F.col("_dead"), 1)).alias("n_dead"),
-        )
-        .filter(F.col("n_dead") > 0)
-        .collect()  # one row per live partition — metadata-scale
-    )
-    full_dead = [r.epoch for r in per_epoch if r.n_dead == r.n_all and r.epoch >= 0]
-    dead_bases = [r.epoch for r in per_epoch if r.n_dead == r.n_all and r.epoch < 0]
-    rewrite = [r.epoch for r in per_epoch if r.n_dead < r.n_all]
-    for e in full_dead:
-        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (epoch={e})")
-    for e in dead_bases:
-        spark.sql(
-            f"INSERT OVERWRITE TABLE {table} PARTITION (epoch={e}) {empty_select}"
-        )
-    if rewrite:
-        keep = (
-            flagged.filter(F.col("epoch").isin(rewrite) & ~F.col("_dead"))
-            .select(*kept_cols, "epoch")
-            .localCheckpoint(eager=True)  # barrier: overwrite reads its own input
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            keep.write.mode("overwrite").insertInto(table, overwrite=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.catalog.refreshTable(table)
-    return len(full_dead) + len(dead_bases) + len(rewrite)
 
 
 def run_window_agg_stream(
@@ -4790,11 +4209,7 @@ def run_window_agg_stream(
     """
     b_t = f"{name}_buckets"
     if fresh_tables:
-        _drop_table(spark, b_t)
-        spark.sql(
-            f"CREATE TABLE {b_t} (bucket_end BIGINT, item_k INT, cnt BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, b_t, "bucket_end BIGINT, item_k INT, cnt BIGINT")
 
     stage = stage_dir or stage_event_chunks(sf_dir, n_chunks)
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -4815,12 +4230,9 @@ def run_window_agg_stream(
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         _ivm_write_epoch(s, part, b_t, epoch_id)
-        _maybe_fold(s, b_t, epoch_id, fold_every, merge=_wagg_merge, refold_width=refold_width)
+        maybe_fold(s, b_t, epoch_id, fold_every, merge=_wagg_merge, refold_width=refold_width)
 
-    w = feed.writeStream.foreachBatch(bucket_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, bucket_batch, f"{name}_q", checkpoint_dir)
 
 
 def _wagg_merge(df: DataFrame) -> DataFrame:
@@ -4837,7 +4249,7 @@ def _wagg_cutoff(spark: SparkSession, name: str, retention_s: int) -> int | None
     is stable under any amount of GC."""
     b_t = f"{name}_buckets"
     r = (
-        live_epochs(spark.table(b_t), spark, b_t)
+        live(spark, b_t)
         .agg(F.max("bucket_end").alias("m"))
         .collect()[0]
     )
@@ -4849,7 +4261,7 @@ def expire_window_buckets(spark: SparkSession, name: str, retention_s: int) -> i
     partition sheds its buckets older than the cutoff — whole-dead
     positive epochs as metadata drops (the common case for an in-order
     feed: old arrival epochs expire together), bases and mixed
-    partitions by in-place rewrite (`_gc_partitions`). Replay-safe at
+    partitions by in-place rewrite (`gc_partitions`). Replay-safe at
     any time: maintenance never reads the bucket table, and the served
     view applies the same cutoff filter, so a half-finished pass only
     means some dead buckets wait for the next one. Idempotent; returns
@@ -4858,14 +4270,10 @@ def expire_window_buckets(spark: SparkSession, name: str, retention_s: int) -> i
     cutoff = _wagg_cutoff(spark, name, retention_s)
     if cutoff is None:
         return 0
-    flagged = live_epochs(spark.table(b_t), spark, b_t).withColumn(
+    flagged = live(spark, b_t).withColumn(
         "_dead", F.col("bucket_end") <= F.lit(cutoff)
     )
-    return _gc_partitions(
-        spark, b_t, flagged, ["bucket_end", "item_k", "cnt"],
-        "SELECT BIGINT(NULL) AS bucket_end, INT(NULL) AS item_k,"
-        " BIGINT(NULL) AS cnt WHERE false",
-    )
+    return gc_partitions(spark, b_t, flagged)
 
 
 def hot_window_view(
@@ -4885,14 +4293,14 @@ def hot_window_view(
     cutoff = _wagg_cutoff(spark, name, retention_s)
     if cutoff is None:
         cutoff = -(1 << 62)
-    live = (
-        live_epochs(spark.table(b_t), spark, b_t)
+    live_rows = (
+        live(spark, b_t)
         .filter(F.col("bucket_end") > F.lit(cutoff))
         .groupBy("bucket_end", "item_k")
         .agg(F.sum("cnt").alias("cnt"))
     )
     counts = (
-        live.select(
+        live_rows.select(
             "bucket_end",
             "item_k",
             "cnt",
@@ -4977,11 +4385,10 @@ def run_session_ivm_stream(
 
     sess_t = f"{name}_sess"
     if fresh_tables:
-        _drop_table(spark, sess_t)
-        spark.sql(
-            f"CREATE TABLE {sess_t} (user_id BIGINT, start_s BIGINT, end_s BIGINT,"
-            f" n_events BIGINT, ve BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark,
+            sess_t,
+            "user_id BIGINT, start_s BIGINT, end_s BIGINT, n_events BIGINT, ve BIGINT",
         )
 
     stage = stage_dir or stage_event_chunks_unordered(sf_dir, n_chunks)
@@ -4991,11 +4398,11 @@ def run_session_ivm_stream(
         from pyspark.sql import Window
 
         s = df.sparkSession
-        _maybe_fold(s, sess_t, epoch_id, fold_every, merge=_sess_merge, refold_width=refold_width)
+        maybe_fold(s, sess_t, epoch_id, fold_every, merge=_sess_merge, refold_width=refold_width)
         ev = df.select("user_id", F.col("ts").cast("long").alias("ts_s"))
         touched = ev.select("user_id").distinct()
         state = (
-            live_epochs(s.table(sess_t), s, sess_t)
+            live(s, sess_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
             .join(F.broadcast(touched), "user_id", "left_semi")
@@ -5043,10 +4450,7 @@ def run_session_ivm_stream(
         )
         _ivm_write_epoch(s, merged, sess_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(sess_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, sess_batch, f"{name}_q", checkpoint_dir)
 
 
 def _sess_merge(df: DataFrame) -> DataFrame:
@@ -5068,10 +4472,9 @@ def sessions_view(spark: SparkSession, name: str = "sessmv") -> DataFrame:
     the columns (and hence the oracle) of batch `sessionize_native`."""
     from pyspark.sql import Window
 
-    live = live_epochs(spark.table(f"{name}_sess"), spark, f"{name}_sess")
     w = Window.partitionBy("user_id")
     return (
-        live.withColumn("_mv", F.max("ve").over(w))
+        live(spark, f"{name}_sess").withColumn("_mv", F.max("ve").over(w))
         .filter(F.col("ve") == F.col("_mv"))
         .select(
             "user_id",
@@ -5153,20 +4556,9 @@ def run_quantile_ivm_stream(
     delete-before-insert's late insert never enters)."""
     rows_t, d_t, h_t = f"{name}_rows", f"{name}_d", f"{name}_hist"
     if fresh_tables:
-        for t in (rows_t, d_t, h_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {rows_t} (event_id BIGINT, event_type STRING,"
-            f" value_c BIGINT) USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {d_t} (event_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {h_t} (event_type STRING, value_c BIGINT, c BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, rows_t, "event_id BIGINT, event_type STRING, value_c BIGINT")
+        create_state_table(spark, d_t, "event_id BIGINT")
+        create_state_table(spark, h_t, "event_type STRING, value_c BIGINT, c BIGINT")
 
     stage = stage_dir or stage_event_cdc_chunks(sf_dir, n_chunks, delete_mod=7)
     schema = "side string, event_id long, ts timestamp, event_type string, value double"
@@ -5174,8 +4566,8 @@ def run_quantile_ivm_stream(
 
     def q_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
-        for t, merge in ((rows_t, None), (d_t, None), (h_t, _qhist_merge)):
-            _maybe_fold(s, t, epoch_id, fold_every, merge=merge, refold_width=refold_width)
+        for t, merge in ((rows_t, identity), (d_t, identity), (h_t, _qhist_merge)):
+            maybe_fold(s, t, epoch_id, fold_every, merge=merge, refold_width=refold_width)
         d_ins = df.filter(F.col("side") == "E").select(
             "event_id",
             "event_type",
@@ -5183,7 +4575,7 @@ def run_quantile_ivm_stream(
         )
         d_del = df.filter(F.col("side") == "E_DEL").select("event_id")
         hist_d = (
-            live_epochs(s.table(d_t), s, d_t)
+            live(s, d_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -5192,7 +4584,7 @@ def run_quantile_ivm_stream(
         # either state table or the histogram
         d_ins = d_ins.join(dead, "event_id", "left_anti")
         rows_state = (
-            live_epochs(s.table(rows_t), s, rows_t)
+            live(s, rows_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -5213,10 +4605,7 @@ def run_quantile_ivm_stream(
         _ivm_write_epoch(s, d_ins, rows_t, epoch_id)
         _ivm_write_epoch(s, d_del, d_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(q_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, q_batch, f"{name}_q", checkpoint_dir)
 
 
 def _qhist_merge(df: DataFrame) -> DataFrame:
@@ -5238,9 +4627,8 @@ def value_quantile_view(spark: SparkSession, name: str = "qmv") -> DataFrame:
     the percentile of the expanded multiset — no event rescan, read cost
     O(live distinct values). Columns match batch quantile semantics on
     the cent-quantized value."""
-    live = live_epochs(spark.table(f"{name}_hist"), spark, f"{name}_hist")
     h = (
-        live.groupBy("event_type", "value_c")
+        live(spark, f"{name}_hist").groupBy("event_type", "value_c")
         .agg(F.sum("c").cast("long").alias("c"))
         .filter(F.col("c") > 0)
     )
@@ -5289,11 +4677,7 @@ def run_heavy_hitters_stream(
     bounded-error end of the same tradeoff."""
     mg_t = f"{name}_mg"
     if fresh_tables:
-        _drop_table(spark, mg_t)
-        spark.sql(
-            f"CREATE TABLE {mg_t} (item_k INT, c BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, mg_t, "item_k INT, c BIGINT")
 
     from ..sources.loaders import events_parquet_stream
 
@@ -5302,7 +4686,7 @@ def run_heavy_hitters_stream(
 
     def hh_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
-        _maybe_fold(s, mg_t, epoch_id, fold_every, merge=_mg_merge, refold_width=refold_width)
+        maybe_fold(s, mg_t, epoch_id, fold_every, merge=_mg_merge, refold_width=refold_width)
         counts = (
             df.filter(F.col("event_type") == "view")
             .select(F.get_json_object("props", "$.k").cast("int").alias("item_k"))
@@ -5324,10 +4708,7 @@ def run_heavy_hitters_stream(
         out = s.createDataFrame(kept_rows + [(None, t_val)], "item_k int, c long")
         _ivm_write_epoch(s, out, mg_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(hh_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, hh_batch, f"{name}_q", checkpoint_dir)
 
 
 def _mg_merge(df: DataFrame) -> DataFrame:
@@ -5344,8 +4725,7 @@ def heavy_hitters_view(spark: SparkSession, name: str = "hhmv") -> DataFrame:
     deterministically. Any key whose true count exceeds the error mass
     is guaranteed a row; every bound is exact arithmetic over live
     partials — no rescan of events, read cost O(k · live partials)."""
-    live = live_epochs(spark.table(f"{name}_mg"), spark, f"{name}_mg")
-    merged = live.groupBy("item_k").agg(F.sum("c").cast("long").alias("c"))
+    merged = live(spark, f"{name}_mg").groupBy("item_k").agg(F.sum("c").cast("long").alias("c"))
     err = merged.filter(F.col("item_k").isNull()).select(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("_err")
     )
@@ -5365,7 +4745,7 @@ def purge_quantile_rows(spark: SparkSession, name: str = "qmv") -> int:
     """Physical purge for the quantile MV's row state: tombstoned rows
     (kept so far only because key-only deletes are read-filtered, the
     join-IVM discipline) are rewritten out of exactly the partitions
-    that hold them (`_gc_partitions`).
+    that hold them (`gc_partitions`).
 
     REPLAY GUARD: only rows whose tombstone appears OUTSIDE the newest
     live positive epoch are purgeable. The newest epoch is the one a
@@ -5379,19 +4759,16 @@ def purge_quantile_rows(spark: SparkSession, name: str = "qmv") -> int:
     any time. Idempotent; returns partitions touched."""
     rows_t, d_t = f"{name}_rows", f"{name}_d"
     pos = [e for e in _partition_epochs(spark, d_t) if e >= 0]
-    d_live = live_epochs(spark.table(d_t), spark, d_t)
+    d_live = live(spark, d_t)
     if pos:
         d_live = d_live.filter(F.col("epoch") != max(pos))
     dead = d_live.select("event_id").distinct()
     flagged = (
-        live_epochs(spark.table(rows_t), spark, rows_t)
+        live(spark, rows_t)
         .join(F.broadcast(dead.withColumn("_dead", F.lit(True))), "event_id", "left")
         .withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
     )
-    return _gc_partitions(
-        spark, rows_t, flagged, ["event_id", "event_type", "value_c"],
-        "SELECT BIGINT(NULL), STRING(NULL), BIGINT(NULL) WHERE false",
-    )
+    return gc_partitions(spark, rows_t, flagged)
 
 
 def purge_superseded_sessions(spark: SparkSession, name: str = "sessmv") -> int:
@@ -5409,7 +4786,7 @@ def purge_superseded_sessions(spark: SparkSession, name: str = "sessmv") -> int:
     from pyspark.sql import Window
 
     sess_t = f"{name}_sess"
-    alive = live_epochs(spark.table(sess_t), spark, sess_t)
+    alive = live(spark, sess_t)
     max_e = alive.agg(F.max("ve")).collect()[0][0]
     if max_e is None:
         return 0
@@ -5425,12 +4802,7 @@ def purge_superseded_sessions(spark: SparkSession, name: str = "sessmv") -> int:
         "_dead",
         F.coalesce(F.col("ve") < F.col("_safe_sup"), F.lit(False)),
     )
-    return _gc_partitions(
-        spark, sess_t, flagged,
-        ["user_id", "start_s", "end_s", "n_events", "ve"],
-        "SELECT BIGINT(NULL), BIGINT(NULL), BIGINT(NULL),"
-        " BIGINT(NULL), BIGINT(NULL) WHERE false",
-    )
+    return gc_partitions(spark, sess_t, flagged)
 
 
 def purge_superseded_topk_groups(spark: SparkSession, name: str = "orderwide") -> int:
@@ -5447,11 +4819,11 @@ def purge_superseded_topk_groups(spark: SparkSession, name: str = "orderwide") -
     replay's max-ve filter lands on that committed version whether or
     not older ones exist. Sentinel rows version-travel with their set
     and purge with it. Partition mechanics are the house discipline
-    (`_gc_partitions`). Idempotent; returns partitions touched."""
+    (`gc_partitions`). Idempotent; returns partitions touched."""
     from pyspark.sql import Window
 
     tkg_t = f"{name}_tkg"
-    alive = live_epochs(spark.table(tkg_t), spark, tkg_t)
+    alive = live(spark, tkg_t)
     max_e = alive.agg(F.max("ve")).collect()[0][0]
     if max_e is None:
         return 0
@@ -5465,12 +4837,7 @@ def purge_superseded_topk_groups(spark: SparkSession, name: str = "orderwide") -
         "_dead",
         F.coalesce(F.col("ve") < F.col("_safe_sup"), F.lit(False)),
     )
-    return _gc_partitions(
-        spark, tkg_t, flagged,
-        ["grp", "o_custkey", "rev", "b", "rebased", "ve"],
-        "SELECT STRING(NULL), BIGINT(NULL), CAST(NULL AS DECIMAL(18,6)),"
-        " CAST(NULL AS DECIMAL(18,6)), BOOLEAN(NULL), BIGINT(NULL) WHERE false",
-    )
+    return gc_partitions(spark, tkg_t, flagged)
 
 
 def stage_embedding_cdc_chunks(
@@ -5535,16 +4902,8 @@ def run_flat_index_cdc_stream(
 
     vec_t, del_t = f"{name}_vec", f"{name}_del"
     if fresh_tables:
-        for t in (vec_t, del_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {vec_t} (vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {del_t} (vec_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, vec_t, "vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT")
+        create_state_table(spark, del_t, "vec_id BIGINT")
 
     stage = stage_dir or stage_embedding_cdc_chunks(sf_dir, n_chunks)
     feed = (
@@ -5556,10 +4915,10 @@ def run_flat_index_cdc_stream(
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (vec_t, del_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         d_del = df.filter(F.col("side") == "V_DEL").select("vec_id")
         hist_d = (
-            live_epochs(s.table(del_t), s, del_t)
+            live(s, del_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -5573,10 +4932,7 @@ def run_flat_index_cdc_stream(
         _ivm_write_epoch(s, ins.select("vec_id", "q", "n2"), vec_t, epoch_id)
         _ivm_write_epoch(s, d_del, del_t, epoch_id)
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def flat_index_search(
@@ -5591,9 +4947,9 @@ def flat_index_search(
     from pyspark.sql import Window
 
     vec_t, del_t = f"{name}_vec", f"{name}_del"
-    dead = live_epochs(spark.table(del_t), spark, del_t).select("vec_id").distinct()
+    dead = live(spark, del_t).select("vec_id").distinct()
     e = (
-        live_epochs(spark.table(vec_t), spark, vec_t)
+        live(spark, vec_t)
         .drop("epoch")
         .join(F.broadcast(dead), "vec_id", "left_anti")
     )
@@ -5663,8 +5019,7 @@ def run_pq_index_cdc_stream(
 
     cb_t, codes_t, del_t = f"{name}_codebook", f"{name}_codes", f"{name}_del"
     if fresh_tables:
-        for t in (cb_t, codes_t, del_t):
-            _drop_table(spark, t)
+        _drop_table(spark, cb_t)
         spark.sql(
             f"CREATE TABLE {cb_t} (m INT, code BIGINT, cv ARRAY<BIGINT>, cn2 BIGINT)"
             f" USING parquet"
@@ -5672,15 +5027,10 @@ def run_pq_index_cdc_stream(
         # label rides the code rows as the filter payload (FAISS stores
         # selector ids alongside codes) — attribute-scoped search reads
         # it in-scan, never via a second corpus join
-        spark.sql(
-            f"CREATE TABLE {codes_t}"
-            f" (vec_id BIGINT, codes ARRAY<BIGINT>, rn2 BIGINT, label INT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
+        create_state_table(
+            spark, codes_t, "vec_id BIGINT, codes ARRAY<BIGINT>, rn2 BIGINT, label INT"
         )
-        spark.sql(
-            f"CREATE TABLE {del_t} (vec_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, del_t, "vec_id BIGINT")
 
     stage = stage_dir or stage_embedding_cdc_chunks(sf_dir, n_chunks)
     feed = (
@@ -5692,10 +5042,10 @@ def run_pq_index_cdc_stream(
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (codes_t, del_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         d_del = df.filter(F.col("side") == "V_DEL").select("vec_id")
         hist_d = (
-            live_epochs(s.table(del_t), s, del_t)
+            live(s, del_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -5721,10 +5071,7 @@ def run_pq_index_cdc_stream(
         _ivm_write_epoch(s, d_del, del_t, epoch_id)
         sub.unpersist()
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def pq_index_cdc_search(
@@ -5737,11 +5084,11 @@ def pq_index_cdc_search(
     from ..operators.similarity import KNN_K, _pq_query_luts, _pq_rank
 
     lut = _pq_query_luts(queries_e, spark.table(f"{name}_codebook"))
-    codes = live_epochs(spark.table(f"{name}_codes"), spark, f"{name}_codes").select(
+    codes = live(spark, f"{name}_codes").select(
         "vec_id", "codes", "rn2"
     )
     dead = (
-        live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+        live(spark, f"{name}_del")
         .select("vec_id")
         .distinct()
     )
@@ -5775,11 +5122,11 @@ def pq_index_filtered_search(
         ),
         "query_id",
     )
-    codes = live_epochs(spark.table(f"{name}_codes"), spark, f"{name}_codes").select(
+    codes = live(spark, f"{name}_codes").select(
         "vec_id", "codes", "rn2", "label"
     )
     dead = (
-        live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+        live(spark, f"{name}_del")
         .select("vec_id")
         .distinct()
     )
@@ -5794,24 +5141,20 @@ def pq_index_filtered_search(
 
 def purge_pq_index_dead(spark: SparkSession, name: str = "pqcdc") -> int:
     """FAISS remove_ids made physical on the code index: rewrite only
-    the code partitions holding tombstoned vectors (`_gc_partitions`);
+    the code partitions holding tombstoned vectors (`gc_partitions`);
     tombstones stay (a late re-insert must still be cleansed); the
     frozen codebook is untouched by design. Replay-safe at any time —
     per-epoch maintenance never probes the codes table. Purge changes
     bytes, never served results. Idempotent; returns partitions
     touched."""
     codes_t, del_t = f"{name}_codes", f"{name}_del"
-    dead = live_epochs(spark.table(del_t), spark, del_t).select("vec_id").distinct()
+    dead = live(spark, del_t).select("vec_id").distinct()
     flagged = (
-        live_epochs(spark.table(codes_t), spark, codes_t)
+        live(spark, codes_t)
         .join(F.broadcast(dead.withColumn("_dead", F.lit(True))), "vec_id", "left")
         .withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
     )
-    return _gc_partitions(
-        spark, codes_t, flagged, ["vec_id", "codes", "rn2", "label"],
-        "SELECT BIGINT(NULL), CAST(NULL AS ARRAY<BIGINT>), BIGINT(NULL),"
-        " CAST(NULL AS INT) WHERE false",
-    )
+    return gc_partitions(spark, codes_t, flagged)
 
 
 def run_sq8_index_cdc_stream(
@@ -5841,23 +5184,15 @@ def run_sq8_index_cdc_stream(
 
     stats_t, codes_t, del_t = f"{name}_stats", f"{name}_codes", f"{name}_del"
     if fresh_tables:
-        for t in (stats_t, codes_t, del_t):
-            _drop_table(spark, t)
+        _drop_table(spark, stats_t)
         spark.sql(
             f"CREATE TABLE {stats_t} (mn ARRAY<BIGINT>, step ARRAY<BIGINT>) USING parquet"
         )
         # label rides the code rows as the filter payload (FAISS stores
         # selector ids alongside codes) — attribute-scoped search reads
         # it in-scan, never via a second corpus join
-        spark.sql(
-            f"CREATE TABLE {codes_t}"
-            f" (vec_id BIGINT, xh ARRAY<BIGINT>, rn2 BIGINT, label INT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {del_t} (vec_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, codes_t, "vec_id BIGINT, xh ARRAY<BIGINT>, rn2 BIGINT, label INT")
+        create_state_table(spark, del_t, "vec_id BIGINT")
 
     stage = stage_dir or stage_embedding_cdc_chunks(sf_dir, n_chunks)
     feed = (
@@ -5869,10 +5204,10 @@ def run_sq8_index_cdc_stream(
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (codes_t, del_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         d_del = df.filter(F.col("side") == "V_DEL").select("vec_id")
         hist_d = (
-            live_epochs(s.table(del_t), s, del_t)
+            live(s, del_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -5897,10 +5232,7 @@ def run_sq8_index_cdc_stream(
         _ivm_write_epoch(s, d_del, del_t, epoch_id)
         e.unpersist()
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def purge_sq8_index_dead(spark: SparkSession, name: str = "sq8cdc") -> int:
@@ -5910,17 +5242,13 @@ def purge_sq8_index_dead(spark: SparkSession, name: str = "sq8cdc") -> int:
     maintenance never probes the codes table. Idempotent; returns
     partitions touched."""
     codes_t, del_t = f"{name}_codes", f"{name}_del"
-    dead = live_epochs(spark.table(del_t), spark, del_t).select("vec_id").distinct()
+    dead = live(spark, del_t).select("vec_id").distinct()
     flagged = (
-        live_epochs(spark.table(codes_t), spark, codes_t)
+        live(spark, codes_t)
         .join(F.broadcast(dead.withColumn("_dead", F.lit(True))), "vec_id", "left")
         .withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
     )
-    return _gc_partitions(
-        spark, codes_t, flagged, ["vec_id", "xh", "rn2", "label"],
-        "SELECT BIGINT(NULL), CAST(NULL AS ARRAY<BIGINT>), BIGINT(NULL),"
-        " CAST(NULL AS INT) WHERE false",
-    )
+    return gc_partitions(spark, codes_t, flagged)
 
 
 def sq8_index_filtered_search(
@@ -5950,11 +5278,11 @@ def sq8_index_filtered_search(
         F.col("n2").alias("qn2"),
         F.col("label").alias("qlabel"),
     )
-    codes = live_epochs(spark.table(f"{name}_codes"), spark, f"{name}_codes").select(
+    codes = live(spark, f"{name}_codes").select(
         "vec_id", "xh", "rn2", "label"
     )
     dead = (
-        live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+        live(spark, f"{name}_del")
         .select("vec_id")
         .distinct()
     )
@@ -6052,24 +5380,10 @@ def run_knn_graph_cdc_stream(
     vec_t, band_t = f"{name}_vec", f"{name}_band"
     edge_t, del_t = f"{name}_edge", f"{name}_del"
     if fresh_tables:
-        for t in (vec_t, band_t, edge_t, del_t):
-            _drop_table(spark, t)
-        spark.sql(
-            f"CREATE TABLE {vec_t} (vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {band_t} (vec_id BIGINT, bi INT, bv BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {edge_t} (id_a BIGINT, id_b BIGINT, cosine DOUBLE)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
-        spark.sql(
-            f"CREATE TABLE {del_t} (vec_id BIGINT)"
-            f" USING parquet PARTITIONED BY (epoch BIGINT)"
-        )
+        create_state_table(spark, vec_t, "vec_id BIGINT, q ARRAY<BIGINT>, n2 BIGINT")
+        create_state_table(spark, band_t, "vec_id BIGINT, bi INT, bv BIGINT")
+        create_state_table(spark, edge_t, "id_a BIGINT, id_b BIGINT, cosine DOUBLE")
+        create_state_table(spark, del_t, "vec_id BIGINT")
 
     stage = stage_dir or stage_embedding_cdc_chunks(sf_dir, n_chunks)
     feed = (
@@ -6134,10 +5448,10 @@ def run_knn_graph_cdc_stream(
     def index_batch(df: DataFrame, epoch_id: int) -> None:
         s = df.sparkSession
         for t in (vec_t, band_t, edge_t, del_t):
-            _maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
+            maybe_fold(s, t, epoch_id, fold_every, refold_width=refold_width)
         d_del = df.filter(F.col("side") == "V_DEL").select("vec_id")
         hist_d = (
-            live_epochs(s.table(del_t), s, del_t)
+            live(s, del_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -6155,14 +5469,14 @@ def run_knn_graph_cdc_stream(
         # NEW edges immediately) plus the batch members themselves
         touched = bnew.select("bi", "bv").distinct()
         hist_b = (
-            live_epochs(s.table(band_t), s, band_t)
+            live(s, band_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
             .join(dead, "vec_id", "left_anti")
             .join(F.broadcast(touched), ["bi", "bv"], "left_semi")
         )
         hist_v = (
-            live_epochs(s.table(vec_t), s, vec_t)
+            live(s, vec_t)
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
@@ -6184,10 +5498,7 @@ def run_knn_graph_cdc_stream(
         bnew.unpersist()
         e.unpersist()
 
-    w = feed.writeStream.foreachBatch(index_batch).queryName(f"{name}_q")
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
+    return _start(feed, index_batch, f"{name}_q", checkpoint_dir)
 
 
 def knn_graph_cdc_view(
@@ -6205,12 +5516,12 @@ def knn_graph_cdc_view(
     from ..operators.similarity import KNN_GRAPH_K
 
     dead = (
-        live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+        live(spark, f"{name}_del")
         .select("vec_id")
         .distinct()
     )
     e = (
-        live_epochs(spark.table(f"{name}_edge"), spark, f"{name}_edge")
+        live(spark, f"{name}_edge")
         .drop("epoch")
         .join(F.broadcast(dead.withColumnRenamed("vec_id", "id_a")), "id_a", "left_anti")
         .join(F.broadcast(dead.withColumnRenamed("vec_id", "id_b")), "id_b", "left_anti")
@@ -6238,40 +5549,29 @@ def knn_graph_cdc_view(
 def purge_knn_graph_dead(spark: SparkSession, name: str = "kngcdc") -> int:
     """Physical delete pass for the maintained k-NN graph: rewrite only
     the vector/band/edge partitions holding dead-sided rows
-    (`_gc_partitions` per table); tombstones stay (late re-inserts must
+    (`gc_partitions` per table); tombstones stay (late re-inserts must
     still be cleansed). Replay-safe: per-epoch maintenance reads the
     band/vec tables only through the same tombstone anti-join, so a
     purged row was already invisible. Purge changes bytes, never the
     served graph. Idempotent; returns partitions touched."""
     dead = (
-        live_epochs(spark.table(f"{name}_del"), spark, f"{name}_del")
+        live(spark, f"{name}_del")
         .select("vec_id")
         .distinct()
     )
     touched = 0
-    for t, cols, empty in (
-        (
-            f"{name}_vec",
-            ["vec_id", "q", "n2"],
-            "SELECT BIGINT(NULL), CAST(NULL AS ARRAY<BIGINT>), BIGINT(NULL) WHERE false",
-        ),
-        (
-            f"{name}_band",
-            ["vec_id", "bi", "bv"],
-            "SELECT BIGINT(NULL), CAST(NULL AS INT), BIGINT(NULL) WHERE false",
-        ),
-    ):
+    for t in (f"{name}_vec", f"{name}_band"):
         flagged = (
-            live_epochs(spark.table(t), spark, t)
+            live(spark, t)
             .join(F.broadcast(dead.withColumn("_dead", F.lit(True))), "vec_id", "left")
             .withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
         )
-        touched += _gc_partitions(spark, t, flagged, cols, empty)
+        touched += gc_partitions(spark, t, flagged)
     et = f"{name}_edge"
     da = dead.select(F.col("vec_id").alias("id_a")).withColumn("_da", F.lit(True))
     db = dead.select(F.col("vec_id").alias("id_b")).withColumn("_db", F.lit(True))
     flagged = (
-        live_epochs(spark.table(et), spark, et)
+        live(spark, et)
         .join(F.broadcast(da), "id_a", "left")
         .join(F.broadcast(db), "id_b", "left")
         .withColumn(
@@ -6281,28 +5581,22 @@ def purge_knn_graph_dead(spark: SparkSession, name: str = "kngcdc") -> int:
         )
         .drop("_da", "_db")
     )
-    touched += _gc_partitions(
-        spark, et, flagged, ["id_a", "id_b", "cosine"],
-        "SELECT BIGINT(NULL), BIGINT(NULL), CAST(NULL AS DOUBLE) WHERE false",
-    )
+    touched += gc_partitions(spark, et, flagged)
     return touched
 
 
 def purge_flat_index(spark: SparkSession, name: str = "flatcdc") -> int:
     """FAISS remove_ids made physical: rewrite only the store partitions
-    holding tombstoned vectors (`_gc_partitions`); tombstones stay (a
+    holding tombstoned vectors (`gc_partitions`); tombstones stay (a
     late re-insert must still be cleansed). Replay-safe at any time —
     maintenance never probes the store, so no replayed epoch re-reads a
     purged row. Purge changes bytes, never served results (the read
     already anti-joins). Idempotent; returns partitions touched."""
     vec_t, del_t = f"{name}_vec", f"{name}_del"
-    dead = live_epochs(spark.table(del_t), spark, del_t).select("vec_id").distinct()
+    dead = live(spark, del_t).select("vec_id").distinct()
     flagged = (
-        live_epochs(spark.table(vec_t), spark, vec_t)
+        live(spark, vec_t)
         .join(F.broadcast(dead.withColumn("_dead", F.lit(True))), "vec_id", "left")
         .withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
     )
-    return _gc_partitions(
-        spark, vec_t, flagged, ["vec_id", "q", "n2"],
-        "SELECT BIGINT(NULL), CAST(NULL AS ARRAY<BIGINT>), BIGINT(NULL) WHERE false",
-    )
+    return gc_partitions(spark, vec_t, flagged)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..schemas import EVENTS
+from .epochs import create_state_table, write_epoch
 
 WATERMARK = "10 seconds"
 
@@ -575,20 +576,17 @@ def run_hot_items_stream(spark: SparkSession, sf_dir: str, top_n: int = 5, query
 
 def _gate_epoch(batch_df: DataFrame, epoch_id: int, kept_t: str, audit_t: str) -> None:
     """One micro-batch of the quality gate, written idempotently: score,
-    stamp the epoch, dynamic-partition-OVERWRITE each sink's epoch
-    partition. Calling this twice with the same (batch, epoch) leaves the
+    then overwrite each sink's epoch partition (both sinks are state
+    tables that declare dynamic overwrite, so no other partition is
+    touched). Calling this twice with the same (batch, epoch) leaves the
     tables unchanged — the unit the crash-replay test exercises directly."""
     from ..operators.textops import quality_gopher
 
-    s = batch_df.sparkSession
-    scored = quality_gopher(batch_df).withColumn("epoch", F.lit(epoch_id)).persist()
-    prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    scored = quality_gopher(batch_df).persist()
     try:
-        scored.filter(F.col("keep") == 1).write.mode("overwrite").insertInto(kept_t, overwrite=True)
-        scored.filter(F.col("keep") == 0).write.mode("overwrite").insertInto(audit_t, overwrite=True)
+        write_epoch(scored.filter(F.col("keep") == 1), kept_t, epoch_id)
+        write_epoch(scored.filter(F.col("keep") == 0), audit_t, epoch_id)
     finally:
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         scored.unpersist()
 
 
@@ -620,21 +618,17 @@ def run_quality_gate_stream(
     duplicates. The rules are deterministic functions of the batch rows,
     so the replay writes byte-identical content: effectively-once
     without a transactional table format."""
-    from .ingest import _drop_table, stage_document_chunks
+    from .ingest import stage_document_chunks
 
     kept_t, audit_t = f"{name}_kept", f"{name}_audit"
     if reset_tables:
-        for t in (kept_t, audit_t):
-            _drop_table(spark, t)
         cols = (
             "doc_id BIGINT, n_words INT, mean_word_len DOUBLE, stop_count INT, "
             "top_unigram_ratio DOUBLE, flag_word_count INT, flag_mean_word_len INT, "
             "flag_stopwords INT, flag_repetition INT, keep INT"
         )
         for t in (kept_t, audit_t):
-            spark.sql(
-                f"CREATE TABLE {t} ({cols}, epoch BIGINT) USING parquet PARTITIONED BY (epoch)"
-            )
+            create_state_table(spark, t, cols)
 
     stage = stage_dir or stage_document_chunks(sf_dir)
     schema = "doc_id long, text string, lang string, source string, n_chars long"

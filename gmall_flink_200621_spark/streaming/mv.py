@@ -10,8 +10,9 @@ combination is exactly-once WITHOUT a transaction log:
 - update mode → the per-batch frame is the complete new value of every
   changed group (not a delta), so rewriting its partition is idempotent —
   a retried/replayed batch rewrites byte-identical content;
-- `partitionOverwriteMode=dynamic` → only partitions present in the
-  batch are replaced; untouched history stays as-is. No read-modify-write
+- the writer option `partitionOverwriteMode=dynamic` (scoped to the one
+  write, never the session conf) → only partitions present in the batch
+  are replaced; untouched history stays as-is. No read-modify-write
   of the table, no MERGE, no driver state;
 - late data is handled for free: a late event changes its window's
   aggregate, the window re-emits, its partition is rewritten.
@@ -51,6 +52,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _write_partitions(batch_df: DataFrame, table_path: str) -> None:
+    """Replace the `window_end_s` partitions present in `batch_df` at
+    `table_path`, leaving every other partition as it is."""
+    batch_df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "window_end_s"
+    ).parquet(table_path)
+
+
 def run_pv_mv_stream(
     spark: SparkSession,
     stage_dir: str,
@@ -82,17 +91,7 @@ def run_pv_mv_stream(
     )
 
     def rewrite_changed_partitions(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.write.mode("overwrite")
-                .partitionBy("window_end_s")
-                .parquet(table_path)
-            )
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _write_partitions(batch_df, table_path)
 
     w = (
         counts.writeStream.outputMode("update")
@@ -154,13 +153,7 @@ def run_pv_mv_stream_bounded(
         # partition overwrite keeps a retried batch idempotent while never
         # touching other (closed) partitions.
         if not batch_df.isEmpty():
-            s = batch_df.sparkSession
-            prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                batch_df.write.mode("overwrite").partitionBy("window_end_s").parquet(table_path)
-            finally:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            _write_partitions(batch_df, table_path)
 
     # Engine-exact watermark replica, in MILLIseconds (Spark collects event
     # time stats as floor(micros/1000) and evicts/drops on

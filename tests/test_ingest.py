@@ -206,6 +206,7 @@ class TestNearDupIngest:
 
         from gmall_flink_200621_spark.operators.dedup import dedup_minhash_lsh
         from gmall_flink_200621_spark.sources.loaders import load_table
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             neardup_pairs_view,
             purge_neardup_dead,
@@ -243,19 +244,16 @@ class TestNearDupIngest:
         # index; tombstones themselves kept for late re-inserts
         from gmall_flink_200621_spark.streaming.ingest import (
             _partition_epochs,
-            live_epochs,
         )
 
         pos = [e for e in _partition_epochs(spark, "t_ndcdc_del") if e >= 0]
-        committed_dead = live_epochs(
-            spark.table("t_ndcdc_del"), spark, "t_ndcdc_del"
-        )
+        committed_dead = epochs.live(spark, "t_ndcdc_del")
         if pos:
             committed_dead = committed_dead.filter(F.col("epoch") != max(pos))
         committed_dead = committed_dead.select("doc_id").distinct()
         assert committed_dead.count() > 0
         leftover = (
-            live_epochs(spark.table("t_ndcdc_bands"), spark, "t_ndcdc_bands")
+            epochs.live(spark, "t_ndcdc_bands")
             .join(committed_dead, "doc_id", "left_semi")
             .count()
         )
@@ -1157,8 +1155,9 @@ class TestCorpusStatsStream:
         no-op for the view, and a terminal fold that absorbs everything
         still reproduces the exact profile from the single base row set."""
         from gmall_flink_200621_spark.plans.training import corpus_profile
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            _fold_cstats_partials,
+            _cstats_merge,
             corpus_stats_view,
             run_corpus_stats_stream,
         )
@@ -1183,7 +1182,7 @@ class TestCorpusStatsStream:
         # replayed fold: re-running the newest fold's watermark must leave
         # the view (and the partition set) unchanged — crash recovery path
         wm = max(-e - 1 for e in eps if e < 0)
-        _fold_cstats_partials(spark, "t_csf_partials", wm)
+        epochs.fold(spark, "t_csf_partials", wm, _cstats_merge)
         eps2 = sorted(
             int(r[0].split("=")[1])
             for r in spark.sql("SHOW PARTITIONS t_csf_partials").collect()
@@ -1221,7 +1220,7 @@ class TestCorpusStatsStream:
         wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
         oldest_base = _os.path.join(wh, "t_csf_partials", f"epoch={min(eps)}")
         mt_base = _os.path.getmtime(oldest_base)
-        _fold_cstats_partials(spark, "t_csf_partials", max(eps))
+        epochs.fold(spark, "t_csf_partials", max(eps), _cstats_merge)
         assert _os.path.getmtime(oldest_base) == mt_base  # tiered, not absorbing
         assert sorted(map(tuple, corpus_stats_view(spark, "t_csf").collect())) == want
         eps3 = [
@@ -1246,9 +1245,9 @@ class TestCorpusStatsStream:
         import os as _os
 
         from gmall_flink_200621_spark.plans.training import corpus_profile
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             TIER_OFF,
-            _refold_bases,
             _cstats_merge,
             corpus_stats_view,
             live_epochs,
@@ -1294,7 +1293,7 @@ class TestCorpusStatsStream:
         # metadata and relational live_epochs agree on the tiered table
         p = spark.table("t_rf16_partials")
         rel = sorted(map(tuple, live_epochs(p).collect()))
-        meta = sorted(map(tuple, live_epochs(p, spark, "t_rf16_partials").collect()))
+        meta = sorted(map(tuple, epochs.live(spark, "t_rf16_partials").collect()))
         assert rel == meta and rel
 
         # crash-before-GC at the BASE level: resurrect an absorbed tier-1
@@ -1314,7 +1313,7 @@ class TestCorpusStatsStream:
         assert sorted(map(tuple, corpus_stats_view(spark, "t_rf16").collect())) == want
         p = spark.table("t_rf16_partials")
         assert sorted(map(tuple, live_epochs(p).collect())) == meta  # relational too
-        _refold_bases(spark, "t_rf16_partials", _cstats_merge, 2)
+        epochs.refold(spark, "t_rf16_partials", _cstats_merge, 2)
         eps_after = sorted(
             int(r[0].split("=")[1])
             for r in spark.sql("SHOW PARTITIONS t_rf16_partials").collect()
@@ -1519,8 +1518,8 @@ class TestPqIndexStream:
         from pyspark.sql import functions as F
 
         from gmall_flink_200621_spark.operators.similarity import _idot, quantize
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            _fold_epoch_partitions,
             pq_index_search,
             run_pq_index_stream,
         )
@@ -1562,7 +1561,7 @@ class TestPqIndexStream:
         spark.catalog.refreshTable("t_pqf_codes")
         assert search("t_pqf") == want  # stale epoch ignored by live_epochs
 
-        _fold_epoch_partitions(spark, "t_pqf_codes", max(eps), lambda df: df)
+        epochs.fold(spark, "t_pqf_codes", max(eps), lambda df: df)
         assert search("t_pqf") == want
         eps2 = [
             int(r[0].split("=")[1])
@@ -1661,6 +1660,78 @@ class TestJoinIvm:
             ),
         )
 
+    def test_failed_epoch_releases_persisted_retire_frame(self, spark, monkeypatch):
+        """An epoch whose MV write raises must not leave its persisted
+        `retired` frame in the CacheManager (foreachBatch retries of a
+        failing batch would otherwise pile up cached blocks). Drives
+        `_ivm_epoch` directly on two tiny batches — an insert, then a
+        delete whose retraction persists `retired` — with the second
+        `write_epoch` call of the delete epoch failing."""
+        import gmall_flink_200621_spark.streaming.ingest as I
+        from gmall_flink_200621_spark.streaming.epochs import create_state_table
+
+        t = {k: f"t_ivmleak_{k}" for k in ("o", "l", "v", "d", "agg")}
+        create_state_table(
+            spark, t["o"], "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_version BIGINT"
+        )
+        create_state_table(
+            spark,
+            t["l"],
+            "l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE,"
+            " l_discount DOUBLE",
+        )
+        create_state_table(
+            spark,
+            t["v"],
+            "o_orderkey BIGINT, l_linenumber INT, o_custkey BIGINT, o_orderstatus STRING,"
+            " l_quantity DOUBLE, revenue DOUBLE, o_version BIGINT",
+        )
+        create_state_table(spark, t["d"], "o_orderkey BIGINT")
+        create_state_table(spark, t["agg"], "o_custkey BIGINT, n BIGINT, rev DECIMAL(18,6)")
+        schema = (
+            "side string, o_orderkey long, o_custkey long, o_orderstatus string,"
+            " l_orderkey long, l_linenumber int, l_quantity double,"
+            " l_extendedprice double, l_discount double"
+        )
+
+        def epoch(rows, epoch_id):
+            I._ivm_epoch(
+                spark.createDataFrame(rows, schema), epoch_id, t["o"], t["l"], t["v"],
+                d_t=t["d"], agg_t=t["agg"],
+            )
+
+        epoch(
+            [("O", 1, 7, "O", None, None, None, None, None),
+             ("L", None, None, None, 1, 1, 2.0, 10.0, 0.0)],
+            0,
+        )
+        assert spark.table(t["v"]).count() == 1
+
+        persisted = []
+        df_cls = type(spark.range(1))
+        persist = df_cls.persist
+
+        def recording_persist(df, *a, **k):
+            persisted.append(df)
+            return persist(df, *a, **k)
+
+        calls = []
+        write_epoch = I.write_epoch
+
+        def failing_write_epoch(df, table, epoch_id):
+            calls.append(table)
+            if len(calls) == 2:
+                raise RuntimeError("injected write failure")
+            write_epoch(df, table, epoch_id)
+
+        monkeypatch.setattr(df_cls, "persist", recording_persist)
+        monkeypatch.setattr(I, "write_epoch", failing_write_epoch)
+        with pytest.raises(RuntimeError, match="injected"):
+            epoch([("O_DEL", 1, None, None, None, None, None, None, None)], 1)
+        assert len(calls) == 2 and persisted, "the delete epoch must persist its retire frame"
+        # no frame the failed epoch persisted is still in the CacheManager
+        assert [df for df in persisted if df.storageLevel.useMemory or df.storageLevel.useDisk] == []
+
     def test_view_equals_batch_join_and_deltas_spread(self, spark, sf_dir):
         """After full replay the maintained view equals the batch join as
         a MULTISET (row-for-row — this is the exactly-once-per-pair proof:
@@ -1671,8 +1742,8 @@ class TestJoinIvm:
         whole view — deltas, not per-epoch recomputes."""
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             order_wide_view,
             run_join_ivm_stream,
         )
@@ -1687,7 +1758,7 @@ class TestJoinIvm:
         assert got == want and len(got) > 0
         per_epoch = {
             r["epoch"]: r["n"]
-            for r in live_epochs(spark.table("t_ivm_v"), spark, "t_ivm_v")
+            for r in epochs.live(spark, "t_ivm_v")
             .groupBy("epoch")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -1845,8 +1916,8 @@ class TestJoinIvm:
 
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             order_wide_view,
             purge_tombstoned_rows,
             run_join_ivm_stream,
@@ -1862,7 +1933,7 @@ class TestJoinIvm:
             spark.catalog.refreshTable(t)
 
         wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-        live = live_epochs(spark.table("t_ivmp_v"), spark, "t_ivmp_v")
+        live = epochs.live(spark, "t_ivmp_v")
         dead_per_epoch = {
             r.epoch: r.n
             for r in live.filter(F.col("o_orderkey") % 7 == 0)
@@ -1882,7 +1953,7 @@ class TestJoinIvm:
         n = purge_tombstoned_rows(spark, "t_ivmp")
         assert n == len(dead_per_epoch)
         # dead rows physically gone from the live partitions
-        live2 = live_epochs(spark.table("t_ivmp_v"), spark, "t_ivmp_v")
+        live2 = epochs.live(spark, "t_ivmp_v")
         assert live2.filter(F.col("o_orderkey") % 7 == 0).count() == 0
         # served view unchanged
         assert sorted(map(tuple, order_wide_view(spark, "t_ivmp").collect())) == before
@@ -2779,8 +2850,8 @@ class TestJoinIvm:
         and stays read-identical and idempotent."""
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             order_wide_view,
             purge_tombstoned_rows,
             run_join_ivm_stream,
@@ -2799,8 +2870,8 @@ class TestJoinIvm:
 
         # phase 1 alone (the crash point): drop every fully-dead positive
         # partition exactly as purge_tombstoned_rows computes them
-        live = live_epochs(spark.table("t_ivmpc_v"), spark, "t_ivmpc_v")
-        dead = live_epochs(spark.table("t_ivmpc_d"), spark, "t_ivmpc_d").drop("epoch").distinct()
+        live = epochs.live(spark, "t_ivmpc_v")
+        dead = epochs.live(spark, "t_ivmpc_d").drop("epoch").distinct()
         counts = (
             live.join(dead, "o_orderkey", "left_semi")
             .groupBy("epoch")
@@ -2821,7 +2892,7 @@ class TestJoinIvm:
         n = purge_tombstoned_rows(spark, "t_ivmpc")
         assert n == len(partial)
         assert sorted(map(tuple, order_wide_view(spark, "t_ivmpc").collect())) == before
-        live2 = live_epochs(spark.table("t_ivmpc_v"), spark, "t_ivmpc_v")
+        live2 = epochs.live(spark, "t_ivmpc_v")
         assert live2.filter(F.col("o_orderkey") % 7 == 0).count() == 0
         assert purge_tombstoned_rows(spark, "t_ivmpc") == 0
 
@@ -2844,8 +2915,8 @@ class TestSq8IndexStream:
 
         from gmall_flink_200621_spark.operators.similarity import _idot, quantize
         from gmall_flink_200621_spark.sources.loaders import load_table
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             run_sq8_index_stream,
             sq8_index_search,
             stage_embedding_chunks,
@@ -2913,7 +2984,7 @@ class TestSq8IndexStream:
         stats = spark.table("t_sq8i_stats").collect()[0]
         hi = [m + s for m, s in zip(stats.mn, stats.step)]
 
-        codes = live_epochs(spark.table("t_sq8i_codes"), spark, "t_sq8i_codes")
+        codes = epochs.live(spark, "t_sq8i_codes")
         planted = codes.filter(F.col("vec_id") >= 10_000_000)
         assert planted.count() == 50
         # every dequantized component within [mn, mn+step]; the planted
@@ -3046,11 +3117,11 @@ class TestWindowAggStream:
         (epoch=0 partition gone, no rewrite of survivors), leaves zero
         live rows below the cutoff, and the view is identical before and
         after GC (correctness never depends on GC having run)."""
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             _wagg_cutoff,
             expire_window_buckets,
             hot_window_view,
-            live_epochs,
         )
         from pyspark.sql import functions as F
 
@@ -3066,7 +3137,7 @@ class TestWindowAggStream:
         parts1 = {r[0] for r in spark.sql("SHOW PARTITIONS t_wagg_buckets").collect()}
         assert "epoch=0" not in parts1
 
-        live = live_epochs(spark.table("t_wagg_buckets"), spark, "t_wagg_buckets")
+        live = epochs.live(spark, "t_wagg_buckets")
         assert live.filter(F.col("bucket_end") <= F.lit(cutoff)).count() == 0
         after = sorted(map(tuple, hot_window_view(spark, "t_wagg", self.RET).collect()))
         assert after == before
@@ -3078,11 +3149,11 @@ class TestWindowAggStream:
         tiered fold before GC: expiry must REWRITE live bases in place
         (a dropped base would rewind the fold watermark), the view still
         equals the oracle, and state physically sheds expired buckets."""
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             _wagg_cutoff,
             expire_window_buckets,
             hot_window_view,
-            live_epochs,
         )
         from pyspark.sql import functions as F
 
@@ -3099,7 +3170,7 @@ class TestWindowAggStream:
         ]
         assert set(neg1) == set(neg0)  # bases rewritten, never dropped
         cutoff = _wagg_cutoff(spark, "t_waggf", self.RET)
-        live = live_epochs(spark.table("t_waggf_buckets"), spark, "t_waggf_buckets")
+        live = epochs.live(spark, "t_waggf_buckets")
         assert live.filter(F.col("bucket_end") <= F.lit(cutoff)).count() == 0
         got = sorted(map(tuple, hot_window_view(spark, "t_waggf", self.RET).collect()))
         assert got == self._oracle(duck)
@@ -3109,9 +3180,9 @@ class TestWindowAggStream:
         exactly the (bucket, item) pairs inside the retention horizon —
         growing the replayed history (3 → 6 chunks over the same data)
         leaves the post-GC state identical."""
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             expire_window_buckets,
-            live_epochs,
         )
 
         def live_state(name, n_chunks):
@@ -3120,7 +3191,7 @@ class TestWindowAggStream:
             return sorted(
                 map(
                     tuple,
-                    live_epochs(spark.table(f"{name}_buckets"), spark, f"{name}_buckets")
+                    epochs.live(spark, f"{name}_buckets")
                     .groupBy("bucket_end", "item_k")
                     .agg(F.sum("cnt").alias("cnt"))
                     .collect(),
@@ -3457,8 +3528,8 @@ class TestQuantileIvm:
         fold physically drops the dead (type, value) pair from the base."""
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             value_quantile_view,
         )
 
@@ -3481,12 +3552,12 @@ class TestQuantileIvm:
 
         rows = {
             r.event_id
-            for r in live_epochs(spark.table("t_qmv_rows"), spark, "t_qmv_rows").collect()
+            for r in epochs.live(spark, "t_qmv_rows").collect()
         }
         # 5 never landed (delete-before-insert); 7's tombstoned row stays
         # on disk until a purge — the HISTOGRAM is what retracts
         assert rows == {6, 7, 8}
-        hist = live_epochs(spark.table("t_qmv_hist"), spark, "t_qmv_hist")
+        hist = epochs.live(spark, "t_qmv_hist")
         pairs = {(r.event_type, r.value_c, r.c) for r in hist.collect()}
         # fold drops the zero-netted 3.21 pair; 9.99 never entered
         assert pairs == {("view", 100, 1), ("view", 200, 1)}
@@ -3544,8 +3615,8 @@ class TestMvPurges:
         from pyspark.sql import functions as F
 
         from gmall_flink_200621_spark.plans.training_oracle import VALUE_QUANTILE_VIEW
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             purge_quantile_rows,
             run_quantile_ivm_stream,
             value_quantile_view,
@@ -3557,15 +3628,15 @@ class TestMvPurges:
         q.awaitTermination()
         for t in ("rows", "hist", "d"):
             spark.catalog.refreshTable(f"t_qpg_{t}")
-        d_live = live_epochs(spark.table("t_qpg_d"), spark, "t_qpg_d")
+        d_live = epochs.live(spark, "t_qpg_d")
         dead = d_live.select("event_id").distinct()
         n_dead_before = (
-            live_epochs(spark.table("t_qpg_rows"), spark, "t_qpg_rows")
+            epochs.live(spark, "t_qpg_rows")
             .join(dead, "event_id", "left_semi").count()
         )
         assert n_dead_before > 0
         assert purge_quantile_rows(spark, "t_qpg") > 0
-        after = live_epochs(spark.table("t_qpg_rows"), spark, "t_qpg_rows")
+        after = epochs.live(spark, "t_qpg_rows")
         # REPLAY GUARD: rows tombstoned only by the newest (replayable)
         # epoch's deletes survive the purge — they are that epoch's
         # replay inputs; everything committed-dead is physically gone
@@ -3582,7 +3653,7 @@ class TestMvPurges:
         assert (
             after.join(newest_only_dead, "event_id", "left_semi").count()
             == newest_only_dead.join(
-                live_epochs(spark.table("t_qpg_rows"), spark, "t_qpg_rows"),
+                epochs.live(spark, "t_qpg_rows"),
                 "event_id", "left_semi",
             ).count()
         )
@@ -3596,8 +3667,8 @@ class TestMvPurges:
         from pyspark.sql import Window
 
         from gmall_flink_200621_spark.plans.extras import EXTRA_ORACLES, SESSION_GAP_S
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             purge_superseded_sessions,
             run_session_ivm_stream,
             sessions_view,
@@ -3611,9 +3682,9 @@ class TestMvPurges:
         q.awaitTermination()
         spark.catalog.refreshTable("t_spg_sess")
 
-        before = live_epochs(spark.table("t_spg_sess"), spark, "t_spg_sess").count()
+        before = epochs.live(spark, "t_spg_sess").count()
         assert purge_superseded_sessions(spark, "t_spg") > 0
-        alive = live_epochs(spark.table("t_spg_sess"), spark, "t_spg_sess")
+        alive = epochs.live(spark, "t_spg_sess")
         assert alive.count() < before
 
         # replay-input invariant: for every user, the newest version
@@ -3635,8 +3706,8 @@ class TestMvPurges:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
             purge_superseded_topk_groups,
             run_join_ivm_stream,
             stage_order_lineitem_chunks,
@@ -3656,9 +3727,9 @@ class TestMvPurges:
         served_before = sorted(
             map(tuple, top_customers_by_group_view(spark, "t_tkgp", k=5).collect())
         )
-        before = live_epochs(spark.table("t_tkgp_tkg"), spark, "t_tkgp_tkg").count()
+        before = epochs.live(spark, "t_tkgp_tkg").count()
         assert purge_superseded_topk_groups(spark, "t_tkgp") > 0
-        alive = live_epochs(spark.table("t_tkgp_tkg"), spark, "t_tkgp_tkg")
+        alive = epochs.live(spark, "t_tkgp_tkg")
         assert alive.count() < before
 
         # replay-input invariant: for every group, the newest version
@@ -3684,9 +3755,9 @@ class TestFlatIndexCdc:
     def test_deletes_purge_and_deleted_query(self, spark, sf_dir):
         from pyspark.sql import functions as F
 
+        from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming.ingest import (
             flat_index_search,
-            live_epochs,
             purge_flat_index,
             run_flat_index_cdc_stream,
         )
@@ -3709,12 +3780,12 @@ class TestFlatIndexCdc:
         # the delete-before-insert case exists in the staging (last
         # chunk's inserts get their tombstone in chunk 0) — those keys
         # must never have entered the store at all
-        dead = live_epochs(spark.table("t_fcdc_del"), spark, "t_fcdc_del")
-        store = live_epochs(spark.table("t_fcdc_vec"), spark, "t_fcdc_vec")
+        dead = epochs.live(spark, "t_fcdc_del")
+        store = epochs.live(spark, "t_fcdc_vec")
         # delete-after-insert rows remain on disk pre-purge (read-filtered)
         assert store.join(dead.select("vec_id"), "vec_id", "left_semi").count() > 0
         assert purge_flat_index(spark, "t_fcdc") > 0
-        store2 = live_epochs(spark.table("t_fcdc_vec"), spark, "t_fcdc_vec")
+        store2 = epochs.live(spark, "t_fcdc_vec")
         assert store2.join(dead.select("vec_id"), "vec_id", "left_semi").count() == 0
         after = sorted(map(tuple, flat_index_search(spark, "t_fcdc", k=5).collect()))
         assert after == before  # purge changes bytes, not results

@@ -698,7 +698,7 @@ class TestQualityGateStream:
         must leave both sinks unchanged (dynamic overwrite of the epoch
         partition), never append duplicates."""
         from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.streaming.ingest import _drop_table
+        from gmall_flink_200621_spark.streaming.epochs import create_state_table
         from gmall_flink_200621_spark.streaming.jobs import _gate_epoch
 
         cols = (
@@ -707,8 +707,7 @@ class TestQualityGateStream:
             "flag_stopwords INT, flag_repetition INT, keep INT"
         )
         for t in ("qg_replay_kept", "qg_replay_audit"):
-            _drop_table(spark, t)
-            spark.sql(f"CREATE TABLE {t} ({cols}, epoch BIGINT) USING parquet PARTITIONED BY (epoch)")
+            create_state_table(spark, t, cols)
 
         docs = load_table(spark, sf_dir, "documents")
         b0 = docs.filter("doc_id % 2 = 0")

@@ -8,10 +8,10 @@ e-commerce analytics), re-expressed Spark-first:
 - streaming variants use Structured Streaming with watermarks;
 - the handful of semantics Spark lacks natively (per-key timers, CEP,
   side outputs) live in ``streaming/stateful.py`` as
-  ``transformWithStateInPandas`` handlers and in batch as window-function
+  ``applyInPandasWithState`` functions and in batch as window-function
   rewrites (``operators/cep.py``);
 - beyond-reference training-data operators (dedup, similarity search,
-  text analysis, multimodal plumbing) live under ``operators/``.
+  text analysis) live under ``operators/``.
 
 See SURVEY.md at the repo root for the full operator inventory this package
 implements (§2) and the build plan it follows (§7).

@@ -65,28 +65,3 @@ def epoch_s(ts: str = "ts") -> Column:
     """Event time as epoch seconds (BIGINT) — the canonical output form for
     timestamps so Spark(µs) and DuckDB(ns) value-hash identically."""
     return F.col(ts).cast("long")
-
-
-# ----------------------------------------------------------- reference scalars
-
-
-def parse_epoch_seconds(col: str, millis: bool = False) -> Column:
-    """Reference ts fields are epoch seconds ×1000'd in the apps
-    (HotItemApp.java:48); epoch millis for market (MarketBehaviorSource)."""
-    c = F.col(col).cast("double")
-    return (c / 1000.0 if millis else c).cast("timestamp")
-
-
-def day_bucket(ts_col: Column, tz: str = "UTC") -> Column:
-    """Daily boundary for state TTL (AdClickByProvinceApp.java:146 hardcodes
-    UTC+8; we parameterize and default UTC to match the oracle)."""
-    return F.date_trunc("day", F.from_utc_timestamp(ts_col, tz) if tz != "UTC" else ts_col)
-
-
-def money_sum(col: Column, scale: int = 2) -> Column:
-    """Order-independent exact sum for monetary doubles: aggregate in
-    DECIMAL (associative & exact), return as double. Guarantees bit-exact
-    agreement with any other engine doing the same, regardless of
-    partitioning/merge order — critical at 1000-executor scale where
-    double-sum reduction order is nondeterministic."""
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")

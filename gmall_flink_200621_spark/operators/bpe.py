@@ -14,10 +14,10 @@ trick that makes round cost O(|vocab|), not O(corpus)):
 2. global argmax pair = orderBy(count desc, pair asc).limit(1) — a 1-row
    collect, the same driver-sees-a-scalar shape as the CC loop's
    convergence probe;
-3. apply the merge with a left-to-right fold (`aggregate`) over each
-   word's symbol array — non-overlapping greedy, matching the canonical
-   implementation — and `localCheckpoint` so the plan stays O(1) deep
-   across rounds.
+3. apply the accepted merges with a left-to-right pass over each word's
+   symbol array in one Arrow map (`_apply_merges_frame`) —
+   non-overlapping greedy, matching the canonical implementation — and
+   `localCheckpoint` so the plan stays O(1) deep across rounds.
 
 No SQL oracle: the loop's argmax feeds the next round's input, which a
 single DuckDB statement cannot express — this is exactly the
@@ -45,30 +45,9 @@ def _chars(word):
     return F.transform(F.sequence(F.lit(1), F.length(word)), lambda i: word.substr(i, F.lit(1)))
 
 
-def _apply_merge(syms, a: str, b: str, merged: str | None = None):
-    """Left-to-right non-overlapping merge of adjacent (a, b) → `merged`
-    (default a+b) — the canonical greedy BPE application, as an array
-    fold. `merged` is overridable for WordPiece, whose continuation
-    convention concatenates a + b-without-'##'."""
-    if merged is None:
-        merged = a + b
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def _apply_merge_py(syms: list[str], a: str, b: str, tok: str) -> list[str]:
-    """Python twin of `_apply_merge` — the identical left-to-right
-    non-overlapping greedy pass (also the loop bpe_encode's Arrow path
-    runs, pinned bit-identical to the expression fold at the
-    BPE_ENCODE_EXPR_MAX boundary)."""
+    """One merge applied to one word: the left-to-right non-overlapping
+    greedy pass of the canonical implementation."""
     out, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == a and syms[i + 1] == b:
@@ -143,8 +122,7 @@ def _count_frame(
 
 def _apply_merges_frame(wf: DataFrame, merges: list[tuple[str, str, str]]) -> DataFrame:
     """Apply an ACCEPTED merge sequence to the (freq, syms) word frame as
-    one Arrow map — `_apply_merge_py` per word per merge, the python twin
-    pinned bit-identical to the expression fold. Replaces the per-round
+    one Arrow map — `_apply_merge_py` per word per merge. Replaces the per-round
     conditional-fold projection (whose `when(exists…, aggregate…)`
     expression cost a fresh Catalyst analysis every round and cannot
     chain k merges without 3^k expression growth)."""
@@ -311,7 +289,7 @@ def bpe_merges_sampled(
     """Sampled BPE trainer — the production stance for 32k–50k-merge
     vocabularies (SCALING.md §BPE): train the merge table on a
     DETERMINISTIC hash-sample of the corpus, then encode the full corpus
-    with the trained table (`bpe_encode` — a pure map, corpus-scale-safe).
+    with the trained table (a pure map, corpus-scale-safe).
 
     Why this is the right trade at 100 TB: merge ranks are a function of
     corpus-level pair frequencies, which are Zipfian — a uniform document
@@ -337,133 +315,4 @@ def bpe_merges_sampled(
         deterministic_sample(docs, rate_per_mille, seed),
         n_merges,
         word_partitions=word_partitions,
-    )
-
-
-# above this merge count, bpe_encode switches from the single chained
-# Catalyst expression to the dict-driven Arrow path: each extra merge
-# nests another fold inside the expression tree, and analysis/codegen
-# time grows superlinearly long before data cost matters (a 32k–50k
-# production vocabulary would be a ~50k-deep expression — Catalyst
-# chokes in analysis; measured unusable past a few hundred)
-BPE_ENCODE_EXPR_MAX = 64
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    expr_max: int = BPE_ENCODE_EXPR_MAX,
-) -> DataFrame:
-    """Apply a trained merge table: the ENCODE side of BPE, and the part
-    that actually runs at corpus scale — a pure map, zero shuffles, zero
-    driver round-trips, token arrays never leaving the executor. Output:
-    (doc_id, n_words, n_bpe_tokens, chars_per_token) — corpus
-    token-budget accounting under the learned vocabulary.
-
-    `merges` is the (left, right) list from `bpe_merges` in rank order —
-    apply order IS rank order (one greedy left-to-right pass per merge),
-    identical in both execution paths:
-
-    - ≤ `expr_max` merges: all merges compile into ONE chained column
-      expression (merge k's fold consumes merge k-1's output array) —
-      plan-inert, whole-stage-codegen friendly, the right shape for the
-      small vocabularies the training loop certifies;
-    - beyond `expr_max`: a dict-driven Arrow `mapInPandas` encoder — the
-      documented-exception Python path (like simhash): a 32k–50k-merge
-      expression tree would blow up Catalyst analysis long before data
-      cost matters. Per Arrow batch, each DISTINCT word encodes once
-      (corpus word frequency is Zipfian — the memo hit rate is the same
-      collapse the trainer's word-frequency table exploits), and a
-      symbol-membership set skips the merges whose pieces can't occur in
-      the word, so cost per new word is O(applicable merges · |word|),
-      not O(vocab · |word|). Both paths agree bit-for-bit (pytest-pinned
-      at the switch boundary and at n=256)."""
-    if len(merges) <= expr_max:
-        words = F.split(F.col("text"), " ")
-        # per word: chars → fold each merge in rank order
-        def encode_word(w):
-            syms = F.transform(
-                F.sequence(F.lit(1), F.length(w)), lambda i: w.substr(i, F.lit(1))
-            )
-            for a, b in merges:
-                syms = _apply_merge(syms, a, b)
-            return F.size(syms)
-
-        n_bpe = F.aggregate(
-            F.transform(words, encode_word), F.lit(0).cast("long"), lambda acc, n: acc + n
-        )
-        return docs.select(
-            "doc_id",
-            F.size(words).cast("int").alias("n_words"),
-            n_bpe.alias("n_bpe_tokens"),
-            F.round(
-                F.aggregate(
-                    words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-                ).cast("double")
-                / n_bpe,
-                6,
-            ).alias("chars_per_token"),
-        )
-
-    merge_list = [(a, b, a + b) for a, b in merges]
-
-    def encode_batches(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def round6(x: float) -> float:
-            # Spark's round(double, 6) is HALF_UP over the shortest decimal
-            # repr (BigDecimal.valueOf); Python's round() is half-even —
-            # they disagree on exact .xxxxxx5 ties (e.g. 305/128), so
-            # mirror Spark here to keep the two paths bit-identical
-            return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-        memo: dict[str, int] = {}
-
-        def n_tokens(word: str) -> int:
-            got = memo.get(word)
-            if got is not None:
-                return got
-            # mirror the expression path's empty-word edge exactly:
-            # sequence(1, 0) yields [1, 0] → two empty substrings
-            syms = list(word) if word else ["", ""]
-            present = set(syms)
-            for a, b, ab in merge_list:
-                if a not in present or b not in present:
-                    continue
-                out, i, n = [], 0, len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                        out.append(ab)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                if len(out) < n:
-                    syms = out
-                    present.add(ab)  # grow-only: stale members only cost a scan
-            memo[word] = len(syms)
-            return memo[word]
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = text.split(" ")
-                n_bpe = sum(n_tokens(w) for w in ws)
-                rows.append(
-                    (
-                        doc_id,
-                        len(ws),
-                        n_bpe,
-                        round6(sum(len(w) for w in ws) / n_bpe),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_words", "n_bpe_tokens", "chars_per_token"]
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        encode_batches,
-        "doc_id long, n_words int, n_bpe_tokens long, chars_per_token double",
     )

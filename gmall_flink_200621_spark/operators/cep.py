@@ -1,19 +1,20 @@
 """CEP-lite: the reference's Flink-CEP patterns as reusable batch
 operators (SURVEY §2.8 C1-C4).
 
-Flink CEP's NFA machinery isn't needed for the two pattern shapes the
-reference uses — both have exact window-function / join rewrites that
-Catalyst executes as one shuffle each:
+Flink CEP's NFA machinery isn't needed for the pattern shapes the
+reference uses — each has an exact window-function / join rewrite that
+Catalyst executes as one shuffle:
 
 - `consecutive_within`: `Pattern.begin(A).times(n).consecutive().within(t)`
   (LoginFailAppWithCep.java:61-69) → lag chain over the keyed sequence;
   any non-matching event between occurrences breaks adjacency, exactly
   like `consecutive()`.
-- `followed_by_within`: `Pattern.begin(A).followedBy(B).within(t)`
+- `Pattern.begin(A).followedBy(B).within(t)`
   (OrderTimeoutAppWithCep.java:46-56) → earliest-B-after-A range join;
-  unmatched As are the pattern-timeout side output.
+  unmatched As are the pattern-timeout side output. That join is
+  `plans/pipelines.order_timeout`.
 
-Streaming twins live in streaming/stateful.py (the NFA state machines).
+Streaming twins live in streaming/stateful.py (per-key state machines).
 """
 
 from __future__ import annotations
@@ -77,40 +78,4 @@ def relaxed_times_within(
     """
     return consecutive_within(
         df.filter(match), key_cols, ts_col, F.lit(True), n, within_s, order_cols
-    )
-
-
-def followed_by_within(
-    a: DataFrame,
-    b: DataFrame,
-    key_cols: list[str],
-    a_ts: str,
-    b_ts: str,
-    within_s: int,
-    timeout_tag: str = "timeout",
-    match_tag: str = "matched",
-) -> DataFrame:
-    """A followedBy B within t, per key: each A row joined to the earliest
-    B with b_ts ∈ [a_ts, a_ts + t]. Unmatched As carry the timeout tag —
-    Flink CEP's `timeoutTag` partial matches as a column, not a side
-    channel. Output: key cols, a_ts_s, b_ts_s (nullable), tag."""
-    a2 = a.select(*key_cols, F.col(a_ts).cast("long").alias("a_ts_s")).withColumn(
-        "__aid", F.monotonically_increasing_id()
-    )
-    b2 = b.select(*[F.col(c).alias(f"__b_{c}") for c in key_cols], F.col(b_ts).cast("long").alias("b_ts_s"))
-    on = [a2[k] == b2[f"__b_{k}"] for k in key_cols]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
-    cond = cond & (F.col("b_ts_s") >= F.col("a_ts_s")) & (F.col("b_ts_s") <= F.col("a_ts_s") + within_s)
-    j = a2.join(b2, cond, "left")
-    return (
-        j.groupBy("__aid", *key_cols, "a_ts_s")
-        .agg(F.min("b_ts_s").alias("b_ts_s"))
-        .select(
-            *key_cols,
-            "a_ts_s",
-            "b_ts_s",
-            F.when(F.col("b_ts_s").isNotNull(), F.lit(match_tag)).otherwise(F.lit(timeout_tag)).alias("tag"),
-        )
     )

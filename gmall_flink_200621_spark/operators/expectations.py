@@ -9,8 +9,7 @@ unions the per-check rows. Nothing collects raw data: FK checks broadcast
 the parent KEY SET only when the parent is dimension-sized, and every
 check's scan prunes to the checked columns (ReadSchema-narrow).
 
-Used by `plans/extras.tpch_expectations` (oracle-certified) and by the
-write-audit-publish sink (`sources/sinks.publish_with_audit`).
+Used by `plans/extras.tpch_expectations` (oracle-certified).
 
 Reference parity note: the reference has no validation layer at all —
 this is part of the beyond-reference warehouse surface, alongside

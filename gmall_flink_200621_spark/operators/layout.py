@@ -1,5 +1,5 @@
-"""Physical data-layout operators: Z-order clustering and small-file
-compaction — the warehouse-maintenance surface that decides how much of
+"""Physical data-layout operators: Z-order/Hilbert clustering keys and
+small-file compaction — the warehouse-maintenance surface that decides how much of
 100 TB a query actually READS.
 
 Why this module exists: Spark's scan-side pruning (partition pruning,
@@ -10,9 +10,9 @@ degrades into thousands of small files whose per-file overhead (footer
 reads, task scheduling, open/close) dominates the scan. The two
 operators here are the standard remedies:
 
-- `write_zordered`: multi-dimensional clustering. Interleaving the bits
-  of k bounded columns into one Z-value and RANGE-partitioning + sorting
-  on it gives every output file a compact hyper-rectangle of the key
+- `zorder_value`: multi-dimensional clustering key. Interleaving the
+  bits of k bounded columns into one Z-value and RANGE-partitioning +
+  sorting on it gives every output file a compact hyper-rectangle of the key
   space, so parquet min/max stats are tight on EVERY interleaved column
   at once — a point/box predicate on any of them prunes most files. The
   Z-value is pure integer bit arithmetic (built-ins only, exactly
@@ -24,7 +24,7 @@ operators here are the standard remedies:
   physically untouched (same discipline as the streaming MV tables'
   touched-bucket writes in streaming/ingest.py).
 
-Scale shape: the Z-write is one range shuffle (sampled boundaries —
+Scale shape: a Z-ordered write is one range shuffle (sampled boundaries —
 Spark's RangePartitioner samples, it never sorts globally) + a
 per-partition sort, exactly what a 1000-executor rewrite job wants; the
 compactor reads only the partitions it rewrites and the driver handles
@@ -58,25 +58,6 @@ def zorder_value(cols: list[Column], bits: int = ZORDER_BITS) -> Column:
                 F.shiftrightunsigned(c.cast("long"), b).bitwiseAND(F.lit(1)), b * k + i
             )
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcol: Column,
-    n_files: int,
-    sort_extra: list[str] | None = None,
-) -> None:
-    """Write `df` as `n_files` parquet files clustered on the Z-value:
-    range-partition on zval (sampled boundaries — no global sort), sort
-    within each partition, drop the helper column at the writer. Every
-    file then owns a compact Z-range ⇒ a compact hyper-rectangle in the
-    interleaved dimensions ⇒ tight per-file min/max stats on each of
-    them (the property tests/test_layout.py pins against the
-    one-dimensional-sort strawman)."""
-    out = df.withColumn("__z", zcol).repartitionByRange(n_files, F.col("__z"))
-    order = [F.col("__z")] + [F.col(c) for c in (sort_extra or [])]
-    out.sortWithinPartitions(*order).drop("__z").write.mode("overwrite").parquet(path)
 
 
 def _partition_predicate(types: dict, p: str):
@@ -170,9 +151,7 @@ def compact_small_files(
     (streaming/ingest.py): their touched-bucket overwrites keep write IO
     O(delta) per epoch, at the price of each bucket accreting one small
     file per epoch that touches it; a periodic compaction pass restores
-    scan efficiency without rewriting the table. (Flat un-partitioned
-    parquet directories use `sources/sinks.compact_table` instead — same
-    bin-packing policy, whole-directory staging swap.) Correctness is
+    scan efficiency without rewriting the table. Correctness is
     content-identity: rewrite is `INSERT OVERWRITE` of the partitions'
     own rows (replay-idempotent — a crashed pass re-finds the same
     fragmented partitions; a replayed one finds them compact and writes

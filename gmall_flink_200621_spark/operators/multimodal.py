@@ -1,319 +1,2 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns.
-
-The Spark-side machinery is real and tested — schema convention, Arrow
-batch shape, `mapInPandas` pipelines, partition sizing. Codec status is
-per-format: netpbm (P5/P6) images and PCM WAV audio have REAL stdlib+
-numpy codecs (decode, feature-extract, resize — see the bottom section),
-while PIL/librosa/ffmpeg-class formats (PNG/JPEG/MP3/MP4) stay stubbed
-behind `DECODERS["real"]` until their libraries exist. Swapping a stub
-for a real decoder changes nothing else: the UDF signature, batching,
-and schema are the production shape.
-
-Scale notes:
-- binary payloads ride in Arrow record batches; keep
-  `spark.sql.execution.arrow.maxRecordsPerBatch` low (payloads are MBs,
-  not bytes — 10k-row default batches would blow executor memory).
-- decode → feature-extract is mapInPandas (1:1-ish, no shuffle); frame
-  sampling explodes rows (1:N) which mapInPandas also permits.
-- metadata lives in typed columns NEXT TO the blob so filters/joins prune
-  without touching bytes (columnar parquet never reads the blob column
-  for a metadata-only query).
-"""
-
-from __future__ import annotations
-
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),  # opaque encoded bytes
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),  # image/video metadata
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),  # audio/video metadata
-    ]
-)
-
-FEATURE_DIM = 16
-
-
-def _fake_decode(payload: bytes, kind: str) -> list[float]:
-    """Deterministic stand-in for decode→feature-extract: a feature vector
-    derived from the payload digest. Replace with a real codec; the
-    signature (bytes → fixed-dim float vector) is the production contract."""
-    if payload is None:
-        raise ValueError("null payload")
-    digest = hashlib.sha256(kind.encode() + payload).digest()
-    return [b / 255.0 for b in digest[:FEATURE_DIM]]
-
-
-def _real_decode(payload: bytes, kind: str) -> list[float]:  # pragma: no cover
-    raise NotImplementedError(
-        "real decoders (PIL/librosa/pyav) are not available in this "
-        "environment; production deployments register them in DECODERS"
-    )
-
-
-DECODERS = {"fake": _fake_decode, "real": _real_decode}
-
-
-def extract_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
-    """mapInPandas decode + feature extraction: per-Arrow-batch, vectorized
-    iteration, blob column dropped on output (features replace payloads)."""
-    decode = DECODERS[decoder]
-    out_schema = "media_id long, kind string, features array<double>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "features": [decode(p, k) for p, k in zip(pdf["payload"], pdf["kind"])],
-                }
-            )
-
-    return media.mapInPandas(run, schema=out_schema)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000, decoder: str = "fake") -> DataFrame:
-    """Frame sampling (1:N row explosion inside mapInPandas): one feature
-    row per sampled timestamp for video/audio, driven by duration_ms."""
-    decode = DECODERS[decoder]
-    out_schema = "media_id long, frame_ts_ms long, features array<double>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                if r.kind not in ("video", "audio") or r.duration_ms is None:
-                    continue
-                for ts in range(0, int(r.duration_ms), every_ms):
-                    feats = decode(r.payload + ts.to_bytes(8, "little"), r.kind)
-                    rows.append((r.media_id, ts, feats))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_ts_ms", "features"])
-
-    return media.mapInPandas(run, schema=out_schema)
-
-
-def resize_images(media: DataFrame, width: int, height: int, decoder: str = "fake") -> DataFrame:
-    """Image resize: binary→binary mapInPandas (stub re-digests; a real
-    impl decodes, resizes, re-encodes). Metadata columns updated to the
-    target dims — the part the engine owns either way."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            img = pdf[pdf["kind"] == "image"].copy()
-            if decoder == "fake":
-                img["payload"] = [
-                    hashlib.sha256(p + f"{width}x{height}".encode()).digest() for p in img["payload"]
-                ]
-            else:  # pragma: no cover
-                raise NotImplementedError("real resize requires PIL")
-            img["width"] = width
-            img["height"] = height
-            yield img
-
-    return media.mapInPandas(run, schema=media.schema)
-
-
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media corpus for tests (payload = seeded digest
-    bytes); the plumbing under test is identical to real payloads."""
-    rows = []
-    for i in range(n):
-        kind = ["image", "audio", "video"][i % 3]
-        payload = hashlib.sha256(f"media-{i}".encode()).digest() * 4
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                64 if kind != "audio" else None,
-                48 if kind != "audio" else None,
-                5000 if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# --------------------------- real stdlib codecs (netpbm images, PCM WAV)
-#
-# The "env-blocked" line for multimodal is narrower than it looks: PIL/
-# librosa are absent, but netpbm images (P5/P6) and PCM WAV decode with
-# the standard library + numpy alone. These are REAL codecs — bytes in,
-# pixels/samples out — so the decode → feature → resize path below is the
-# production shape end-to-end for these formats; PNG/JPEG/MP4 remain
-# stubbed behind `_real_decode` until their libraries exist.
-
-
-def _decode_netpbm(payload: bytes):
-    """P5 (gray) / P6 (rgb) binary netpbm → (height, width, channels)
-    uint8 numpy array. Raises ValueError on anything else."""
-    import numpy as np
-
-    if not payload or payload[:1] != b"P" or payload[1:2] not in (b"5", b"6"):
-        raise ValueError("not a binary netpbm payload")
-    # header: magic, width, height, maxval — whitespace/comment separated
-    fields: list[bytes] = []
-    i = 2
-    while len(fields) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":  # comment to EOL
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        fields.append(payload[i:j])
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = int(fields[0]), int(fields[1]), int(fields[2])
-    if maxval != 255:
-        raise ValueError(f"unsupported maxval {maxval}")
-    ch = 1 if payload[1:2] == b"5" else 3
-    arr = np.frombuffer(payload, dtype=np.uint8, count=w * h * ch, offset=i)
-    return arr.reshape(h, w, ch)
-
-
-def _encode_netpbm(arr) -> bytes:
-    h, w, ch = arr.shape
-    magic = b"P5" if ch == 1 else b"P6"
-    return magic + f"\n{w} {h}\n255\n".encode() + arr.tobytes()
-
-
-def _decode_wav(payload: bytes):
-    """PCM WAV → (float samples in [-1,1], sample_rate) via stdlib wave."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload)) as wf:
-        rate = wf.getframerate()
-        n = wf.getnframes()
-        raw = wf.readframes(n)
-        width = wf.getsampwidth()
-    if width != 2:
-        raise ValueError(f"unsupported sample width {width}")
-    samples = np.frombuffer(raw, dtype="<i2").astype("float64") / 32768.0
-    return samples, rate
-
-
-def _stdlib_decode(payload: bytes, kind: str) -> list[float]:
-    """Real decode → FEATURE_DIM feature vector for netpbm images and PCM
-    WAV audio. Image features: dims + per-channel mean/std; audio
-    features: duration, rate, RMS, zero-crossing rate; zero-padded to
-    FEATURE_DIM so the schema matches every other decoder."""
-    import numpy as np
-
-    if kind == "image":
-        a = _decode_netpbm(payload).astype("float64") / 255.0
-        h, w, ch = a.shape
-        feats = [float(w), float(h), float(ch)]
-        for c in range(3):
-            feats.append(float(a[:, :, min(c, ch - 1)].mean()))
-            feats.append(float(a[:, :, min(c, ch - 1)].std()))
-    elif kind == "audio":
-        s, rate = _decode_wav(payload)
-        zc = float(np.mean(np.abs(np.diff(np.signbit(s).astype("int8"))))) if len(s) > 1 else 0.0
-        feats = [
-            float(len(s)) / rate,
-            float(rate),
-            float(np.sqrt(np.mean(s * s))) if len(s) else 0.0,
-            zc,
-        ]
-    else:
-        raise ValueError(f"stdlib decoder handles image|audio, not {kind}")
-    return (feats + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
-
-
-DECODERS["stdlib"] = _stdlib_decode
-
-
-def resize_images_real(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize for netpbm payloads: decode, nearest-neighbor
-    index remap in numpy, re-encode — binary→binary with metadata updated,
-    the exact production contract `resize_images`' stub mimics."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            img = pdf[pdf["kind"] == "image"].copy()
-            out = []
-            for p in img["payload"]:
-                a = _decode_netpbm(bytes(p))
-                h, w, _ = a.shape
-                yi = (np.arange(height) * h // height).astype("int64")
-                xi = (np.arange(width) * w // width).astype("int64")
-                out.append(bytearray(_encode_netpbm(a[yi][:, xi])))
-            img["payload"] = out
-            img["width"] = width
-            img["height"] = height
-            yield img
-
-    return media.mapInPandas(run, schema=media.schema)
-
-
-def synthetic_media_real(spark, n: int = 24) -> DataFrame:
-    """Media corpus with REAL encoded payloads: P6 gradient images and
-    440·(1+i) Hz sine WAVs — deterministic bytes, decodable by the stdlib
-    codecs above (and by any external netpbm/WAV tool)."""
-    import io
-    import math
-    import struct
-    import wave
-
-    rows = []
-    for i in range(n):
-        if i % 2 == 0:  # P6 image, 32×24, deterministic gradient
-            w, h = 32, 24
-            px = bytearray()
-            for y in range(h):
-                for x in range(w):
-                    px += bytes(((x * 8 + i) % 256, (y * 10 + i) % 256, (x * y + i) % 256))
-            payload = b"P6" + f"\n{w} {h}\n255\n".encode() + bytes(px)
-            rows.append((i, "image", bytearray(payload), "image/x-portable-pixmap", w, h, None))
-        else:  # PCM16 mono WAV, 8 kHz, 250 ms sine
-            rate, dur_ms, freq = 8000, 250, 440 * (1 + i % 3)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as wf:
-                wf.setnchannels(1)
-                wf.setsampwidth(2)
-                wf.setframerate(rate)
-                nsamp = rate * dur_ms // 1000
-                frames = b"".join(
-                    struct.pack(
-                        "<h", int(20000 * math.sin(2 * math.pi * freq * t / rate))
-                    )
-                    for t in range(nsamp)
-                )
-                wf.writeframes(frames)
-            rows.append((i, "audio", bytearray(buf.getvalue()), "audio/wav", None, None, dur_ms))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def media_features_stream(spark, media_dir: str, decoder: str = "stdlib") -> DataFrame:
-    """Streaming decode → feature-extract: the SAME `extract_features`
-    mapInPandas pipeline applied to a media file stream — Arrow-batched
-    binary payloads per micro-batch, features out, blob dropped. Stream
-    and batch share the operator object, so stream==batch holds
-    feature-for-feature (pinned in tests); at scale set
-    `spark.sql.execution.arrow.maxRecordsPerBatch` low (payloads are MBs)
-    and `maxFilesPerTrigger` to bound per-batch decode memory."""
-    schema = MEDIA_SCHEMA
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(media_dir)
-    )
-    return extract_features(stream, decoder=decoder)
+"""Empty on purpose: the span tracer of the benchmark (`perfbench/spans.py`)
+imports every operator module by name."""

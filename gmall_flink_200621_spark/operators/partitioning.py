@@ -5,7 +5,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # (session id, semanticHash, input-file-listing hash) → scan partition
 # count. getNumPartitions forces a full physical plan; memoizing per
@@ -37,58 +36,6 @@ def _input_bytes(files: list[str]) -> int | None:
             return None
         total += os.path.getsize(p)
     return total
-
-
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Hot-key-proof equi-join: the FACT side gets a random-uniform salt
-    in [0, salt), the DIM side is replicated salt× with every salt value,
-    and the join runs on (key, salt) — a hot fact key's rows now spread
-    over `salt` shuffle partitions instead of hammering one task. The
-    manual form of what AQE skew-join does adaptively (plan-pinned in
-    TestSkewJoin); use THIS when the skew is known ahead of time, the
-    join is stream-stream (AQE can't split), or a deterministic layout
-    matters more than adaptivity.
-
-    Cost model: dim shuffle volume × salt (fine for dimension tables —
-    that's the point; NEVER salt two fact-sized sides, pre-aggregate or
-    bucket instead). Row multiplicity is unchanged: each fact row carries
-    exactly one salt value and meets exactly one of the dim's salt
-    replicas. Salt uses a hash of the full row's monotonic id, not
-    rand(), so retried tasks re-derive the same assignment
-    (nondeterministic salting + task retry = lost/duplicated rows, the
-    classic production incident).
-
-    `how` is restricted to FACT-preserving join types: under
-    right/full-outer, an unmatched dim key would surface once per salt
-    replica — `salt` phantom output rows — so those modes are rejected
-    rather than silently wrong. The salt itself uses pmod, not
-    abs(...)%salt: abs(Long.MIN_VALUE) stays negative in the JVM, and a
-    negative salt for a non-power-of-two `salt` would silently drop
-    (inner) or null-extend (left) that fact row (ADVICE r05; same idiom
-    as operators/topn.py)."""
-    if salt < 1:
-        raise ValueError(f"salted_join: salt must be >= 1, got {salt}")
-    if how not in ("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi"):
-        raise ValueError(
-            f"salted_join: how={how!r} is not fact-preserving — unmatched dim "
-            f"rows would be duplicated {salt}x by the salt replication; use a "
-            "plain join for right/full outer semantics"
-        )
-    f = facts.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)).cast("int"),
-    )
-    d = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    out = f.join(d, on=[key, "__salt"], how=how)
-    return out.drop("__salt")
 
 
 def fan_out(df: DataFrame) -> DataFrame:

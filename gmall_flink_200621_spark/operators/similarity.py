@@ -16,8 +16,8 @@ Scale shape:
   O(Q·N·d) compute, embarrassingly parallel.
 - knn_lsh: random-hyperplane sign buckets (deterministic integer
   coefficients) cut candidates to the query's bucket — the 100 TB path.
-- embedding_dedup: near-dup pairs blocked by `label` (swap in
-  `lsh_sign_bucket` for unlabeled corpora) — Σ per-block² instead of N².
+- embedding_dedup: near-dup pairs blocked by `label` — Σ per-block²
+  instead of N².
 """
 
 from __future__ import annotations
@@ -44,11 +44,6 @@ def quantize(emb: Column) -> Column:
 def _idot(a: Column, b: Column) -> Column:
     """Integer dot product of two quantized vectors (order-independent)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
-def cosine_q(qa: Column, qb: Column) -> Column:
-    """Cosine from quantized vectors: exact int dot / sqrt of exact int norms."""
-    return _idot(qa, qb) / (F.sqrt(_idot(qa, qa).cast("double")) * F.sqrt(_idot(qb, qb).cast("double")))
 
 
 def _rank_topk(scored: DataFrame, k: int, score_col: str, nbr_col: str = "neighbor_id") -> DataFrame:
@@ -90,18 +85,6 @@ def knn_brute(embeddings: DataFrame, k: int = KNN_K, query_mod: int = 100) -> Da
 def _plane_coeff(p: int, d: int) -> int:
     """Deterministic pseudo-random hyperplane coefficient in [-500, 499]."""
     return ((p * DIM + d) * 2_654_435_761 + 12_345) % 1000 - 500
-
-
-def lsh_sign_bucket(quantized: Column, planes: int = LSH_PLANES) -> Column:
-    """Random-hyperplane LSH bucket id — one sign bit per plane; the
-    projection is an integer dot with deterministic coefficients, so
-    bucketing is engine- and order-exact."""
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        coeffs = F.array(*[F.lit(_plane_coeff(p, d)).cast("long") for d in range(DIM)])
-        proj = _idot(quantized, coeffs)
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
 
 
 LSH_SIGN_BANDS = 4  # bands × rows = 16 planes; candidate iff ANY band matches

@@ -374,7 +374,7 @@ def unigram_encode_freq(
 def unigram_encode(docs: DataFrame, vocab: list[tuple[str, int]]) -> DataFrame:
     """Viterbi-encode the corpus under a trained vocabulary — the
     corpus-scale side, a pure Arrow map (zero shuffles, zero driver
-    round-trips; the `bpe_encode` shape): (doc_id, n_words, n_pieces,
+    round-trips): (doc_id, n_words, n_pieces,
     chars_per_piece). `vocab` is the (piece, count_q) list from
     `unigram_lm_vocab`; probabilities renormalize from the counts."""
     tot = sum(c for _, c in vocab)

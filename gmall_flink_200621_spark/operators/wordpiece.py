@@ -31,7 +31,7 @@ At 100 TB the sample-then-train stance applies verbatim (the trainer
 composes with `textops.deterministic_sample` exactly as
 `bpe_merges_sampled` does); `wordpiece_encode` below is the
 corpus-facing inference side — greedy longest-match-first over the
-trained vocab, a pure Arrow map in bpe_encode's scale shape.
+trained vocab, a pure Arrow map.
 """
 
 from __future__ import annotations
@@ -254,7 +254,7 @@ def wordpiece_encode(docs: DataFrame, vocab: list[str]) -> DataFrame:
     with no decomposition becomes one [UNK] token). Output per doc:
     (doc_id, n_words, n_wp_tokens, n_unk_words, chars_per_token).
 
-    Scale shape — bpe_encode's Arrow path verbatim: a pure
+    Scale shape: a pure
     `mapInPandas` map (zero shuffles, zero driver round-trips), the
     vocab a broadcast-closure set, each DISTINCT word segmented once
     per Arrow batch (Zipfian memo hit rate). Longest-match costs
@@ -270,7 +270,7 @@ def wordpiece_encode(docs: DataFrame, vocab: list[str]) -> DataFrame:
         import pandas as pd
 
         def round6(x: float) -> float:
-            # mirror Spark round(double, 6) HALF_UP (bpe_encode's trick)
+            # mirror Spark round(double, 6) HALF_UP
             return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
         memo: dict[str, tuple[int, int]] = {}

@@ -828,18 +828,17 @@ ZB_SHIFT = 12  # 22-bit zval >> 12 → 1024 Z-buckets in the audit query
 
 def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Z-order CLUSTERING KEY under the oracle gate: interleave
-    (user bucket, minute-of-day) bits into the Z-value
-    `operators/layout.write_zordered` clusters files by, then aggregate
+    (user bucket, minute-of-day) bits into the Z-value a Z-ordered file
+    layout clusters by (range-partition + sort on it), then aggregate
     per Z-bucket the min/max extent of BOTH source dimensions. The
     output certifies cross-engine that the interleave arithmetic is
     exact AND exhibits the property the layout exists for: every
     Z-bucket bounds every interleaved dimension at once (a 12-bit
     Z-range confines each dim to ≤ 2⁶ of its 2¹¹ cells), which is
     precisely why per-file parquet min/max stats prune multi-dimensional
-    predicates after `write_zordered`. The physical file-level proof
-    (footer stats vs a 1-D sort strawman) is pinned in
-    tests/test_layout.py; this query is the deterministic, driver-
-    certifiable arithmetic core. Zero shuffles beyond one map-side-
+    predicates on such a layout. The file-level comparison (Z-order
+    footer stats vs a Hilbert layout) is pinned in tests/test_layout.py;
+    this query is the deterministic, driver-certifiable arithmetic core. Zero shuffles beyond one map-side-
     combined aggregation on the bucket key."""
     from ..operators.layout import ZORDER_BITS, zorder_value
 

@@ -20,16 +20,6 @@ from .pipelines import (
     TOP_N,
 )
 
-# epoch-seconds helper (DuckDB's epoch() returns fractional seconds on ns timestamps)
-_TS = "CAST(floor(epoch({c})) AS BIGINT)"
-
-
-def _sliding(slide_s: int, n: int, ts: str = "ts") -> str:
-    """FROM-clause fragment + window_end expression for a sliding window."""
-    return (
-        f"CAST(floor(epoch(time_bucket(INTERVAL {slide_s} seconds, {ts}))) AS BIGINT) + j * {slide_s}"
-    ), f"generate_series(1, {n}) AS gs(j)"
-
 
 HOT_ITEMS = f"""
 WITH e AS (

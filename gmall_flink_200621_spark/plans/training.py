@@ -2507,13 +2507,13 @@ TRAINING_QUERIES["bm25_index_purged_stream_view"] = bm25_index_purged_stream_vie
 
 def order_wide_cascade_stream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The join-IVM replay run long enough (8 chunks, fold_every=2,
-    refold_width=2) that the SECOND-tier LSM fold (`epochs.refold`)
-    fires INSIDE the hash-gated path: folds at epochs 2 and 4 leave two
-    live tier-1 bases, which cascade into a tier-2 base before epoch
-    6's fold — so the gate certifies reads across a three-level
-    partition layout (tier-2 base + tier-1 base + fresh positives) on
-    all three tables. Same oracle as the plain stream view: the batch
-    join."""
+    refold_width=2) that the SECOND-tier LSM fold (the refold cascade of
+    `epochs.commit_epoch`) fires INSIDE the hash-gated path: folds at
+    epochs 2 and 4 leave two live tier-1 bases, which cascade into a
+    tier-2 base before epoch 6's fold — so the gate certifies reads
+    across a three-level partition layout (tier-2 base + tier-1 base +
+    fresh positives) on all three tables. Same oracle as the plain
+    stream view: the batch join."""
     from ..session import sf_namespace
     from ..streaming.ingest import (
         order_wide_view,

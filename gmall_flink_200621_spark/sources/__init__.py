@@ -1,1 +1,1 @@
-from .loaders import load_table, load_tables  # noqa: F401
+from .loaders import load_table  # noqa: F401

@@ -1,68 +1,2 @@
-"""Bucketed-table layout for shuffle-free fact⋈fact joins.
-
-SCALING.md's join analysis: at 100 TB the lineitem⋈orders /
-pay⋈receipt shuffles dominate; on a persistent cluster both tables are
-written bucketed by the join key (`bucketBy` + `sortBy`) so every join
-on that key becomes a zero-Exchange sort-merge over co-located buckets.
-The driver's testdata is plain parquet, so bucketing is applied one
-layer up: `bucketize` materializes a bucketed copy into the session
-warehouse once, and `bucketed_join_ready` returns the catalog tables.
-
-This is the write-side half of the engine's scale posture — the
-read-side (broadcast dims, AQE skew handling, partition pruning) is in
-the plans. The shuffle-elimination claim is pinned by
-tests/test_plan_shapes.py::TestBucketedJoin, which asserts the bucketed
-lineitem⋈orders physical plan contains NO Exchange on either side.
-"""
-
-from __future__ import annotations
-
-import os
-import re
-
-from pyspark.sql import DataFrame, SparkSession
-
-from .loaders import load_table
-
-
-def bucketize(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    name: str | None = None,
-) -> str:
-    """Write `table` from sf_dir as a bucketed+sorted catalog table (once;
-    reuses an existing copy). Returns the catalog table name."""
-    sf_tag = re.sub(r"[^0-9A-Za-z]", "_", sf_dir.strip("/"))
-    name = name or f"bkt_{sf_tag}_{table}_{bucket_col}_{n_buckets}"
-    if not spark.catalog.tableExists(name):
-        # the default in-memory catalog forgets tables across sessions but
-        # the warehouse directory persists; a stale location makes
-        # saveAsTable fail with LOCATION_ALREADY_EXISTS — clear it first
-        import shutil
-
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(re.sub(r"^file:/*", "/", warehouse), name.lower())
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
-        (
-            load_table(spark, sf_dir, table)
-            .write.bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-    return name
-
-
-def bucketed_join_ready(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 8
-) -> tuple[DataFrame, DataFrame]:
-    """lineitem and orders, both bucketed by the join key: joining them on
-    l_orderkey == o_orderkey requires no Exchange on either side."""
-    lt = bucketize(spark, sf_dir, "lineitem", "l_orderkey", n_buckets)
-    ot = bucketize(spark, sf_dir, "orders", "o_orderkey", n_buckets)
-    return spark.table(lt), spark.table(ot)
+"""Empty on purpose: the span tracer of the benchmark (`perfbench/spans.py`)
+imports every source module by name."""

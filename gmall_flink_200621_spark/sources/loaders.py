@@ -1,11 +1,13 @@
-"""Sources: batch + streaming loaders (SURVEY.md §2.1 S1-S4).
+"""Sources: batch + streaming loaders (SURVEY.md §2.1 S1).
 
 The reference reads header-less positional CSV (`env.readTextFile`,
-HotItemApp.java:36) and sockets (HotUrlApp.java:38); here every source is a
-declarative `spark.read` / `spark.readStream` so Catalyst gets pushdown and
-pruning. Parquet is the primary format (the driver's testdata); CSV loaders
-replicate the reference's split-and-cast parse maps (HotItemApp.java:37-44)
-as `from_csv`-style schema reads instead of per-row Python.
+HotItemApp.java:36), sockets (HotUrlApp.java:38) and a generator
+source (MarketBehaviorSource.java); here every source is a declarative `spark.read` /
+`spark.readStream` over files so Catalyst gets pushdown and pruning, and
+a stream is a file replay of the same data. Parquet is the primary
+format (the driver's testdata); the CSV loader replicates the
+reference's split-and-cast parse maps (HotItemApp.java:37-44) as a
+schema'd read instead of per-row Python.
 """
 
 from __future__ import annotations
@@ -15,7 +17,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import TESTDATA_TABLES
 
 
 # (realpath(sf_dir), table, mtime, size) → the Spark read schema derived from ONE
@@ -101,16 +102,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> None:
-    """Register testdata tables as temp views for the SQL API."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def events_parquet_stream(spark: SparkSession, directory: str, **options) -> DataFrame:
     """Streaming file-source scan over a directory of events parquet files,
     normalizing `ts` to session-zone TimestampType regardless of the
@@ -172,161 +163,3 @@ def read_csv(
     split-and-cast maps would instead throw mid-stream on the first bad
     row."""
     return spark.read.csv(path, schema=schema, sep=sep, header=False, mode=mode)
-
-
-def read_csv_stream(spark: SparkSession, path: str, schema, sep: str = ",") -> DataFrame:
-    """Streaming file source over the same schema (file-replay of S1)."""
-    return spark.readStream.schema(schema).csv(path, sep=sep, header=False)
-
-
-def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """S2 socket source (HotUrlApp.java:38) — returns a `value: string` stream."""
-    return spark.readStream.format("socket").option("host", host).option("port", port).load()
-
-
-# the exact record schema the Kafka source emits — used to manufacture
-# broker-less frames for testing the downstream parse path
-KAFKA_RECORD_SCHEMA = (
-    "key binary, value binary, topic string, partition int, offset long, "
-    "timestamp timestamp, timestampType int"
-)
-
-
-def parse_kafka_values(raw: DataFrame) -> DataFrame:
-    """The value-decode projection applied to Kafka records: value bytes →
-    string + event timestamp. Factored out of `kafka_stream` so the
-    downstream of the connector (decode → the same parse maps the CSV
-    sources use) is provable on manufactured Kafka-schema frames even
-    where no broker/jar exists."""
-    return raw.selectExpr("CAST(value AS STRING) AS value", "timestamp")
-
-
-def kafka_source_options(
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    fail_on_data_loss: bool = False,
-) -> dict[str, str]:
-    """The option set `kafka_stream` wires onto the reader, factored out so
-    the connector contract is assertable without a broker/jar.
-
-    Semantics match the reference's consumer config (pom.xml:40-48 declares
-    the client; MyKafkaUtil-style consumers in this codebase family use a
-    group that reads from the committed/earliest offset and tolerates
-    retention-expired offsets): `startingOffsets=earliest` replays the
-    topic on first start (Flink's `setStartFromEarliest` analog — a fresh
-    Spark checkpoint dir has no committed offsets, so `latest` would
-    silently drop history), and `failOnDataLoss=false` keeps the query
-    alive when retention deletes unread offsets, matching the Kafka
-    consumer's `auto.offset.reset` recovery rather than Spark's default
-    fail-fast."""
-    return {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": str(fail_on_data_loss).lower(),
-    }
-
-
-def kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    fail_on_data_loss: bool = False,
-) -> DataFrame:
-    """S4 Kafka connector (declared but unused in the reference,
-    pom.xml:40-48): value bytes surfaced as a string column for the same
-    parse maps the CSV sources use. Requires the spark-sql-kafka package
-    on the classpath; untestable in this environment (no broker) — the
-    downstream decode/parse path is covered via `parse_kafka_values`, and
-    the option wiring via `kafka_source_options` (contract test)."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(
-        bootstrap_servers, topic, starting_offsets, fail_on_data_loss
-    ).items():
-        reader = reader.option(k, v)
-    return parse_kafka_values(reader.load())
-
-
-def rate_market_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """S3: the reference's random MarketUserBehavior generator
-    (MarketBehaviorSource.java:10-42, 1 event/100ms ≈ 10 rows/s) as a
-    `rate` source with synthesized columns — fully JVM-side, no UDF.
-    """
-    from pyspark.sql import functions as F
-
-    behaviors = F.array(*[F.lit(x) for x in ("CLICK", "DOWNLOAD", "INSTALL", "UNINSTALL")])
-    channels = F.array(*[F.lit(x) for x in ("app store", "wechat", "weibo", "tieba")])
-    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    return rate.select(
-        (F.xxhash64("value") % 1000000).alias("user_id"),
-        F.element_at(behaviors, (F.pmod(F.xxhash64("value", F.lit(1)), F.lit(4)) + 1).cast("int")).alias("behavior"),
-        F.element_at(channels, (F.pmod(F.xxhash64("value", F.lit(2)), F.lit(4)) + 1).cast("int")).alias("channel"),
-        F.col("timestamp").alias("ts"),
-    )
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str):
-    """JSON-lines source with explicit corrupt-record ROUTING (the S1
-    text-source class, production form): PERMISSIVE parse keeps the raw
-    line of any malformed record in `_corrupt_record`; callers get
-    (good, bad) frames and append `bad` to a quarantine table instead of
-    silently nulling fields (FAILFAST) or dropping lines (DROPMALFORMED).
-
-    The schema must be explicit — schema inference is a full extra pass
-    over the data at 100 TB and is non-deterministic under sampling; the
-    corrupt column is appended here, never part of the caller's schema."""
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromDDL(schema).add("_corrupt_record", "string")
-    df = (
-        spark.read.schema(st)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-    # Spark requires caching/materialization before referencing only the
-    # corrupt column (SPARK-21610 guard) — checkpoint-free persist is fine
-    df = df.persist()
-    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
-    return good, bad
-
-
-SUPPORTED_BATCH_FORMATS = ("parquet", "orc", "json", "csv", "xml")
-
-
-def write_as(df: DataFrame, path: str, fmt: str, **options) -> None:
-    """Write a frame in any supported batch format (S1 format breadth:
-    columnar parquet/ORC for warehouse tables, JSON/CSV for interchange,
-    XML for the feeds that still ship it). CSV/JSON/XML carry no schema —
-    pair them with `read_as(..., schema=...)`."""
-    if fmt not in SUPPORTED_BATCH_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {SUPPORTED_BATCH_FORMATS}")
-    w = df.write.mode("overwrite").format(fmt)
-    if fmt == "csv":
-        w = w.option("header", "true")
-    if fmt == "xml":
-        w = w.option("rootTag", "rows").option("rowTag", "row")
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save(path)
-
-
-def read_as(spark: SparkSession, path: str, fmt: str, schema: str | None = None) -> DataFrame:
-    """Read any supported batch format; schemaless formats REQUIRE an
-    explicit schema (inference is an extra full pass at scale and is
-    sampling-nondeterministic — same rule as `read_jsonl`)."""
-    if fmt not in SUPPORTED_BATCH_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {SUPPORTED_BATCH_FORMATS}")
-    r = spark.read.format(fmt)
-    if fmt in ("json", "csv", "xml"):
-        if schema is None:
-            raise ValueError(f"{fmt} is schemaless — pass schema= explicitly")
-        r = r.schema(schema)
-    if fmt == "csv":
-        r = r.option("header", "true")
-    if fmt == "xml":
-        r = r.option("rowTag", "row")
-    return r.load(path)

@@ -1,141 +1,3 @@
-"""S3 (custom SourceFunction) as a Spark 4 PYTHON DATA SOURCE.
-
-The reference implements its generator as a Flink `SourceFunction`
-(MarketBehaviorSource.java:10-42: an imperative run() loop emitting one
-random MarketUserBehavior per 100 ms). `sources/loaders.rate_market_stream`
-already re-expresses that on the built-in `rate` source (the zero-code
-path); THIS module is the full-fidelity analog: a user-defined source
-with its own schema, batch reader, and replayable stream reader,
-registered like any format — Spark 4's Python Data Source API
-(`pyspark.sql.datasource`) is the engine's extension point for "the
-source Spark doesn't ship" (internal queues, proprietary scan APIs).
-
-Everything is DETERMINISTIC — row i's payload is a pure function of i
-(md5-derived, the h60 discipline) — which is what makes the stream
-reader honestly EXACTLY-ONCE: offsets are plain row counters, a
-micro-batch is the half-open id range [start, end), and re-reading any
-range after a crash regenerates byte-identical rows (the Flink-side
-equivalent is a checkpointed counter in the SourceFunction). Batch and
-stream emit the same rows for the same ids — pinned by test.
-
-Scale shape: `partitions()` splits the id range evenly; each executor
-generates its slice independently (no driver data, no shuffle). A real
-external source swaps `_row(i)` for its client read; the offset/range
-plumbing is the part worth copying.
-"""
-
-from __future__ import annotations
-
-import datetime
-import hashlib
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
-
-BEHAVIORS = ("CLICK", "DOWNLOAD", "INSTALL", "UNINSTALL")
-CHANNELS = ("app store", "wechat", "weibo", "tieba")
-EPOCH_BASE_S = 1_600_000_000  # fixed base; ts = base + i * 100 ms
-SCHEMA = "event_id BIGINT, user_id BIGINT, behavior STRING, channel STRING, ts TIMESTAMP"
-
-
-def _h(i: int, salt: str) -> int:
-    return int(hashlib.md5(f"{salt}:{i}".encode()).hexdigest()[:15], 16)
-
-
-def _row(i: int):
-    ts = datetime.datetime.utcfromtimestamp(EPOCH_BASE_S + i // 10).replace(
-        microsecond=(i % 10) * 100_000
-    )
-    return (
-        i,
-        _h(i, "u") % 1_000_000,
-        BEHAVIORS[_h(i, "b") % len(BEHAVIORS)],
-        CHANNELS[_h(i, "c") % len(CHANNELS)],
-        ts,
-    )
-
-
-class _Range(InputPartition):
-    def __init__(self, start: int, end: int):
-        self.start, self.end = start, end
-
-
-class MarketBehaviorReader(DataSourceReader):
-    def __init__(self, options):
-        self.n = int(options.get("numrows", 1000))
-        self.nparts = int(options.get("numpartitions", 4))
-
-    def partitions(self):
-        n, p = self.n, self.nparts
-        bounds = [n * i // p for i in range(p + 1)]
-        return [_Range(lo, hi) for lo, hi in zip(bounds, bounds[1:])]
-
-    def read(self, partition: _Range):
-        for i in range(partition.start, partition.end):
-            yield _row(i)
-
-
-class MarketBehaviorStreamReader(DataSourceStreamReader):
-    """Row-counter offsets: each micro-batch covers [start, end) ids.
-    `latestOffset` advances by rows_per_batch up to max_rows (a bounded
-    demo stream; an unbounded source would advance with its upstream).
-
-    Restart safety (ADVICE r05): `_latest` is in-memory only, so after a
-    checkpoint recovery a fresh reader would start re-advancing from 0 —
-    BEHIND the committed start offset Spark passes back in
-    `partitions(start, end)`. We clamp: every offset Spark hands us
-    (restored starts in partitions(), the committed end in commit())
-    ratchets `_latest` forward, so latestOffset() never plans a
-    backward/inverted range and committed ids are never re-emitted."""
-
-    def __init__(self, options):
-        self.rows_per_batch = int(options.get("rows_per_batch", 100))
-        self.max_rows = int(options.get("max_rows", 300))
-        self._latest = 0
-
-    def initialOffset(self):
-        return {"offset": 0}
-
-    def latestOffset(self):
-        self._latest = min(self._latest + self.rows_per_batch, self.max_rows)
-        return {"offset": self._latest}
-
-    def partitions(self, start, end):
-        # ratchet against restored offsets (checkpoint recovery hands us
-        # starts the counter has never seen)
-        self._latest = max(self._latest, int(start["offset"]), int(end["offset"]))
-        return [_Range(int(start["offset"]), int(end["offset"]))]
-
-    def read(self, partition: _Range):
-        for i in range(partition.start, partition.end):
-            yield _row(i)
-
-    def commit(self, end):
-        self._latest = max(self._latest, int(end["offset"]))
-
-    def stop(self):
-        pass
-
-
-class MarketBehaviorDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "market_behavior"
-
-    def schema(self) -> str:
-        return SCHEMA
-
-    def reader(self, schema):
-        return MarketBehaviorReader(self.options)
-
-    def streamReader(self, schema):
-        return MarketBehaviorStreamReader(self.options)
-
-
-def register(spark) -> None:
-    """Idempotent format registration: spark.read.format('market_behavior')."""
-    spark.dataSource.register(MarketBehaviorDataSource)
+"""Empty on purpose: the span tracer of the benchmark (`perfbench/spans.py`)
+imports every source module by name. The registry reads the testdata
+parquet through `sources/loaders.py`."""

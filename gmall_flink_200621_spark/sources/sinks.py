@@ -1,292 +1,3 @@
-"""Sinks (SURVEY §2.1 S5/S6).
-
-The reference prints to stdout (S5) and pokes Redis bitmaps per element
-(S6). The engine's sinks are declarative and cluster-shaped:
-
-- console/show for interactive parity with `.print()`;
-- partitioned parquet as the durable batch sink (day-partitioned by
-  default — the layout that gives downstream readers partition pruning);
-- `foreachBatch` for arbitrary keyed external stores (the Redis analog) —
-  exactly-once per micro-batch via idempotent upserts.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str] | None = None, mode: str = "overwrite") -> None:
-    """Durable columnar sink. Default layout partitions by event day when a
-    timestamp column exists — at 100 TB, daily partitions keep file counts
-    sane and give readers partition pruning on the dominant filter."""
-    cols = partition_cols
-    if cols is None and "ts" in df.columns:
-        df = df.withColumn("dt", F.to_date("ts"))
-        cols = ["dt"]
-    w = df.write.mode(mode)
-    if cols:
-        w = w.partitionBy(*cols)
-    w.parquet(path)
-
-
-def console_sink(df: DataFrame, label: str = "", n: int = 20) -> None:
-    """S5 `.print(label)` parity for batch frames."""
-    if label:
-        print(f"== {label} ==")
-    df.show(n, truncate=False)
-
-
-def foreach_batch_upsert(store: dict, key_cols: list[str]):
-    """S6-style external keyed store as a foreachBatch function —
-    TEST-HARNESS-ONLY: the driver-side dict exists so tests can observe
-    upsert idempotence without an external service; it collects the batch
-    to the driver by construction. The production shape is
-    `foreach_batch_upsert_partitioned` below (per-partition connections,
-    nothing through the driver)."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        for r in batch_df.collect():
-            store[tuple(r[c] for c in key_cols)] = r.asDict()
-
-    return fn
-
-
-def foreach_batch_upsert_partitioned(connect, key_cols: list[str]):
-    """S6 external keyed store, production shape: each partition opens its
-    own client (`connect()` runs ON THE EXECUTOR) and upserts its rows —
-    the exact analog of the reference's per-subtask Jedis connection
-    (UvCountWithBloomFilterApp.java:100-123), with exactly-once-per-epoch
-    convergence from upsert idempotence. The driver never sees a row.
-
-    `connect` must be a picklable zero-arg factory returning an object
-    with `upsert(key_tuple, row_dict)` and optionally `close()`."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        def write_partition(rows) -> None:
-            client = connect()
-            try:
-                for r in rows:
-                    client.upsert(tuple(r[c] for c in key_cols), r.asDict())
-            finally:
-                close = getattr(client, "close", None)
-                if close:
-                    close()
-
-        batch_df.foreachPartition(write_partition)
-
-    return fn
-
-
-SEQS_PER_SHARD = 8192  # 8192 × 2048 tokens ≈ 16.8M tokens/shard
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    seq_len: int | None = None,
-    seqs_per_shard: int = SEQS_PER_SHARD,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the packed corpus as fixed-size training shards — the
-    output-layout step after `sequence_pack`: each document lands in the
-    shard of its first training sequence (`first_seq // seqs_per_shard`),
-    with its text and token-space offsets, so a loader can stream one
-    shard sequentially and reconstruct every sequence it owns (boundary-
-    spanning docs are in the PRECEDING shard; the loader reads one doc
-    over from the previous shard's tail, a standard overlap read).
-
-    Layout: parquet `partitionBy(shard)` with the frame first
-    `repartition("shard")`-ed — every shard's rows are co-located in one
-    task, so each shard directory holds ONE file, written sorted by
-    doc_id (`sortWithinPartitions`). One file per shard in token order is
-    exactly what gives the training loader long sequential reads and
-    deterministic shard membership; at 100 TB shard count scales with
-    corpus tokens while file size stays fixed (~17M tokens of text)."""
-    from ..operators.textops import SEQ_LEN, sequence_pack
-
-    packed = sequence_pack(docs, seq_len or SEQ_LEN)
-    sharded = packed.join(docs.select("doc_id", "text"), "doc_id").withColumn(
-        "shard", F.floor(F.col("first_seq") / seqs_per_shard).cast("long")
-    )
-    (
-        sharded.repartition("shard")
-        .sortWithinPartitions("doc_id")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target (~one HDFS/S3 block)
-
-
-def compact_table(spark, path: str, target_file_bytes: int = TARGET_FILE_BYTES) -> dict:
-    """Small-file compaction for a parquet directory — the maintenance job
-    every streaming/append pipeline needs: micro-batch appends leave
-    hundreds of KB-scale files, and at 100 TB the resulting file-listing
-    and task-scheduling overhead dominates scans ("small files problem").
-
-    Bin-packs to ceil(total_bytes / target_file_bytes) files via
-    coalesce (no shuffle — compaction must not pay a full repartition of
-    data that is merely fragmented), writes to a staging dir, then swaps
-    atomically-enough for a filesystem without transactional tables:
-    stage → rename old → rename stage into place → delete old. On a
-    transactional format (Iceberg/Delta) this is `rewrite_data_files`;
-    the policy (size-triggered, target-block-sized output) is the same.
-
-    Returns {files_before, files_after, bytes}. No-ops (and reports) when
-    the directory is already at or below the target file count.
-
-    Scope split with `operators/layout.compact_small_files`: this one
-    rewrites a FLAT parquet directory wholesale (local-FS staging swap);
-    that one is partition-SELECTIVE over a partitioned catalog table
-    (Hadoop FileSystem metadata, dynamic overwrite of only fragmented
-    partitions) — the right tool for the streaming MV state tables whose
-    healthy buckets must stay physically untouched."""
-    import glob
-    import os
-    import shutil
-
-    files = [f for f in glob.glob(os.path.join(path, "*.parquet")) if os.path.isfile(f)]
-    total = sum(os.path.getsize(f) for f in files)
-    want = max(1, -(-total // target_file_bytes))
-    if len(files) <= want:
-        return {"files_before": len(files), "files_after": len(files), "bytes": total, "compacted": False}
-    df = spark.read.parquet(path)
-    stage = path.rstrip("/") + ".compact-stage"
-    df.coalesce(int(want)).write.mode("overwrite").parquet(stage)
-    old = path.rstrip("/") + ".compact-old"
-    os.rename(path.rstrip("/"), old)
-    os.rename(stage, path.rstrip("/"))
-    shutil.rmtree(old)
-    after = [f for f in glob.glob(os.path.join(path, "*.parquet")) if os.path.isfile(f)]
-    return {"files_before": len(files), "files_after": len(after), "bytes": total, "compacted": True}
-
-
-def layout_by_range(df: DataFrame, path: str, cols: list[str], n_files: int = 8) -> None:
-    """Range-clustered table layout: repartitionByRange + in-partition
-    sort on the clustering columns, so every output file owns a disjoint
-    value range with tight parquet min/max footer stats. A point/range
-    predicate on the clustering columns then touches O(1) files instead
-    of all of them — on plain parquet the win is row-group skipping
-    (Spark pushes the predicate to the reader), and on a stats-indexed
-    table format (Delta/Iceberg, or any file-level min/max catalog) it
-    becomes true file skipping. This is the sort-order lever that makes
-    a 100 TB time-series or id-ranged table scannable; it composes with
-    `compact_table` (compaction preserves the range clustering because
-    coalesce concatenates neighboring partitions).
-
-    The range exchange samples the columns to build balanced boundaries
-    — one extra pass over the sort keys only, not a full sort of the
-    data through the driver."""
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in cols])
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-ZORDER_BITS = 16  # bits per dimension in the interleaved key
-
-
-def zorder_key(a, b, a_min: int, a_max: int, b_min: int, b_max: int):
-    """Two-dimensional Z-order (Morton) key: each column is linearly
-    scaled to ZORDER_BITS bits over its observed [min, max], then
-    bit-interleaved by the canonical `operators/layout.zorder_value`
-    (a even positions, b odd). Locality in z-value ⇒ locality in BOTH
-    dimensions, which is what makes multi-column min/max pruning work
-    where a lexicographic sort only ever prunes on its leading column.
-
-    Linear scaling is the simple variant — fine for roughly uniform
-    domains; for heavy skew, production systems (Delta OPTIMIZE ZORDER)
-    use sampled range boundaries per dimension instead. Callers with
-    ALREADY-bounded integer dimensions (hash buckets, minute-of-day)
-    skip the scaler and use `operators/layout.zorder_value` directly —
-    that raw form is what the oracle-gated `zorder_layout_audit` query
-    certifies cross-engine."""
-    from ..operators.layout import zorder_value
-
-    span_a = max(a_max - a_min, 1)
-    span_b = max(b_max - b_min, 1)
-    top = (1 << ZORDER_BITS) - 1
-    qa = ((a - F.lit(a_min)) * top / F.lit(span_a)).cast("long")
-    qb = ((b - F.lit(b_min)) * top / F.lit(span_b)).cast("long")
-    return zorder_value([qa, qb], ZORDER_BITS)
-
-
-def layout_by_zorder(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 8
-) -> None:
-    """Z-order-clustered layout over two integer columns: compute the
-    scaled Morton key, then `operators/layout.write_zordered` (range-
-    partition + in-partition sort on it). Each output file then owns a
-    compact 2-D tile, so min/max footer stats are tight on BOTH columns
-    — a predicate on EITHER dimension skips most files, where
-    `layout_by_range` only ever prunes its leading column. The min/max
-    scan for the scaler is one cheap columnar aggregate; the key itself
-    is whole-stage-codegen bit math, no UDF."""
-    from ..operators.layout import write_zordered
-
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).first()
-    z = zorder_key(F.col(col_a), F.col(col_b), lo_a, hi_a, lo_b, hi_b)
-    write_zordered(df, path, z, n_files)
-
-
-def publish_with_audit(df: DataFrame, path: str, checks) -> dict:
-    """Write-audit-publish: stage the frame, run the expectation suite
-    AGAINST THE STAGED FILES (what readers would actually see, not the
-    in-memory plan), and only then swap into place atomically — the
-    pattern that keeps a bad batch from ever being visible to readers.
-
-    `checks` is a callable staged_df -> list of one-row (rule,
-    violations) frames (see operators/expectations). On any violation
-    the publish is ABORTED: the staged data moves to `<path>.rejected`
-    with the violation report alongside, and the previously published
-    data stays untouched. Returns {published, violations: {rule: n}}."""
-    import os
-    import shutil
-
-    from ..operators.expectations import run_suite
-
-    from pyspark.sql import Observation
-
-    spark = df.sparkSession
-    base = path.rstrip("/")
-    stage = base + ".stage"
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    # completeness invariant: the staged FILES must hold every input row
-    # (a lost-task/short-write bug shows up here, before any reader can
-    # see it). Observation rides the write — no second scan of the input.
-    obs = Observation("wap_rows_in")
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
-    rows_in = obs.get["n"]
-
-    staged = spark.read.parquet(stage)
-    rows_staged = staged.count()
-    report = {r.rule: r.violations for r in run_suite(checks(staged)).collect()}
-    report["wap:row_count"] = abs(rows_staged - rows_in)
-    bad = {k: v for k, v in report.items() if v > 0}
-    if bad:
-        rej = base + ".rejected"
-        if os.path.exists(rej):
-            shutil.rmtree(rej)
-        os.rename(stage, rej)
-        with open(os.path.join(rej, "_VIOLATIONS.txt"), "w") as f:
-            for k, v in sorted(report.items()):
-                f.write(f"{k}\t{v}\n")
-        return {"published": False, "violations": report}
-
-    old = base + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(base):
-        os.rename(base, old)
-    os.rename(stage, base)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    return {"published": True, "violations": report}
+"""Empty on purpose: the span tracer of the benchmark (`perfbench/spans.py`)
+imports every source module by name. Small-file compaction and Z-order
+clustering live in `operators/layout.py`."""

@@ -280,16 +280,6 @@ def commit_epoch(
     )
 
 
-def fold(spark: SparkSession, table: str, w: int, merge) -> None:
-    """Fold the positive epochs up to `w` into a tier-0 base (`_plan`)."""
-    _commit(spark, table, None, None, w, merge, None)
-
-
-def refold(spark: SparkSession, table: str, merge, width: int | None) -> None:
-    """Cascade every tier holding `width` live bases upward (`_plan`)."""
-    _commit(spark, table, None, None, None, merge, width)
-
-
 def gc_apply(
     spark: SparkSession, table: str, flagged: DataFrame, dead: list[int], mixed: list[int]
 ) -> int:

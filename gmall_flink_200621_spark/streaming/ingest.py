@@ -1,40 +1,31 @@
-"""Incremental corpus ingest: the streaming form of the training-data prep
-pipeline (plans/training.corpus_prep's dedup ∘ quality ∘ lang gates).
+"""Epoch-state stream maintainers: the streaming forms of the registry's
+maintained views (near-dup, clustering, PageRank, CDC/SCD2, sketches,
+vector and BM25 indexes, join/aggregate IVM, windowed and session
+state). Each `run_*_stream` is a `foreachBatch` loop over a staged
+chunked-arrival feed (the `stage_*` functions, one parquet file per
+micro-batch), and each `*_view` / `*_search` reads the state it keeps.
 
-A production corpus is not built in one batch — documents arrive
-continuously and each increment must be deduplicated against EVERYTHING
-already accepted, then quality-gated, then appended. This module runs that
-loop on Structured Streaming:
+A growing corpus or warehouse is not rebuilt in one batch: every
+increment folds into state that a view reads. Every maintainer keeps
+that state the same way, through `epochs` — the module's replay
+discipline:
 
-  docs stream → foreachBatch:
-      fingerprint (md5)                       — operators/dedup machinery
-    → in-batch exact dedup (min doc_id / fp)
-    → cross-batch dedup: left_anti against the accumulated fingerprint
-      table (every fp ever seen, accepted or rejected — a re-sent
-      duplicate of a rejected doc must not be re-evaluated)
-    → quality + language gates (same thresholds as corpus_prep)
-    → overwrite this epoch's partition of `<name>_kept` (accepted rows)
-      and `<name>_fps` (new fps) — crash-replay idempotent
-
-Both tables are epoch-partitioned warehouse tables that declare dynamic
-partition overwrite themselves (`epochs.create_state_table`; no session
-conf is touched), and every maintainer in this module keeps its state
-the same way through `epochs`. The anti-join probe is a shuffle join
-on the 16-byte fp. At 100 TB the fp table is the corpus' fingerprint
-index — bucketed by fp it joins co-located, and a bloom/cuckoo filter
-in front absorbs the common no-hit case; the foreachBatch body is
-identical.
-
-Exactness: replaying the corpus ordered by doc_id reproduces the batch
-pipeline exactly — the min-doc_id copy of every duplicate group arrives
-first (in-batch min handles same-chunk ties), and exact duplicates share
-byte-identical text, hence identical quality/lang verdicts. The test
-asserts set equality of kept doc_ids against batch corpus_prep.
+- state tables are epoch-partitioned warehouse tables that declare
+  dynamic partition overwrite themselves (`epochs.create_state_table`;
+  no session conf is touched), so a micro-batch's write replaces
+  exactly its own epoch's partition;
+- every probe of prior state excludes the in-flight epoch's own
+  partition (`epochs.before`), so a checkpointed last-epoch replay
+  reads exactly the pre-batch state its first attempt read and rewrites
+  byte-identical rows — effectively-once, no doubling and no silent
+  loss.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,8 +47,6 @@ from .epochs import (
     write_epoch,
 )
 
-QUALITY_MIN = 0.5  # same gates as plans/training.corpus_prep
-LANG_KEEP = "en"
 CDC_BUCKETS = 64  # hash buckets partitioning the maintained state tables
 
 
@@ -99,11 +88,13 @@ def _write_chunks(prefix: str, chunks) -> str:
     modification time; chunks written within the same mtime granularity
     would tie and could be picked up out of order, breaking every
     replay==batch equivalence. Mtimes are pinned strictly increasing, so
-    arrival order IS chunk order."""
+    arrival order IS chunk order. The dir is removed at interpreter
+    exit."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     stage = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, stage, ignore_errors=True)
     base = None
     for i, chunk in enumerate(chunks):
         path = os.path.join(stage, f"part-{i}.parquet")
@@ -139,107 +130,6 @@ def stage_document_chunks(sf_dir: str, n_chunks: int = 5) -> str:
     pdf = _frame(sf_dir, "documents").sort_values("doc_id").reset_index(drop=True)
     pdf.insert(0, "side", "D")
     return _write_chunks("spark_graft_ingest_", _slices(pdf, n_chunks))
-
-
-def run_corpus_ingest_stream(
-    spark: SparkSession,
-    stage_dir: str,
-    name: str = "corpus_ingest",
-    checkpoint_dir: str | None = None,
-    reset_tables: bool = True,
-    fold_every: int | None = None,
-    refold_width: int | None = None,
-):
-    """Start the ingest stream over `stage_dir` (`stage_document_chunks`
-    — doc_id order, so the replay reproduces batch dedup); returns the
-    StreamingQuery. Results land in tables `<name>_kept` (accepted docs +
-    stats) and `<name>_fps` (every fingerprint ever seen).
-
-    Restartability: pass the same checkpoint_dir with reset_tables=False
-    and a new invocation over the same stage_dir resumes from the
-    checkpointed source offset — already-ingested chunks are not re-read,
-    and the kept/fps tables continue accumulating. Crash semantics: both
-    sinks are epoch-partitioned tables that declare dynamic overwrite, so
-    each write replaces only its own epoch's partition, and the fps probe
-    excludes the replayed epoch's own partition (`_ingest_epoch`), so
-    the last-epoch replay a checkpointed source performs rewrites
-    byte-identical rows — effectively-once, no doubling and no silent
-    loss (test-pinned).
-
-    Reader caveat: the stream appends through the micro-batch's CLONED
-    session, which does not invalidate other sessions' cached file
-    listings for these parquet catalog tables — a session that read
-    `<name>_kept` before a restart must `spark.catalog.refreshTable` it
-    (or reopen) to see post-restart appends. (A transactional table
-    format lifts this; the ingest logic is unchanged.)
-
-    `fold_every=N` (opt-in) bounds both tables' partition counts via the
-    tiered watermark fold; with folds on, read the tables through
-    `live` (as the fps probe does) — a raw `spark.table` read can
-    transiently see an absorbed epoch alongside its base in the
-    crash-before-GC window."""
-    kept_t, fps_t = f"{name}_kept", f"{name}_fps"
-    if reset_tables:
-        create_state_table(
-            spark, kept_t, "doc_id BIGINT, n_tokens INT, n_bpe_est BIGINT, quality_score DOUBLE"
-        )
-        create_state_table(spark, fps_t, "fp STRING")
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage_dir)
-
-    def ingest_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # fold BEFORE the probe (window ≤ epoch−1): the fps probe's
-        # `epoch != epoch_id` composes with `live` — the base rows
-        # are negative epochs (kept), stale positives ≤ watermark drop
-        for t in (kept_t, fps_t):
-            commit_epoch(
-                batch_df.sparkSession, t, None, epoch_id, fold_every, refold_width=refold_width
-            )
-        _ingest_epoch(batch_df, epoch_id, kept_t, fps_t)
-
-    return _start(docs, ingest_batch, name + "_q", checkpoint_dir)
-
-
-def _ingest_epoch(batch_df: DataFrame, epoch_id: int, kept_t: str, fps_t: str) -> None:
-    """One micro-batch of the exact-dedup ingest, idempotent under the
-    last-epoch crash replay: both sinks are epoch-partitioned and
-    dynamic-OVERWRITTEN, and the cross-batch fingerprint probe EXCLUDES
-    the replayed epoch's own partition (`epoch != epoch_id`) — so a
-    replay anti-joins exactly the pre-batch state and rewrites identical
-    rows, instead of seeing its own crashed attempt and emitting an
-    empty batch (silent data loss, the failure mode the plain-append
-    version documented as 'kept rows could double')."""
-    from ..operators.dedup import doc_fingerprints
-    from ..operators.textops import doc_stats, lang_id, token_counts
-
-    s = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    fresh = None
-    try:
-        # in-batch exact dedup: canonical (min) doc_id per fingerprint
-        fps = doc_fingerprints(batch_df)
-        canon = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-        # cross-batch dedup vs PRIOR epochs only (replay-safe): `before`
-        # keeps fold bases + the positive tail minus this epoch's own
-        # crashed-attempt rows (folds never cover it)
-        seen = before(s, fps_t, epoch_id).select("fp")
-        fresh = canon.join(seen, "fp", "left_anti").persist()
-        survivors = batch_df.join(fresh.select("doc_id"), "doc_id")
-        gated = (
-            doc_stats(survivors)
-            .select("doc_id", "n_tokens", "quality_score")
-            .join(lang_id(survivors), "doc_id")
-            .join(token_counts(survivors).select("doc_id", "n_bpe_est"), "doc_id")
-            .filter((F.col("quality_score") >= QUALITY_MIN) & (F.col("lang_pred") == LANG_KEEP))
-            .select("doc_id", "n_tokens", "n_bpe_est", "quality_score")
-        )
-        write_epoch(gated, kept_t, epoch_id)
-        write_epoch(fresh.select("fp"), fps_t, epoch_id)
-    finally:
-        if fresh is not None:
-            fresh.unpersist()
-        batch_df.unpersist()
 
 
 def _neardup_epoch(
@@ -326,8 +216,8 @@ def run_neardup_ingest_stream(
     """Incremental NEAR-duplicate detection: the streaming form of
     `dedup_minhash_lsh`, where each arriving increment is checked against
     EVERYTHING already ingested — the curation loop a growing corpus
-    actually runs (the exact-dup analog is `run_corpus_ingest_stream`;
-    this catches the ~paraphrase/boilerplate class exact hashing misses).
+    actually runs (it catches the ~paraphrase/boilerplate class exact
+    hashing misses).
     `stage_dir` holds the side-tagged document feed:
     `stage_document_chunks` (inserts only) or `stage_document_cdc_chunks`
     (with `side='D_DEL'` tombstones).
@@ -482,117 +372,6 @@ def stage_event_chunks(sf_dir: str, n_chunks: int = 3) -> str:
     return _write_chunks("spark_graft_eventingest_", _slices(pdf, n_chunks))
 
 
-def run_kmeans_stream(
-    spark: SparkSession,
-    stage_dir: str,
-    name: str = "km_stream",
-    cent_mod: int | None = None,
-):
-    """Mini-batch k-means (Sculley 2010) over the vector stream in
-    `stage_dir` (`stage_embedding_chunks`): centroids
-    live in a warehouse table and every micro-batch moves them by the
-    count-weighted running mean —
-
-        c' = round((c·n_old + Σ q_batch) / (n_old + n_batch))
-
-    — entirely in Q_SCALE int64 fixed point (sums < 2^53 for the
-    documented cluster-size bound), so the trajectory is DETERMINISTIC:
-    same chunks in the same order ⇒ bit-identical centroid table, which
-    the rerun-equality test pins. Seeds are the first batch's
-    vec_id % cent_mod == 1 vectors with n=0, so the first update is the
-    plain batch mean; clusters unseen in a batch keep their centroid.
-
-    Scale shape per batch: batch vectors never shuffle (assignment is
-    the broadcast-centroid argmax agg of the batch operator —
-    `_assign_to_cents` is shared code); the update shuffles only
-    (cluster, pos, partial-sum) triples; the centroid table is
-    ~N/cent_mod rows, rewritten per batch. Unlike Lloyd's, mini-batch
-    converges to a slightly different optimum — the test gates QUALITY
-    (mean assignment cosine ≥ batch k-means') rather than equality."""
-    from ..operators.similarity import KM_CENT_MOD, _assign_to_cents, _idot, quantize
-
-    cent_mod = cent_mod or KM_CENT_MOD
-    cents_t = f"{name}_centroids"
-    _drop_table(spark, cents_t)
-    spark.sql(
-        f"CREATE TABLE {cents_t} (cent_id BIGINT, cq ARRAY<BIGINT>, cn2 BIGINT, n_total BIGINT) USING parquet"
-    )
-
-    vecs = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-
-    def km_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        e = batch_df.select("vec_id", quantize(F.col("embedding")).alias("q"))
-        e = e.withColumn("n2", _idot(F.col("q"), F.col("q"))).persist()
-        # every batch PROMOTES its not-yet-seen seed-eligible vectors to
-        # fresh centroids (n=0) before assignment — the stream discovers
-        # clusters as their regions arrive, ending with the same ~N/mod
-        # centroid population the batch seeding produces (first-batch-only
-        # seeding measured 37% worse mean cosine: too few clusters)
-        existing = s.read.table(cents_t)
-        new_seeds = (
-            e.filter(F.col("vec_id") % cent_mod == 1)
-            .join(
-                existing.select(F.col("cent_id").alias("vec_id")), "vec_id", "left_anti"
-            )
-            .select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("q").alias("cq"),
-                F.col("n2").alias("cn2"),
-                F.lit(0).cast("long").alias("n_total"),
-            )
-        )
-        cents = existing.unionByName(new_seeds).persist()
-        assign = _assign_to_cents(e, cents.select("cent_id", "cq", "cn2"))
-        upd = (
-            assign.select("cluster", F.posexplode("q").alias("pos", "qx"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("qx").alias("bs"), F.count(F.lit(1)).alias("bn"))
-        )
-        old = cents.select(
-            F.col("cent_id").alias("cluster"), F.posexplode("cq").alias("pos", "oq"), "n_total"
-        )
-        merged = (
-            old.join(upd, ["cluster", "pos"], "left")
-            .withColumn(
-                "nq",
-                F.when(
-                    F.col("bn").isNotNull(),
-                    F.round(
-                        (F.col("oq") * F.col("n_total") + F.col("bs"))
-                        / (F.col("n_total") + F.col("bn"))
-                    ).cast("long"),
-                ).otherwise(F.col("oq")),
-            )
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "nq"))), lambda st: st.nq
-                ).alias("cq"),
-                (F.first("n_total") + F.coalesce(F.first("bn"), F.lit(0))).alias("n_total"),
-            )
-            .select(
-                F.col("cluster").alias("cent_id"),
-                "cq",
-                _idot(F.col("cq"), F.col("cq")).alias("cn2"),
-                "n_total",
-            )
-        )
-        out = merged.collect()  # centroid table: ~N/cent_mod tiny rows
-        cents.unpersist()
-        e.unpersist()
-        s.createDataFrame(out, s.table(cents_t).schema).coalesce(1).write.mode(
-            "overwrite"
-        ).saveAsTable(cents_t)
-        spark.catalog.refreshTable(cents_t)
-
-    return _start(vecs, km_batch, f"{name}_q", None)
-
-
 def stage_knn_edge_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> str:
     """The corpus k-NN edge list (knn_graph, computed once in batch —
     deterministic) split into n_chunks files ordered by (src_id, nbr_id):
@@ -686,7 +465,7 @@ def run_pagerank_stream(
 
     Exactly-once/crash-replay: the edge sink is epoch-partitioned and
     dynamic-OVERWRITTEN (a replayed batch rewrites its own partition
-    byte-identically — the `_ingest_epoch` discipline), and the ranks
+    byte-identically — the module's replay discipline), and the ranks
     refresh is a deterministic pure function of the accumulated edges
     diffed against state — a replayed refresh finds nothing changed and
     writes nothing. With a checkpoint, kill-and-restart resumes from the
@@ -797,7 +576,7 @@ def run_dedup_clusters_stream(
 
     `fold_every=N`: every Nth epoch, each of the four epoch-partitioned
     state tables coalesces its window into a tiered watermark base
-    (identity merge — see `epochs.fold`); every reader
+    (identity merge — see `epochs.commit_epoch`); every reader
     (the band/shingle probes in `_neardup_epoch`, the pairs/docs reads
     here) routes through `live`, so detection and clustering are
     bit-identical with folds on."""
@@ -975,7 +754,7 @@ def run_scd2_stream(
     history the state no longer holds). A per-stream high-watermark
     (max event time over all PRIOR epochs, kept in the epoch-partitioned
     `<name>_wm` table so crash replays probe pre-batch state — the
-    `_ingest_epoch` fps discipline) guards every batch:
+    module's replay discipline) guards every batch:
 
     - on_late='error' (default): a batch whose min event time precedes
       the watermark raises, failing the stream — silent wrong versions
@@ -1170,7 +949,7 @@ def run_corpus_stats_stream(
     Exactly-once without read-modify-write: partials land in the
     epoch-partitioned `<name>_partials` table via dynamic overwrite (a
     replayed batch rewrites its own partition byte-identically — the
-    `_ingest_epoch` discipline; no state is ever read during the write,
+    module's replay discipline; no state is ever read during the write,
     so there is no increment to double-apply). `corpus_stats_view` then
     folds the partials: integer sums re-associate exactly, and the final
     avg_quality is ONE double division of exact ints — the view is
@@ -1183,7 +962,7 @@ def run_corpus_stats_stream(
     `fold_every=N` bounds the partials table: every Nth epoch, the
     window of epochs since the last fold collapses into ONE
     watermark-encoded base partition (tiered — see
-    `epochs.fold`). The view is bit-identical before and
+    `epochs.commit_epoch`). The view is bit-identical before and
     after a fold (pinned in tests); partition count drops from one per
     epoch to one per N epochs at O(window) fold IO — each partial row
     is written at most twice ever."""
@@ -1272,7 +1051,7 @@ def run_uv_sketch_stream(
       epoch's own partition) — the exact-UV side of the batch twin's
       est-vs-exact contract.
 
-    The sketch fold merge is the point: `epochs.fold` gets a
+    The sketch fold merge is the point: `epochs.commit_epoch` gets a
     REGISTER-MAX merge (groupBy day → hll_union_agg + sum pv), proving
     the tiered fold generalizes beyond integer sums (corpus stats) and
     identity (codes/edges) to any associative+commutative state. HLL
@@ -1388,7 +1167,7 @@ def run_pq_index_stream(
     Exactly-once: the codebook is a deterministic pure function of the
     first non-empty batch (a replay rewrites identical content behind an
     idempotent overwrite), and each epoch's codes land by dynamic
-    overwrite of their own partition (the `_ingest_epoch` discipline).
+    overwrite of their own partition (the module's replay discipline).
     Search (`knn_pq_index_view`) runs knn_pq's ADC scan — per-query
     lookup tables against the STORED codebook, scored over the STORED
     codes — and is oracle-certified end-to-end: the DuckDB twin
@@ -1399,7 +1178,7 @@ def run_pq_index_stream(
 
     `fold_every=N`: every Nth epoch, the code partitions written since
     the last fold coalesce into one watermark base via
-    `epochs.fold` with the IDENTITY merge — codes are
+    `epochs.commit_epoch` with the IDENTITY merge — codes are
     immutable rows, so the fold is a pure rewrite of ONLY that window
     (each code is written at most twice ever; the O(batch) add contract
     survives) and partition count drops from one per epoch to one per N
@@ -1698,7 +1477,7 @@ def run_join_ivm_stream(
     ΔO and ΔL are anti-joined against ALL live tombstones, so the late
     insert never enters state or the view.
 
-    Exactly-once is the `_ingest_epoch` discipline: all four tables are
+    Exactly-once is the module's replay discipline: all four tables are
     epoch-partitioned and dynamic-overwritten; the state reads exclude
     the in-flight epoch (`epoch != epoch_id`, composed with
     `live`), so a checkpointed last-epoch replay recomputes ΔV
@@ -1901,8 +1680,7 @@ def _ivm_epoch(
     ordering lives in the epoch column, so `mx_t` is EXCLUDED from the
     watermark fold (a fold would replace epochs with negative base
     encodings and break the epoch ≥ rebase comparison — bounded instead
-    by rebases collapsing history at every delete epoch, plus the
-    offline `compact_max_mv`).
+    by rebases collapsing history at every delete epoch).
 
     `u_t` logs O_UPD upserts — arrival-epoch
     last-write-wins versioning via the `o_version` DATA column (see
@@ -2561,7 +2339,7 @@ def _ivm_dc_merge(df: DataFrame) -> DataFrame:
     a dead pair, never a partial retraction awaiting its insert.
     Dropping it is exact for future sums (0 adds nothing) and bounds
     the state table by LIVE (customer, value) pairs instead of
-    ever-seen ones — the dc-table analog of `compact_max_mv`'s rebase
+    ever-seen ones — the dc-table analog of the max table's rebase
     collapse."""
     return (
         df.groupBy("o_custkey", "qty")
@@ -2628,47 +2406,6 @@ def order_wide_view_asof(
     v = v.join(dead_l, ["o_orderkey", "l_linenumber"], "left_anti")
     u_lat = upto(f"{name}_u").groupBy("o_orderkey").agg(F.max("ue").alias("ue"))
     return _last_write_wins(v, u_lat, "o_orderkey", "o_version").drop("o_version")
-
-
-def compact_max_mv(spark: SparkSession, name: str = "orderwide") -> int:
-    """Compaction pass for the max-MV partials table — the growth story
-    its fold-exclusion defers to (`<name>_mx` can't take the watermark
-    fold: negative base encodings would break the epoch ≥ rebase
-    comparison). Collapse the table to ONE rebase row per customer at
-    the NEWEST existing epoch — the max re-derived through the served
-    view for live customers, NULL-mx for customers whose every row died
-    (they must stay superseded: dropping them instead would resurrect
-    their pre-rebase insert partials if a crash leaves old partitions
-    behind) — then GC every older partition. Read-identical by
-    construction (the view's last-rebase filter then sees exactly the
-    top-epoch rebase plus nothing older per customer), idempotent, and
-    crash-safe in the fold family's style: with the top-epoch write
-    landed, every older partition is superseded for every customer, so
-    the drops are pure GC a re-run completes. Run quiesced, like
-    `purge_tombstoned_rows`. Returns partitions GC'd."""
-    mx_t = f"{name}_mx"
-    if not spark.catalog.tableExists(mx_t):
-        return 0
-    eps = _partition_epochs(spark, mx_t)
-    if len(eps) <= 1:
-        return 0
-    top = max(eps)
-    custs = spark.table(mx_t).select("o_custkey").distinct()
-    served = revenue_max_by_cust_view(spark, name).select(
-        "o_custkey", F.col("max_revenue").alias("mx")
-    )
-    rebased = (
-        custs.join(served, "o_custkey", "left")
-        .withColumn("rebase", F.lit(True))
-        # barrier: the overwrite reads the partitions it replaces
-        .localCheckpoint(eager=True)
-    )
-    _ivm_write_epoch(spark, rebased, mx_t, top)
-    dropped = [e for e in eps if e != top]
-    for e in dropped:
-        spark.sql(f"ALTER TABLE {mx_t} DROP IF EXISTS PARTITION (epoch={e})")
-    spark.catalog.refreshTable(mx_t)
-    return len(dropped)
 
 
 def order_wide_view(spark: SparkSession, name: str = "orderwide") -> DataFrame:
@@ -3830,10 +3567,10 @@ def run_window_agg_stream(
     bucket-grain MV — O(live buckets · 12), never an event rescan; raw
     events are never retained at all.
 
-    The RETENTION contract is the new axis: `hot_window_view` serves
-    only buckets newer than (max bucket_end seen − retention), i.e. the
-    watermark implied by the data itself, and `expire_window_buckets`
-    makes that cutoff PHYSICAL — positive epochs whose buckets are all
+    The RETENTION contract is the new axis: the view serves only buckets
+    newer than (max bucket_end seen − retention), i.e. the watermark
+    implied by the data itself, and `expire_hot_window_view` makes that
+    cutoff PHYSICAL — positive epochs whose buckets are all
     expired are dropped as pure catalog metadata (arrival order tracks
     event time for an in-order feed, so whole old epochs die at once),
     and mixed/base partitions are rewritten in place without their dead
@@ -3876,20 +3613,6 @@ def _wagg_merge(df: DataFrame) -> DataFrame:
     return df.groupBy("bucket_end", "item_k").agg(F.sum("cnt").alias("cnt"))
 
 
-def _wagg_cutoff(spark: SparkSession, name: str, retention_s: int) -> int | None:
-    """The data-time expiry cutoff: (newest bucket_end in live state) −
-    retention. Self-contained — derived from the MV itself, no side
-    watermark table; the newest bucket can never expire, so the cutoff
-    is stable under any amount of GC."""
-    b_t = f"{name}_buckets"
-    r = (
-        live(spark, b_t)
-        .agg(F.max("bucket_end").alias("m"))
-        .collect()[0]
-    )
-    return None if r.m is None else int(r.m) - retention_s
-
-
 def _footer_ranges(df: DataFrame, col: str) -> dict[int, tuple[int, int]] | None:
     """Per-epoch (min, max) of integer column `col` over the files `df`
     reads (a `live` frame: its partition filter prunes the file list),
@@ -3927,8 +3650,8 @@ def _expire_window(spark: SparkSession, name: str, retention_s: int) -> tuple[in
     feed: old arrival epochs expire together), bases and mixed
     partitions by in-place rewrite (`gc_apply`). Each live partition's
     min/max(bucket_end) — from parquet footers (`_footer_ranges`), else
-    one aggregate pass — yields both the cutoff (`_wagg_cutoff`'s, the
-    max of the maxima) and the classification: a partition is dead
+    one aggregate pass — yields both the cutoff (the max of the maxima,
+    minus the retention) and the classification: a partition is dead
     when its max is at or below the cutoff, mixed when only its min is.
     Replay-safe at any time: maintenance never reads the bucket table,
     and the served view applies the same cutoff filter, so a
@@ -3954,35 +3677,24 @@ def _expire_window(spark: SparkSession, name: str, retention_s: int) -> tuple[in
     return gc_apply(spark, b_t, flagged, dead, mixed), cutoff
 
 
-def expire_window_buckets(spark: SparkSession, name: str, retention_s: int) -> int:
-    """Retention GC of the windowed-agg MV (`_expire_window`); returns
-    partitions touched."""
-    return _expire_window(spark, name, retention_s)[0]
-
-
 def expire_hot_window_view(spark: SparkSession, name: str, retention_s: int) -> DataFrame:
     """Retention GC, then the hot-items view served at the cutoff the GC
-    computed (`_expire_window`, `hot_window_view`) — one pass finds both."""
+    computed (`_expire_window`, `_hot_window`) — one pass finds both."""
     return _hot_window(spark, name, _expire_window(spark, name, retention_s)[1])
 
 
-def hot_window_view(spark: SparkSession, name: str, retention_s: int) -> DataFrame:
-    """Serve hot-items from the maintained bucket MV: live buckets newer
-    than the retention cutoff roll up into their 12 containing sliding
-    windows (the batch hot_items two-level plan's own upper level), then
-    row_number ≤ 5 per window end. Only windows FULLY covered by
-    retained buckets are emitted (window's oldest bucket > cutoff) — a
-    partially-expired window would report a count no batch query over
-    the retained range agrees with. Read cost is O(live buckets · 12):
-    the MV is bucket-grain, events are long gone."""
-    return _hot_window(spark, name, _wagg_cutoff(spark, name, retention_s))
-
-
 def _hot_window(spark: SparkSession, name: str, cutoff: int | None) -> DataFrame:
-    """`hot_window_view` at a given cutoff (None: nothing expires). A
-    (bucket, item) may sit in several live partitions; the per-window
-    sum after the explode adds those copies, so no pre-explode re-sum
-    is needed."""
+    """Serve hot-items from the maintained bucket MV at `cutoff` (None:
+    nothing expires): live buckets newer than the cutoff roll up into
+    their 12 containing sliding windows (the batch hot_items two-level
+    plan's own upper level), then row_number ≤ 5 per window end. Only
+    windows FULLY covered by retained buckets are emitted (window's
+    oldest bucket > cutoff) — a partially-expired window would report a
+    count no batch query over the retained range agrees with. Read cost
+    is O(live buckets · 12): the MV is bucket-grain, events are long
+    gone. A (bucket, item) may sit in several live partitions; the
+    per-window sum after the explode adds those copies, so no
+    pre-explode re-sum is needed."""
     if cutoff is None:
         cutoff = -(1 << 62)
     counts = (

@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import scalars as S
-from ..schemas import EVENTS
-from .epochs import create_state_table, write_epoch
 
 WATERMARK = "10 seconds"
 
@@ -64,105 +62,6 @@ def uv_stream(events: DataFrame) -> DataFrame:
         .agg(F.approx_count_distinct("user_id", rsd=0.01).alias("uv_approx"))
         .select(F.col("w.end").cast("long").alias("window_end_s"), "uv_approx")
     )
-
-
-def run_rules_filter_stream(events: DataFrame, rules_dir: str, query_name: str):
-    """Dynamic-rules stream filter — the Flink BROADCAST-STATE pattern
-    (a control stream updates rules that every parallel task applies to
-    the main stream; the reference's dynamic blacklist is the keyed
-    special case). A plain stream-static join will NOT do it: Spark pins
-    the static side's file listing when the query starts, so a published
-    rules update is invisible (and a replaced file crashes the scan). The
-    correct Spark idiom is foreachBatch with the rules table RE-RESOLVED
-    inside the batch function — a fresh `spark.read` per micro-batch
-    re-lists the directory, picking up whatever snapshot the control
-    plane last published, no restart.
-
-    Rules table schema: `event_type string` = the currently-blocked
-    types; each batch anti-joins against it. At scale the rules frame is
-    dims-sized → broadcast anti hash join per batch. Publish snapshots
-    with `publish_rules` (immutable snapshot dir + atomic symlink flip);
-    each batch resolves the link ONCE and reads that frozen snapshot, so
-    a publication landing mid-batch can neither crash the scan nor be
-    half-applied. Results land in the `query_name` table (executor-side
-    append, no driver collect)."""
-    import re
-    import shutil
-
-    spark = events.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {query_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(re.sub(r"^file:/*", "/", warehouse), query_name.lower())
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
-
-    out = events.select(
-        "event_id", "user_id", "event_type", F.col("ts").cast("long").alias("ts_s")
-    )
-
-    def filter_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # resolve the publication symlink up front: the batch reads ONE
-        # immutable snapshot even if the control plane flips the link
-        # mid-batch (plain directories resolve to themselves)
-        rules_snap = os.path.realpath(rules_dir)
-        rules = batch_df.sparkSession.read.schema("event_type string").parquet(rules_snap)
-        batch_df.join(rules, "event_type", "left_anti").write.mode("append").saveAsTable(
-            query_name
-        )
-        # foreachBatch runs on a CLONED session: its insert invalidates the
-        # clone's relation cache, not the main session's — refresh the
-        # outer catalog so readers between micro-batches see the append
-        spark.catalog.refreshTable(query_name)
-
-    return (
-        out.writeStream.outputMode("append")
-        .foreachBatch(filter_batch)
-        .queryName(query_name + "_q")
-        .start()
-    )
-
-
-RULES_RETAIN = 3  # snapshots kept for in-flight readers of older links
-
-
-def publish_rules(spark, blocked_types, rules_path: str) -> str:
-    """Atomic rules publication — the control-plane side of
-    `run_rules_filter_stream`'s contract, with one enforced
-    implementation instead of a docstring plea:
-
-    1. write the snapshot to an immutable uniquely-named dir under
-       `<rules_path>.snapshots/`;
-    2. flip `rules_path` onto it with symlink + `os.replace` (atomic on
-       POSIX) — a concurrent reader sees either the old snapshot or the
-       new one, never a half-written or vanished table;
-    3. retain the last RULES_RETAIN snapshots so a batch that resolved an
-       older link keeps its files until it finishes.
-
-    `rules_path` must not pre-exist as a plain directory (publish from
-    the start, as the test does). Accepts a list of blocked event types
-    or a ready DataFrame; returns the snapshot path."""
-    import shutil as _shutil
-    import uuid
-
-    base = rules_path.rstrip("/")
-    snaps_root = base + ".snapshots"
-    os.makedirs(snaps_root, exist_ok=True)
-    snap = os.path.join(snaps_root, uuid.uuid4().hex[:12])
-    df = (
-        blocked_types
-        if isinstance(blocked_types, DataFrame)
-        else spark.createDataFrame([(t,) for t in blocked_types], "event_type string")
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(snap)
-    tmp = f"{base}.lnk-{uuid.uuid4().hex[:8]}"
-    os.symlink(snap, tmp)
-    os.replace(tmp, base)
-    snaps = sorted(
-        (os.path.join(snaps_root, s) for s in os.listdir(snaps_root)), key=os.path.getmtime
-    )
-    for s in snaps[: -RULES_RETAIN]:
-        _shutil.rmtree(s, ignore_errors=True)
-    return snap
 
 
 def market_by_channel_stream(events: DataFrame) -> DataFrame:
@@ -213,37 +112,6 @@ def hot_items_windowed_counts_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_redelivery_stream(spark: SparkSession, sf_dir: str, within: str = "30 days") -> DataFrame:
-    """Exactly-once-ification of an at-least-once source:
-    `dropDuplicatesWithinWatermark` keeps per-key dedup state only until
-    the watermark passes the budget — the bounded-state exact dedup
-    (A5's streaming form for duplicate DELIVERY, complementing the
-    per-window distinct-user dedup). The staged source re-delivers every
-    7th event in a later file, so the operator is genuinely exercised;
-    output must equal the distinct batch rows."""
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    stage = tempfile.mkdtemp(prefix="spark_graft_redeliver_")
-    pdf = (
-        pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        .to_pandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    pdf.to_parquet(os.path.join(stage, "part-0.parquet"), index=False)
-    pdf.iloc[::7].to_parquet(os.path.join(stage, "part-1.parquet"), index=False)  # re-delivery
-    from ..sources.loaders import events_parquet_stream
-
-    raw = events_parquet_stream(spark, stage, maxFilesPerTrigger=1)
-    return (
-        raw.withWatermark("ts", within)
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "user_id", F.col("ts").cast("long").alias("ts_s"), "event_type")
-    )
-
-
 def order_receipt_join_stream(spark: SparkSession, sf_dir: str, delay: str = "30 days") -> DataFrame:
     """J1 as Spark's NATIVE stream-stream interval join — the exact
     streaming analog of `intervalJoin.between(-3s, +5s)` on txId
@@ -281,118 +149,6 @@ def order_receipt_join_stream(spark: SparkSession, sf_dir: str, delay: str = "30
         pays.join(
             receipts,
             (F.col("user_id") == F.col("r_user"))
-            & (F.col("receipt_ts") >= F.col("pay_ts") - lo)
-            & (F.col("receipt_ts") <= F.col("pay_ts") + hi),
-            "inner",
-        )
-        .select(
-            "user_id",
-            "pay_id",
-            F.col("pay_ts").cast("long").alias("pay_ts_s"),
-            "receipt_id",
-            F.col("receipt_ts").cast("long").alias("receipt_ts_s"),
-        )
-    )
-
-
-RECEIPT_SALTS = 8  # sub-keys a hot join key spreads across
-RECEIPT_HOT_THRESHOLD = 1000  # per-key row count above which a key salts
-
-
-def hot_join_keys(df: DataFrame, key: str, threshold: int) -> list:
-    """Keys whose row count reaches `threshold` — the hot-key list a
-    salted join plants into its plan. BOUNDED driver read by
-    construction: at most total_rows/threshold keys can clear the bar,
-    so the collect is small no matter how big the table (at 100 TB with
-    threshold 10⁶ that is ≤ 10⁸/task-sized... in practice dozens)."""
-    return [
-        r[0]
-        for r in df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= threshold)
-        .select(key)
-        .collect()
-    ]
-
-
-def order_receipt_join_stream_salted(
-    spark: SparkSession,
-    sf_dir: str,
-    delay: str = "30 days",
-    n_salts: int = RECEIPT_SALTS,
-    hot_threshold: int = RECEIPT_HOT_THRESHOLD,
-    hot_ids: list | None = None,
-) -> DataFrame:
-    """`order_receipt_join_stream` hardened against JOIN-KEY SKEW
-    (VERDICT r08 item #7): a hot txId/user concentrates every buffered
-    row of both streams in ONE state-store partition of the symmetric
-    hash join — the task that owns it becomes the straggler and, at
-    100 TB, the OOM. The fix is targeted salting: keys on a hot list
-    split into `n_salts` sub-keys on the pays side (salt =
-    hash(pay_id) % n_salts — derived from the row id, so a pay lands in
-    exactly one sub-partition), and the receipts side REPLICATES hot-key
-    rows across all n_salts sub-keys; non-hot keys keep salt 0 and pay
-    no replication. Every (pay, receipt) pair therefore meets exactly
-    once — at the pay's salt — and the output is row-identical to the
-    unsalted join (pinned in tests) while the hot key's state spreads
-    over n_salts partitions (per-task bound pinned too).
-
-    The hot list comes from `hot_join_keys` over the HISTORICAL batch
-    table (the standard deployment pattern: audit yesterday's key
-    distribution — `skew_audit` is exactly this signal — and plant the
-    list into today's streaming plan; a bounded driver read). Pass
-    `hot_ids` to override. AQE's runtime skew-join split does this
-    automatically for BATCH shuffles but does not apply to streaming
-    state partitioning — hence the explicit salt."""
-    from ..plans.pipelines import RECEIPT_HI, RECEIPT_LO
-    from ..sources.loaders import load_table
-    from .late_data import staged_replay_source
-
-    if hot_ids is None:
-        pays_hist = load_table(spark, sf_dir, "events").filter(
-            F.col("event_type") == "purchase"
-        )
-        hot_ids = hot_join_keys(pays_hist, "user_id", hot_threshold)
-    is_hot = F.col("user_id").isin(hot_ids) if hot_ids else F.lit(False)
-
-    pays = (
-        staged_replay_source(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("pay_id"),
-            F.col("ts").alias("pay_ts"),
-            F.when(is_hot, F.pmod(F.xxhash64("event_id"), F.lit(n_salts)))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("salt"),
-        )
-        .withWatermark("pay_ts", delay)
-    )
-    receipts = (
-        staged_replay_source(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("receipt_id"),
-            F.col("ts").alias("receipt_ts"),
-            F.when(
-                F.col("user_id").isin(hot_ids) if hot_ids else F.lit(False),
-                F.sequence(F.lit(0), F.lit(n_salts - 1)),
-            )
-            .otherwise(F.array(F.lit(0)))
-            .alias("salts"),
-        )
-        .withWatermark("receipt_ts", delay)
-        .withColumn("r_salt", F.explode("salts"))
-        .drop("salts")
-    )
-    lo, hi = F.expr(f"INTERVAL {RECEIPT_LO}"), F.expr(f"INTERVAL {RECEIPT_HI}")
-    return (
-        pays.join(
-            receipts,
-            (F.col("user_id") == F.col("r_user"))
-            & (F.col("salt") == F.col("r_salt"))
             & (F.col("receipt_ts") >= F.col("pay_ts") - lo)
             & (F.col("receipt_ts") <= F.col("pay_ts") + hi),
             "inner",
@@ -498,49 +254,6 @@ def run_hot_items_retract_stream(
     )
 
 
-def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic-gap session windows as a STREAM — the streaming twin of
-    `plans/extras.sessionize_native`. `session_window` under a watermark
-    merges per-key session fragments across micro-batches and emits a
-    session (append mode) once the watermark passes its close (last event
-    + gap): Flink's EventTimeSessionWindows analog, running on the same
-    engine path as the batch form.
-
-    Event times are truncated to whole seconds BEFORE the watermark so
-    stream and batch see identical session splits (the batch twin
-    truncates too — gap comparison happens on the input precision)."""
-    import tempfile
-
-    from ..plans.extras import SESSION_GAP_S
-    from ..sources.loaders import events_parquet_stream
-
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stream", sf_dir.strip("/").replace("/", "_")
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    events = (
-        events_parquet_stream(spark, stage)
-        .withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long")))
-        .withWatermark("ts", WATERMARK)
-    )
-    return (
-        events.groupBy("user_id", F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max(F.col("ts").cast("long")).alias("session_end_s"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").cast("long").alias("session_start_s"),
-            "session_end_s",
-            "n_events",
-        )
-    )
-
-
 def run_hot_items_stream(spark: SparkSession, sf_dir: str, top_n: int = 5, queryName: str = "hot_items_stream"):
     """End-to-end streaming Top-N: windowed counts (append mode past the
     watermark) → per-batch row_number ranking in foreachBatch → memory
@@ -557,8 +270,7 @@ def run_hot_items_stream(spark: SparkSession, sf_dir: str, top_n: int = 5, query
 
     spark.sql(f"DROP TABLE IF EXISTS {queryName}")
     # the warehouse dir outlives the in-memory catalog across sessions; a
-    # stale location would fail the first saveAsTable (same cleanup as
-    # sources/bucketed.py)
+    # stale location would fail the first saveAsTable
     import re
     import shutil
 
@@ -571,110 +283,4 @@ def run_hot_items_stream(spark: SparkSession, sf_dir: str, top_n: int = 5, query
         .foreachBatch(rank_batch)
         .queryName(queryName + "_q")
         .start()
-    )
-
-
-def _gate_epoch(batch_df: DataFrame, epoch_id: int, kept_t: str, audit_t: str) -> None:
-    """One micro-batch of the quality gate, written idempotently: score,
-    then overwrite each sink's epoch partition (both sinks are state
-    tables that declare dynamic overwrite, so no other partition is
-    touched). Calling this twice with the same (batch, epoch) leaves the
-    tables unchanged — the unit the crash-replay test exercises directly."""
-    from ..operators.textops import quality_gopher
-
-    scored = quality_gopher(batch_df).persist()
-    try:
-        write_epoch(scored.filter(F.col("keep") == 1), kept_t, epoch_id)
-        write_epoch(scored.filter(F.col("keep") == 0), audit_t, epoch_id)
-    finally:
-        scored.unpersist()
-
-
-def run_quality_gate_stream(
-    spark: SparkSession,
-    stage_dir: str,
-    name: str = "quality_gate",
-    checkpoint_dir: str | None = None,
-    reset_tables: bool = True,
-):
-    """Streaming quality gate with a REJECT-side audit table — the
-    side-output convention (HotUrlApp.java:52-61's late-data tag) applied
-    to corpus curation: documents stream in from `stage_dir`
-    (`ingest.stage_document_chunks`), `quality_gopher`'s rule flags are
-    computed per micro-batch, keepers append to `<name>_kept`
-    and every reject lands in `<name>_audit` WITH its failing rule flags
-    (a silent drop is how a quality regression eats a corpus unnoticed —
-    the audit table is what you sample to see WHICH rule fired).
-
-    The rules are stateless row-local expressions, so stream==batch holds
-    exactly: kept ∪ audit partitions the corpus, and flags equal the
-    batch operator's row for every doc. foreachBatch (not two
-    writeStreams) so one scan feeds both sinks per batch.
-
-    Crash semantics: both sinks are PARTITIONED BY the micro-batch epoch
-    and written with dynamic-partition OVERWRITE (`_gate_epoch`), so a
-    replayed epoch — foreachBatch's at-least-once case after a crash
-    mid-batch — rewrites exactly its own partition instead of appending
-    duplicates. The rules are deterministic functions of the batch rows,
-    so the replay writes byte-identical content: effectively-once
-    without a transactional table format. Restart with the same
-    checkpoint_dir and reset_tables=False over the same stage_dir and
-    only unseen files are read."""
-    from .ingest import _start
-
-    kept_t, audit_t = f"{name}_kept", f"{name}_audit"
-    if reset_tables:
-        cols = (
-            "doc_id BIGINT, n_words INT, mean_word_len DOUBLE, stop_count INT, "
-            "top_unigram_ratio DOUBLE, flag_word_count INT, flag_mean_word_len INT, "
-            "flag_stopwords INT, flag_repetition INT, keep INT"
-        )
-        for t in (kept_t, audit_t):
-            create_state_table(spark, t, cols)
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage_dir)
-
-    def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _gate_epoch(batch_df, epoch_id, kept_t, audit_t)
-
-    return _start(docs, gate_batch, f"{name}_q", checkpoint_dir)
-
-
-def sessionize_dynamic_gap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic PER-EVENT gap session windows as a stream — the twin of
-    `plans/extras.sessionize_dynamic_gap` (error events hold sessions
-    open 300 s, everything else 1800 s). Column-typed gapDuration works
-    identically under a watermark: fragments merge across micro-batches
-    on the running max of per-event extents, sessions emit (append) when
-    the watermark passes their end-inclusive close."""
-    import tempfile
-
-    from ..plans.extras import ERROR_GAP_S, SESSION_GAP_S
-    from ..sources.loaders import events_parquet_stream
-
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stream", sf_dir.strip("/").replace("/", "_")
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    events = (
-        events_parquet_stream(spark, stage)
-        .withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long")))
-        .withWatermark("ts", WATERMARK)
-    )
-    gap = F.when(F.col("event_type") == "error", F.lit(f"{ERROR_GAP_S} seconds")).otherwise(
-        F.lit(f"{SESSION_GAP_S} seconds")
-    )
-    return (
-        events.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").cast("long").alias("session_start_s"),
-            F.col("sw.end").cast("long").alias("session_end_s"),
-            "n_events",
-        )
     )

@@ -156,13 +156,6 @@ def stage_events_replay(sf_dir: str, n_files: int = 3) -> str:
     return stage
 
 
-def _window_ends(ts_s: int) -> list[int]:
-    """Epoch-aligned sliding-window ends containing ts (same assignment as
-    F.window / the DuckDB oracle)."""
-    bucket = ts_s - ts_s % SLIDE_S
-    return [bucket + j * SLIDE_S for j in range(1, WINDOW_S // SLIDE_S + 1)]
-
-
 def _late_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
     """Per-url lateness state machine (executor-side keyed state).
 

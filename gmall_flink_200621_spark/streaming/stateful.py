@@ -1,20 +1,22 @@
 """Custom stateful operators — the reference's KeyedProcessFunction surface
-(SURVEY.md §2.9) rebuilt on `transformWithStateInPandas` (Spark 4).
+(SURVEY.md §2.9) as `applyInPandasWithState` functions: state is a tuple,
+timeouts are one GroupStateTimeout per key, which is what the reference
+pipelines need.
 
 Parity map:
-- LoginFailProcessor      ← LoginFailApp2.java:59-99 (rolling 2-fail detector,
+- login_fail_stream    ← LoginFailApp2.java:59-99 (rolling 2-fail detector,
   C4) + LoginFailAppWithCep.java:61-69 (times(2).consecutive().within)
-- OrderTimeoutProcessor   ← OrderTimeoutAppWithState.java:57-111 (ValueState +
+- order_timeout_stream ← OrderTimeoutAppWithState.java:57-111 (ValueState +
   event-time timer at create+timeout, J3) — timers with cancellation (W10)
-- BlacklistProcessor      ← AdClickByProvinceApp.java:112-180 (per-(user,ad)
+- blacklist_stream     ← AdClickByProvinceApp.java:112-180 (per-(user,ad)
   daily counter, emit-once warning at threshold, A7/A8)
-- PayReceiptProcessor     ← OrderReceiptAppWithConnect.java:72-162 (two-stream
+- pay_receipt_stream   ← OrderReceiptAppWithConnect.java:72-162 (two-stream
   connect: buffer-or-match + timeout side outputs, J2) — the two streams
   arrive as one tagged union, the engine's side-output convention in reverse
 
 Side outputs (OutputTag) become a `tag` column; callers fan out with
 filters. Flink's `deleteEventTimeTimer` cancellation is reproduced by
-storing the registered timer ts in state and ignoring stale firings.
+dropping the pending entry, so a later timeout finds nothing to emit.
 
 These run per-key with arbitrary state, so they're the slow path — every
 pipeline that *can* be a windowed agg/join uses the declarative plan
@@ -28,242 +30,16 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-try:  # Spark ≥ 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover - fallback for Spark 3.x
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = object  # type: ignore[assignment,misc]
-    HAS_TWS = False
-
-# transformWithStateInPandas spawns a driver-side Python runner that imports
-# google.protobuf; environments without protobuf must use the
-# applyInPandasWithState wiring below (login_fail_stream / order_timeout_stream).
-try:  # pragma: no cover - environment probe
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    TWS_USABLE = HAS_TWS
-except ImportError:
-    TWS_USABLE = False
-
 LOGIN_FAIL_GAP_S = 3600  # scaled to testdata density (reference: 2 s)
 ORDER_TIMEOUT_S = 900  # reference: 15 min (OrderTimeoutAppWithCep.java:55)
 BLACKLIST_THRESHOLD = 2  # reference: 100/day (AdClickByProvinceApp.java:51)
+PAY_WAIT_S = 7200  # receipt may lag pay by ≤2h (batch plan's band)
+RECEIPT_WAIT_S = 3600
 
 LOGIN_FAIL_OUTPUT = "user_id LONG, first_fail_ts_s LONG, second_fail_ts_s LONG"
 ORDER_TIMEOUT_OUTPUT = "user_id LONG, create_ts_s LONG, pay_ts_s LONG, status STRING"
 BLACKLIST_OUTPUT = "user_id LONG, ad_k INT, day_s LONG, tag STRING"
 PAY_RECEIPT_OUTPUT = "user_id LONG, pay_ts_s LONG, receipt_ts_s LONG, tag STRING"
-BROWSE_ABANDON_S = 86400  # matches plans/pipelines.browse_abandon
-BROWSE_ABANDON_OUTPUT = "user_id LONG, event_id LONG, ts_s LONG"
-
-
-class LoginFailProcessor(StatefulProcessor):
-    """Rolling consecutive-fail detector: keep the last event; a fail
-    directly after a fail within the gap fires an alert; success clears."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.last = handle.getValueState("last_fail", "last_type STRING, last_ts LONG")
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        out = []
-        prev = self.last.get()
-        prev_type, prev_ts = (prev[0], prev[1]) if prev else (None, None)
-        for pdf in rows:
-            for r in pdf.sort_values(["ts_s", "event_id"]).itertuples():
-                if r.event_type == "error":
-                    if prev_type == "error" and r.ts_s - prev_ts <= LOGIN_FAIL_GAP_S:
-                        out.append((user_id, prev_ts, r.ts_s))
-                    prev_type, prev_ts = "error", r.ts_s
-                else:
-                    prev_type, prev_ts = r.event_type, r.ts_s
-        self.last.update((prev_type or "", int(prev_ts or 0)))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "first_fail_ts_s", "second_fail_ts_s"])
-
-    def close(self) -> None:
-        pass
-
-
-class OrderTimeoutProcessor(StatefulProcessor):
-    """Create→pay matcher with an event-time timer at create+timeout.
-
-    Timer cancellation à la Flink: the registered timer ts is stored with
-    the pending order; a pay arrival clears the state, and a later timer
-    firing finds no pending order → no-op (stale-firing guard)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.pending = handle.getValueState("pending_create", "create_ts LONG")
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        out = []
-        for pdf in rows:
-            for r in pdf.sort_values("ts_s").itertuples():
-                if r.event_type == "click":  # create-analog
-                    prev = self.pending.get()
-                    if prev is not None:
-                        # a second create supersedes the pending one: emit it as
-                        # 'timeout' (same as _order_timeout_fn, so the two
-                        # wirings of this operator agree on every input)
-                        out.append((user_id, prev[0], None, "timeout"))
-                    self.pending.update((int(r.ts_s),))
-                    self.handle.registerTimer((r.ts_s + ORDER_TIMEOUT_S) * 1000)
-                elif r.event_type == "purchase":  # pay-analog
-                    pending = self.pending.get()
-                    if pending is not None:
-                        create_ts = pending[0]
-                        status = "payed" if r.ts_s - create_ts <= ORDER_TIMEOUT_S else "payed timeout"
-                        out.append((user_id, create_ts, int(r.ts_s), status))
-                        self.pending.clear()
-                    else:
-                        out.append((user_id, None, int(r.ts_s), "payed but no create"))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "create_ts_s", "pay_ts_s", "status"])
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        pending = self.pending.get()
-        if pending is not None:
-            create_ts = pending[0]
-            if expiredTimerInfo.getExpiryTimeInMs() >= (create_ts + ORDER_TIMEOUT_S) * 1000:
-                self.pending.clear()
-                yield pd.DataFrame(
-                    [(user_id, create_ts, None, "timeout")],
-                    columns=["user_id", "create_ts_s", "pay_ts_s", "status"],
-                )
-
-    def close(self) -> None:
-        pass
-
-
-class BlacklistProcessor(StatefulProcessor):
-    """Per-(user, ad) daily click counter with an emit-once blacklist
-    warning at the threshold; day rollover resets the count (the
-    reference's midnight timer, done as a stored day key)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("daily", "day_s LONG, cnt LONG, warned BOOLEAN")
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        user_id, ad_k = key
-        out = []
-        st = self.state.get()
-        day_s, cnt, warned = (st[0], st[1], st[2]) if st else (None, 0, False)
-        for pdf in rows:
-            for r in pdf.sort_values("ts_s").itertuples():
-                d = r.ts_s - (r.ts_s % 86400)
-                if d != day_s:
-                    day_s, cnt, warned = d, 0, False  # daily TTL reset
-                cnt += 1
-                if cnt >= BLACKLIST_THRESHOLD and not warned:
-                    out.append((user_id, ad_k, d, "blacklist_warning"))
-                    warned = True
-                elif warned:
-                    continue  # suppressed (P9 dynamic filter)
-                else:
-                    out.append((user_id, ad_k, d, "click"))
-        self.state.update((int(day_s), int(cnt), bool(warned)))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "ad_k", "day_s", "tag"])
-
-    def close(self) -> None:
-        pass
-
-
-class PayReceiptProcessor(StatefulProcessor):
-    """Two-stream reconcile on one tagged union keyed by user: buffer
-    whichever side arrives first, match on the other's arrival, timers
-    expire lone sides to their diagnostic tag.
-
-    The reference keys by unique txId so at most ONE event per side can be
-    pending (OrderReceiptAppWithConnect.java:75-84); the events analog keys
-    by user_id, where a second same-side event is normal (two purchases
-    before any signup). Each side therefore buffers a FIFO *list* — nothing
-    is ever silently overwritten: every event either matches (earliest
-    pending first) or times out to its diagnostic tag. Waits stay
-    asymmetric like the reference's pay+5s / receipt+3s
-    (OrderReceiptAppWithConnect.java:98,127): PAY_WAIT_S for buffered pays,
-    RECEIPT_WAIT_S for buffered receipts."""
-
-    PAY_WAIT_S = 7200  # receipt may lag pay by ≤2h (batch plan's band)
-    RECEIPT_WAIT_S = 3600
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.pays = handle.getValueState("pending_pays", "ts ARRAY<LONG>")
-        self.receipts = handle.getValueState("pending_receipts", "ts ARRAY<LONG>")
-
-    def _load(self, st) -> list[int]:
-        v = st.get()
-        return list(v[0]) if v is not None and v[0] is not None else []
-
-    def _store(self, st, vals: list[int]) -> None:
-        if vals:
-            st.update(([int(v) for v in vals],))
-        else:
-            st.clear()
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        out = []
-        pays, receipts = self._load(self.pays), self._load(self.receipts)
-        for pdf in rows:
-            for r in pdf.sort_values("ts_s").itertuples():
-                if r.side == "pay":
-                    if receipts:
-                        out.append((user_id, int(r.ts_s), receipts.pop(0), "matched"))
-                    else:
-                        pays.append(int(r.ts_s))
-                        self.handle.registerTimer((r.ts_s + self.PAY_WAIT_S) * 1000)
-                else:
-                    if pays:
-                        out.append((user_id, pays.pop(0), int(r.ts_s), "matched"))
-                    else:
-                        receipts.append(int(r.ts_s))
-                        self.handle.registerTimer((r.ts_s + self.RECEIPT_WAIT_S) * 1000)
-        self._store(self.pays, pays)
-        self._store(self.receipts, receipts)
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "pay_ts_s", "receipt_ts_s", "tag"])
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        expiry = expiredTimerInfo.getExpiryTimeInMs()
-        rows = []
-        keep_p = []
-        for p in self._load(self.pays):
-            if expiry >= (p + self.PAY_WAIT_S) * 1000:
-                rows.append((user_id, p, None, "payButNoReceipt"))
-            else:
-                keep_p.append(p)
-        keep_r = []
-        for r in self._load(self.receipts):
-            if expiry >= (r + self.RECEIPT_WAIT_S) * 1000:
-                rows.append((user_id, None, r, "receiptButNoPay"))
-            else:
-                keep_r.append(r)
-        self._store(self.pays, keep_p)
-        self._store(self.receipts, keep_r)
-        if rows:
-            yield pd.DataFrame(rows, columns=["user_id", "pay_ts_s", "receipt_ts_s", "tag"])
-
-    def close(self) -> None:
-        pass
-
-
-# --------------------------------------------------------------------------
-# applyInPandasWithState wiring — the portable stateful path (plain Arrow, no
-# protobuf). Same per-key logic as the processors above; state is a tuple,
-# timeouts via GroupStateTimeout (single timer per key — exactly what the
-# reference pipelines need).
-# --------------------------------------------------------------------------
 
 
 def _login_fail_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
@@ -322,76 +98,6 @@ def _order_timeout_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[
     if out:
         yield pd.DataFrame(out, columns=cols)
 
-
-def _browse_abandon_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    """Streaming `notFollowedBy` (the batch twin: plans/pipelines.py
-    browse_abandon): a view with NO purchase by the same user in
-    (ts, ts+86400] is emitted as abandoned — the canonical event-time-
-    timer-with-cancellation pattern (register at view+window, the arrival
-    of a matching purchase cancels; here cancellation = dropping the
-    pending view so the timer firing finds nothing to emit).
-
-    State: pending views [(event_id, ts)] + recent purchase ts list.
-    Purchases stay in state only until the watermark passes them — any
-    later-arriving view has ts ≥ watermark (the engine admits nothing
-    older), and a purchase at p can only convert views with v < p, so a
-    purchase ≤ watermark can never convert anything that still arrives:
-    state is O(lateness budget), not O(history). A pending view expires
-    abandoned once the watermark passes v+86400 — after that no
-    admissible purchase can satisfy p ≤ v+86400."""
-    (user_id,) = key
-    cols = ["user_id", "event_id", "ts_s"]
-    wm_s = state.getCurrentWatermarkMs() // 1000
-    st = state.get if state.exists else ([], [], [])
-    view_ids = list(st[0]) if st[0] is not None else []
-    view_ts = list(st[1]) if st[1] is not None else []
-    purchases = list(st[2]) if st[2] is not None else []
-    out = []
-    if not state.hasTimedOut:
-        for pdf in pdf_iter:
-            for r in pdf.sort_values(["ts_s", "event_id"]).itertuples():
-                if r.event_type == "purchase":
-                    p = int(r.ts_s)
-                    purchases.append(p)
-                    keep_i, keep_t = [], []
-                    for i, v in zip(view_ids, view_ts):
-                        if v < p <= v + BROWSE_ABANDON_S:
-                            continue  # converted — timer cancelled
-                        keep_i.append(i)
-                        keep_t.append(v)
-                    view_ids, view_ts = keep_i, keep_t
-                else:  # view
-                    v = int(r.ts_s)
-                    if not any(v < p <= v + BROWSE_ABANDON_S for p in purchases):
-                        view_ids.append(int(r.event_id))
-                        view_ts.append(v)
-    # expire: abandoned views whose full window is below the watermark
-    keep_i, keep_t = [], []
-    for i, v in zip(view_ids, view_ts):
-        if v + BROWSE_ABANDON_S < wm_s:
-            out.append((user_id, i, v))
-        else:
-            keep_i.append(i)
-            keep_t.append(v)
-    view_ids, view_ts = keep_i, keep_t
-    purchases = [p for p in purchases if p >= wm_s]
-    if view_ids or purchases:
-        state.update((view_ids, view_ts, purchases))
-        if view_ids:
-            state.setTimeoutTimestamp((min(view_ts) + BROWSE_ABANDON_S + 1) * 1000)
-        else:
-            # purchases-only state: without a timer, a key that never sees
-            # another event would hold its purchase list forever. Register
-            # the eviction timeout the purchase-prune above already implies
-            # — once the watermark passes max(purchases) the firing finds
-            # nothing to keep and removes the state (O(lateness) bound).
-            state.setTimeoutTimestamp((max(purchases) + 1) * 1000)
-    else:
-        state.remove()
-    if out:
-        yield pd.DataFrame(out, columns=cols)
-
-
 def _blacklist_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
     """AdClickByProvinceApp blacklist semantics: per-(user,ad) daily counter,
     emit-once warning at the cap, suppression after, day rollover resets."""
@@ -418,8 +124,12 @@ def _blacklist_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.D
 
 def _pay_receipt_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
     """OrderReceiptAppWithConnect semantics on a tagged union, FIFO list
-    buffers per side (see PayReceiptProcessor: keyed by user_id a second
-    same-side event is normal and must never overwrite the pending one).
+    buffers per side. The reference keys by unique txId, so at most one
+    event per side is pending (OrderReceiptAppWithConnect.java:75-84);
+    keyed by user_id a second same-side event is normal (two purchases
+    before any signup) and must never overwrite the pending one: every
+    event either matches (earliest pending first) or times out to its
+    diagnostic tag.
     The single GroupState timeout is armed at the EARLIEST pending
     deadline — pay+PAY_WAIT_S / receipt+RECEIPT_WAIT_S, asymmetric like
     the reference's pay+5s / receipt+3s — and on firing expires exactly
@@ -434,13 +144,13 @@ def _pay_receipt_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd
     if state.hasTimedOut:
         keep_p = []
         for p in pays:
-            if (p + PayReceiptProcessor.PAY_WAIT_S) * 1000 <= wm_ms:
+            if (p + PAY_WAIT_S) * 1000 <= wm_ms:
                 out.append((user_id, p, None, "payButNoReceipt"))
             else:
                 keep_p.append(p)
         keep_r = []
         for r in receipts:
-            if (r + PayReceiptProcessor.RECEIPT_WAIT_S) * 1000 <= wm_ms:
+            if (r + RECEIPT_WAIT_S) * 1000 <= wm_ms:
                 out.append((user_id, None, r, "receiptButNoPay"))
             else:
                 keep_r.append(r)
@@ -458,8 +168,8 @@ def _pay_receipt_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd
                         out.append((user_id, pays.pop(0), int(r.ts_s), "matched"))
                     else:
                         receipts.append(int(r.ts_s))
-    deadlines = [(p + PayReceiptProcessor.PAY_WAIT_S) * 1000 for p in pays] + [
-        (r + PayReceiptProcessor.RECEIPT_WAIT_S) * 1000 for r in receipts
+    deadlines = [(p + PAY_WAIT_S) * 1000 for p in pays] + [
+        (r + RECEIPT_WAIT_S) * 1000 for r in receipts
     ]
     if deadlines:
         state.update((pays, receipts))
@@ -471,114 +181,8 @@ def _pay_receipt_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd
         yield pd.DataFrame(out, columns=cols)
 
 
-def _tier_enrich_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    """Streaming point-in-time enrichment: per-user cumulative purchase
-    count as keyed state; every view emits the loyalty tier AS OF its
-    position in the per-user event-time order. Within a batch rows are
-    sorted by (t_us, is_view, event_id): PURCHASES APPLY BEFORE VIEWS at
-    an equal t_us, matching the batch `point_in_time_join`'s inclusive
-    as-of semantics (asof_join sorts right/tier-change rows before left
-    rows at equal ts, so a same-timestamp promotion is visible to the
-    view regardless of event_id order). Across batches the twin matches
-    the batch exactly when input arrives in event-time order (the
-    staged-replay guarantee all the stream==batch twins use — an
-    out-of-order source would need the late-data engine's buffering)."""
-    from ..plans.analytics import PIT_GOLD, PIT_SILVER
-
-    (user_id,) = key
-    cum = state.get[0] if state.exists else 0
-    out = []
-    for pdf in pdf_iter:
-        pdf = pdf.assign(_is_view=(pdf["event_type"] != "purchase").astype(int))
-        for r in pdf.sort_values(["t_us", "_is_view", "event_id"]).itertuples():
-            if r.event_type == "purchase":
-                cum += 1
-            else:  # view
-                if cum >= PIT_GOLD:
-                    tier = "gold"
-                elif cum >= PIT_SILVER:
-                    tier = "silver"
-                elif cum >= 1:
-                    tier = "bronze"
-                else:
-                    tier = "none"
-                out.append((user_id, r.event_id, r.t_us, tier))
-    state.update((int(cum),))
-    if out:
-        yield pd.DataFrame(out, columns=["user_id", "view_id", "t_us", "tier"])
-
-
-def tier_enrich_stream(events: "DataFrame"):  # noqa: F821
-    """Streaming twin of plans/analytics.point_in_time_join: enrich the
-    view stream with the SCD2-style tier version valid at event time,
-    carried as O(1) keyed state (one counter per user) instead of a
-    batch as-of join."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = (
-        events.filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("t_us"),
-            "event_id",
-            "event_type",
-        )
-        .groupBy("user_id")
-    )
-    return keyed.applyInPandasWithState(
-        _tier_enrich_fn,
-        outputStructType="user_id LONG, view_id LONG, t_us LONG, tier STRING",
-        stateStructType="cum LONG",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _transition_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    """Streaming Markov-transition extraction: per-user state is the last
-    event's (ts_s, event_id, event_type); each arriving event (in
-    event-time order within the batch) emits a (from,to) pair when the
-    gap is within the session window, then becomes the new last event.
-    Matches the batch lag-window exactly under the staged-replay
-    ordering contract."""
-    from ..plans.extras import SESSION_GAP_S
-
-    st = state.get if state.exists else (None, None, None)
-    last_ts, last_eid, last_type = st
-    out = []
-    for pdf in pdf_iter:
-        for r in pdf.sort_values(["ts_s", "event_id"]).itertuples():
-            if last_type is not None and r.ts_s - last_ts <= SESSION_GAP_S:
-                out.append((last_type, r.event_type))
-            last_ts, last_eid, last_type = int(r.ts_s), int(r.event_id), r.event_type
-    state.update((last_ts, last_eid, last_type))
-    if out:
-        yield pd.DataFrame(out, columns=["from_type", "to_type"])
-
-
-def transition_stream(events: "DataFrame"):  # noqa: F821
-    """Streaming twin of plans/analytics.transition_matrix's pair
-    extraction: O(1) keyed state (the last event per user) instead of a
-    batch lag window. Downstream aggregation to the (from,to) matrix is
-    a plain streaming groupBy."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = events.select(
-        "user_id", F.col("ts").cast("long").alias("ts_s"), "event_id", "event_type"
-    ).groupBy("user_id")
-    return keyed.applyInPandasWithState(
-        _transition_fn,
-        outputStructType="from_type STRING, to_type STRING",
-        stateStructType="ts_s LONG, event_id LONG, event_type STRING",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def blacklist_stream(events: "DataFrame"):  # noqa: F821
-    """BlacklistProcessor semantics (A7/A8/P9) over the click stream."""
+    """_blacklist_fn semantics (A7/A8/P9) over the click stream."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -599,7 +203,7 @@ def blacklist_stream(events: "DataFrame"):  # noqa: F821
 
 
 def pay_receipt_stream(events: "DataFrame"):  # noqa: F821
-    """PayReceiptProcessor semantics (J2) over a tagged union of the pay
+    """_pay_receipt_fn semantics (J2) over a tagged union of the pay
     ('purchase') and receipt ('signup') sides."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -619,29 +223,8 @@ def pay_receipt_stream(events: "DataFrame"):  # noqa: F821
     )
 
 
-def browse_abandon_stream(events: "DataFrame"):  # noqa: F821
-    """Streaming CEP `notFollowedBy` — see _browse_abandon_fn. Twin of the
-    batch plans/pipelines.browse_abandon RANGE-frame query."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = (
-        events.filter(F.col("event_type").isin("view", "purchase"))
-        .select("user_id", "ts", F.col("ts").cast("long").alias("ts_s"), "event_id", "event_type")
-        .groupBy("user_id")
-    )
-    return keyed.applyInPandasWithState(
-        _browse_abandon_fn,
-        outputStructType=BROWSE_ABANDON_OUTPUT,
-        stateStructType="view_ids ARRAY<LONG>, view_ts ARRAY<LONG>, purchases ARRAY<LONG>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def login_fail_stream(events: "DataFrame"):  # noqa: F821
-    """LoginFailProcessor semantics over a watermarked stream
-    (applyInPandasWithState wiring)."""
+    """_login_fail_fn semantics over a watermarked stream."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -673,103 +256,3 @@ def order_timeout_stream(events: "DataFrame"):  # noqa: F821
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas wiring (Spark 4 TWS) + the capability-gated
-# chooser. Both wirings of each operator share per-key logic (the TWS
-# processor classes above are unit-tested to agree with the portable
-# functions on identical inputs), so selection is an environment decision,
-# not a semantic one: TWS gives multi-timer/multi-state generality, the
-# applyInPandasWithState path runs anywhere plain Arrow runs (the TWS
-# driver worker imports google.protobuf at execution time).
-# --------------------------------------------------------------------------
-
-
-def login_fail_stream_tws(events: "DataFrame"):  # noqa: F821
-    from pyspark.sql import functions as F
-
-    keyed = events.select(
-        "user_id", F.col("ts").cast("long").alias("ts_s"), "event_id", "event_type"
-    ).groupBy("user_id")
-    return keyed.transformWithStateInPandas(
-        statefulProcessor=LoginFailProcessor(),
-        outputStructType=LOGIN_FAIL_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def order_timeout_stream_tws(events: "DataFrame"):  # noqa: F821
-    from pyspark.sql import functions as F
-
-    keyed = (
-        events.filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", F.col("ts").cast("long").alias("ts_s"), "event_type")
-        .groupBy("user_id")
-    )
-    return keyed.transformWithStateInPandas(
-        statefulProcessor=OrderTimeoutProcessor(),
-        outputStructType=ORDER_TIMEOUT_OUTPUT,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def blacklist_stream_tws(events: "DataFrame"):  # noqa: F821
-    from pyspark.sql import functions as F
-
-    from ..functions import scalars as S
-
-    keyed = (
-        events.filter(F.col("event_type") == "click")
-        .select("user_id", S.ad_k().alias("ad_k"), F.col("ts").cast("long").alias("ts_s"))
-        .groupBy("user_id", "ad_k")
-    )
-    return keyed.transformWithStateInPandas(
-        statefulProcessor=BlacklistProcessor(),
-        outputStructType=BLACKLIST_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def pay_receipt_stream_tws(events: "DataFrame"):  # noqa: F821
-    from pyspark.sql import functions as F
-
-    tagged = events.filter(F.col("event_type").isin("purchase", "signup")).select(
-        "user_id",
-        "ts",
-        F.col("ts").cast("long").alias("ts_s"),
-        F.when(F.col("event_type") == "purchase", F.lit("pay")).otherwise(F.lit("receipt")).alias("side"),
-    )
-    return tagged.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=PayReceiptProcessor(),
-        outputStructType=PAY_RECEIPT_OUTPUT,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-PORTABLE_WIRINGS = {
-    "login_fail": login_fail_stream,
-    "order_timeout": order_timeout_stream,
-    "blacklist": blacklist_stream,
-    "pay_receipt": pay_receipt_stream,
-}
-
-TWS_WIRINGS = {
-    "login_fail": login_fail_stream_tws,
-    "order_timeout": order_timeout_stream_tws,
-    "blacklist": blacklist_stream_tws,
-    "pay_receipt": pay_receipt_stream_tws,
-}
-
-
-def stateful_stream(name: str, events: "DataFrame", tws_usable: bool | None = None):  # noqa: F821
-    """Capability-gated wiring chooser for the keyed stateful operators:
-    TWS when the environment can execute it (protobuf present), else the
-    portable applyInPandasWithState path. `tws_usable` overrides the probe
-    for tests; both wirings are the same operator by construction."""
-    usable = TWS_USABLE if tws_usable is None else tws_usable
-    return (TWS_WIRINGS if usable else PORTABLE_WIRINGS)[name](events)

@@ -52,23 +52,6 @@ class TestConsecutiveWithin:
         assert got == expected
 
 
-class TestFollowedByWithin:
-    def test_matched_and_timeout_tags(self, spark):
-        from gmall_flink_200621_spark.operators.cep import followed_by_within
-
-        creates = spark.createDataFrame(
-            [(1, 100), (1, 500), (2, 100)], "order_id long, ts long"
-        )
-        pays = spark.createDataFrame([(1, 150), (2, 9999)], "order_id long, ts long")
-        out = followed_by_within(
-            creates, pays, ["order_id"], "ts", "ts", within_s=300
-        ).collect()
-        tags = {(r.order_id, r.a_ts_s): (r.tag, r.b_ts_s) for r in out}
-        assert tags[(1, 100)] == ("matched", 150)
-        assert tags[(1, 500)] == ("timeout", None)   # pay at 150 is before this create
-        assert tags[(2, 100)] == ("timeout", None)   # pay too late (9999 > 400)
-
-
 class TestRelaxedTimesWithin:
     def test_skips_non_matching_events(self, spark):
         """Flink default contiguity: a success BETWEEN failures is skipped,

@@ -6,161 +6,6 @@ from __future__ import annotations
 import pytest
 
 
-class TestCorpusIngest:
-    def test_incremental_ingest_equals_batch_prep(self, spark, sf_dir):
-        from gmall_flink_200621_spark.plans.training import corpus_prep
-        from gmall_flink_200621_spark.streaming.ingest import (
-            run_corpus_ingest_stream,
-            stage_document_chunks,
-        )
-
-        q = run_corpus_ingest_stream(spark, stage_document_chunks(sf_dir, 4), name="t_ingest")
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-
-        kept = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in spark.table("t_ingest_kept").collect()
-        }
-        batch = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in corpus_prep(spark, sf_dir).collect()
-        }
-        # every accepted doc, with stats, identical to the one-shot batch prep
-        assert kept == batch
-
-        # the fingerprint index holds exactly one row per distinct text —
-        # duplicates arriving in later chunks were anti-joined out, and
-        # rejected (low-quality / non-en) texts are remembered too
-        from gmall_flink_200621_spark.sources.loaders import load_table
-
-        n_distinct = (
-            load_table(spark, sf_dir, "documents").select("text").distinct().count()
-        )
-        assert spark.table("t_ingest_fps").count() == n_distinct
-
-    def test_folded_ingest_equals_batch_prep(self, spark, sf_dir):
-        """fold_every=2 over 5 chunks: the kept/fps tables coalesce into
-        tiered watermark bases mid-stream, the fps probe (live_epochs +
-        epoch != epoch_id) still anti-joins exactly the prior state, and
-        the accepted set read through live_epochs is identical to batch
-        corpus_prep — with bounded partitions."""
-        from gmall_flink_200621_spark.plans.training import corpus_prep
-        from gmall_flink_200621_spark.streaming.ingest import (
-            live_epochs,
-            run_corpus_ingest_stream,
-            stage_document_chunks,
-        )
-
-        q = run_corpus_ingest_stream(
-            spark, stage_document_chunks(sf_dir, 5), name="t_ingf", fold_every=2
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-
-        kept = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in live_epochs(spark.table("t_ingf_kept")).collect()
-        }
-        batch = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in corpus_prep(spark, sf_dir).collect()
-        }
-        assert kept == batch
-        for t in ("t_ingf_kept", "t_ingf_fps"):
-            eps = sorted(
-                int(r[0].split("=")[1])
-                for r in spark.sql(f"SHOW PARTITIONS {t}").collect()
-            )
-            assert eps[0] < 0 and len([e for e in eps if e >= 0]) <= 2, (t, eps)
-
-    def test_redelivered_chunk_is_idempotent(self, spark, sf_dir):
-        """Replaying with a duplicated chunk (at-least-once file source)
-        must not change the accepted set: every fp in the re-sent chunk is
-        already in the index."""
-        import os
-        import shutil
-
-        from gmall_flink_200621_spark.streaming.ingest import (
-            run_corpus_ingest_stream,
-            stage_document_chunks,
-        )
-
-        # stage normally, then append a copy of chunk 0 as a later file
-        stage = stage_document_chunks(sf_dir, n_chunks=3)
-        shutil.copyfile(
-            os.path.join(stage, "part-0.parquet"), os.path.join(stage, "part-9redeliver.parquet")
-        )
-
-        q = run_corpus_ingest_stream(spark, stage, name="t_ingest2")
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-
-        from gmall_flink_200621_spark.plans.training import corpus_prep
-
-        kept_ids = {r.doc_id for r in spark.table("t_ingest2_kept").collect()}
-        batch_ids = {r.doc_id for r in corpus_prep(spark, sf_dir).collect()}
-        assert kept_ids == batch_ids
-
-    def test_checkpoint_recovery_resumes_without_rereading(self, spark, sf_dir, tmp_path):
-        """Stop the ingest after two chunks, add the rest, restart from the
-        same checkpoint with reset_tables=False: the restarted query reads
-        ONLY the new chunks (offsets restored), and the final kept table
-        equals the uninterrupted batch prep — stats and all."""
-        import os
-        import shutil
-
-        from gmall_flink_200621_spark.plans.training import corpus_prep
-        from gmall_flink_200621_spark.streaming.ingest import (
-            run_corpus_ingest_stream,
-            stage_document_chunks,
-        )
-
-        full = stage_document_chunks(sf_dir, n_chunks=4)
-        incr = tmp_path / "stage"
-        incr.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        for f in ("part-0.parquet", "part-1.parquet"):
-            shutil.copy2(os.path.join(full, f), incr / f)  # copy2 keeps mtime order
-
-        def start(reset):
-            return run_corpus_ingest_stream(
-                spark, name="t_ingest_rec", stage_dir=str(incr), checkpoint_dir=ckpt, reset_tables=reset
-            )
-
-        q = start(True)
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        n_phase1 = spark.table("t_ingest_rec_kept").count()
-
-        for f in ("part-2.parquet", "part-3.parquet"):
-            shutil.copy2(os.path.join(full, f), incr / f)
-        q2 = start(False)
-        q2.processAllAvailable()
-        restarted = [p for p in q2.recentProgress if p["numInputRows"] > 0]
-        q2.stop()
-        q2.awaitTermination()
-        assert len(restarted) == 2  # only the two NEW chunks were read
-
-        # the phase-1 read cached this session's file listing; the stream's
-        # cloned session appended behind it (module docstring caveat)
-        spark.catalog.refreshTable("t_ingest_rec_kept")
-        kept = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in spark.table("t_ingest_rec_kept").collect()
-        }
-        batch = {
-            r.doc_id: (r.n_tokens, r.n_bpe_est, round(r.quality_score, 9))
-            for r in corpus_prep(spark, sf_dir).collect()
-        }
-        assert kept == batch
-        assert len(kept) > n_phase1  # the restart actually ingested new docs
-
-
 class TestNearDupIngest:
     def test_replay_equals_batch_lsh(self, spark, sf_dir):
         """Chunked replay of the corpus must surface EXACTLY the batch
@@ -343,7 +188,6 @@ class TestNearDupIngest:
         }
         assert got == batch
 
-
     def test_last_epoch_crash_replay_is_idempotent(self, spark, sf_dir):
         """The crash case a CHECKPOINTED stream actually replays: the
         final micro-batch re-runs after its state writes landed.
@@ -378,92 +222,6 @@ class TestNearDupIngest:
             "doc_id long, text string, lang string, source string, n_chars long"
         ).parquet(stage + "/part-1.parquet")
         _neardup_epoch(last_chunk, 1, "t_nd_idem_bands", "t_nd_idem_shsets", "t_nd_idem_pairs")
-        assert snap() == before
-
-
-class TestKmeansStream:
-    def test_deterministic_and_quality_vs_batch(self, spark, sf_dir):
-        """Two identical replays produce a bit-identical centroid table
-        (fixed-point trajectory), and the final mini-batch centroids
-        assign the corpus nearly as tightly as batch Lloyd's: mean cosine
-        ≥ 0.90× — single-pass mini-batch is genuinely below 3-pass
-        Lloyd's (measured 0.94× here); the gate leaves headroom for
-        seed-order variation while still catching the first-batch-only
-        seeding bug, which measured 0.63×."""
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.operators.similarity import (
-            _assign_to_cents,
-            _idot,
-            kmeans_embeddings,
-            quantize,
-        )
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.streaming.ingest import (
-            run_kmeans_stream,
-            stage_embedding_chunks,
-        )
-
-        def run(name):
-            q = run_kmeans_stream(spark, stage_embedding_chunks(sf_dir, 4), name=name)
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-            spark.catalog.refreshTable(f"{name}_centroids")
-            return {
-                r.cent_id: (tuple(r.cq), r.n_total)
-                for r in spark.table(f"{name}_centroids").collect()
-            }
-
-        c1 = run("km_a")
-        c2 = run("km_b")
-        assert c1 == c2 and c1  # deterministic trajectory
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        e = emb.select("vec_id", quantize(F.col("embedding")).alias("q"))
-        e = e.withColumn("n2", _idot(F.col("q"), F.col("q")))
-        cents = spark.table("km_a_centroids").select("cent_id", "cq", "cn2")
-        stream_q = (
-            _assign_to_cents(e, cents).agg(F.avg("cosine")).first()[0]
-        )
-        batch_q = kmeans_embeddings(emb).agg(F.avg("cosine")).first()[0]
-        assert stream_q >= batch_q * 0.90, (stream_q, batch_q)
-
-
-
-class TestIngestCrashReplay:
-    def test_last_epoch_replay_neither_doubles_nor_loses(self, spark, sf_dir):
-        """Replaying the final ingest micro-batch must rewrite identical
-        kept/fps rows: no doubled kept docs (the plain-append failure)
-        and no empty rewrite (the naive fix's silent-loss failure — the
-        fps probe must exclude the replayed epoch's own partition)."""
-        from gmall_flink_200621_spark.streaming.ingest import (
-            _ingest_epoch,
-            run_corpus_ingest_stream,
-            stage_document_chunks,
-        )
-
-        stage = stage_document_chunks(sf_dir, n_chunks=2)
-        q = run_corpus_ingest_stream(
-            spark, stage, name="t_ing_idem"
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-
-        def snap():
-            out = {}
-            for t in ("t_ing_idem_kept", "t_ing_idem_fps"):
-                spark.catalog.refreshTable(t)
-                out[t] = sorted(map(str, spark.table(t).collect()))
-            return out
-
-        before = snap()
-        assert before["t_ing_idem_kept"]
-        last_chunk = spark.read.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        ).parquet(stage + "/part-1.parquet")
-        _ingest_epoch(last_chunk, 1, "t_ing_idem_kept", "t_ing_idem_fps")
         assert snap() == before
 
 
@@ -1193,7 +951,7 @@ class TestCorpusStatsStream:
         # replayed fold: re-running the newest fold's watermark must leave
         # the view (and the partition set) unchanged — crash recovery path
         wm = max(-e - 1 for e in eps if e < 0)
-        epochs.fold(spark, "t_csf_partials", wm, _cstats_merge)
+        epochs._commit(spark, "t_csf_partials", None, None, wm, _cstats_merge, None)
         eps2 = sorted(
             int(r[0].split("=")[1])
             for r in spark.sql("SHOW PARTITIONS t_csf_partials").collect()
@@ -1231,7 +989,7 @@ class TestCorpusStatsStream:
         wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
         oldest_base = _os.path.join(wh, "t_csf_partials", f"epoch={min(eps)}")
         mt_base = _os.path.getmtime(oldest_base)
-        epochs.fold(spark, "t_csf_partials", max(eps), _cstats_merge)
+        epochs._commit(spark, "t_csf_partials", None, None, max(eps), _cstats_merge, None)
         assert _os.path.getmtime(oldest_base) == mt_base  # tiered, not absorbing
         assert sorted(map(tuple, corpus_stats_view(spark, "t_csf").collect())) == want
         eps3 = [
@@ -1329,7 +1087,7 @@ class TestCorpusStatsStream:
         assert sorted(map(tuple, corpus_stats_view(spark, "t_rf16").collect())) == want
         p = spark.table("t_rf16_partials")
         assert sorted(map(tuple, live_epochs(p).collect())) == meta  # relational too
-        epochs.refold(spark, "t_rf16_partials", _cstats_merge, 2)
+        epochs._commit(spark, "t_rf16_partials", None, None, None, _cstats_merge, 2)
         eps_after = sorted(
             int(r[0].split("=")[1])
             for r in spark.sql("SHOW PARTITIONS t_rf16_partials").collect()
@@ -1698,7 +1456,7 @@ class TestPqIndexStream:
         spark.catalog.refreshTable("t_pqf_codes")
         assert search("t_pqf") == want  # stale epoch ignored by live_epochs
 
-        epochs.fold(spark, "t_pqf_codes", max(eps), lambda df: df)
+        epochs._commit(spark, "t_pqf_codes", None, None, max(eps), lambda df: df, None)
         assert search("t_pqf") == want
         eps2 = [
             int(r[0].split("=")[1])
@@ -2718,71 +2476,6 @@ class TestJoinIvm:
         raw_keys = {r.o_orderkey for r in spark.table("t_ivm3_v").collect()}
         assert 30 not in raw_keys and 40 not in raw_keys
 
-    def test_compact_max_mv_is_read_identical_and_bounds_partitions(
-        self, spark, tmp_path
-    ):
-        """The max MV's compaction story (`<name>_mx` is fold-excluded by
-        design): after compaction the served maxes are identical, the
-        table holds ONE partition, fully-deleted customers stay
-        superseded (NULL-mx rebases written, not dropped), a crash
-        between the rebase write and the GC still reads identically, and
-        a second pass is a no-op."""
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.streaming.ingest import (
-            _partition_epochs,
-            compact_max_mv,
-            revenue_max_by_cust_view,
-            run_join_ivm_stream,
-        )
-
-        stage = self._planted_mx_stage(tmp_path)
-        q = run_join_ivm_stream(
-            spark, stage_dir=stage, name="t_ivmcm",
-            maintain_agg=False, maintain_max=True,
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        spark.catalog.refreshTable("t_ivmcm_mx")
-        before = sorted(map(tuple, revenue_max_by_cust_view(spark, "t_ivmcm").collect()))
-        n_parts = len(_partition_epochs(spark, "t_ivmcm_mx"))
-        assert n_parts > 1
-        # fully-deleted customers exist in partials but not in the view
-        all_custs = {r.o_custkey for r in spark.table("t_ivmcm_mx").select("o_custkey").distinct().collect()}
-        assert all_custs - {t[0] for t in before}, "need a fully-retired customer"
-
-        # crash-sim: the rebase write landed but the GC didn't — replay
-        # compact's write phase alone, leaving every old partition behind
-        from gmall_flink_200621_spark.streaming.ingest import _ivm_write_epoch
-
-        top = max(_partition_epochs(spark, "t_ivmcm_mx"))
-        custs = spark.table("t_ivmcm_mx").select("o_custkey").distinct()
-        served = revenue_max_by_cust_view(spark, "t_ivmcm").select(
-            "o_custkey", F.col("max_revenue").alias("mx")
-        )
-        rebased = (
-            custs.join(served, "o_custkey", "left")
-            .withColumn("rebase", F.lit(True))
-            .localCheckpoint(eager=True)
-        )
-        _ivm_write_epoch(spark, rebased, "t_ivmcm_mx", top)
-        assert len(_partition_epochs(spark, "t_ivmcm_mx")) == n_parts  # GC pending
-        assert sorted(map(tuple, revenue_max_by_cust_view(spark, "t_ivmcm").collect())) == before
-
-        n = compact_max_mv(spark, "t_ivmcm")
-        assert n == n_parts - 1
-        assert sorted(map(tuple, revenue_max_by_cust_view(spark, "t_ivmcm").collect())) == before
-        assert len(_partition_epochs(spark, "t_ivmcm_mx")) == 1
-        # dead customers stayed superseded as NULL-mx rebases
-        assert (
-            spark.table("t_ivmcm_mx").filter(F.col("mx").isNull() & F.col("rebase")).count()
-            == len(all_custs - {t[0] for t in before})
-        )
-        # idempotent
-        assert compact_max_mv(spark, "t_ivmcm") == 0
-        assert sorted(map(tuple, revenue_max_by_cust_view(spark, "t_ivmcm").collect())) == before
-
     def test_upsert_last_write_wins_and_max_rebase(self, spark, tmp_path):
         """O_UPD semantics, planted: (a) an update AFTER the insert wins —
         the key's join rows re-emit with the new attributes and the
@@ -3259,6 +2952,20 @@ class TestWindowAggStream:
         q.awaitTermination()
         spark.catalog.refreshTable(f"{name}_buckets")
 
+    def _cutoff(self, spark, name):
+        """(newest live bucket_end) − retention: the cutoff the expiry
+        pass computes and the view serves at."""
+        from gmall_flink_200621_spark.streaming import epochs
+        from pyspark.sql import functions as F
+
+        m = epochs.live(spark, f"{name}_buckets").agg(F.max("bucket_end")).first()[0]
+        return None if m is None else int(m) - self.RET
+
+    def _view(self, spark, name):
+        from gmall_flink_200621_spark.streaming.ingest import _hot_window
+
+        return sorted(map(tuple, _hot_window(spark, name, self._cutoff(spark, name)).collect()))
+
     def test_view_matches_oracle_and_expiry_preserves_it(self, spark, sf_dir, duck):
         """Unfolded replay: the served view equals the batch oracle, the
         physical expiry drops whole expired arrival epochs as METADATA
@@ -3266,31 +2973,27 @@ class TestWindowAggStream:
         live rows below the cutoff, and the view is identical before and
         after GC (correctness never depends on GC having run)."""
         from gmall_flink_200621_spark.streaming import epochs
-        from gmall_flink_200621_spark.streaming.ingest import (
-            _wagg_cutoff,
-            expire_window_buckets,
-            hot_window_view,
-        )
+        from gmall_flink_200621_spark.streaming.ingest import _expire_window
         from pyspark.sql import functions as F
 
         self._replay(spark, sf_dir, "t_wagg", n_chunks=3)
-        before = sorted(map(tuple, hot_window_view(spark, "t_wagg", self.RET).collect()))
+        before = self._view(spark, "t_wagg")
         assert before == self._oracle(duck) and len(before) > 0
 
-        cutoff = _wagg_cutoff(spark, "t_wagg", self.RET)
+        cutoff = self._cutoff(spark, "t_wagg")
         parts0 = {r[0] for r in spark.sql("SHOW PARTITIONS t_wagg_buckets").collect()}
         assert "epoch=0" in parts0  # 3 in-order chunks over 30 days: chunk 0 is all-expired
-        touched = expire_window_buckets(spark, "t_wagg", self.RET)
+        touched = _expire_window(spark, "t_wagg", self.RET)[0]
         assert touched >= 1
         parts1 = {r[0] for r in spark.sql("SHOW PARTITIONS t_wagg_buckets").collect()}
         assert "epoch=0" not in parts1
 
         live = epochs.live(spark, "t_wagg_buckets")
         assert live.filter(F.col("bucket_end") <= F.lit(cutoff)).count() == 0
-        after = sorted(map(tuple, hot_window_view(spark, "t_wagg", self.RET).collect()))
+        after = self._view(spark, "t_wagg")
         assert after == before
         # idempotent: nothing left to expire
-        assert expire_window_buckets(spark, "t_wagg", self.RET) == 0
+        assert _expire_window(spark, "t_wagg", self.RET)[0] == 0
 
     def test_folded_replay_rewrites_bases_never_drops(self, spark, sf_dir, duck):
         """fold_every=1 + refold_width=2 routes every epoch through the
@@ -3298,11 +3001,7 @@ class TestWindowAggStream:
         (a dropped base would rewind the fold watermark), the view still
         equals the oracle, and state physically sheds expired buckets."""
         from gmall_flink_200621_spark.streaming import epochs
-        from gmall_flink_200621_spark.streaming.ingest import (
-            _wagg_cutoff,
-            expire_window_buckets,
-            hot_window_view,
-        )
+        from gmall_flink_200621_spark.streaming.ingest import _expire_window
         from pyspark.sql import functions as F
 
         self._replay(spark, sf_dir, "t_waggf", n_chunks=3, fold_every=1, refold_width=2)
@@ -3311,16 +3010,16 @@ class TestWindowAggStream:
             if int(p[0].split("=")[1]) < 0
         ]
         assert neg0  # the fold actually ran
-        assert expire_window_buckets(spark, "t_waggf", self.RET) >= 1
+        assert _expire_window(spark, "t_waggf", self.RET)[0] >= 1
         neg1 = [
             p[0] for p in spark.sql("SHOW PARTITIONS t_waggf_buckets").collect()
             if int(p[0].split("=")[1]) < 0
         ]
         assert set(neg1) == set(neg0)  # bases rewritten, never dropped
-        cutoff = _wagg_cutoff(spark, "t_waggf", self.RET)
+        cutoff = self._cutoff(spark, "t_waggf")
         live = epochs.live(spark, "t_waggf_buckets")
         assert live.filter(F.col("bucket_end") <= F.lit(cutoff)).count() == 0
-        got = sorted(map(tuple, hot_window_view(spark, "t_waggf", self.RET).collect()))
+        got = self._view(spark, "t_waggf")
         assert got == self._oracle(duck)
 
     @pytest.mark.parametrize("footers", [True, False])
@@ -3330,16 +3029,12 @@ class TestWindowAggStream:
         """The one-call GC + view the hot-items plans use: on a folded
         replay it purges the expired buckets, serves the oracle's rows at
         the cutoff its own pass found, and a second call purges nothing
-        more and serves the same rows as `hot_window_view` — with the
+        more and serves the same rows as `_hot_window` — with the
         partition ranges read from parquet footers (which must equal an
         aggregate over the live rows) and with the aggregate fallback."""
         from gmall_flink_200621_spark.streaming import epochs
         from gmall_flink_200621_spark.streaming import ingest
-        from gmall_flink_200621_spark.streaming.ingest import (
-            _wagg_cutoff,
-            expire_hot_window_view,
-            hot_window_view,
-        )
+        from gmall_flink_200621_spark.streaming.ingest import expire_hot_window_view
         from pyspark.sql import functions as F
 
         self._replay(spark, sf_dir, "t_waggv", n_chunks=3, fold_every=1, refold_width=2)
@@ -3351,14 +3046,14 @@ class TestWindowAggStream:
         got = sorted(map(tuple, expire_hot_window_view(spark, "t_waggv", self.RET).collect()))
         assert got == self._oracle(duck) and len(got) > 0
 
-        cutoff = _wagg_cutoff(spark, "t_waggv", self.RET)
+        cutoff = self._cutoff(spark, "t_waggv")
         live = epochs.live(spark, "t_waggv_buckets")
         assert live.filter(F.col("bucket_end") <= F.lit(cutoff)).count() == 0
         parts = spark.sql("SHOW PARTITIONS t_waggv_buckets").collect()
         again = sorted(map(tuple, expire_hot_window_view(spark, "t_waggv", self.RET).collect()))
         assert spark.sql("SHOW PARTITIONS t_waggv_buckets").collect() == parts
         assert again == got
-        assert sorted(map(tuple, hot_window_view(spark, "t_waggv", self.RET).collect())) == got
+        assert self._view(spark, "t_waggv") == got
 
     def test_state_bounded_by_retention_not_stream_length(self, spark, sf_dir):
         """The 100 TB claim in miniature: after GC, live state rows are
@@ -3366,13 +3061,11 @@ class TestWindowAggStream:
         growing the replayed history (3 → 6 chunks over the same data)
         leaves the post-GC state identical."""
         from gmall_flink_200621_spark.streaming import epochs
-        from gmall_flink_200621_spark.streaming.ingest import (
-            expire_window_buckets,
-        )
+        from gmall_flink_200621_spark.streaming.ingest import _expire_window
 
         def live_state(name, n_chunks):
             self._replay(spark, sf_dir, name, n_chunks=n_chunks, fold_every=2)
-            expire_window_buckets(spark, name, self.RET)
+            _expire_window(spark, name, self.RET)
             return sorted(
                 map(
                     tuple,
@@ -3892,7 +3585,6 @@ class TestMvPurges:
         assert got == want
         assert purge_superseded_sessions(spark, "t_spg") == 0  # idempotent
 
-
     def test_topk_group_version_purge_keeps_replay_inputs(self, spark, sf_dir):
         from pyspark.sql import Window
         from pyspark.sql import functions as F
@@ -4248,3 +3940,22 @@ class TestStagers:
             )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+    def test_stage_dir_removed_at_exit(self, sf_dir):
+        """A staged feed lives as long as the process that staged it:
+        the temp dir is gone once that interpreter exits."""
+        import os
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        code = (
+            "from gmall_flink_200621_spark.streaming.ingest import stage_event_chunks\n"
+            f"print(stage_event_chunks({sf_dir!r}, 2))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+        )
+        stage = out.stdout.strip().splitlines()[-1]
+        assert os.path.basename(stage).startswith("spark_graft_eventingest_")
+        assert not os.path.exists(stage)

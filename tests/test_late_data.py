@@ -10,6 +10,15 @@ from __future__ import annotations
 from collections import Counter
 
 
+def _window_ends(ts_s: int) -> list[int]:
+    """Epoch-aligned sliding-window ends containing ts (same assignment as
+    F.window / the DuckDB oracle)."""
+    from gmall_flink_200621_spark.streaming.late_data import SLIDE_S, WINDOW_S
+
+    bucket = ts_s - ts_s % SLIDE_S
+    return [bucket + j * SLIDE_S for j in range(1, WINDOW_S // SLIDE_S + 1)]
+
+
 def _run(spark, sf_dir, name):
     from gmall_flink_200621_spark.streaming.late_data import STATE, run_hot_urls_late_stream
 
@@ -60,8 +69,6 @@ class TestLateDataSemantics:
         # every side-output event's windows are all expired ⇒ every one of
         # its (window,url) contributions sits in dropped, none in counts
         for ts_s, url in st["side"][:50]:
-            from gmall_flink_200621_spark.streaming.late_data import _window_ends
-
             for wend in _window_ends(ts_s):
                 assert (wend, url) in st["dropped"]
 

@@ -45,71 +45,6 @@ class TestZorder:
         z = df.select(zorder_value([F.col("x"), F.col("y")], 3).alias("z")).first().z
         assert z == 27
 
-    def test_zordered_files_bound_both_dimensions(self, spark, sf_dir, tmp_path):
-        """The reason the operator exists, observed at the file level.
-        Any 1-D sort and a Z-order both split the plane into ~1/n_files
-        regions — the difference is SHAPE: sorted-by-x files are thin
-        stripes with FULL y extent (a y-only predicate prunes nothing),
-        Z-files are blocks bounded in BOTH dimensions (a predicate on
-        either dimension prunes most files). Asserted three ways on real
-        footer stats: per-dimension extents, a simulated band-predicate
-        file-prune count, and round-trip content identity. Dimensions:
-        hash-spread user key × minute-of-day — the canonical
-        point-lookup + time-range clustering pair."""
-        from gmall_flink_200621_spark.operators.layout import (
-            ZORDER_BITS,
-            write_zordered,
-            zorder_value,
-        )
-        from gmall_flink_200621_spark.sources.loaders import load_table
-
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.pmod(F.col("user_id") * F.lit(2654435761), F.lit(2048)).alias("x"),
-            F.pmod(F.expr("unix_micros(ts) DIV 60000000"), F.lit(1440)).alias("y"),
-        )
-        n_files = 16
-
-        zdir = str(tmp_path / "zord")
-        write_zordered(
-            ev, zdir, zorder_value([F.col("x"), F.col("y")], ZORDER_BITS), n_files
-        )
-        xdir = str(tmp_path / "xsort")
-        ev.repartitionByRange(n_files, F.col("x")).sortWithinPartitions(
-            "x", "y"
-        ).write.mode("overwrite").parquet(xdir)
-
-        zs = _file_stats(zdir, ["x", "y"])
-        xs = _file_stats(xdir, ["x", "y"])
-        assert len(zs) > 4 and len(xs) > 4
-
-        y_dom = max(s["y"][1] for s in xs) - min(s["y"][0] for s in xs) + 1
-
-        def y_extents(stats):
-            return [(s["y"][1] - s["y"][0] + 1) / y_dom for s in stats]
-
-        # stripes: most x-sorted files span ~the whole y domain
-        assert sorted(y_extents(xs))[len(xs) // 2] > 0.8
-        # blocks: the typical Z-file bounds y tightly (a file whose
-        # z-range straddles a quadrant seam can still span more — the
-        # z-curve's known discontinuity; median is the honest statistic),
-        # and a y-band predicate shows the effect: far fewer Z-files
-        # intersect a 1/8-domain band than stripes do
-        assert sorted(y_extents(zs))[len(zs) // 2] < 0.5, y_extents(zs)
-        band_lo, band_hi = 600, 600 + y_dom // 8
-
-        def touched(stats):
-            return sum(
-                1 for s in stats if s["y"][0] <= band_hi and s["y"][1] >= band_lo
-            ) / len(stats)
-
-        assert touched(zs) <= 0.5 * touched(xs), (touched(zs), touched(xs))
-
-        # content identity
-        got = sorted(map(tuple, spark.read.parquet(zdir).collect()))
-        want = sorted(map(tuple, ev.collect()))
-        assert got == want and len(got) > 0
-
 
 class TestCompaction:
     def test_fragmented_partition_compacts_others_untouched(self, spark, tmp_path):
@@ -378,7 +313,6 @@ class TestHilbert:
         from gmall_flink_200621_spark.operators.layout import (
             ZORDER_BITS,
             hilbert_index,
-            write_zordered,
             zorder_value,
         )
         from gmall_flink_200621_spark.sources.loaders import load_table
@@ -389,7 +323,14 @@ class TestHilbert:
             F.pmod(F.expr("unix_micros(ts) DIV 60000000"), F.lit(1440)).alias("y"),
         )
         zdir, hdir = str(tmp_path / "z"), str(tmp_path / "h")
-        write_zordered(ev, zdir, zorder_value([F.col("x"), F.col("y")], ZORDER_BITS), 16)
+        (
+            ev.withColumn("zv", zorder_value([F.col("x"), F.col("y")], ZORDER_BITS))
+            .repartitionByRange(16, F.col("zv"))
+            .sortWithinPartitions("zv")
+            .drop("zv")
+            .write.mode("overwrite")
+            .parquet(zdir)
+        )
         h = hilbert_index(ev, "x", "y", ZORDER_BITS)
         (
             h.repartitionByRange(16, F.col("hd"))

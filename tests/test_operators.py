@@ -716,77 +716,6 @@ class TestKnnGraphBucketCap:
         assert (multi_sub > 1).sum() >= 10
         # conservation: every (vec, band) row survives the split
         assert groups["count"].sum() == 600 * bands
-    def test_extract_features_shape(self, spark):
-        from gmall_flink_200621_spark.operators.multimodal import (
-            FEATURE_DIM,
-            extract_features,
-            synthetic_media,
-        )
-
-        media = synthetic_media(spark, n=12)
-        out = extract_features(media).collect()
-        assert len(out) == 12
-        assert all(len(r.features) == FEATURE_DIM for r in out)
-        # deterministic: same payload → same features
-        again = extract_features(synthetic_media(spark, n=12)).collect()
-        assert sorted(map(str, out)) == sorted(map(str, again))
-
-    def test_frame_sampling_explodes_rows(self, spark):
-        from gmall_flink_200621_spark.operators.multimodal import sample_frames, synthetic_media
-
-        media = synthetic_media(spark, n=9)  # 3 audio + 3 video, 5000ms each
-        out = sample_frames(media, every_ms=1000).collect()
-        assert len(out) == 6 * 5  # 5 frames per a/v item
-        assert {r.frame_ts_ms for r in out} == {0, 1000, 2000, 3000, 4000}
-
-    def test_resize_updates_metadata(self, spark):
-        from gmall_flink_200621_spark.operators.multimodal import resize_images, synthetic_media
-
-        media = synthetic_media(spark, n=6)
-        out = resize_images(media, 32, 32).collect()
-        assert len(out) == 2  # only images
-        assert all(r.width == 32 and r.height == 32 for r in out)
-
-    def test_real_decoder_is_stubbed(self, spark):
-        import pytest as _pytest
-
-        from gmall_flink_200621_spark.operators.multimodal import DECODERS
-
-        with _pytest.raises(NotImplementedError):
-            DECODERS["real"](b"x", "image")
-
-
-    def test_media_to_knn_end_to_end(self, spark):
-        """The full multimodal retrieval pipeline: blobs -> mapInPandas
-        feature extraction -> brute cosine kNN over the feature vectors.
-        Deterministic fake decoder => the whole chain is repeatable; the
-        plumbing (schemas, Arrow batches, broadcast query side) is the
-        production shape end-to-end."""
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.operators.multimodal import (
-            extract_features,
-            synthetic_media,
-        )
-        from gmall_flink_200621_spark.operators.similarity import knn_brute
-
-        media = synthetic_media(spark, n=30)
-        emb = extract_features(media).select(
-            F.col("media_id").alias("vec_id"), F.col("features").alias("embedding")
-        )
-        out = knn_brute(emb, k=3, query_mod=10).collect()
-        # 3 query vectors (ids 0,10,20), each with exactly 3 ranked neighbors
-        by_q = {}
-        for r in out:
-            by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
-        assert set(by_q) == {0, 10, 20}
-        for q, rows in by_q.items():
-            assert [rk for rk, _, _ in sorted(rows)] == [1, 2, 3]
-            assert all(-1.0 <= c <= 1.0 for _, _, c in rows)
-            assert all(n != q for _, n, _ in rows)
-        # repeatable: the fake decoder + fixed-point math are deterministic
-        again = knn_brute(emb, k=3, query_mod=10).collect()
-        assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
 class TestTopTerms:
@@ -1593,87 +1522,6 @@ class TestDedupEval:
         assert r.n_lsh == r.n_common  # no unverified pair can appear
 
 
-class TestMultimodalRealCodecs:
-    def test_netpbm_decode_roundtrip_and_features(self, spark):
-        """Real P6 decode: dims read from the header, per-channel means
-        match numpy on the raw pixel bytes, and encode∘decode is
-        byte-identical."""
-        from gmall_flink_200621_spark.operators.multimodal import (
-            _decode_netpbm,
-            _encode_netpbm,
-            extract_features,
-            synthetic_media_real,
-        )
-
-        media = synthetic_media_real(spark, n=8)
-        img_rows = media.filter("kind = 'image'").collect()
-        a = _decode_netpbm(bytes(img_rows[0].payload))
-        assert a.shape == (24, 32, 3)
-        assert _encode_netpbm(a) == bytes(img_rows[0].payload)
-
-        feats = {
-            r.media_id: r.features
-            for r in extract_features(media, decoder="stdlib").collect()
-            if r.kind == "image"
-        }
-        for r in img_rows:
-            arr = _decode_netpbm(bytes(r.payload)).astype("float64") / 255.0
-            f = feats[r.media_id]
-            assert (f[0], f[1], f[2]) == (32.0, 24.0, 3.0)
-            assert abs(f[3] - arr[:, :, 0].mean()) < 1e-12
-
-    def test_wav_decode_features(self, spark):
-        """Real WAV decode: duration and rate from the header, RMS of a
-        full-scale sine ≈ A/√2."""
-        from gmall_flink_200621_spark.operators.multimodal import (
-            extract_features,
-            synthetic_media_real,
-        )
-
-        media = synthetic_media_real(spark, n=8)
-        feats = {
-            r.media_id: r.features
-            for r in extract_features(media, decoder="stdlib").collect()
-            if r.kind == "audio"
-        }
-        assert feats
-        for f in feats.values():
-            assert abs(f[0] - 0.25) < 1e-9  # 250 ms
-            assert f[1] == 8000.0
-            assert abs(f[2] - (20000 / 32768) / 2**0.5) < 0.01  # sine RMS
-
-    def test_real_resize_subsamples_pixels(self, spark):
-        from gmall_flink_200621_spark.operators.multimodal import (
-            _decode_netpbm,
-            resize_images_real,
-            synthetic_media_real,
-        )
-
-        media = synthetic_media_real(spark, n=8)
-        out = resize_images_real(media, 16, 12).collect()
-        assert out and all(r.width == 16 and r.height == 12 for r in out)
-        src = {r.media_id: bytes(r.payload) for r in media.filter("kind='image'").collect()}
-        for r in out:
-            small = _decode_netpbm(bytes(r.payload))
-            big = _decode_netpbm(src[r.media_id])
-            assert small.shape == (12, 16, 3)
-            # nearest-neighbor: every small pixel exists at the mapped src index
-            assert (small[0, 0] == big[0, 0]).all()
-            assert (small[11, 15] == big[11 * 24 // 12, 15 * 32 // 16]).all()
-
-    def test_unsupported_format_still_raises(self, spark):
-        """PNG/MP4 payloads remain honestly env-stubbed: the stdlib
-        decoder refuses rather than fabricating features."""
-        import pytest as _pytest
-
-        from gmall_flink_200621_spark.operators.multimodal import _stdlib_decode
-
-        with _pytest.raises(ValueError):
-            _stdlib_decode(b"\x89PNG....", "image")
-        with _pytest.raises(ValueError):
-            _stdlib_decode(b"whatever", "video")
-
-
 class TestBpe:
     @staticmethod
     def _py_bpe(word_freqs, k):
@@ -1908,7 +1756,7 @@ class TestUnigramLm:
 
     def test_encode_matches_python_viterbi_and_is_pure_map(self, spark, sf_dir):
         """Viterbi token counts equal the Python segmenter word-for-word
-        and the encode plan is shuffle-free (the bpe_encode contract)."""
+        and the encode plan is shuffle-free (a pure map)."""
         import pandas as pd
 
         from gmall_flink_200621_spark.operators.unigram import (
@@ -2297,113 +2145,6 @@ class TestWordPieceEncode:
         assert rows[2].chars_per_token == 0.0
 
 
-class TestBpeEncode:
-    def test_encode_matches_python_and_is_single_stage(self, spark, sf_dir):
-        """Token counts under the learned merges equal the Python encoder
-        word-for-word, and the encode plan is shuffle-free (pure map)."""
-        from gmall_flink_200621_spark.operators.bpe import bpe_encode, bpe_merges
-        from gmall_flink_200621_spark.sources.loaders import load_table
-
-        docs = load_table(spark, sf_dir, "documents")
-        merges = [(r.left, r.right) for r in bpe_merges(docs, n_merges=6).collect()]
-
-        out = bpe_encode(docs, merges)
-        s = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in s and "Join" not in s
-
-        def py_encode(word):
-            syms = list(word)
-            for a, b in merges:
-                ns = []
-                for c in syms:
-                    if ns and ns[-1] == a and c == b:
-                        ns[-1] = a + b
-                    else:
-                        ns.append(c)
-                syms = ns
-            return len(syms)
-
-        import pandas as pd
-
-        pdf = pd.read_parquet(f"{sf_dir}/documents.parquet").set_index("doc_id")
-        got = {r.doc_id: r.n_bpe_tokens for r in out.collect()}
-        for doc_id in list(got)[:50]:
-            text = pdf.loc[doc_id, "text"]
-            assert got[doc_id] == sum(py_encode(w) for w in text.split(" ")), doc_id
-
-    @staticmethod
-    def _ref_merges(sf_dir, k):
-        """A rank-ordered merge table from the pure-Python trainer (the
-        same reference `bpe_merges` is pinned against) — the encode
-        contract needs only a valid rank-order list, so tests can build
-        deep vocabularies without re-running the Spark trainer."""
-        from collections import Counter
-
-        import pandas as pd
-
-        pdf = pd.read_parquet(f"{sf_dir}/documents.parquet")
-        wf = Counter(w for t in pdf["text"] for w in t.split(" ") if w)
-        return [(a, b) for _, a, b, _ in TestBpe._py_bpe(dict(wf), k)]
-
-    def test_arrow_path_matches_expression_path_at_boundary(self, spark, sf_dir):
-        """Both encode paths must agree bit-for-bit at the switchover
-        size (n=64): same token counts, same word counts, same ratio."""
-        from gmall_flink_200621_spark.operators.bpe import bpe_encode
-        from gmall_flink_200621_spark.sources.loaders import load_table
-
-        merges = self._ref_merges(sf_dir, 64)
-        assert len(merges) == 64
-        docs = load_table(spark, sf_dir, "documents")
-        expr = {r.doc_id: r for r in bpe_encode(docs, merges, expr_max=64).collect()}
-        arrow = {r.doc_id: r for r in bpe_encode(docs, merges, expr_max=0).collect()}
-        assert set(expr) == set(arrow) and len(expr) > 0
-        for d in expr:
-            assert (expr[d].n_words, expr[d].n_bpe_tokens) == (
-                arrow[d].n_words,
-                arrow[d].n_bpe_tokens,
-            ), d
-            # exact: the Arrow path mirrors Spark's HALF_UP decimal rounding
-            assert expr[d].chars_per_token == arrow[d].chars_per_token, d
-
-    def test_large_vocab_encodes_without_catalyst_blowup(self, spark, sf_dir):
-        """n=256 merges — far past the expression path's practical depth —
-        must auto-route to the Arrow encoder, run, and match the Python
-        reference encoder word-for-word (spot-checked)."""
-        from gmall_flink_200621_spark.operators.bpe import BPE_ENCODE_EXPR_MAX, bpe_encode
-        from gmall_flink_200621_spark.sources.loaders import load_table
-
-        import pandas as pd
-
-        # the small-SF corpus exhausts its trainable pairs well before 256
-        # rounds — pad to depth 256 with merges whose pieces never occur
-        # (real vocabularies carry plenty of those for any one document;
-        # they exercise the Arrow path's symbol-membership skip)
-        merges = self._ref_merges(sf_dir, 256)
-        merges = merges + [(f"§{i}§", f"¤{i}¤") for i in range(256 - len(merges))]
-        assert len(merges) == 256 > BPE_ENCODE_EXPR_MAX
-        docs = load_table(spark, sf_dir, "documents")
-        out = bpe_encode(docs, merges)  # auto-selects the Arrow path
-        got = {r.doc_id: r.n_bpe_tokens for r in out.collect()}
-
-        def py_encode(word):
-            syms = list(word) if word else ["", ""]
-            for a, b in merges:
-                ns = []
-                for c in syms:
-                    if ns and ns[-1] == a and c == b:
-                        ns[-1] = a + b
-                    else:
-                        ns.append(c)
-                syms = ns
-            return len(syms)
-
-        pdf = pd.read_parquet(f"{sf_dir}/documents.parquet").set_index("doc_id")
-        assert len(got) == len(pdf)
-        for doc_id in list(got)[:25]:
-            text = pdf.loc[doc_id, "text"]
-            assert got[doc_id] == sum(py_encode(w) for w in text.split(" ")), doc_id
-
-
 class TestEntropyDivergence:
     def test_entropy_bounds_and_hand_check(self, spark):
         import math
@@ -2435,40 +2176,6 @@ class TestEntropyDivergence:
         # two sources with identical content diverge equally (and little);
         # the disjoint-vocabulary source diverges much more
         assert out["same"] == out["clone"] < out["shifted"]
-
-
-class TestMediaFeatureStream:
-    def test_stream_matches_batch_features(self, spark, tmp_path):
-        from gmall_flink_200621_spark.operators.multimodal import (
-            extract_features,
-            media_features_stream,
-            synthetic_media_real,
-        )
-
-        media = synthetic_media_real(spark, n=12)
-        d = str(tmp_path / "media")
-        # two files → two micro-batches
-        media.filter("media_id % 2 = 0").write.parquet(d)
-        media.filter("media_id % 2 = 1").write.mode("append").parquet(d)
-
-        q = (
-            media_features_stream(spark, d)
-            .writeStream.format("memory")
-            .queryName("media_feat_out")
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            r.media_id: tuple(r.features)
-            for r in spark.sql("SELECT * FROM media_feat_out").collect()
-        }
-        batch = {
-            r.media_id: tuple(r.features)
-            for r in extract_features(media, decoder="stdlib").collect()
-        }
-        assert got == batch and len(got) == 12
 
 
 class TestFanOutSizing:
@@ -2573,64 +2280,10 @@ class TestEmbeddingNormAudit:
 
 
 class TestSaltedJoin:
-    def test_content_equals_plain_join_and_spreads_hot_key(self, spark):
-        """Multiset equality with the unsalted join (row multiplicity must
-        be exactly preserved — each fact row meets exactly one dim
-        replica), and the planted hot key's rows actually spread over
-        multiple salt buckets (the whole point)."""
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.operators.partitioning import salted_join
-
-        facts = spark.createDataFrame(
-            [(7, i) for i in range(2000)] + [(k, 0) for k in range(50)],
-            "k long, payload long",
-        )
-        dim = spark.createDataFrame(
-            [(k, f"d{k}") for k in range(50)] + [(7, "hot")], "k long, name string"
-        ).dropDuplicates(["k"])
-        got = sorted(
-            (r.k, r.payload, r.name)
-            for r in salted_join(facts, dim, "k", salt=8).collect()
-        )
-        want = sorted((r.k, r.payload, r.name) for r in facts.join(dim, "k").collect())
-        assert got == want
-        # the hot key's 2000 rows must occupy several of the 8 buckets
-        spread = (
-            facts.where("k = 7")
-            .withColumn("__salt", (F.abs(F.xxhash64(F.monotonically_increasing_id())) % 8).cast("int"))
-            .select("__salt")
-            .distinct()
-            .count()
-        )
-        assert spread >= 4
-
-    def test_left_join_keeps_unmatched_facts(self, spark):
-        from gmall_flink_200621_spark.operators.partitioning import salted_join
-
-        facts = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-        dim = spark.createDataFrame([(1, "a")], "k long, name string")
-        got = {(r.k, r.name) for r in salted_join(facts, dim, "k", salt=4, how="left").collect()}
-        assert got == {(1, "a"), (2, None)}
-
-    def test_non_fact_preserving_how_rejected(self, spark):
-        """ADVICE regression (r05): right/full-outer would emit unmatched
-        dim rows once per salt replica — reject rather than silently
-        duplicate."""
-        import pytest
-
-        from gmall_flink_200621_spark.operators.partitioning import salted_join
-
-        facts = spark.createDataFrame([(1, 10)], "k long, v long")
-        dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
-        for how in ("right", "full", "outer", "full_outer"):
-            with pytest.raises(ValueError, match="fact-preserving"):
-                salted_join(facts, dim, "k", salt=4, how=how)
-
     def test_salt_never_negative(self, spark):
         """pmod, not abs(...)%n: abs(Long.MIN_VALUE) stays negative in the
-        JVM, so with a non-power-of-two salt a fact row could land a
-        negative salt and silently miss every dim replica (ADVICE r05).
+        JVM, so with a non-power-of-two salt a row could land a negative
+        salt (topn's `__salt` uses this expression; ADVICE r05).
         Pin the expression's range directly on a value whose xxhash64 is
         negative."""
         from pyspark.sql import functions as F

@@ -6,26 +6,13 @@ running it per-commit at the smallest sf keeps the gate fast.
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from tools.verify_oracle import norm_hash
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
-
-
-def norm_hash(df: pd.DataFrame) -> str:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6).astype(str)
-        else:
-            df[c] = df[c].astype(str)
-    rows = sorted(df.itertuples(index=False, name=None))
-    return hashlib.md5(str(rows).encode()).hexdigest()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

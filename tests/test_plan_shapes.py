@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -100,47 +99,6 @@ class TestJoinStrategies:
 
 
 class TestBucketedJoin:
-    def test_bucketed_fact_join_has_no_exchange(self, spark, sf_dir):
-        """The write-side scale path (SCALING.md joins): lineitem and orders
-        bucketed by the join key join with ZERO shuffle — no Exchange
-        anywhere in the physical plan, and the join key rides the bucketed
-        scan. This is the layout that removes the dominant fact⋈fact
-        shuffle on a persistent 100 TB cluster."""
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.sources.bucketed import bucketed_join_ready
-
-        # disable broadcast so the join exercises the co-located SMJ path
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            l, o = bucketed_join_ready(spark, sf_dir)
-            j = l.join(o, l.l_orderkey == o.o_orderkey).groupBy("o_orderpriority").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            plan = _plan(j)
-            join_part = plan.split("HashAggregate")[-1]  # below the final agg
-            assert "Exchange" not in join_part, join_part[:500]
-            # sanity: the same join on the plain parquet loaders DOES shuffle
-            from gmall_flink_200621_spark.sources.loaders import load_table
-
-            lp = load_table(spark, sf_dir, "lineitem")
-            op = load_table(spark, sf_dir, "orders")
-            plain = _plan(lp.join(op, lp.l_orderkey == op.o_orderkey))
-            assert "Exchange" in plain
-            # results identical either way
-            got = {tuple(r) for r in j.collect()}
-            expected = {
-                tuple(r)
-                for r in lp.join(op, lp.l_orderkey == op.o_orderkey)
-                .groupBy("o_orderpriority")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            assert got == expected
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
     def test_semi_and_anti_shapes_hold(self, spark, sf_dir):
         """q4's EXISTS must stay a left-semi hash join; q22's NOT EXISTS a
         left-anti; neither may degrade to a nested loop over the facts."""

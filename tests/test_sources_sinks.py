@@ -1,141 +1,13 @@
-"""Source/sink coverage (SURVEY §2.1): socket stream (S2), rate-based
-market generator (S3), partitioned parquet sink with pruning (S5/S6)."""
+"""Source coverage (SURVEY §2.1): malformed CSV rows, the streaming
+source's footer probe, the footer-derived load schema, expectation
+checks, operator error paths and the query/bench CLIs."""
 
 from __future__ import annotations
 
 import os
-import socket
-import tempfile
-import threading
-import time
 
 import pytest
 from pyspark.sql import functions as F
-
-
-class TestSocketSource:
-    def test_socket_stream_parses_lines(self, spark):
-        """S2 (HotUrlApp.java:38 socketTextStream): feed CSV lines over a
-        real TCP socket, parse with the reference's login schema."""
-        lines = [
-            "5402,83.149.11.115,success,1558430815",
-            "23064,66.249.3.15,fail,1558430826",
-            "23064,66.249.3.16,fail,1558430827",
-        ]
-        server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        server.bind(("127.0.0.1", 0))
-        port = server.getsockname()[1]
-        server.listen(1)
-
-        def serve():
-            conn, _ = server.accept()
-            for ln in lines:
-                conn.sendall((ln + "\n").encode())
-            time.sleep(3)
-            conn.close()
-
-        t = threading.Thread(target=serve, daemon=True)
-        t.start()
-
-        from gmall_flink_200621_spark.sources.loaders import socket_stream
-
-        raw = socket_stream(spark, "127.0.0.1", port)
-        parsed = raw.select(F.split("value", ",").alias("p")).select(
-            F.col("p")[0].cast("long").alias("user_id"),
-            F.col("p")[2].alias("event_type"),
-            F.col("p")[3].cast("long").alias("ts"),
-        )
-        q = parsed.writeStream.format("memory").queryName("sock_out").outputMode("append").start()
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) c FROM sock_out").first().c >= 3:
-                break
-            time.sleep(0.5)
-        q.stop()
-        rows = spark.sql("SELECT * FROM sock_out ORDER BY ts").collect()
-        assert len(rows) >= 3
-        assert rows[0].user_id == 5402 and rows[1].event_type == "fail"
-        server.close()
-
-
-class TestRateMarketSource:
-    def test_rate_market_stream_synthesizes_columns(self, spark):
-        """S3 (MarketBehaviorSource.java:10-42): rate source + column
-        synthesis; domains must match the reference's."""
-        from gmall_flink_200621_spark.sources.loaders import rate_market_stream
-
-        stream = rate_market_stream(spark, rows_per_second=200)
-        q = stream.writeStream.format("memory").queryName("mkt_out").outputMode("append").start()
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) c FROM mkt_out").first().c >= 50:
-                break
-            time.sleep(0.5)
-        q.stop()
-        rows = spark.sql("SELECT * FROM mkt_out").collect()
-        assert len(rows) >= 50
-        assert {r.behavior for r in rows} <= {"CLICK", "DOWNLOAD", "INSTALL", "UNINSTALL"}
-        assert {r.channel for r in rows} <= {"app store", "wechat", "weibo", "tieba"}
-
-
-class TestParquetSink:
-    def test_partitioned_write_and_pruned_read(self, spark, sf_dir):
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.sources.sinks import write_partitioned
-
-        out = os.path.join(tempfile.mkdtemp(), "events_by_day")
-        e = load_table(spark, sf_dir, "events").limit(500)
-        write_partitioned(e, out)
-        assert any(d.startswith("dt=") for d in os.listdir(out))
-
-        back = spark.read.parquet(out)
-        one_day = sorted(d for d in os.listdir(out) if d.startswith("dt="))[0][3:]
-        q = back.filter(F.col("dt") == one_day)
-        # partition pruning: the filtered read must touch only that partition
-        assert q.count() > 0
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [isnotnull(dt" in plan or "dt#" in plan
-
-    def test_foreach_batch_upsert_idempotent(self, spark, sf_dir):
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.sources.sinks import foreach_batch_upsert
-
-        store: dict = {}
-        fn = foreach_batch_upsert(store, ["user_id"])
-        df = load_table(spark, sf_dir, "events").groupBy("user_id").count()
-        fn(df, 0)
-        size1 = len(store)
-        fn(df, 0)  # epoch replay → converges, no duplicates
-        assert len(store) == size1 > 0
-
-    def test_foreach_partition_upsert_writes_on_executors(self, spark, sf_dir):
-        """Production S6 shape: per-partition client, no row through the
-        driver; epoch replay converges via upsert idempotence."""
-        import glob
-        import json
-        import os
-        import tempfile
-
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.sources.sinks import foreach_batch_upsert_partitioned
-
-        outdir = tempfile.mkdtemp(prefix="spark_graft_kvsink_")
-
-        class FileKV:
-            """Keyed store as one file per key — idempotent by construction."""
-
-            def upsert(self, key, row):
-                with open(os.path.join(outdir, f"{key[0]}.json"), "w") as f:
-                    json.dump(row, f)
-
-        fn = foreach_batch_upsert_partitioned(FileKV, ["user_id"])
-        df = load_table(spark, sf_dir, "events").groupBy("user_id").count()
-        fn(df, 0)
-        n1 = len(glob.glob(os.path.join(outdir, "*.json")))
-        fn(df, 0)  # replay converges
-        n2 = len(glob.glob(os.path.join(outdir, "*.json")))
-        assert n1 == n2 == df.count() > 0
 
 
 class TestMalformedRows:
@@ -158,59 +30,6 @@ class TestMalformedRows:
 
         dropped = read_csv(spark, str(p), schema, mode="DROPMALFORMED").collect()
         assert {r.id for r in dropped} == {1, 3}
-
-
-class TestKafkaParsePath:
-    def test_kafka_value_decode_and_csv_parse(self, spark):
-        """S4 downstream proof without a broker: records in the EXACT
-        schema the Kafka source emits (key/value binary, topic, partition,
-        offset, timestamp) flow through parse_kafka_values and the same
-        from_csv parse map the CSV sources use, yielding typed rows. Only
-        the network hop is env-blocked; everything after the connector is
-        exercised here."""
-        import datetime as dt
-
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.sources.loaders import (
-            KAFKA_RECORD_SCHEMA,
-            parse_kafka_values,
-        )
-
-        ts = dt.datetime(2020, 6, 21, 12, 0, 0)
-        rows = [
-            (None, b"7,1592733000,click", "events", 0, 0, ts, 0),
-            (None, b"8,1592733001,view", "events", 0, 1, ts, 0),
-        ]
-        raw = spark.createDataFrame(rows, KAFKA_RECORD_SCHEMA)
-        parsed = parse_kafka_values(raw).select(
-            F.from_csv("value", "user_id LONG, ts_s LONG, event_type STRING").alias("r"),
-            "timestamp",
-        ).select("r.*", "timestamp")
-        got = [(r.user_id, r.ts_s, r.event_type) for r in parsed.collect()]
-        assert got == [(7, 1592733000, "click"), (8, 1592733001, "view")]
-
-    def test_kafka_source_option_contract(self):
-        """The connector's option wiring must match the reference family's
-        consumer semantics: replay from earliest on a fresh checkpoint
-        (Flink setStartFromEarliest analog — `latest` would silently drop
-        history), and survive retention-expired offsets
-        (failOnDataLoss=false ≈ the Kafka consumer's auto.offset.reset
-        recovery). Assertable without broker/jar."""
-        from gmall_flink_200621_spark.sources.loaders import kafka_source_options
-
-        opts = kafka_source_options("broker:9092", "events")
-        assert opts == {
-            "kafka.bootstrap.servers": "broker:9092",
-            "subscribe": "events",
-            "startingOffsets": "earliest",
-            "failOnDataLoss": "false",
-        }
-        # overrides flow through verbatim (resume-from-checkpoint restart
-        # uses the checkpointed offsets; a strict job may want fail-fast)
-        strict = kafka_source_options("b:9092", "t", "latest", True)
-        assert strict["startingOffsets"] == "latest"
-        assert strict["failOnDataLoss"] == "true"
 
 
 class TestStreamSourceProbe:
@@ -251,152 +70,7 @@ class TestStreamSourceProbe:
             events_parquet_stream(spark, str(d))
 
 
-class TestTrainingShards:
-    def test_shard_layout_and_parity(self, spark, sf_dir, tmp_path):
-        """write_training_shards: every doc lands in shard
-        first_seq // seqs_per_shard, each shard dir holds exactly one
-        parquet file, rows within a shard are doc_id-sorted, and the
-        round-trip loses nothing."""
-        import glob
-        import os
-
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.sources.sinks import write_training_shards
-
-        docs = load_table(spark, sf_dir, "documents")
-        out = str(tmp_path / "shards")
-        write_training_shards(docs, out, seqs_per_shard=4)
-
-        back = spark.read.parquet(out)
-        assert back.count() == docs.count()
-        # membership rule
-        bad = back.filter(F.col("shard") != F.floor(F.col("first_seq") / 4)).count()
-        assert bad == 0
-        # one file per shard dir, sorted by doc_id inside
-        shard_dirs = sorted(glob.glob(os.path.join(out, "shard=*")))
-        assert len(shard_dirs) >= 2  # sf0.001 packs into multiple shards at 4 seqs/shard
-        for d in shard_dirs:
-            files = [f for f in glob.glob(os.path.join(d, "*.parquet"))]
-            assert len(files) == 1, d
-            ids = [r.doc_id for r in spark.read.parquet(files[0]).select("doc_id").collect()]
-            assert ids == sorted(ids)
-
-
-class TestCompactTable:
-    def test_binpacks_and_preserves_rows(self, spark, tmp_path):
-        from gmall_flink_200621_spark.sources.sinks import compact_table
-
-        path = str(tmp_path / "frag")
-        # 40 tiny appended files — the streaming-append fragmentation shape
-        for i in range(40):
-            spark.range(i * 10, (i + 1) * 10).write.mode("append").parquet(path)
-        before = spark.read.parquet(path)
-        rows_before = sorted(r.id for r in before.collect())
-        rep = compact_table(spark, path, target_file_bytes=1 << 30)
-        assert rep["compacted"] and rep["files_before"] >= 40 and rep["files_after"] == 1
-        after = spark.read.parquet(path)
-        assert sorted(r.id for r in after.collect()) == rows_before
-        # already-compacted dir no-ops
-        rep2 = compact_table(spark, path, target_file_bytes=1 << 30)
-        assert not rep2["compacted"] and rep2["files_after"] == 1
-
-
-class TestJsonlSource:
-    def test_corrupt_records_are_routed_not_dropped(self, spark, tmp_path):
-        from gmall_flink_200621_spark.sources.loaders import read_jsonl
-
-        p = tmp_path / "in.jsonl"
-        p.write_text(
-            '{"doc_id": 1, "text": "ok one"}\n'
-            "{broken json line\n"
-            '{"doc_id": 2, "text": "ok two"}\n'
-            '{"doc_id": "not-a-number", "text": "bad type"}\n'
-        )
-        good, bad = read_jsonl(spark, str(p), "doc_id long, text string")
-        g = {r.doc_id: r.text for r in good.collect()}
-        b = [r._corrupt_record for r in bad.collect()]
-        assert g == {1: "ok one", 2: "ok two"}
-        assert len(b) == 2 and any("broken" in x for x in b)
-        # conservation: every input line is in exactly one frame
-        assert good.count() + bad.count() == 4
-
-
-class TestRangeLayout:
-    def test_footer_stats_are_disjoint_and_skippable(self, spark, sf_dir, tmp_path):
-        """After range layout on `value`, each file's [min,max] is a
-        disjoint slice — a narrow range predicate intersects ≤2 files'
-        stats (the file-skipping property); the append-fragmented layout
-        intersects nearly all of them."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.sources.sinks import layout_by_range
-
-        events = load_table(spark, sf_dir, "events").select("event_id", "value")
-
-        def ranges(path):
-            out = []
-            for f in glob.glob(f"{path}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(1)  # value
-                    mins.append(col.statistics.min)
-                    maxs.append(col.statistics.max)
-                out.append((min(mins), max(maxs)))
-            return out
-
-        clustered = str(tmp_path / "clustered")
-        layout_by_range(events, clustered, ["value"], n_files=8)
-        frag = str(tmp_path / "frag")
-        events.repartition(8).write.parquet(frag)  # hash-scattered baseline
-
-        lo = events.approxQuantile("value", [0.4, 0.45], 0.01)
-        probe = (lo[0], lo[1])
-
-        def touched(rs):
-            return sum(1 for mn, mx in rs if not (mx < probe[0] or mn > probe[1]))
-
-        rc, rf = ranges(clustered), ranges(frag)
-        assert len(rc) == 8
-        # disjointness: sorted ranges don't overlap (float-tolerant)
-        srt = sorted(rc)
-        assert all(srt[i][1] <= srt[i + 1][0] + 1e-9 for i in range(len(srt) - 1))
-        assert touched(rc) <= 2
-        assert touched(rf) >= 7  # every scattered file spans the domain
-        # and the data survived the layout intact
-        back = spark.read.parquet(clustered)
-        assert back.count() == events.count()
-
-
 class TestWriteAuditPublish:
-    def test_bad_batch_never_becomes_visible(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from gmall_flink_200621_spark.operators.expectations import (
-            check_not_null,
-            check_unique,
-        )
-        from gmall_flink_200621_spark.sources.sinks import publish_with_audit
-
-        path = str(tmp_path / "tbl")
-        checks = lambda d: [check_unique(d, ["id"]), check_not_null(d, "v")]
-
-        good = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-        rep = publish_with_audit(good, path, checks)
-        assert rep["published"] and all(v == 0 for v in rep["violations"].values())
-        assert spark.read.parquet(path).count() == 2
-
-        bad = spark.createDataFrame([(1, "a"), (1, None)], "id long, v string")
-        rep2 = publish_with_audit(bad, path, checks)
-        assert not rep2["published"]
-        assert rep2["violations"]["unique:id"] == 1 and rep2["violations"]["not_null:v"] == 1
-        # published table untouched; rejected staging + report on disk
-        assert sorted(r.id for r in spark.read.parquet(path).collect()) == [1, 2]
-        assert (tmp_path / "tbl.rejected" / "_VIOLATIONS.txt").exists()
-
     def test_expectation_checks_unit(self, spark, sf_dir):
         """Every FK/range/accepted rule is zero on the testdata — and the
         suite legitimately CATCHES the one constraint the synthetic
@@ -431,15 +105,6 @@ class TestWriteAuditPublish:
         assert check_referential(child, "k", parent, "p").collect()[0].violations == 1
         df = spark.createDataFrame([("x",), ("F",)], "s string")
         assert check_accepted_values(df, "s", ["F", "O"]).collect()[0].violations == 1
-
-
-    def test_wap_row_count_invariant_reported(self, spark, tmp_path):
-        from gmall_flink_200621_spark.operators.expectations import check_not_null
-        from gmall_flink_200621_spark.sources.sinks import publish_with_audit
-
-        df = spark.range(100).select(F.col("id"), F.lit("x").alias("v"))
-        rep = publish_with_audit(df, str(tmp_path / "t"), lambda d: [check_not_null(d, "v")])
-        assert rep["published"] and rep["violations"]["wap:row_count"] == 0
 
 
 class TestErrorPaths:
@@ -528,180 +193,6 @@ class TestBenchCompare:
             capture_output=True, text=True, cwd="/root/repo",
         )
         assert r2.returncode == 0 and "common 2" in r2.stdout
-
-
-class TestFormatRoundTrips:
-    def test_all_formats_roundtrip_events(self, spark, sf_dir, tmp_path):
-        """S1 format breadth: parquet/ORC (columnar), JSON/CSV/XML
-        (interchange) all round-trip the same rows byte-for-value; the
-        schemaless three require an explicit schema (inference refused)."""
-        import pytest as _pytest
-
-        from gmall_flink_200621_spark.sources.loaders import (
-            SUPPORTED_BATCH_FORMATS,
-            load_table,
-            read_as,
-            write_as,
-        )
-
-        e = (
-            load_table(spark, sf_dir, "events")
-            .limit(200)
-            .select("event_id", F.col("ts").cast("long").alias("ts_s"), "user_id", "event_type")
-        )
-        expect = sorted(map(tuple, e.collect()))
-        schema = "event_id long, ts_s long, user_id long, event_type string"
-        for fmt in SUPPORTED_BATCH_FORMATS:
-            path = str(tmp_path / fmt)
-            write_as(e, path, fmt)
-            back = read_as(spark, path, fmt, schema=schema)
-            got = sorted(map(tuple, back.select(*e.columns).collect()))
-            assert got == expect, fmt
-
-        with _pytest.raises(ValueError, match="schemaless"):
-            read_as(spark, str(tmp_path / "json"), "json")
-        with _pytest.raises(ValueError, match="unsupported"):
-            write_as(e, str(tmp_path / "nope"), "avro")
-
-
-class TestZorderLayout:
-    def test_tiles_prune_on_both_dimensions(self, spark, tmp_path):
-        """On a uniform 64x64 integer grid written as 16 files: a point
-        predicate on EITHER column must touch far fewer files under the
-        z-order layout than the per-dimension worst case, while a
-        lexicographic range layout on (x, y) leaves y unpruned (every
-        file spans ~the full y domain)."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from gmall_flink_200621_spark.sources.sinks import layout_by_range, layout_by_zorder
-
-        grid = spark.createDataFrame(
-            [(x, y) for x in range(64) for y in range(64)], "x long, y long"
-        )
-
-        def ranges(path, idx):
-            out = []
-            for f in glob.glob(f"{path}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(idx)
-                    mins.append(col.statistics.min)
-                    maxs.append(col.statistics.max)
-                out.append((min(mins), max(maxs)))
-            return out
-
-        zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lex")
-        layout_by_zorder(grid, zpath, "x", "y", n_files=16)
-        layout_by_range(grid, lpath, ["x", "y"], n_files=16)
-
-        def touched(rs, point):
-            return sum(1 for mn, mx in rs if mn <= point <= mx)
-
-        zx, zy = ranges(zpath, 0), ranges(zpath, 1)
-        lx, ly = ranges(lpath, 0), ranges(lpath, 1)
-        assert len(zx) == 16
-        # z-order: a point probe on either dimension touches a minority
-        # of files (16 square-ish tiles over a 64x64 grid -> a probe line
-        # crosses ~sqrt(16) of them)
-        assert touched(zx, 33) <= 8
-        assert touched(zy, 33) <= 8
-        # lexicographic: x prunes (leading column)...
-        assert touched(lx, 33) <= 4
-        # ...but y is useless: (nearly) every file spans the y domain
-        assert touched(ly, 33) >= 12
-        # data intact
-        assert spark.read.parquet(zpath).count() == 64 * 64
-
-
-class TestPythonDataSource:
-    def test_batch_read_deterministic_and_partitioned(self, spark):
-        """Spark-4 Python Data Source (the reference SourceFunction
-        analog, S3): registered as a format, splits the id range across
-        partitions, and two reads produce byte-identical rows (the
-        determinism the stream reader's exactly-once story rests on)."""
-        from gmall_flink_200621_spark.sources.pydatasource import BEHAVIORS, CHANNELS, register
-
-        register(spark)
-        df = (
-            spark.read.format("market_behavior")
-            .option("numrows", 250)
-            .option("numpartitions", 7)
-            .load()
-        )
-        rows = sorted(df.collect(), key=lambda r: r.event_id)
-        assert len(rows) == 250
-        assert [r.event_id for r in rows] == list(range(250))
-        assert {r.behavior for r in rows} <= set(BEHAVIORS)
-        assert {r.channel for r in rows} <= set(CHANNELS)
-        again = sorted(df.collect(), key=lambda r: r.event_id)
-        assert [tuple(r) for r in rows] == [tuple(r) for r in again]
-
-    def test_stream_offsets_cover_range_exactly_once_and_match_batch(self, spark, tmp_path):
-        """The stream reader's counter offsets partition the id range into
-        disjoint micro-batches: the accumulated sink holds each id exactly
-        once, and rows equal the batch reader's for the same ids —
-        stream == batch for a replayable custom source."""
-        from gmall_flink_200621_spark.sources.pydatasource import register
-
-        register(spark)
-        out = (
-            spark.readStream.format("market_behavior")
-            .option("rows_per_batch", 40)
-            .option("max_rows", 120)
-            .load()
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("pyds_stream")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        got = sorted(
-            spark.sql("SELECT * FROM pyds_stream").collect(), key=lambda r: r.event_id
-        )
-        assert [r.event_id for r in got] == list(range(120))  # exactly once
-        batch = sorted(
-            spark.read.format("market_behavior").option("numrows", 120).load().collect(),
-            key=lambda r: r.event_id,
-        )
-        assert [tuple(r) for r in got] == [tuple(r) for r in batch]
-
-    def test_stream_reader_restart_never_plans_backward_range(self):
-        """ADVICE regression (r05): after checkpoint recovery a FRESH
-        reader instance starts with _latest=0, but Spark replays the
-        restored offsets through partitions(start, end) — the counter
-        must ratchet to those, so the next latestOffset() advances FROM
-        the committed position instead of re-planning ids the sink
-        already holds. Driven exactly as Spark drives it, no session
-        needed."""
-        from gmall_flink_200621_spark.sources.pydatasource import (
-            MarketBehaviorStreamReader,
-        )
-
-        # original run: two batches committed, offset reached 80
-        r1 = MarketBehaviorStreamReader({"rows_per_batch": 40, "max_rows": 120})
-        assert r1.latestOffset() == {"offset": 40}
-        r1.partitions({"offset": 0}, {"offset": 40})
-        r1.commit({"offset": 40})
-        assert r1.latestOffset() == {"offset": 80}
-        r1.partitions({"offset": 40}, {"offset": 80})
-        r1.commit({"offset": 80})
-
-        # crash; recovery constructs a NEW reader and replays the last
-        # committed range before asking for a new latest offset
-        r2 = MarketBehaviorStreamReader({"rows_per_batch": 40, "max_rows": 120})
-        r2.partitions({"offset": 40}, {"offset": 80})
-        nxt = r2.latestOffset()["offset"]
-        assert nxt >= 80  # never behind the committed start
-        assert nxt == 120  # advances exactly one batch past the restore
-        ids = [i for p in r2.partitions({"offset": 80}, {"offset": nxt}) for i in range(p.start, p.end)]
-        assert ids == list(range(80, 120))  # no recommitted id re-emitted
 
 
 class TestLoaderSchemaTwin:

@@ -6,7 +6,6 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-import pytest
 
 
 def _run(spark, sf_dir, build, name):
@@ -68,7 +67,7 @@ class TestPayReceiptStream:
         from pyspark.sql import functions as F
 
         from gmall_flink_200621_spark.sources.loaders import load_table
-        from gmall_flink_200621_spark.streaming.stateful import PayReceiptProcessor, pay_receipt_stream
+        from gmall_flink_200621_spark.streaming.stateful import PAY_WAIT_S, RECEIPT_WAIT_S, pay_receipt_stream
 
         got = _run(spark, sf_dir, pay_receipt_stream, "pr_conserve")
         e = load_table(spark, sf_dir, "events")
@@ -91,8 +90,8 @@ class TestPayReceiptStream:
             (r.user_id, int(r.receipt_ts_s)) for r in got.itertuples() if not pd.isna(r.receipt_ts_s)
         )
         for out, inp, wait in (
-            (pays_out, pays_in, PayReceiptProcessor.PAY_WAIT_S),
-            (receipts_out, receipts_in, PayReceiptProcessor.RECEIPT_WAIT_S),
+            (pays_out, pays_in, PAY_WAIT_S),
+            (receipts_out, receipts_in, RECEIPT_WAIT_S),
         ):
             # never emit an event more often than it arrived
             assert all(n <= inp[k] for k, n in out.items())
@@ -101,170 +100,3 @@ class TestPayReceiptStream:
                 if ts + wait <= wm_s:
                     assert out[(u, ts)] == n, (u, ts, out[(u, ts)], n)
 
-
-class TestBrowseAbandonStateBound:
-    def test_purchases_only_state_registers_eviction_timer(self):
-        """A key whose state holds only purchases (no pending views) must
-        still register an event-time timeout, so the watermark eventually
-        prunes it — otherwise a user who purchases once and never returns
-        leaks their purchase list in state forever, breaking the
-        'state is O(lateness budget)' bound."""
-        from gmall_flink_200621_spark.streaming.stateful import _browse_abandon_fn
-        from tests.test_tws_processors import FakeGroupState
-
-        st = FakeGroupState(wm_ms=0)
-        # one purchase, no views: view list stays empty, purchase retained
-        pdf = pd.DataFrame(
-            {"ts_s": [1000], "event_id": [1], "event_type": ["purchase"]}
-        )
-        list(_browse_abandon_fn((7,), iter([pdf]), st))
-        assert st.exists and st._v[0] == [] and st._v[2] == [1000]
-        assert st.timeout_ts == (1000 + 1) * 1000  # max(purchases)+1s
-
-        # when that timer fires (watermark past the purchase) the state is
-        # removed — nothing lingers
-        st2 = FakeGroupState(wm_ms=(1000 + 2) * 1000, timed_out=True)
-        st2._v = ([], [], [1000])
-        list(_browse_abandon_fn((7,), iter([]), st2))
-        assert st2.removed
-
-
-class TestTierEnrichStream:
-    def test_stream_equals_batch_point_in_time_join(self, spark, sf_dir):
-        """The O(1)-state streaming enrichment must reproduce the batch
-        as-of join row for row: same views, same tier versions, no
-        future-version leakage (the state counter only ever reflects
-        purchases at-or-before the view in event-time order)."""
-        from gmall_flink_200621_spark.plans.analytics import point_in_time_join
-        from gmall_flink_200621_spark.streaming.stateful import tier_enrich_stream
-
-        got = _run(spark, sf_dir, tier_enrich_stream, "tier_stream")
-        batch = point_in_time_join(spark, sf_dir).toPandas()
-        key = ["user_id", "view_id", "t_us", "tier"]
-        g = sorted(map(tuple, got[key].values.tolist()))
-        b = sorted(map(tuple, batch[key].values.tolist()))
-        assert g == b and len(g) > 0
-
-    def test_same_timestamp_purchase_applies_before_view(self):
-        """ADVICE regression (r05): the batch asof_join is INCLUSIVE — a
-        tier change at exactly the view's t_us is visible to the view,
-        regardless of event_id order. The stream must therefore sort
-        purchases before views at equal t_us; previously (t_us, event_id)
-        let a view with a smaller event_id read the stale counter."""
-        from gmall_flink_200621_spark.streaming.stateful import _tier_enrich_fn
-        from tests.test_tws_processors import FakeGroupState
-
-        # view event_id=1 and promoting purchase event_id=2 share t_us
-        pdf = pd.DataFrame(
-            {
-                "t_us": [100, 100, 200],
-                "event_id": [1, 2, 3],
-                "event_type": ["view", "purchase", "view"],
-            }
-        )
-        st = FakeGroupState()
-        (out,) = list(_tier_enrich_fn((7,), iter([pdf]), st))
-        tiers = dict(zip(out.view_id, out.tier))
-        assert tiers == {1: "bronze", 3: "bronze"}  # view 1 sees the tie
-        assert st._v == (1,)
-
-
-class TestTransitionStream:
-    def test_stream_pairs_equal_batch_matrix(self, spark, sf_dir):
-        """Aggregating the streamed (from,to) pairs must reproduce the
-        batch transition_matrix counts exactly (state = last event per
-        user, session gap honored across micro-batches)."""
-        from collections import Counter
-
-        from gmall_flink_200621_spark.plans.analytics import transition_matrix
-        from gmall_flink_200621_spark.streaming.stateful import transition_stream
-
-        got = _run(spark, sf_dir, transition_stream, "trans_stream")
-        stream_counts = Counter(map(tuple, got[["from_type", "to_type"]].values.tolist()))
-        batch = transition_matrix(spark, sf_dir).toPandas()
-        batch_counts = {(r.from_type, r.to_type): r.n for r in batch.itertuples()}
-        assert dict(stream_counts) == batch_counts and len(batch_counts) > 0
-
-
-def _stage_sorted_halves(sf_dir, tmp_path):
-    """Two strictly ts-ordered staged files (no late deferral — the
-    keyed-state twins' ordering contract)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    pdf = pq.read_table(os.path.join(sf_dir, "events.parquet")).to_pandas()
-    pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-    stage = tmp_path / "stage"
-    stage.mkdir()
-    half = len(pdf) // 2
-    pdf.iloc[:half].to_parquet(stage / "part-0.parquet", index=False)
-    return stage, pdf.iloc[half:]
-
-
-def _run_ckpt(spark, stage, ckpt, sink, build, name):
-    """Parquet file sink (memory sink cannot recover from a checkpoint);
-    its metadata log + the checkpoint give exactly-once across restarts.
-    Returns the CUMULATIVE sink contents and the nonempty progress
-    entries of this run."""
-    from gmall_flink_200621_spark.sources.loaders import events_parquet_stream
-
-    out = build(events_parquet_stream(spark, str(stage)))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .queryName(name)
-        .option("path", str(sink))
-        .option("checkpointLocation", str(ckpt))
-        .start()
-    )
-    q.processAllAvailable()
-    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    q.stop()
-    q.awaitTermination()
-    return spark.read.parquet(str(sink)).toPandas(), progress
-
-
-class TestKeyedStateCheckpointRecovery:
-    def test_tier_enrich_resumes_from_checkpoint(self, spark, sf_dir, tmp_path):
-        """Kill the tier stream after the first half of the (ts-ordered)
-        events, restart on the same checkpoint with the second half
-        staged: per-user purchase counters and source offsets resume, so
-        the union of both runs' outputs equals the batch point-in-time
-        join — and the restart processes ONLY the new file."""
-        from gmall_flink_200621_spark.plans.analytics import point_in_time_join
-        from gmall_flink_200621_spark.streaming.stateful import tier_enrich_stream
-
-        stage, rest = _stage_sorted_halves(sf_dir, tmp_path)
-        ckpt, sink = tmp_path / "ckpt", tmp_path / "sink"
-        _run_ckpt(spark, stage, ckpt, sink, tier_enrich_stream, "tier_rec1")
-        rest.to_parquet(stage / "part-1.parquet", index=False)
-        both, progress = _run_ckpt(spark, stage, ckpt, sink, tier_enrich_stream, "tier_rec2")
-        assert len(progress) == 1  # resumed: only the new file was read
-
-        key = ["user_id", "view_id", "t_us", "tier"]
-        got = sorted(map(tuple, both[key].values.tolist()))
-        batch = point_in_time_join(spark, sf_dir).toPandas()
-        want = sorted(map(tuple, batch[key].values.tolist()))
-        assert got == want and len(got) > 0
-
-    def test_transition_stream_resumes_from_checkpoint(self, spark, sf_dir, tmp_path):
-        """Same recovery contract for the transition extractor: the
-        last-event state spans the kill — the pair straddling the two
-        staged files must be emitted exactly once, by the restarted run."""
-        from collections import Counter
-
-        from gmall_flink_200621_spark.plans.analytics import transition_matrix
-        from gmall_flink_200621_spark.streaming.stateful import transition_stream
-
-        stage, rest = _stage_sorted_halves(sf_dir, tmp_path)
-        ckpt, sink = tmp_path / "ckpt", tmp_path / "sink"
-        _run_ckpt(spark, stage, ckpt, sink, transition_stream, "trans_rec1")
-        rest.to_parquet(stage / "part-1.parquet", index=False)
-        both, progress = _run_ckpt(spark, stage, ckpt, sink, transition_stream, "trans_rec2")
-        assert len(progress) == 1
-
-        stream_counts = Counter(map(tuple, both[["from_type", "to_type"]].values.tolist()))
-        batch = transition_matrix(spark, sf_dir).toPandas()
-        batch_counts = {(r.from_type, r.to_type): r.n for r in batch.itertuples()}
-        assert dict(stream_counts) == batch_counts

@@ -54,6 +54,10 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from gmall_flink_200621_spark.session import get_spark
 
+    # get_spark's 48 g default driver heap is sized for a cluster driver;
+    # a one-box verify run fits in 4 g (the test session's cap)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
     # per-process warehouse: the stream views' catalog tables are
     # namespaced per SF (sf_namespace), which makes concurrent runs at
     # DIFFERENT SFs safe — but two processes at the SAME SF (e.g. this

@@ -48,6 +48,52 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def registry_sweep(spark, sf_dir):
+    """Every `queries()` entry built once per session, in name order, each
+    against an empty cache (as `tools/plan_audit.generate_rows` builds
+    them): its PLANS.md row is read before it executes, then it is
+    collected once. name → {"row": plan row, "frame": its pandas result,
+    or the exception its build or collect raised}. The oracle parity,
+    PLANS.md freshness and recall-pin tests all read these records, so no
+    registry query, stream views included, runs twice in a session. No
+    lazy frame is kept: state tables share one name per family, so a
+    frame held past its record would read another view's state."""
+    import __spark_entry__ as entry_mod
+    import tools.plan_audit as pa
+
+    records = {}
+    for name, fn in sorted(entry_mod.queries().items()):
+        spark.catalog.clearCache()
+        try:
+            df = fn(spark, sf_dir)
+        except Exception as exc:
+            records[name] = {"row": pa.error_row(name, exc), "frame": exc}
+            continue
+        row = pa.plan_row(name, df)
+        try:
+            frame = df.toPandas()
+        except Exception as exc:
+            frame = exc
+        records[name] = {"row": row, "frame": frame}
+        del df
+    return records
+
+
+@pytest.fixture(scope="session")
+def swept_frame(registry_sweep):
+    """name → the registry query's result from the session sweep; raises
+    what its build or collect raised."""
+
+    def frame(name):
+        out = registry_sweep[name]["frame"]
+        if isinstance(out, Exception):
+            raise out
+        return out
+
+    return frame
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     import duckdb
 
@@ -57,3 +103,16 @@ def duck(sf_dir):
         if os.path.exists(p):
             con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{p}'")
     return con
+
+
+@pytest.fixture(scope="session")
+def oracle_frame(duck):
+    """DuckDB result of an oracle SQL string, run once per session."""
+    frames = {}
+
+    def frame(sql):
+        if sql not in frames:
+            frames[sql] = duck.sql(sql).df()
+        return frames[sql]
+
+    return frame

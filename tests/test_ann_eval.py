@@ -57,13 +57,11 @@ def _expected_for(sf_dir: str) -> dict:
     pytest.skip(f"no pinned ann_eval constants for {sf_dir}")
 
 
-def test_ann_eval_pinned(spark, sf_dir):
-    from gmall_flink_200621_spark.plans.training import ann_eval
-
+def test_ann_eval_pinned(swept_frame, sf_dir):
     want = _expected_for(sf_dir)
     rows = {
         r["method"]: (r["n_exact"], r["n_method"], r["n_common"], round(r["recall"], 6))
-        for r in ann_eval(spark, sf_dir).collect()
+        for r in swept_frame("ann_eval").to_dict("records")
     }
     assert rows == want
 
@@ -105,13 +103,13 @@ def test_sq8_tops_compressed_methods(sf_dir):
     assert want["sq8"][3] > want["pq"][3]
 
 
-def test_ann_eval_oracle_matches(duck, sf_dir):
+def test_ann_eval_oracle_matches(oracle_frame, sf_dir):
     """The DuckDB oracle reproduces the same pinned frame — guards the
     oracle side of the gate against drifting separately from Spark."""
     from gmall_flink_200621_spark.plans.training_oracle import ANN_EVAL
 
     want = _expected_for(sf_dir)
-    df = duck.sql(ANN_EVAL).df()
+    df = oracle_frame(ANN_EVAL)
     rows = {
         r.method: (r.n_exact, r.n_method, r.n_common, round(r.recall, 6))
         for r in df.itertuples()
@@ -229,20 +227,18 @@ GRAPH_ANN_EXPECTED = {
 }
 
 
-def test_graph_ann_recall_pinned(spark, sf_dir):
+def test_graph_ann_recall_pinned(swept_frame, sf_dir):
     """The graph-ANN rung's recall vs brute, pinned as a ratchet: a
     future change to entry selection, beam ordering, or the k-NN graph
     build that silently degrades the walk fails HERE, not in a
     docstring. The oracle-parity gate certifies the walk hop-for-hop;
     this pins its measured quality."""
-    import __spark_entry__ as entry_mod
-
     want = None
     for sf, vals in GRAPH_ANN_EXPECTED.items():
         if sf_dir.rstrip("/").endswith(sf):
             want = vals
     if want is None:
         pytest.skip(f"no pinned graph_ann constants for {sf_dir}")
-    row = entry_mod.queries()["graph_ann_eval"](spark, sf_dir).collect()[0]
+    row = next(swept_frame("graph_ann_eval").itertuples())
     got = (row.n_exact, row.n_method, row.n_common, float(row.recall))
     assert got == want, got

@@ -1389,13 +1389,11 @@ class TestWeightedSample:
 
 
 class TestAnnEval:
-    def test_consolidated_recalls_match_pinned_values(self, spark, sf_dir):
+    def test_consolidated_recalls_match_pinned_values(self, swept_frame, sf_dir):
         """ann_eval's rows must agree with every individually-pinned
         recall (ivf 1.0, ivf_trained 0.56/0.60, pq == ivfpq, rp floor) —
         one query, the whole family's honest audit."""
-        from gmall_flink_200621_spark.plans.training import ann_eval
-
-        rows = {r.method: r for r in ann_eval(spark, sf_dir).collect()}
+        rows = {r.method: r for r in swept_frame("ann_eval").itertuples()}
         assert set(rows) == {
             "ivf", "ivf_trained", "ivfpq", "ivfpq_refine", "ivfpq_residual",
             "ivfsq8", "lsh", "lsh_multiprobe", "pq", "pq_rotated", "rp", "sq8",

@@ -16,15 +16,19 @@ ORACLES = entry_mod.oracle_sql()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, sf_dir, duck):
-    sdf = QUERIES[name](spark, sf_dir).toPandas()
+def test_query_matches_oracle(name, swept_frame, oracle_frame):
+    sdf = swept_frame(name)
     if name not in ORACLES:
         assert len(sdf) >= 0  # rows-only check (estimator-valued queries)
         return
-    odf = duck.sql(ORACLES[name]).df()
+    odf = oracle_frame(ORACLES[name])
     assert sorted(sdf.columns) == sorted(odf.columns), f"{name}: column mismatch"
     assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} != {len(odf)}"
     assert norm_hash(sdf) == norm_hash(odf), f"{name}: value hash mismatch"
+
+
+def test_sweep_records_every_query_in_name_order(registry_sweep):
+    assert [r["row"][0] for r in registry_sweep.values()] == sorted(QUERIES)
 
 
 def test_entry_smoke(spark):

@@ -465,17 +465,17 @@ class TestAnnShapes:
 
 
 class TestPlansInventoryFresh:
-    def test_plans_md_matches_regenerated_inventory(self, spark):
+    def test_plans_md_matches_regenerated_inventory(self, registry_sweep, sf_dir):
         """PLANS.md is the judge-facing plan inventory; it must never go
         stale. Regenerate it (same session factory + confs as
-        tools/plan_audit.py) and compare byte-for-byte — on mismatch, run
+        tools/plan_audit.py, rows from the session's one registry sweep)
+        and compare byte-for-byte — on mismatch, run
         `python tools/plan_audit.py` and commit the result."""
         import os
 
         import tools.plan_audit as pa
 
-        sf_dir = "/root/testdata/sf0.001"
-        expected = pa.render(pa.generate_rows(spark, sf_dir), sf_dir)
+        expected = pa.render([r["row"] for r in registry_sweep.values()], sf_dir)
         with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")) as f:
             actual = f.read()
         assert actual == expected, "PLANS.md is stale — run: python tools/plan_audit.py"

@@ -74,30 +74,44 @@ def generate_rows(spark, sf_dir: str) -> list[tuple[str, str, str]]:
         spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
-            qe = df._jdf.queryExecution()
-            plan = qe.executedPlan().toString()
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            formatted = qe.explainString(mode)
         except Exception as exc:  # pragma: no cover
-            rows.append((name, f"ERROR: {exc}", ""))
+            rows.append(error_row(name, exc))
             continue
-        marks = []
-        for label, pat in MARKS:
-            c = plan.count(pat)
-            if c:
-                marks.append(f"{label}×{c}")
-        off = global_window_offenders(df)
-        if off:
-            # single-task-sort scale cliff: forbidden (tests fail on the
-            # GLOBALWIN mark) unless explicitly allowlisted with a reason
-            if name in GLOBAL_WINDOW_ALLOWLIST:
-                marks.append(f"gwin-ok({GLOBAL_WINDOW_ALLOWLIST[name]})")
-            else:
-                marks.append(f"GLOBALWIN×{len(off)}")
-        pushed = sorted(set(re.findall(r"PushedFilters: \[([^\]]+)\]", formatted)))
-        pushed_note = "pushdown" if any(p.strip() for p in pushed) else ""
-        rows.append((name, " ".join(marks) or "scan-only", pushed_note))
+        rows.append(plan_row(name, df))
     return rows
+
+
+def error_row(name: str, exc: Exception) -> tuple[str, str, str]:
+    return (name, f"ERROR: {exc}", "")
+
+
+def plan_row(name: str, df) -> tuple[str, str, str]:
+    """The PLANS.md row of one built frame. Call it before the frame
+    executes: after an action, AQE's executedPlan prints its final plan,
+    not the pre-adaptive one the inventory records."""
+    try:
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        formatted = qe.explainString(mode)
+    except Exception as exc:  # pragma: no cover
+        return error_row(name, exc)
+    marks = []
+    for label, pat in MARKS:
+        c = plan.count(pat)
+        if c:
+            marks.append(f"{label}×{c}")
+    off = global_window_offenders(df)
+    if off:
+        # single-task-sort scale cliff: forbidden (tests fail on the
+        # GLOBALWIN mark) unless explicitly allowlisted with a reason
+        if name in GLOBAL_WINDOW_ALLOWLIST:
+            marks.append(f"gwin-ok({GLOBAL_WINDOW_ALLOWLIST[name]})")
+        else:
+            marks.append(f"GLOBALWIN×{len(off)}")
+    pushed = sorted(set(re.findall(r"PushedFilters: \[([^\]]+)\]", formatted)))
+    pushed_note = "pushdown" if any(p.strip() for p in pushed) else ""
+    return (name, " ".join(marks) or "scan-only", pushed_note)
 
 
 # Physical nodes that bound the row count flowing into a downstream

@@ -48,44 +48,44 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def registry_sweep(spark, sf_dir):
-    """Every `queries()` entry built once per session, in name order, each
-    against an empty cache (as `tools/plan_audit.generate_rows` builds
-    them): its PLANS.md row is read before it executes, then it is
-    collected once. name → {"row": plan row, "frame": its pandas result,
-    or the exception its build or collect raised}. The oracle parity,
-    PLANS.md freshness and recall-pin tests all read these records, so no
-    registry query, stream views included, runs twice in a session. No
-    lazy frame is kept: state tables share one name per family, so a
-    frame held past its record would read another view's state."""
+def built_query(spark, sf_dir):
+    """name → (PLANS.md row, pandas result or the exception its build or
+    collect raised) of one `queries()` entry at the session's sf_dir.
+
+    Each entry is built on first request through
+    `tools/plan_audit.build_query` (empty cache, plan row read before the
+    frame executes), collected at once and memoized, so no registry query,
+    stream views included, runs twice in a session, and a targeted run
+    builds only the queries it asks for. It also serves as the `build`
+    hook of `plan_audit.generate_rows`. No lazy frame is kept: state
+    tables share one name per family, so a frame held past its build
+    would read another view's state."""
     import __spark_entry__ as entry_mod
     import tools.plan_audit as pa
 
     records = {}
-    for name, fn in sorted(entry_mod.queries().items()):
-        spark.catalog.clearCache()
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as exc:
-            records[name] = {"row": pa.error_row(name, exc), "frame": exc}
-            continue
-        row = pa.plan_row(name, df)
-        try:
-            frame = df.toPandas()
-        except Exception as exc:
-            frame = exc
-        records[name] = {"row": row, "frame": frame}
-        del df
-    return records
+
+    def build(name, fn=None):
+        if name not in records:
+            row, df = pa.build_query(spark, sf_dir, name, fn or entry_mod.queries()[name])
+            if not isinstance(df, Exception):
+                try:
+                    df = df.toPandas()
+                except Exception as exc:
+                    df = exc
+            records[name] = (row, df)
+        return records[name]
+
+    return build
 
 
 @pytest.fixture(scope="session")
-def swept_frame(registry_sweep):
-    """name → the registry query's result from the session sweep; raises
-    what its build or collect raised."""
+def swept_frame(built_query):
+    """name → the registry query's result from `built_query`; raises what
+    its build or collect raised."""
 
     def frame(name):
-        out = registry_sweep[name]["frame"]
+        out = built_query(name)[1]
         if isinstance(out, Exception):
             raise out
         return out

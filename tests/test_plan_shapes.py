@@ -465,17 +465,20 @@ class TestAnnShapes:
 
 
 class TestPlansInventoryFresh:
-    def test_plans_md_matches_regenerated_inventory(self, registry_sweep, sf_dir):
+    def test_plans_md_matches_regenerated_inventory(self, spark, sf_dir, built_query):
         """PLANS.md is the judge-facing plan inventory; it must never go
         stale. Regenerate it (same session factory + confs as
-        tools/plan_audit.py, rows from the session's one registry sweep)
-        and compare byte-for-byte — on mismatch, run
-        `python tools/plan_audit.py` and commit the result."""
+        tools/plan_audit.py) and compare byte-for-byte — on mismatch, run
+        `python tools/plan_audit.py` and commit the result. At the SF
+        PLANS.md records, the rows come from the session's memoized
+        builds, whose results the parity tests also read."""
         import os
 
         import tools.plan_audit as pa
 
-        expected = pa.render([r["row"] for r in registry_sweep.values()], sf_dir)
+        plans_sf = pa.PLANS_SF_DIR
+        build = built_query if sf_dir == plans_sf else None
+        expected = pa.render(pa.generate_rows(spark, plans_sf, build), plans_sf)
         with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")) as f:
             actual = f.read()
         assert actual == expected, "PLANS.md is stale — run: python tools/plan_audit.py"

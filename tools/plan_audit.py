@@ -52,33 +52,47 @@ MARKS = [
     ("mapPandas", "MapInPandas"),
 ]
 
+# The scale factor PLANS.md is generated at (its header records it).
+PLANS_SF_DIR = "/root/testdata/sf0.001"
 
-def generate_rows(spark, sf_dir: str) -> list[tuple[str, str, str]]:
-    """(query, operator marks, pushdown note) for every queries() entry.
-    Plan compilation only (executedPlan is the pre-adaptive physical plan),
-    except operators whose construction is eager by design (dedup_clusters
-    checkpoints its iterations).
 
-    Each query compiles against an empty cache: CacheManager substitutes
+def build_query(spark, sf_dir: str, name: str, fn):
+    """(PLANS.md row, built frame) of one queries() entry, or (error row,
+    the exception) when its build raises.
+
+    Each query builds against an empty cache: CacheManager substitutes
     InMemoryRelation into any plan whose subtree matches a
     previously-persisted frame, so persists leaking from an earlier caller
-    (the test session) OR from an alphabetically-earlier query in this
-    very loop would make a row's shape depend on which other queries
-    exist. Clearing per-iteration keeps each row a pure function of that
-    query alone (a query's own persist() calls still show up in its own
-    plan — those register before its plan compiles)."""
+    (the test session) OR from an alphabetically-earlier query would make
+    a row's shape depend on which other queries exist or ran first.
+    Clearing per build keeps each row a pure function of that query alone
+    (a query's own persist() calls still show up in its own plan — those
+    register before its plan compiles)."""
+    spark.catalog.clearCache()
+    try:
+        df = fn(spark, sf_dir)
+    except Exception as exc:  # pragma: no cover
+        return error_row(name, exc), exc
+    return plan_row(name, df), df
+
+
+def generate_rows(spark, sf_dir: str, build=None) -> list[tuple[str, str, str]]:
+    """(query, operator marks, pushdown note) for every queries() entry,
+    in name order. Plan compilation only (executedPlan is the
+    pre-adaptive physical plan), except operators whose construction is
+    eager by design (dedup_clusters checkpoints its iterations).
+
+    `build(name, fn)` returns one entry's (row, frame); it defaults to
+    `build_query` at `sf_dir`. The test session passes a memoizing one,
+    so the rows it checks come from the same builds whose results it
+    collects."""
     import __spark_entry__ as entry_mod
 
-    rows = []
-    for name, fn in sorted(entry_mod.queries().items()):
-        spark.catalog.clearCache()
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as exc:  # pragma: no cover
-            rows.append(error_row(name, exc))
-            continue
-        rows.append(plan_row(name, df))
-    return rows
+    if build is None:
+        def build(name, fn):
+            return build_query(spark, sf_dir, name, fn)
+
+    return [build(name, fn)[0] for name, fn in sorted(entry_mod.queries().items())]
 
 
 def error_row(name: str, exc: Exception) -> tuple[str, str, str]:
@@ -234,7 +248,7 @@ def render(rows: list[tuple[str, str, str]], sf_dir: str) -> str:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else PLANS_SF_DIR
     # same session factory + confs as the pytest fixture, so the staleness
     # test (tests/test_plan_shapes.py) regenerates identical rows
     from gmall_flink_200621_spark.session import get_spark
